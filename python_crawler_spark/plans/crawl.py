@@ -48,8 +48,6 @@ from ..operators.scheduler import (
     STAGE_CHILD,
     STAGE_LIST,
     STAGE_ROOT,
-    CheckpointHandle,
-    free_schedule_checkpoints,
     pack_order,
     packed_dedup_order_col,
     schedule,
@@ -141,6 +139,19 @@ def with_fetch_identity(df: DataFrame) -> DataFrame:
     )
 
 
+def enrich_frontier(frontier: DataFrame, n_buckets: int, key=None) -> DataFrame:
+    """The one enrich step of batch rounds and streamed epochs: adds
+    canon_url (regular URLs stay JVM-side, see canonicalize_split),
+    dedup_key (``key``, a column over the row and canon_url; canon_url
+    when None), key_hash = xxhash64(dedup_key), its hash bucket, and
+    host."""
+    f = canonicalize_split(frontier, canonicalize_urls_udf)
+    f = f.withColumn("dedup_key", F.col("canon_url") if key is None else key)
+    f = f.withColumn("key_hash", F.xxhash64("dedup_key"))
+    f = f.withColumn("bucket", bucket_col(F.col("key_hash"), n_buckets))
+    return f.withColumn("host", host_col(F.col("url")))
+
+
 @dataclass
 class CrawlConfig:
     spec: WorldSpec = field(default_factory=WorldSpec)
@@ -199,6 +210,7 @@ class CrawlRun:
         self.companies: DataFrame | None = None
         self.images: DataFrame | None = None
         self.metrics: list[dict] = []
+        self._start_frontier: DataFrame | None = None  # set by resume()
 
     # ------------------------------------------------------------ frontier
 
@@ -236,11 +248,9 @@ class CrawlRun:
         return with_fetch_identity(root)
 
     def _enrich(self, frontier: DataFrame) -> DataFrame:
-        """canon_url, dedup_key (title for weixin articles — the
-        reference dedups weixin by title, J1/F7; url otherwise; attempt
-        suffix lets O8 retries bypass the seen set), key_hash, bucket,
-        host."""
-        f = canonicalize_split(frontier, canonicalize_urls_udf)
+        """enrich_frontier keyed by title for weixin articles — the
+        reference dedups weixin by title, J1/F7; url otherwise; the
+        attempt suffix lets O8 retries bypass the seen set."""
         base_key = F.when(
             (F.col("source") == "weixin") & (F.col("stage") == STAGE_CHILD),
             F.col("title"),
@@ -249,11 +259,7 @@ class CrawlRun:
             F.col("attempt") > 0,
             F.concat(base_key, F.lit("#a"), F.col("attempt").cast("string")),
         ).otherwise(base_key)
-        f = f.withColumn("dedup_key", key)
-        f = f.withColumn("key_hash", F.xxhash64("dedup_key"))
-        f = f.withColumn("bucket", bucket_col(F.col("key_hash"), self.cfg.n_buckets))
-        f = f.withColumn("host", host_col(F.col("url")))
-        return f
+        return enrich_frontier(frontier, self.cfg.n_buckets, key)
 
     # --------------------------------------------------------------- fetch
 
@@ -578,17 +584,8 @@ class CrawlRun:
         pre_new_ids = _persistent_rdd_ids(self.spark)
         new = new.localCheckpoint(eager=True)
         new_ckpt_ids = _persistent_rdd_ids(self.spark) - pre_new_ids
-        ckpt = CheckpointHandle()
-        plan = schedule(new, n_salts=cfg.n_salts, handle=ckpt)
+        plan = schedule(new, n_salts=cfg.n_salts)
         fetched = self._fetch(plan).localCheckpoint(eager=True)
-        # Since round 4 schedule() materializes nothing (round 5: its
-        # offsets and window passes agree on driver-collected literal
-        # bucket bounds — pure row functions, no shared exchange or
-        # determinism-on-recompute needed), so this frees zero
-        # blocks — kept as the contractual release point so any future
-        # scheduler materialization is freed here, by handle, the
-        # moment `fetched` exists (round-2 verdict #2 / ADVICE r3 #2).
-        free_schedule_checkpoints(self.spark, ckpt)
         # `new` is not referenced past `fetched`; free its blocks now
         # so per-round checkpoint memory stays O(one round).
         _unpersist_rdds(self.spark, new_ckpt_ids)
@@ -673,7 +670,11 @@ class CrawlRun:
         self._filter_ckpt_ids = new_ids
 
     def run(self) -> dict[str, DataFrame]:
-        frontier = self.initial_frontier()
+        """The round loop, from the resumed frontier when ``resume``
+        restored one, else from the seeds."""
+        frontier = self._start_frontier
+        if frontier is None:
+            frontier = self.initial_frontier()
         while self.round < self.cfg.max_rounds:
             n = frontier.count()
             if n == 0:
@@ -702,7 +703,9 @@ class CrawlRun:
         config: CrawlConfig | None = None,
     ) -> "CrawlRun":
         """Resume from the latest committed snapshot (O11): identical
-        final state to an uninterrupted run (tested)."""
+        final state to an uninterrupted run (tested). A fresh run when
+        nothing is committed; a committed table that cannot be read
+        raises."""
         run = cls(spark, config, store)
         last = store.latest_round()
         if last is None:
@@ -715,49 +718,22 @@ class CrawlRun:
         # then incremental again per round)
         run._update_filters(run.seen)
         for name in ("fetch_log", "articles", "articles_text", "companies", "images"):
-            try:
+            if store.has_table(last, name):
                 setattr(run, name, store.read(spark, last, name))
-            except Exception:
-                setattr(run, name, None)
-        run._resume_frontier = store.read(spark, last, "frontier_next").localCheckpoint(
+        run._start_frontier = store.read(spark, last, "frontier_next").localCheckpoint(
             eager=True
         )
         return run
 
-    def run_resumed(self) -> dict[str, DataFrame]:
-        frontier = getattr(self, "_resume_frontier", None)
-        if frontier is None:
-            return self.run()
-        while self.round < self.cfg.max_rounds:
-            n = frontier.count()
-            if n == 0:
-                break
-            frontier = self.run_round(frontier)
-            self.metrics.append({"round": self.round, "frontier_in": n})
-            if self.store is not None:
-                self._snapshot(frontier)
-            self.round += 1
-        return self.results()
-
     # -------------------------------------------------------------- results
 
-    def fetch_order(self, handle: CheckpointHandle | None = None) -> DataFrame:
+    def fetch_order(self) -> DataFrame:
         """The replay artifact: every fetch with its global per-source
         sequence + virtual clock, reconstructed by SORT over the
-        priority tuple (O4) — never by task timing.
-
-        Lifecycle note: each call localCheckpoints the range-partitioned
-        fetch log internally. Looping callers should pass a
-        ``CheckpointHandle`` and, after materializing the returned plan,
-        call ``free_schedule_checkpoints(spark, handle)`` to free
-        exactly this call's blocks (the ContextCleaner frees them on GC
-        otherwise). Without a handle the blocks land in the scheduler's
-        module-global fallback registry, which a handle-less free from
-        ANY caller drains — unsafe when run_round and a held
-        fetch_order plan overlap (ADVICE r3 #2)."""
-        return schedule(
-            self.fetch_log, n_salts=self.cfg.n_salts, handle=handle
-        ).orderBy("source_rank", "ref_seq")
+        priority tuple (O4) — never by task timing."""
+        return schedule(self.fetch_log, n_salts=self.cfg.n_salts).orderBy(
+            "source_rank", "ref_seq"
+        )
 
     def results(self) -> dict[str, DataFrame]:
         return {

@@ -7,12 +7,15 @@ of discovered URLs. This module gives the engine that front door:
 - ``frontier_stream``: readStream over a parquet drop-directory of
   frontier rows (swap format for kafka in production; schema is the
   crawl plan's FRONTIER_SCHEMA).
-- ``streaming_enrich``: the same canonicalize/hash/bucket enrichment
-  as the batch round (stateless, streaming-safe).
+- ``streaming_enrich``: the batch round's enrich function
+  (``plans.crawl.enrich_frontier``), URL-keyed (stateless,
+  streaming-safe).
 - ``run_micro_batches``: foreachBatch loop feeding each micro-batch
   through the batch dedup + schedule operators so streaming and batch
-  share one code path (the recommended Spark pattern for exactly-once
-  sinks with existing batch logic).
+  share one code path. Each epoch writes its fetch plan to
+  ``<out_dir>/epoch=<id>`` with overwrite, so a replayed epoch is
+  rewritten, not duplicated; its control state comes from one
+  per-source aggregate.
 - ``windowed_discovery_metrics``: watermarked per-host tumbling-window
   discovery counts (the streaming analog of the A6 metrics table).
 """
@@ -23,10 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import bucket_col
-from ..functions.urls import host_col
-from ..parse.udfs import canonicalize_urls_udf
-from ..plans.crawl import FRONTIER_SCHEMA
+from ..plans.crawl import FRONTIER_SCHEMA, enrich_frontier
 
 # streamed frontier rows additionally carry their discovery time
 STREAM_SCHEMA = T.StructType(
@@ -46,13 +46,12 @@ def frontier_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
 
 
 def streaming_enrich(stream: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """Stateless enrichment — identical semantics to the batch round's
-    _enrich (url-keyed; streaming rows carry no weixin titles)."""
-    f = stream.withColumn("canon_url", canonicalize_urls_udf("url"))
-    f = f.withColumn("dedup_key", F.col("canon_url"))
-    f = f.withColumn("key_hash", F.xxhash64("dedup_key"))
-    f = f.withColumn("bucket", bucket_col(F.col("key_hash"), n_buckets))
-    return f.withColumn("host", host_col(F.col("url")))
+    """The batch round's enrich function, keyed by canon_url: stream
+    rows carry no weixin titles (stage-2 rows arrive with
+    ``title=""``), so the batch round's title key would collapse them
+    all into one key. Regular URLs stay JVM-side, as in the batch
+    round (``canonicalize_split``)."""
+    return enrich_frontier(stream, n_buckets)
 
 
 def windowed_discovery_metrics(
@@ -127,23 +126,35 @@ class OutOfOrderArrivalError(RuntimeError):
     quarantine table and re-sequence it instead of appending."""
 
 
-def _load_source_offsets(spark: SparkSession, off_dir: str, epoch_id: int):
-    """Per-source (cnt_off, delay_off, max_prio) as of the latest
-    epoch STRICTLY BEFORE epoch_id, or None when no prior epoch
-    committed offsets. Strictly-before matters for replay: if epoch k
-    crashed after writing its own offsets, the retry must NOT start
-    from them. ``max_prio`` is the ordering watermark: the largest
-    within-source packed priority scheduled by any prior epoch."""
-    try:
-        allo = spark.read.parquet(off_dir).filter(F.col("epoch") < epoch_id)
-        last = allo.agg(F.max("epoch")).first()[0]
-    except Exception:  # first epoch: offsets dir doesn't exist yet
-        return None
-    if last is None:
-        return None
-    return allo.filter(F.col("epoch") == last).select(
-        "source", "cnt_off", "delay_off", "max_prio"
-    )
+# one row per source, committed per epoch next to the stream checkpoint
+OFFSETS_SCHEMA = "source string, cnt_off long, delay_off double, max_prio long"
+
+
+def _load_source_offsets(spark: SparkSession, off_dir: str, epoch_id: int) -> dict:
+    """``{source: (cnt_off, delay_off, max_prio)}`` as committed by the
+    latest epoch STRICTLY BEFORE epoch_id; empty when none committed
+    (a missing offsets directory is the first epoch). Strictly-before
+    matters for replay: if epoch k crashed after writing its own
+    offsets, the retry must NOT start from them. ``max_prio`` is the
+    ordering watermark: the largest within-source packed priority
+    scheduled by any prior epoch. A committed epoch that cannot be
+    read raises — it is never mistaken for a first epoch."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(off_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return {}
+    names = [st.getPath().getName() for st in fs.listStatus(root)]
+    epochs = [int(n.split("=", 1)[1]) for n in names if n.startswith("epoch=")]
+    prior = [e for e in epochs if e < epoch_id]
+    if not prior:
+        return {}
+    rows = spark.read.schema(OFFSETS_SCHEMA).parquet(f"{off_dir}/epoch={max(prior)}").collect()
+    return {r["source"]: (r["cnt_off"], r["delay_off"], r["max_prio"]) for r in rows}
+
+
+def _lit_map(d: dict):
+    """A literal map column from a small driver-side dict."""
+    return F.create_map(*[x for k, v in d.items() for x in (F.lit(k), F.lit(v))])
 
 
 def run_micro_batches(
@@ -156,19 +167,31 @@ def run_micro_batches(
 ):
     """foreachBatch bridge: each micro-batch goes through the SAME
     batch operators (first-occurrence dedup -> seen anti-join ->
-    priority schedule) and appends its fetch plan — one code path for
-    batch and streaming, exactly-once via the streaming checkpoint.
+    priority schedule) and writes its fetch plan to
+    ``<out_dir>/epoch=<id>`` — one code path for batch and streaming.
+
+    One epoch runs the batch path once: the deduplicated survivors are
+    persisted, and every later action reads that copy. All of the
+    epoch's control state — empty-batch test, ordering guard, offsets
+    and watermark — comes from ONE per-source aggregate (min/max
+    within-source priority, row count, delay sum) collected to the
+    driver; carried offsets shift the plan as literal map columns.
 
     ref_seq / ref_virtual_ts are GLOBAL across micro-batches (round 4,
     VERDICT r3 "What's missing #3"): after each batch, per-source
-    (row count, delay sum) offsets are committed to an epoch-keyed
-    parquet next to the streaming checkpoint; batch k+1 shifts its
-    locally-computed sequence/clock by the latest offsets with epoch
-    < k+1 — so a restart or a second trigger CONTINUES the sequence
-    instead of re-ranking from 1, mirroring the batch engine's resume
-    (plans/crawl.py). Epoch replay is safe: offsets for epoch k are
-    recomputed from epoch k-1's (deterministic overwrite) and a
-    replayed batch reads strictly-prior offsets only.
+    (row count, delay sum) offsets are committed to
+    ``<checkpoint_dir>_source_offsets/epoch=<id>``; batch k+1 shifts
+    its locally-computed sequence/clock by the latest offsets with
+    epoch < k+1 — so a restart or a second trigger CONTINUES the
+    sequence instead of re-ranking from 1, mirroring the batch
+    engine's resume (plans/crawl.py).
+
+    Replay is safe: every epoch-keyed output (plan, quarantine,
+    offsets) is written with overwrite, so an epoch that ran its sink
+    but not its commit rewrites the same rows on restart instead of
+    duplicating them, and a replayed batch reads strictly-prior
+    offsets only. A committed offsets epoch that cannot be read
+    raises instead of restarting the sequence.
 
     Continuity semantics: the global sequence equals a single-batch
     run's exactly when micro-batch boundaries respect the priority
@@ -177,28 +200,26 @@ def run_micro_batches(
     carries a per-source ordering watermark (max within-source packed
     priority scheduled so far), and a later batch whose minimum
     priority falls below a prior watermark raises
-    OutOfOrderArrivalError BEFORE anything is appended — fail-loud
+    OutOfOrderArrivalError BEFORE its plan is written — fail-loud
     beats silently emitting a sequence a batch replay would not
     produce. Ties at the watermark pass (identical priority tuples
     are order-insensitive).
 
     ``on_late`` picks the violation posture: ``"raise"`` (default —
     stop the query) or ``"quarantine"`` — the LATE ROWS ONLY are
-    appended to ``<out_dir>_quarantine`` (epoch-stamped, full frontier
+    written to ``<out_dir>_quarantine/epoch=<id>`` (full frontier
     schema) and the in-order remainder of the batch is scheduled
     normally, so one straggler file cannot stall the stream while the
     emitted sequence stays replay-equal. An operator re-sequences the
     quarantine table (it is ordinary frontier input) once the gap is
-    understood. host_rank/host_scheduled_at
-    stay per-batch (a host's polite queue is re-planned every batch
-    anyway; carrying it would pin dead hosts in state forever)."""
+    understood. host_rank/host_scheduled_at stay per-batch (a host's
+    polite queue is re-planned every batch anyway; carrying it would
+    pin dead hosts in state forever)."""
     from ..operators.dedup import batch_first_occurrence, dedup_against_seen
     from ..operators.scheduler import (
         PRIORITY_COLS,
         PRIORITY_WIDTHS,
         SOURCE_RANK,
-        CheckpointHandle,
-        free_schedule_checkpoints,
         pack_order,
         packed_dedup_order_col,
         schedule,
@@ -212,9 +233,15 @@ def run_micro_batches(
     # across epochs for the same source
     sub_prio = pack_order([(F.col(n), b, n) for n, b in PRIORITY_WIDTHS[1:]])
 
+    def source_stats(df: DataFrame) -> dict:
+        """{source: (min_prio, max_prio, rows, delay_sum)}; empty for
+        an empty batch."""
+        aggs = df.groupBy("source").agg(
+            F.min(sub_prio), F.max(sub_prio), F.count("*"), F.sum("crawl_delay")
+        )
+        return {r[0]: (r[1], r[2], r[3], r[4] or 0.0) for r in aggs.collect()}
+
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         cand = batch_first_occurrence(
             batch_df,
@@ -222,117 +249,46 @@ def run_micro_batches(
             ["source"] + PRIORITY_COLS[1:],
             order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
         )
-        new = dedup_against_seen(cand, seen, None)
-        prev = _load_source_offsets(spark, off_dir, epoch_id)
-        # per-source priority envelope of THIS batch (tiny agg), used
-        # for the ordering guard now and the watermark commit below
-        stats = {
-            r["source"]: (r["_min_prio"], r["_max_prio"])
-            for r in new.groupBy("source")
-            .agg(F.min(sub_prio).alias("_min_prio"), F.max(sub_prio).alias("_max_prio"))
-            .collect()
-        }
-        wm: dict = {}
-        if prev is not None:
-            wm = {
-                r["source"]: r["max_prio"]
-                for r in prev.select("source", "max_prio").collect()
-                if r["max_prio"] is not None
-            }
-            late = {
-                s: (lo, wm[s])
-                for s, (lo, _) in stats.items()
-                if s in wm and lo < wm[s]
-            }
+        survivors = dedup_against_seen(cand, seen, None).persist()
+        try:
+            new, stats = survivors, source_stats(survivors)
+            if not stats:
+                return
+            prev = _load_source_offsets(spark, off_dir, epoch_id)
+            wm = {s: v[2] for s, v in prev.items()}
+            late = {s: (st[0], wm[s]) for s, st in stats.items() if s in wm and st[0] < wm[s]}
+            if late and on_late == "raise":
+                raise OutOfOrderArrivalError(
+                    f"epoch {epoch_id}: rows precede the committed ordering "
+                    f"watermark for {sorted(late)} (min_prio vs watermark: "
+                    f"{late}) — a file arrived out of priority order; "
+                    "re-sequence or quarantine it instead of appending"
+                )
             if late:
-                if on_late == "raise":
-                    raise OutOfOrderArrivalError(
-                        f"epoch {epoch_id}: rows precede the committed ordering "
-                        f"watermark for {sorted(late)} (min_prio vs watermark: "
-                        f"{late}) — a file arrived out of priority order; "
-                        "re-sequence or quarantine it instead of appending"
-                    )
-                # quarantine: split off ONLY the rows below their
-                # source's watermark; schedule the in-order remainder
-                wm_map = F.create_map(
-                    *[x for s, v in wm.items() for x in (F.lit(s), F.lit(v))]
-                )
-                is_late = sub_prio < F.coalesce(
-                    wm_map[F.col("source")], F.lit(-1)
-                )
-                # epoch-keyed overwrite (not append): a replayed epoch
-                # rewrites the same rows instead of duplicating them;
-                # the epoch column comes from the partition path
+                # split off ONLY the rows below their source's watermark;
+                # the committed watermark then covers scheduled rows only
+                is_late = sub_prio < F.coalesce(_lit_map(wm)[F.col("source")], F.lit(-1))
                 new.filter(is_late).write.mode("overwrite").parquet(
                     f"{quarantine_dir}/epoch={epoch_id}"
                 )
                 new = new.filter(~is_late)
-                # the committed watermark must reflect scheduled rows
-                # only — recompute the envelope on the survivors
-                stats = {
-                    r["source"]: (r["_min_prio"], r["_max_prio"])
-                    for r in new.groupBy("source")
-                    .agg(
-                        F.min(sub_prio).alias("_min_prio"),
-                        F.max(sub_prio).alias("_max_prio"),
-                    )
-                    .collect()
-                }
-        ckpt = CheckpointHandle()
-        plan = schedule(new, n_salts=n_salts, handle=ckpt)
-        if prev is not None:
-            plan = (
-                plan.join(
-                    F.broadcast(prev.select("source", "cnt_off", "delay_off")),
-                    "source",
-                    "left",
-                )
-                .withColumn(
-                    "ref_seq", F.col("ref_seq") + F.coalesce("cnt_off", F.lit(0))
-                )
-                .withColumn(
-                    "ref_virtual_ts",
-                    F.col("ref_virtual_ts") + F.coalesce("delay_off", F.lit(0.0)),
-                )
-                .drop("cnt_off", "delay_off")
-            )
-        plan.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
-        # commit this epoch's cumulative offsets: carried + this batch
-        batch_tot = plan.groupBy("source").agg(
-            F.count("*").alias("_cnt"), F.sum("crawl_delay").alias("_dl")
-        )
-        if prev is not None:
-            merged = batch_tot.join(
-                prev.select("source", "cnt_off", "delay_off"), "source", "full_outer"
-            ).select(
-                "source",
-                (F.coalesce("cnt_off", F.lit(0)) + F.coalesce("_cnt", F.lit(0))).alias("cnt_off"),
-                (F.coalesce("delay_off", F.lit(0.0)) + F.coalesce("_dl", F.lit(0.0))).alias("delay_off"),
-            )
-        else:
-            merged = batch_tot.select(
-                "source",
-                F.col("_cnt").alias("cnt_off"),
-                F.col("_dl").alias("delay_off"),
-            )
-        # ordering watermark: carried max within-source priority, merged
-        # driver-side (both inputs are per-source scalars already in hand)
-        new_wm = dict(wm)
-        for s, (_, hi) in stats.items():
-            if hi is not None:
-                new_wm[s] = max(new_wm.get(s, -1), hi)
-        wm_expr = (
-            F.create_map(*[x for s, v in new_wm.items() for x in (F.lit(s), F.lit(v))])
-            if new_wm
-            else F.create_map()
-        )
-        merged = merged.withColumn("max_prio", wm_expr[F.col("source")].cast("long"))
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{off_dir}/epoch={epoch_id}"
-        )
-        # the writes above materialized the plan; free this batch's
-        # scheduler checkpoint before the next micro-batch
-        free_schedule_checkpoints(spark, ckpt)
+                stats = source_stats(new)
+            plan = schedule(new, n_salts=n_salts)
+            if prev:
+                for col, i, zero in (("ref_seq", 0, 0), ("ref_virtual_ts", 1, 0.0)):
+                    shift = _lit_map({s: v[i] for s, v in prev.items()})[F.col("source")]
+                    plan = plan.withColumn(col, F.col(col) + F.coalesce(shift, F.lit(zero)))
+            plan.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
+            # this epoch's cumulative offsets and watermark: carried + batch
+            merged = dict(prev)
+            for s, (_, hi, cnt, delay) in stats.items():
+                c0, d0, w0 = prev.get(s, (0, 0.0, hi))
+                merged[s] = (c0 + cnt, d0 + delay, max(w0, hi))
+            spark.createDataFrame(
+                [(s, *v) for s, v in merged.items()], OFFSETS_SCHEMA
+            ).coalesce(1).write.mode("overwrite").parquet(f"{off_dir}/epoch={epoch_id}")
+        finally:
+            survivors.unpersist()
 
     return (
         enriched.writeStream.foreachBatch(process)

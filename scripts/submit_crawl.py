@@ -49,13 +49,8 @@ def main() -> None:
         n_salts=args.salts,
         max_rounds=args.max_rounds,
     )
-    store = SnapshotStore(args.out)
-    if store.latest_round() is not None:
-        run = CrawlRun.resume(spark, store, cfg)
-        results = run.run_resumed()
-    else:
-        run = CrawlRun(spark, cfg, store)
-        results = run.run()
+    run = CrawlRun.resume(spark, SnapshotStore(args.out), cfg)
+    results = run.run()
 
     order = results["fetch_order"]
     order.write.mode("overwrite").parquet(f"{args.out}/fetch_order.parquet")

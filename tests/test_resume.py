@@ -46,13 +46,28 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
 
     resumed = CrawlRun.resume(spark, store, cfg)
     assert resumed.round == 2
-    results = resumed.run_resumed()
+    results = resumed.run()
     assert _order(results) == full_order
     assert _seen(results) == full_seen
     n_articles = results["articles"].count()
     assert n_articles == full["articles"].count()
     assert results["images"].count() == full["images"].count()
     assert results["companies"].count() == full["companies"].count()
+
+
+def test_resume_raises_on_missing_committed_table(spark, tmp_path):
+    """A table the manifest commits but whose files are gone must fail
+    the resume loudly, not come back as an empty (None) table."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    store = SnapshotStore(tmp_path / "snap")
+    CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, max_rounds=2), store=store).run()
+    assert store.latest_round() == 1 and store.has_table(1, "articles")
+    shutil.rmtree(store.root / "round=1" / "articles")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        CrawlRun.resume(spark, store, CrawlConfig(spec=SPEC, n_buckets=8))
 
 
 def test_latest_round_ignores_uncommitted(tmp_path):
