@@ -287,12 +287,18 @@ def remove_exif_jpeg(jpeg: bytes) -> bytes:
 
 def strip_gps(fields: dict) -> tuple[dict, bool]:
     """(fields without the GPS sub-IFD or its pointer, had_gps). Pure
-    dict transform over :func:`parse_exif` output; pair with
-    :func:`build_exif` to re-emit a scrubbed stream."""
-    had = "GPS" in fields or "GPSIFDPointer" in fields
-    clean = {
-        k: v for k, v in fields.items() if k not in ("GPS", "GPSIFDPointer")
-    }
+    dict transform over :func:`parse_exif` output, recursing into the
+    nested IFDs ('IFD1', 'Exif') where a GPS pointer can also sit; pair
+    with :func:`build_exif` to re-emit a scrubbed stream."""
+    clean, had = {}, False
+    for k, v in fields.items():
+        if k in ("GPS", "GPSIFDPointer"):
+            had = True
+        elif k in ("IFD1", "Exif") and isinstance(v, dict):
+            clean[k], nested = strip_gps(v)
+            had = had or nested
+        else:
+            clean[k] = v
     return clean, had
 
 

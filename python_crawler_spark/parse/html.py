@@ -1,10 +1,10 @@
 """HTML parse kernels (scalar + pandas-vectorized).
 
 The reference parses one BeautifulSoup tree at a time; here each parse
-family is a pure function over an html string, applied in Arrow batches
-by the UDFs in parse/udfs.py. The sandbox has no lxml/bs4, so parsing
-is regex-based over the controlled synthetic HTML dialect emitted by
-sources/synthetic.py — which reproduces every DOM shape the reference
+family is a pure function over an html string, applied in the fetch
+pass's Arrow batches by parse/udfs.parse_page. The sandbox has no
+lxml/bs4, so parsing is regex-based over the controlled synthetic HTML
+dialect emitted by sources/synthetic.py — which reproduces every DOM shape the reference
 consumes (SURVEY D1-D15):
 
 - D1  article-list divs:      <div msgid="N"> h4[hrefs] p.desc span[style]

@@ -1,11 +1,14 @@
-"""Arrow-vectorized Spark UDFs wrapping the parse kernels.
+"""Parsed-page struct types and the per-page parse step of the fetch pass.
 
-Each UDF takes a pd.Series of html strings per Arrow batch and returns
-typed columns — the Spark-side face of SURVEY §2.8 ("no per-row
-Python" means no row-at-a-time F.udf; every batch crosses the Arrow
-boundary once and is processed with pandas .map over the batch).
+The crawl parses each page in the same Arrow batch that fetches it
+(``CrawlRun._fetch``): :func:`parse_page` runs the kernels that the
+page's (source, stage) needs and returns one :data:`PAGE_TYPE` struct,
+so raw html never crosses back into the JVM and every later step is a
+JVM filter or projection over ``page.*`` (SURVEY §2.8: no per-row
+Python; the batch crosses the Arrow boundary once).
 
-Two kernel families share one UDF factory (:func:`make_udfs`):
+Two kernel families share one page parser, selected by
+``CrawlConfig.html_parser`` through :data:`PARSERS`:
 
 * ``dialect`` — the compiled-regex kernels (parse/html.py) for the
   clean synthetic worldgen markup: the fast path.
@@ -13,9 +16,8 @@ Two kernel families share one UDF factory (:func:`make_udfs`):
   (parse/tolerant.py) for real-world markup: unclosed tags,
   single-quoted/unquoted/reordered attributes, uppercase tag names.
 
-Module-level UDF names stay bound to the dialect family (back-compat
-with round-3 call sites); the crawl plan selects a family via
-:func:`udfs_for` (CrawlConfig.html_parser).
+Two standalone UDFs remain: :func:`parse_company_udf` (dialect; the
+offline extraction plan) and :func:`canonicalize_urls_udf`.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.scheduler import STAGE_LIST, STAGE_ROOT
+from ..sources.worldgen import ANTI_BOT_TEXT
 from . import html as H
 from . import tolerant as TOL
 
@@ -38,17 +42,6 @@ LIST_ITEM_TYPE = T.ArrayType(
     )
 )
 
-ARTICLE_TYPE = T.StructType(
-    [
-        T.StructField("body_html", T.StringType()),
-        T.StructField("body_text", T.StringType()),
-        T.StructField("has_video", T.BooleanType()),
-        T.StructField("publish_time", T.StringType()),
-        T.StructField("author_name", T.StringType()),
-        T.StructField("msg_link", T.StringType()),
-    ]
-)
-
 IMG_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -56,6 +49,21 @@ IMG_TYPE = T.ArrayType(
             T.StructField("data_type", T.StringType()),
         ]
     )
+)
+
+# A weixin article page after F8's body check: the parse_article fields
+# except body_html, plus what is derived from body_html in the same pass
+# (D7 images before the trim, D6 trim then D5 tiny as ``content``).
+ARTICLE_TYPE = T.StructType(
+    [
+        T.StructField("body_text", T.StringType()),
+        T.StructField("has_video", T.BooleanType()),
+        T.StructField("publish_time", T.StringType()),
+        T.StructField("author_name", T.StringType()),
+        T.StructField("msg_link", T.StringType()),
+        T.StructField("images", IMG_TYPE),
+        T.StructField("content", T.StringType()),
+    ]
 )
 
 COMPANY_TYPE = T.StructType(
@@ -113,107 +121,55 @@ COMPANY_TYPE = T.StructType(
 )
 
 
-def make_udfs(K) -> dict:
-    """Build the full UDF family over kernel module ``K`` (parse.html
-    or parse.tolerant — same function names and return shapes)."""
+# One fetched page, parsed; only its kind's fields are set (article is
+# null for a weixin article page without a js_content body).
+PAGE_TYPE = T.StructType(
+    [
+        T.StructField("items", LIST_ITEM_TYPE),
+        T.StructField("article", ARTICLE_TYPE),
+        T.StructField("max_page", T.IntegerType()),
+        T.StructField("links", T.ArrayType(T.StringType())),
+        T.StructField("text", T.StringType()),
+        T.StructField("anti_bot", T.BooleanType()),
+        T.StructField("query_link", T.StringType()),
+        T.StructField("company", COMPANY_TYPE),
+    ]
+)
 
-    @F.pandas_udf(LIST_ITEM_TYPE)
-    def parse_article_list_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.parse_article_list, na_action="ignore")
-
-    @F.pandas_udf(ARTICLE_TYPE)
-    def parse_article_udf(html: pd.Series) -> pd.DataFrame:
-        recs = html.map(K.parse_article, na_action="ignore")
-        return pd.DataFrame(
-            [r if isinstance(r, dict) else {} for r in recs], index=html.index
-        )
-
-    @F.pandas_udf(IMG_TYPE)
-    def parse_images_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.parse_images, na_action="ignore")
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def parse_links_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.parse_links, na_action="ignore")
-
-    @F.pandas_udf(T.IntegerType())
-    def parse_max_page_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.parse_max_page, na_action="ignore").astype("Int32")
-
-    @F.pandas_udf(COMPANY_TYPE)
-    def parse_company_udf(html: pd.Series) -> pd.DataFrame:
-        recs = html.map(K.parse_company, na_action="ignore")
-        return pd.DataFrame(
-            [r if isinstance(r, dict) else {} for r in recs], index=html.index
-        )
-
-    @F.pandas_udf(T.StringType())
-    def text_flatten_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.text_flatten, na_action="ignore")
-
-    @F.pandas_udf(T.StringType())
-    def tiny_html_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.tiny_html, na_action="ignore")
-
-    @F.pandas_udf(T.StringType())
-    def trim_dom_udf(
-        html: pd.Series, marker: pd.Series, direction: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                K.trim_dom(h, m, d) if h is not None else None
-                for h, m, d in zip(html, marker, direction)
-            ],
-            index=html.index,
-        )
-
-    @F.pandas_udf(T.StringType())
-    def first_query_link_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.first_query_link, na_action="ignore")
-
-    @F.pandas_udf(T.StringType())
-    def csm_body_text_udf(html: pd.Series) -> pd.Series:
-        return html.map(K.csm_body_text, na_action="ignore")
-
-    return {
-        "parse_article_list": parse_article_list_udf,
-        "parse_article": parse_article_udf,
-        "parse_images": parse_images_udf,
-        "parse_links": parse_links_udf,
-        "parse_max_page": parse_max_page_udf,
-        "parse_company": parse_company_udf,
-        "text_flatten": text_flatten_udf,
-        "tiny_html": tiny_html_udf,
-        "trim_dom": trim_dom_udf,
-        "first_query_link": first_query_link_udf,
-        "csm_body_text": csm_body_text_udf,
-    }
+# html_parser name -> kernel module (same function names and shapes)
+PARSERS = {"dialect": H, "tolerant": TOL}
 
 
-_FAMILIES: dict[str, dict] = {}
+def parse_page(K, html: str, source: str, stage: int, trim: tuple[str, str]) -> dict:
+    """The :data:`PAGE_TYPE` fields of one page, parsed with kernel
+    module ``K``. ``trim`` is the account's D6 (marker, direction)."""
+    if source == "weixin":
+        if stage == STAGE_ROOT:
+            return {"items": K.parse_article_list(html)}
+        art = K.parse_article(html)
+        body = art.pop("body_html")
+        if body is None:
+            return {}
+        content = K.tiny_html(K.trim_dom(body, *trim))
+        art.update(images=K.parse_images(body), content=content)
+        return {"article": art}
+    if source == "chuansongmen":
+        if stage == STAGE_ROOT:
+            return {"max_page": K.parse_max_page(html)}
+        if stage == STAGE_LIST:
+            return {"links": K.parse_links(html)}
+        return {"text": K.csm_body_text(html)}
+    if stage == STAGE_ROOT:
+        return {"anti_bot": ANTI_BOT_TEXT in html, "query_link": K.first_query_link(html)}
+    return {"company": K.parse_company(html)}
 
 
-def udfs_for(html_parser: str) -> dict:
-    """UDF family by name: 'dialect' (regex fast path) or 'tolerant'
-    (stdlib-DOM real-HTML path). Families are built once per driver."""
-    if html_parser not in ("dialect", "tolerant"):
-        raise ValueError(f"unknown html_parser: {html_parser!r}")
-    if html_parser not in _FAMILIES:
-        _FAMILIES[html_parser] = make_udfs(H if html_parser == "dialect" else TOL)
-    return _FAMILIES[html_parser]
-
-
-# back-compat module-level names: the dialect family
-_D = udfs_for("dialect")
-parse_article_list_udf = _D["parse_article_list"]
-parse_article_udf = _D["parse_article"]
-parse_images_udf = _D["parse_images"]
-parse_links_udf = _D["parse_links"]
-parse_max_page_udf = _D["parse_max_page"]
-parse_company_udf = _D["parse_company"]
-text_flatten_udf = _D["text_flatten"]
-tiny_html_udf = _D["tiny_html"]
-trim_dom_udf = _D["trim_dom"]
+@F.pandas_udf(COMPANY_TYPE)
+def parse_company_udf(html: pd.Series) -> pd.DataFrame:
+    recs = html.map(H.parse_company, na_action="ignore")
+    return pd.DataFrame(
+        [r if isinstance(r, dict) else {} for r in recs], index=html.index
+    )
 
 
 @F.pandas_udf(T.StringType())

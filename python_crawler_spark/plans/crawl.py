@@ -2,11 +2,14 @@
 
     seeds -> [round r: enrich/canonicalize -> robots gate ->
     batch dedup -> seen anti-join (bloom + exact) -> schedule ->
-    fetch (synthetic web) -> parse/expand -> outputs + new frontier;
-    seen += fetched; snapshot r committed] until frontier empty
+    fetch + parse (synthetic web, one Arrow pass) -> outputs and new
+    frontier as projections of the pages; seen += fetched; round r's
+    delta committed] until frontier empty
 
-Each round is one Spark DAG; the driver only counts rows to decide
-termination (no .collect() of data). Ordering is carried as the
+Each round materializes four things once: the survivors, the fetched
+and parsed pages, the decoded image delta and the next frontier. The
+driver reads row counts from observations on those materializations
+to decide termination (no .collect() of data). Ordering is carried as the
 priority tuple and reconstructed by sort — equality with the
 sequential oracle (tests/oracle.py) is over (source_rank, priority)
 order, per-source virtual clocks, seen-set membership, and extracted
@@ -20,8 +23,9 @@ tianyan_extractor.py:15-30 — as one declarative dataflow.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,7 +56,7 @@ from ..operators.scheduler import (
     packed_dedup_order_col,
     schedule,
 )
-from ..parse.udfs import canonicalize_urls_udf, udfs_for
+from ..parse.udfs import PAGE_TYPE, PARSERS, canonicalize_urls_udf, parse_page
 from ..sources import worldgen
 from ..sources.tables import SnapshotStore
 from ..sources.worldgen import CSM_BASE, TYC_BASE, WEIXIN_BASE, WorldSpec
@@ -80,9 +84,17 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
-
 SEEN_COLS = ["bucket", "key_hash", "dedup_key", "url", "round"]
+
+LOG_COLS = [
+    "url", "canon_url", "dedup_key", "key_hash", "bucket", "host",
+    "source", "name", "seed_id", "line_no", "stage", "page_no",
+    "link_idx", "attempt", "depth", "crawl_delay", "kind",
+    "render", "ua_id", "proxy_id",
+    "host_salt", "host_rank", "host_scheduled_at", "round",
+]
+
+NO_TRIM = ("", "strip_after")  # D6 default for an account without a rule
 
 MASK63 = 0x7FFFFFFFFFFFFFFF
 
@@ -181,7 +193,8 @@ class CrawlConfig:
 
 class CrawlRun:
     """Driver for the round loop. Holds accumulated outputs as
-    DataFrames (lineage truncated per round via localCheckpoint)."""
+    DataFrames: unions of per-round projections of each round's
+    checkpointed pages (images: of each round's checkpointed delta)."""
 
     def __init__(
         self,
@@ -191,7 +204,9 @@ class CrawlRun:
     ):
         self.spark = spark
         self.cfg = config or CrawlConfig()
-        self.U = udfs_for(self.cfg.html_parser)
+        self.kernels = PARSERS.get(self.cfg.html_parser)
+        if self.kernels is None:
+            raise ValueError(f"unknown html_parser: {self.cfg.html_parser!r}")
         fam = "none" if not self.cfg.use_bloom else self.cfg.filter_family
         if fam not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"unknown filter_family: {fam!r}")
@@ -200,6 +215,11 @@ class CrawlRun:
         self._filter_ckpt_ids: set[int] = set()
         self.store = store
         self.rules = gating.rules_df(spark).cache()
+        # D6: account -> (marker, direction), applied in the fetch pass
+        self.trims = {
+            r["trim_key"]: (r["trim_marker"], r["trim_direction"])
+            for r in gating.trim_rules_map(self.rules).collect()
+        }
         self.round = 0
         self.seen: DataFrame = spark.createDataFrame(
             [], "bucket int, key_hash long, dedup_key string, url string, round int"
@@ -210,7 +230,9 @@ class CrawlRun:
         self.companies: DataFrame | None = None
         self.images: DataFrame | None = None
         self.metrics: list[dict] = []
-        self._start_frontier: DataFrame | None = None  # set by resume()
+        self.counts: dict = {}  # the last round's observed counters
+        self.delta: dict[str, DataFrame] = {}  # the last round's snapshot tables
+        self._start_frontier: tuple[DataFrame, dict] | None = None  # set by resume()
 
     # ------------------------------------------------------------ frontier
 
@@ -267,25 +289,28 @@ class CrawlRun:
         """The fetch stage: mapInPandas over the scheduled plan; the
         synthetic web (worldgen.fetch_url) substitutes live HTTP
         (SURVEY S6-S8). In production this is the batch HTTP client
-        with a per-executor session."""
-        spec = self.cfg.spec
+        with a per-executor session. Each page is parsed in the same
+        batch (parse_page), so html never leaves Python: the pass
+        returns the plan's columns plus ``kind`` and the parsed
+        ``page`` struct."""
+        spec, dirty, K, trims = self.cfg.spec, self.cfg.dirty_web, self.kernels, self.trims
         out_schema = T.StructType(
             plan.schema.fields
-            + [T.StructField("kind", T.StringType()), T.StructField("html", T.StringType())]
+            + [T.StructField("kind", T.StringType()), T.StructField("page", PAGE_TYPE)]
         )
-
-        dirty = self.cfg.dirty_web
 
         def run(batches):
             for pdf in batches:
-                kinds, htmls = [], []
-                for url, att in zip(pdf["url"], pdf["attempt"]):
+                kinds, pages = [], []
+                cols = [pdf[c] for c in ("url", "attempt", "source", "stage", "name")]
+                for url, att, source, stage, name in zip(*cols):
                     kind, html = worldgen.fetch_url(
                         url, attempt=int(att), spec=spec, dirty=dirty
                     )
                     kinds.append(kind)
-                    htmls.append(html)
-                yield pdf.assign(kind=kinds, html=htmls)
+                    trim = trims.get(name, NO_TRIM)
+                    pages.append(parse_page(K, html, source, int(stage), trim))
+                yield pdf.assign(kind=kinds, page=pages)
 
         return plan.mapInPandas(run, out_schema)
 
@@ -321,9 +346,9 @@ class CrawlRun:
         lists = fetched.filter(
             (F.col("source") == "weixin") & (F.col("stage") == STAGE_ROOT)
         )
-        items = lists.withColumn("items", self.U["parse_article_list"]("html")).select(
+        items = lists.select(
             "source", "name", "seed_id", "line_no", "depth",
-            F.posexplode("items").alias("pos", "item"),
+            F.posexplode("page.items").alias("pos", "item"),
         )
         items = items.filter(F.col("item.cover") != "")  # F4
         items = items.select(
@@ -349,7 +374,7 @@ class CrawlRun:
         """D9 + X5: account root -> list pages 1..max_page-1."""
         accts = fetched.filter(
             (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_ROOT)
-        ).withColumn("max_page", self.U["parse_max_page"]("html"))
+        ).withColumn("max_page", F.col("page.max_page"))
         pages = accts.filter(F.col("max_page") > 1).select(
             "source", "name", "seed_id", "line_no", "depth", "url",
             F.explode(F.sequence(F.lit(1), F.col("max_page") - 1)).alias("pg"),
@@ -369,9 +394,9 @@ class CrawlRun:
         lists = fetched.filter(
             (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_LIST)
         )
-        links = lists.withColumn("links", self.U["parse_links"]("html")).select(
+        links = lists.select(
             "source", "name", "seed_id", "line_no", "depth", "page_no",
-            F.posexplode("links").alias("pos", "href"),
+            F.posexplode("page.links").alias("pos", "href"),
         )
         links = gating.link_shape_filter(links, self.rules, "chuansongmen")  # F14
         return self._child(
@@ -388,9 +413,7 @@ class CrawlRun:
         searches = fetched.filter(
             (F.col("source") == "tianyan") & (F.col("stage") == STAGE_ROOT)
         )
-        blocked = searches.filter(
-            F.col("html").contains(worldgen.ANTI_BOT_TEXT) & (F.col("attempt") == 0)
-        )
+        blocked = searches.filter(F.col("page.anti_bot") & (F.col("attempt") == 0))
         retries = self._child(
             blocked,
             url=F.col("url"),
@@ -402,15 +425,10 @@ class CrawlRun:
             "crawl_delay",
             F.col("crawl_delay") + F.lit(worldgen.BACKOFF["tianyan"]),
         ).withColumn("depth", F.col("depth") - 1)
-        ok = searches.filter(~F.col("html").contains(worldgen.ANTI_BOT_TEXT))
-        if self.cfg.html_parser == "dialect":
-            # clean dialect markup: JVM regexp, no Arrow crossing
-            first_link = F.regexp_extract(
-                F.col("html"), r'<a class="query_name" href="([^"]*)"', 1
-            )
-        else:
-            first_link = self.U["first_query_link"]("html")
-        details = ok.withColumn("href", first_link).filter(F.col("href") != "")  # F13
+        ok = searches.filter(~F.col("page.anti_bot"))
+        details = ok.withColumn("href", F.col("page.query_link")).filter(
+            F.col("href") != ""
+        )  # F13
         children = self._child(
             details,
             url=absolutize_col(F.col("href"), F.lit(TYC_BASE)),
@@ -422,6 +440,20 @@ class CrawlRun:
 
     # ----------------------------------------------------------- extraction
 
+    def _page_tables(self, pages: DataFrame) -> tuple[dict[str, DataFrame], DataFrame]:
+        """Fetched-and-parsed rows (with their ``round``) -> ({fetch_log,
+        the seen rows they add, articles, articles_text, companies},
+        image candidates): projections and filters only, so a round and
+        a resume (over the stored pages) derive the same rows."""
+        articles, image_candidates = self._extract_weixin_articles(pages)
+        return {
+            "fetch_log": pages.select(*LOG_COLS),
+            "seen": pages.select(*SEEN_COLS),
+            "articles": articles,
+            "articles_text": self._extract_csm_articles(pages),
+            "companies": self._extract_companies(pages),
+        }, image_candidates
+
     def _extract_weixin_articles(self, fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
         """D2-D7 + F8-F11 + K1 analog: article pages -> 13-column
         articles table (tb_news_resource shape,
@@ -429,9 +461,9 @@ class CrawlRun:
         arts = fetched.filter(
             (F.col("source") == "weixin") & (F.col("stage") == STAGE_CHILD)
         )
-        parsed = arts.withColumn("p", self.U["parse_article"]("html"))
         kept = (
-            parsed.filter(F.col("p.body_html").isNotNull())  # F8
+            arts.withColumn("p", F.col("page.article"))
+            .filter(F.col("p").isNotNull())  # F8: no js_content body
             .filter(~F.col("p.has_video"))  # F9
             .filter(F.col("p.publish_time").isNotNull())  # F10
             .filter(
@@ -441,13 +473,14 @@ class CrawlRun:
                 )
             )  # F11
         )
-        # D7 images parsed pre-trim (reference processes imgs first,
-        # weixin_public.py:350-373, then trims, then tiny)
+        # D7 images were parsed pre-trim in the fetch pass (reference
+        # processes imgs first, weixin_public.py:350-373, then trims,
+        # then tiny)
         imgs = kept.select(
             "url",
             "line_no", "page_no", "link_idx",
             F.col("title").alias("caption"),
-            F.explode(self.U["parse_images"](F.col("p.body_html"))).alias("img"),
+            F.explode("p.images").alias("img"),
         ).select(
             F.col("url").alias("article_url"),
             "line_no", "page_no", "link_idx",
@@ -455,24 +488,12 @@ class CrawlRun:
             F.col("img.src").alias("src"),
             F.col("img.data_type").alias("data_type"),
         )
-        # D6 trim (data-driven rules) then D5 tiny
-        trims = gating.trim_rules_map(self.rules)
-        kept = kept.join(
-            F.broadcast(trims), kept["name"] == trims["trim_key"], "left"
-        )
-        content = self.U["tiny_html"](
-            self.U["trim_dom"](
-                F.col("p.body_html"),
-                F.coalesce(F.col("trim_marker"), F.lit("")),
-                F.coalesce(F.col("trim_direction"), F.lit("strip_after")),
-            )
-        )
         articles = kept.select(
             F.col("url").alias("src_url"),
             "title",
             F.col("p.author_name").alias("author_name"),
             F.col("name").alias("resource_from"),
-            content.alias("content"),
+            F.col("p.content").alias("content"),
             F.col("p.msg_link").alias("content_src"),
             F.lit(0).alias("content_read"),
             F.lit(0).alias("audit_status"),
@@ -494,7 +515,7 @@ class CrawlRun:
             F.col("url").alias("src_url"),
             F.col("name").alias("account"),
             "seed_id", "line_no", "page_no", "link_idx",
-            self.U["csm_body_text"]("html").alias("text"),
+            F.col("page.text").alias("text"),
         )
 
     def _extract_companies(self, fetched: DataFrame) -> DataFrame:
@@ -502,13 +523,12 @@ class CrawlRun:
         details = fetched.filter(
             (F.col("source") == "tianyan") & (F.col("stage") == STAGE_CHILD)
         )
-        parsed = details.withColumn("c", self.U["parse_company"]("html"))
-        return parsed.select(
+        return details.select(
             F.regexp_extract("url", r"/company/(\d+)", 1).alias("company_id"),
             F.lit("tianyancha").alias("sourceFrom"),
             F.lit(self.cfg.fixed_date).alias("last_update"),
             "seed_id", "line_no",
-            "c.*",
+            "page.company.*",
         )
 
     def _image_pipeline(self, imgs: DataFrame) -> DataFrame:
@@ -555,7 +575,13 @@ class CrawlRun:
     # -------------------------------------------------------------- rounds
 
     def run_round(self, frontier: DataFrame) -> DataFrame:
-        """One scheduling round; returns next round's frontier."""
+        """One scheduling round; returns next round's frontier.
+
+        Materializes four things once: the survivors ``new``, the
+        fetched and parsed pages, the decoded image delta and the next
+        frontier. Every other table is a projection of the pages; the
+        round's counters are observed on those same materializations
+        (``self.counts``), so they cost no job of their own."""
         cfg = self.cfg
         cand = self._enrich(frontier)
         cand = gating.robots_gate(cand, self.rules)  # J8
@@ -585,36 +611,22 @@ class CrawlRun:
         new = new.localCheckpoint(eager=True)
         new_ckpt_ids = _persistent_rdd_ids(self.spark) - pre_new_ids
         plan = schedule(new, n_salts=cfg.n_salts)
-        fetched = self._fetch(plan).localCheckpoint(eager=True)
+        fetched, fetch_counts = _observed_checkpoint(
+            self._fetch(plan).withColumn("round", F.lit(self.round)),
+            fetched=F.count(F.lit(1)),
+            dirty_buckets=F.array_sort(F.collect_set("bucket")),
+        )
         # `new` is not referenced past `fetched`; free its blocks now
         # so per-round checkpoint memory stays O(one round).
         _unpersist_rdds(self.spark, new_ckpt_ids)
 
-        log_cols = [
-            "url", "canon_url", "dedup_key", "key_hash", "bucket", "host",
-            "source", "name", "seed_id", "line_no", "stage", "page_no",
-            "link_idx", "attempt", "depth", "crawl_delay", "kind",
-            "render", "ua_id", "proxy_id",
-            "host_salt", "host_rank", "host_scheduled_at",
-        ]
-        log = fetched.select(*log_cols).withColumn("round", F.lit(self.round))
-        self.fetch_log = log if self.fetch_log is None else self.fetch_log.unionByName(log)
-
-        seen_new = fetched.select(
-            "bucket", "key_hash", "dedup_key", "url"
-        ).withColumn("round", F.lit(self.round))
-        self.seen = self.seen.unionByName(seen_new).localCheckpoint(eager=True)
-        self._update_filters(seen_new)
-
-        # extraction
-        wx_articles, wx_imgs = self._extract_weixin_articles(fetched)
-        csm_articles = self._extract_csm_articles(fetched)
-        companies = self._extract_companies(fetched)
-        images = self._image_pipeline(wx_imgs)
-        self.articles = _acc(self.articles, wx_articles)
-        self.articles_text = _acc(self.articles_text, csm_articles)
-        self.companies = _acc(self.companies, companies)
-        self.images = _acc(self.images, images)
+        tables, image_candidates = self._page_tables(fetched)
+        images, image_counts = _observed_checkpoint(
+            self._image_pipeline(image_candidates), images=F.count(F.lit(1))
+        )
+        self._add_tables({**tables, "images": images})
+        self._update_filters(fetch_counts["dirty_buckets"])
+        self.delta = {"pages": fetched, "images": images}
 
         # expansion -> next frontier
         children, retries = self._expand_tianyan_search(fetched)
@@ -625,7 +637,15 @@ class CrawlRun:
             .unionByName(children)
             .unionByName(retries)
         )
-        return nxt.localCheckpoint(eager=True)
+        nxt, next_counts = _observed_checkpoint(nxt, frontier_out=F.count(F.lit(1)))
+        self.counts = {**fetch_counts, **image_counts, **next_counts}
+        return nxt
+
+    def _add_tables(self, tables: dict[str, DataFrame]) -> None:
+        """Append each table's new rows to the run's accumulated table."""
+        for name, df in tables.items():
+            acc = getattr(self, name)
+            setattr(self, name, df if acc is None else acc.unionByName(df))
 
     # ------------------------------------------------------------- filters
 
@@ -636,21 +656,16 @@ class CrawlRun:
             return build_cuckoo_filters(seen)
         return build_bloom_filters(seen)
 
-    def _update_filters(self, seen_new: DataFrame) -> None:
+    def _update_filters(self, dirty: list[int]) -> None:
         """Incremental per-round prefilter maintenance: rebuild ONLY
-        the hash buckets this round's fetches touched; filter rows for
-        untouched buckets are CARRIED byte-identically from the
-        previous round (tested). At 10^10-URL scale a round touches a
-        small fraction of buckets — a full rebuild per round would
-        rescan the entire seen table (O(seen) per round, O(rounds x
-        seen) total); this is O(seen-in-dirty-buckets).
-
-        The dirty-bucket list crosses the driver but is bounded by
-        n_buckets (a table-layout constant, not data volume)."""
-        if self.filter_family == "none":
-            return
-        dirty = [int(r["bucket"]) for r in seen_new.select("bucket").distinct().collect()]
-        if not dirty:
+        the ``dirty`` hash buckets, the ones this round's fetches
+        touched; filter rows for untouched buckets are CARRIED
+        byte-identically from the previous round (tested). At 10^10-URL
+        scale a round touches a small fraction of buckets — a full
+        rebuild per round would rescan the entire seen table (O(seen)
+        per round, O(rounds x seen) total); this is
+        O(seen-in-dirty-buckets). ``dirty`` is bounded by n_buckets."""
+        if self.filter_family == "none" or not dirty:
             return
         rebuilt = self._build_filters(
             self.seen.filter(F.col("bucket").isin(dirty))
@@ -671,29 +686,29 @@ class CrawlRun:
 
     def run(self) -> dict[str, DataFrame]:
         """The round loop, from the resumed frontier when ``resume``
-        restored one, else from the seeds."""
-        frontier = self._start_frontier
-        if frontier is None:
-            frontier = self.initial_frontier()
-        while self.round < self.cfg.max_rounds:
-            n = frontier.count()
-            if n == 0:
-                break
+        restored one, else from the seeds. Each round's size comes from
+        the observation on the checkpoint that materializes it."""
+        frontier, counts = self._start_frontier or _observed_checkpoint(
+            self.initial_frontier(), frontier_out=F.count(F.lit(1))
+        )
+        n = counts["frontier_out"]
+        while self.round < self.cfg.max_rounds and n > 0:
             frontier = self.run_round(frontier)
-            self.metrics.append({"round": self.round, "frontier_in": n})
+            self.metrics.append({"round": self.round, "frontier_in": n, **self.counts})
+            n = self.counts["frontier_out"]
             if self.store is not None:
                 self._snapshot(frontier)
             self.round += 1
         return self.results()
 
     def _snapshot(self, next_frontier: DataFrame) -> None:
-        """K6/O10-O11: commit this round's state for resume."""
-        tables = {"frontier_next": next_frontier, "seen": self.seen}
-        for name in ("fetch_log", "articles", "articles_text", "companies", "images"):
-            df = getattr(self, name)
-            if df is not None:
-                tables[name] = df
-        self.store.write_round(self.round, tables, {"metrics": self.metrics[-1]})
+        """K6/O10-O11: commit this round's delta for resume — its
+        fetched pages, its decoded images and the next frontier."""
+        self.store.write_round(
+            self.round,
+            {**self.delta, "frontier_next": next_frontier},
+            {"metrics": self.metrics[-1]},
+        )
 
     @classmethod
     def resume(
@@ -703,25 +718,33 @@ class CrawlRun:
         config: CrawlConfig | None = None,
     ) -> "CrawlRun":
         """Resume from the latest committed snapshot (O11): identical
-        final state to an uninterrupted run (tested). A fresh run when
-        nothing is committed; a committed table that cannot be read
-        raises."""
+        final state to an uninterrupted run (tested). The pages and
+        images of every committed round are verified and read, the
+        tables are re-derived from the pages, and the frontier comes
+        from the last round. A fresh run when nothing is committed; a
+        committed table that cannot be read raises."""
         run = cls(spark, config, store)
         last = store.latest_round()
         if last is None:
             return run
-        store.verify_round(spark, last)  # per-partition lineage gate
+        rounds = range(last + 1)
+        for r in rounds:
+            store.verify_round(spark, r)  # per-partition lineage gate
         run.round = last + 1
-        run.seen = store.read(spark, last, "seen").localCheckpoint(eager=True)
+
+        def stored(name):
+            frames = [store.read(spark, r, name) for r in rounds]
+            return reduce(DataFrame.unionByName, frames)
+
+        tables, _ = run._page_tables(stored("pages"))  # images are stored decoded
+        run._add_tables({**tables, "images": stored("images")})
         # rebuild the prefilter from the restored seen set (every
         # bucket present is 'dirty' on resume — full rebuild once,
         # then incremental again per round)
-        run._update_filters(run.seen)
-        for name in ("fetch_log", "articles", "articles_text", "companies", "images"):
-            if store.has_table(last, name):
-                setattr(run, name, store.read(spark, last, name))
-        run._start_frontier = store.read(spark, last, "frontier_next").localCheckpoint(
-            eager=True
+        dirty = run.seen.select("bucket").distinct().collect()
+        run._update_filters(sorted(r["bucket"] for r in dirty))
+        run._start_frontier = _observed_checkpoint(
+            store.read(spark, last, "frontier_next"), frontier_out=F.count(F.lit(1))
         )
         return run
 
@@ -747,6 +770,9 @@ class CrawlRun:
         }
 
 
-def _acc(acc: DataFrame | None, new: DataFrame) -> DataFrame:
-    new = new.localCheckpoint(eager=True)
-    return new if acc is None else acc.unionByName(new)
+def _observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """localCheckpoint ``df`` and return it with the named aggregates,
+    observed on the same pass (no job of their own)."""
+    obs = Observation()
+    df = df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()])
+    return df.localCheckpoint(eager=True), obs.get

@@ -7,8 +7,11 @@ a round's snapshot is visible only once its manifest exists, giving
 crash-consistent resume (the reference's analog is the id_log.txt
 checkpoint, tianyan_crawler.py:173-176,226-230).
 
-Layout:
-  <root>/round=<r>/<table>/*.parquet
+Layout (each round commits only what it added, the Iceberg append
+model; a resume reads pages/images of every round <= the latest):
+  <root>/round=<r>/pages/*.parquet          fetched + parsed rows, no html
+  <root>/round=<r>/images/*.parquet         the round's decoded images
+  <root>/round=<r>/frontier_next/*.parquet  the next round's frontier
   <root>/round=<r>/manifest.json      (commit record, written last)
 """
 
@@ -28,7 +31,7 @@ _LINEAGE_BUCKETS = 64  # checksum partitioning constant, not a run config
 def _partition_lineage(df: DataFrame) -> dict | None:
     """Per-bucket lineage record for a snapshot state table: row count
     + order-independent XOR checksum per bucket. Hash-bucketed tables
-    (seen, fetch_log) use their native (bucket, key_hash); URL-keyed
+    (the crawl's pages) use their native (bucket, key_hash); URL-keyed
     tables without those columns (the frontier) derive
     bucket=pmod(xxhash64(url), 64) and checksum xxhash64(all columns),
     so a dropped row OR a mutated column flips the XOR. O(#buckets)
@@ -65,10 +68,10 @@ class SnapshotStore:
 
     def write_round(self, r: int, tables: dict[str, DataFrame], meta: dict) -> None:
         """Write all tables for round r, then commit the manifest.
-        Hash-bucketed state tables (frontier/seen) get a per-partition
-        lineage record in the manifest — count + key_hash XOR per
-        bucket — so a resume can verify partition integrity before
-        trusting the snapshot (:meth:`verify_round`)."""
+        Hash-bucketed or URL-keyed tables (pages, frontier_next) get a
+        per-partition lineage record in the manifest — count + XOR
+        checksum per bucket — so a resume can verify partition
+        integrity before trusting the snapshot (:meth:`verify_round`)."""
         rdir = self._round_dir(r)
         written = {}
         lineage = {}
@@ -116,6 +119,3 @@ class SnapshotStore:
 
     def read(self, spark: SparkSession, r: int, name: str) -> DataFrame:
         return spark.read.parquet(str(self._round_dir(r) / name))
-
-    def has_table(self, r: int, name: str) -> bool:
-        return name in self.manifest(r)["tables"]

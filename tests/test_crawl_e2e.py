@@ -321,13 +321,13 @@ def test_incremental_filter_maintenance_carries_untouched_buckets(spark):
             schema,
         )
         run.seen = s1.localCheckpoint(eager=True)
-        run._update_filters(s1)
+        run._update_filters([0, 1])  # the buckets s1 touched
         f1 = {r["bucket"]: r for r in run.filters.collect()}
         assert set(f1) == {0, 1}
         # round 2 touches bucket 1 only
         s2 = spark.createDataFrame([(1, 33, "c", "u3", 1)], schema)
         run.seen = run.seen.unionByName(s2).localCheckpoint(eager=True)
-        run._update_filters(s2)
+        run._update_filters([1])
         f2 = {r["bucket"]: r for r in run.filters.collect()}
         assert f2[0] == f1[0], f"{family}: untouched bucket 0 was rebuilt"
         assert f2[1] != f1[1], f"{family}: dirty bucket 1 not rebuilt"

@@ -157,6 +157,28 @@ def test_gps_sub_ifd_round_trip(bo):
     assert got["Exif"]["PixelXDimension"] == 64
 
 
+def test_strip_gps_finds_pointer_in_ifd1():
+    """A GPS sub-IFD whose pointer sits in the thumbnail IFD1 (parsed
+    as fields['IFD1']['GPS']) is counted and removed, not leaked."""
+    le = "<"
+    tiff = b"II" + struct.pack(f"{le}HI", 42, 8)
+    # IFD0 @8: Orientation=1, next IFD -> 26
+    tiff += struct.pack(f"{le}H", 1) + struct.pack(f"{le}HHIHH", 0x0112, 3, 1, 1, 0)
+    tiff += struct.pack(f"{le}I", 26)
+    # IFD1 @26: GPSIFDPointer -> 44, no next IFD
+    tiff += struct.pack(f"{le}H", 1) + struct.pack(f"{le}HHII", 0x8825, 4, 1, 44)
+    tiff += struct.pack(f"{le}I", 0)
+    # GPS IFD @44: GPSLatitudeRef = "N"
+    tiff += struct.pack(f"{le}H", 1) + struct.pack(f"{le}HHI", 0x0001, 2, 2) + b"N\0\0\0"
+    tiff += struct.pack(f"{le}I", 0)
+    fields = E.parse_exif(tiff)
+    assert fields["IFD1"]["GPS"] == {"GPSLatitudeRef": "N"}
+    clean, had = E.strip_gps(fields)
+    assert had
+    assert clean == {"Orientation": 1, "IFD1": {}}
+    assert E.strip_gps({"Exif": {"GPSIFDPointer": 44}}) == ({"Exif": {}}, True)
+
+
 def test_strip_gps_and_remove_segment():
     """strip_gps drops exactly the GPS keys; remove_exif_jpeg excises
     the APP1 segment byte-exactly (splice inverse); the full scrub

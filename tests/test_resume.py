@@ -6,13 +6,22 @@ scale; bench_scaling.py reports throughput)."""
 
 from __future__ import annotations
 
+import shutil
+from collections import Counter
+from pathlib import Path
+
 import pytest
+from pyspark.sql import functions as F
 
 from python_crawler_spark.plans.crawl import CrawlConfig, CrawlRun
 from python_crawler_spark.sources.tables import SnapshotStore
 from python_crawler_spark.sources.worldgen import WorldSpec
 
 SPEC = WorldSpec(n_tianyan_seeds=8)
+
+
+CFG = CrawlConfig(spec=SPEC, n_buckets=8)
+TABLES = ("articles", "articles_text", "companies", "images")
 
 
 def _order(results):
@@ -26,15 +35,46 @@ def _seen(results):
     return {r["dedup_key"] for r in results["seen"].select("dedup_key").collect()}
 
 
-def test_resume_equals_uninterrupted(spark, tmp_path):
-    cfg = CrawlConfig(spec=SPEC, n_buckets=8)
+def _rows(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=repr)
 
-    full = CrawlRun(spark, cfg).run()
-    full_order, full_seen = _order(full), _seen(full)
 
+def _state(results):
+    """Everything resume must reproduce: fetch order, seen set and the
+    row contents of every output table."""
+    return {
+        "order": _order(results),
+        "seen": _seen(results),
+        **{name: _rows(results[name]) for name in TABLES},
+    }
+
+
+@pytest.fixture(scope="module")
+def full(spark, tmp_path_factory):
+    """One uninterrupted crawl with snapshots: (run, store, state)."""
+    store = SnapshotStore(tmp_path_factory.mktemp("full") / "snap")
+    run = CrawlRun(spark, CFG, store=store)
+    return run, store, _state(run.run())
+
+
+@pytest.fixture(scope="module")
+def two_rounds(spark, tmp_path_factory):
+    """A committed two-round snapshot store, for tests that damage a copy."""
+    store = SnapshotStore(tmp_path_factory.mktemp("two") / "snap")
+    CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, max_rounds=2), store=store).run()
+    assert store.latest_round() == 1
+    return store.root
+
+
+def _copy_store(root, tmp_path):
+    shutil.copytree(root, tmp_path / "snap")
+    return SnapshotStore(tmp_path / "snap")
+
+
+def test_resume_equals_uninterrupted(spark, tmp_path, full):
     # interrupted run: stop after 2 rounds, snapshots committed
     store = SnapshotStore(tmp_path / "snap")
-    interrupted = CrawlRun(spark, cfg, store=store)
+    interrupted = CrawlRun(spark, CFG, store=store)
     frontier = interrupted.initial_frontier()
     for _ in range(2):
         if frontier.count() == 0:
@@ -44,30 +84,109 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
         interrupted._snapshot(frontier)
         interrupted.round += 1
 
-    resumed = CrawlRun.resume(spark, store, cfg)
+    resumed = CrawlRun.resume(spark, store, CFG)
     assert resumed.round == 2
-    results = resumed.run()
-    assert _order(results) == full_order
-    assert _seen(results) == full_seen
-    n_articles = results["articles"].count()
-    assert n_articles == full["articles"].count()
-    assert results["images"].count() == full["images"].count()
-    assert results["companies"].count() == full["companies"].count()
+    assert _state(resumed.run()) == full[2]
 
 
-def test_resume_raises_on_missing_committed_table(spark, tmp_path):
+def test_resume_after_crash_before_manifest(spark, tmp_path, full):
+    """Round 1 writes some of its tables, then dies before its manifest:
+    resume starts again from round 0's commit and equals an
+    uninterrupted run."""
+
+    class CrashingStore(SnapshotStore):
+        def write_round(self, r, tables, meta):
+            if r == 1:  # the last table's write fails mid-round
+                boom = F.raise_error(F.lit("crash before manifest"))
+                nxt = tables["frontier_next"].withColumn("url", boom)
+                tables = {**tables, "frontier_next": nxt}
+            super().write_round(r, tables, meta)
+
+    store = CrashingStore(tmp_path / "snap")
+    with pytest.raises(Exception, match="crash before manifest"):
+        CrawlRun(spark, CFG, store=store).run()
+    assert (store.root / "round=1" / "pages").exists()
+    assert not (store.root / "round=1" / "manifest.json").exists()
+    assert store.latest_round() == 0
+
+    resumed = CrawlRun.resume(spark, SnapshotStore(store.root), CFG)
+    assert resumed.round == 1
+    assert _state(resumed.run()) == full[2]
+
+
+def test_round_dirs_hold_only_their_delta(spark, full):
+    """Each round=<r> directory stores only that round's pages and
+    images, and the rounds sum to the crawl's totals."""
+    run, store, _ = full
+    last = store.latest_round()
+    assert last == len(run.metrics) - 1
+    n_pages = n_images = 0
+    for r in range(last + 1):
+        assert set(store.manifest(r)["tables"]) == {"pages", "images", "frontier_next"}
+        pages = store.read(spark, r, "pages")
+        assert "html" not in pages.columns
+        assert {row["round"] for row in pages.select("round").distinct().collect()} == {r}
+        n_pages += pages.count()
+        n_images += store.read(spark, r, "images").count()
+    assert n_pages == run.fetch_log.count()
+    assert n_images == run.images.count()
+
+
+def test_round_counters_match_oracle(full):
+    """The per-round counters observed on the round's checkpoints equal
+    the oracle's per-round fetch counts and its image total, and each
+    round's manifest carries them."""
+    from python_crawler_spark.operators.scheduler import STAGE_CHILD, STAGE_ROOT
+
+    from .oracle import Oracle
+
+    run, store, _ = full
+    oracle = Oracle(spec=SPEC, fixed_date=CFG.fixed_date).run()
+    retried = {e["seed_id"] for e in oracle.events if e["attempt"] > 0}
+
+    def level(e):
+        """The round that fetches event e: its depth in the crawl tree,
+        an anti-bot retry counting as one level."""
+        if e["stage"] == STAGE_ROOT:
+            return e["attempt"]
+        if e["source"] == "chuansongmen" and e["stage"] == STAGE_CHILD:
+            return 2
+        if e["source"] == "tianyan":
+            return 1 + (e["seed_id"] in retried)
+        return 1
+
+    want = Counter(level(e) for e in oracle.events)
+    assert [m["fetched"] for m in run.metrics] == [want[r] for r in range(len(want))]
+    assert sum(m["images"] for m in run.metrics) == len(oracle.images)
+    for a, b in zip(run.metrics, run.metrics[1:]):
+        assert a["frontier_out"] == b["frontier_in"]
+    assert run.metrics[-1]["frontier_out"] == 0
+    assert all(m["dirty_buckets"] and set(m["dirty_buckets"]) <= set(range(CFG.n_buckets))
+               for m in run.metrics)
+    assert [store.manifest(m["round"])["metrics"] for m in run.metrics] == run.metrics
+
+
+def test_resume_raises_on_missing_committed_table(spark, tmp_path, two_rounds):
     """A table the manifest commits but whose files are gone must fail
-    the resume loudly, not come back as an empty (None) table."""
-    import shutil
-
+    the resume loudly, not come back as an empty table."""
     from pyspark.errors import AnalysisException
 
-    store = SnapshotStore(tmp_path / "snap")
-    CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, max_rounds=2), store=store).run()
-    assert store.latest_round() == 1 and store.has_table(1, "articles")
-    shutil.rmtree(store.root / "round=1" / "articles")
+    store = _copy_store(two_rounds, tmp_path)
+    assert "pages" in store.manifest(1)["tables"]
+    shutil.rmtree(store.root / "round=1" / "pages")
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
-        CrawlRun.resume(spark, store, CrawlConfig(spec=SPEC, n_buckets=8))
+        CrawlRun.resume(spark, store, CFG)
+
+
+def test_resume_raises_on_missing_earlier_round(spark, tmp_path, two_rounds):
+    """Resume rebuilds the tables from every committed round's pages, so
+    losing an earlier round's pages (round < last) must raise too."""
+    from pyspark.errors import AnalysisException
+
+    store = _copy_store(two_rounds, tmp_path)
+    shutil.rmtree(store.root / "round=0" / "pages")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        CrawlRun.resume(spark, store, CFG)
 
 
 def test_latest_round_ignores_uncommitted(tmp_path):
@@ -76,30 +195,22 @@ def test_latest_round_ignores_uncommitted(tmp_path):
     assert store.latest_round() is None  # no manifest -> not committed
 
 
-def test_partition_lineage_detects_corruption(spark, tmp_path):
+def test_partition_lineage_detects_corruption(spark, tmp_path, two_rounds):
     """North_rule: snapshots carry per-partition lineage (per-bucket
     count + key_hash XOR); verify_round passes on intact state and
     names the table when a bucket's rows are lost."""
-    import pytest
-
-    store = SnapshotStore(tmp_path / "snap")
-    run = CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8), store=store)
-    frontier = run.initial_frontier()
-    frontier = run.run_round(frontier)
-    run.metrics.append({"round": 0, "frontier_in": -1})
-    run._snapshot(frontier)
-
-    assert "seen" in store.manifest(0)["lineage"]
+    store = _copy_store(two_rounds, tmp_path)
+    assert "pages" in store.manifest(0)["lineage"]
     assert "frontier_next" in store.manifest(0)["lineage"]
     store.verify_round(spark, 0)  # intact -> passes
 
-    # drop one bucket's rows from the stored seen table (simulated
+    # drop one bucket's rows from the stored pages table (simulated
     # partial write / corruption), keeping the manifest untouched
-    seen = store.read(spark, 0, "seen")
-    some_bucket = int(seen.select("bucket").first()["bucket"])
-    truncated = seen.filter(f"bucket != {some_bucket}").localCheckpoint(eager=True)
-    truncated.write.mode("overwrite").parquet(str(store.root / "round=0" / "seen"))
-    with pytest.raises(ValueError, match="table=seen"):
+    pages = store.read(spark, 0, "pages")
+    some_bucket = int(pages.select("bucket").first()["bucket"])
+    truncated = pages.filter(f"bucket != {some_bucket}").localCheckpoint(eager=True)
+    truncated.write.mode("overwrite").parquet(str(store.root / "round=0" / "pages"))
+    with pytest.raises(ValueError, match="table=pages"):
         store.verify_round(spark, 0)
 
 
@@ -120,7 +231,7 @@ def test_order_invariant_to_parallelism(tmp_path):
         out = tmp_path / f"probe_{cores}.json"
         proc = subprocess.run(
             [sys.executable, "-m", "tests.parallel_probe", str(cores), str(out)],
-            cwd="/root/repo",
+            cwd=Path(__file__).resolve().parents[1],
             capture_output=True,
             text=True,
             timeout=900,
