@@ -151,18 +151,6 @@ def absolutize(href: str, base: str) -> str:
 # ---------------------------------------------------------------- Spark side
 
 
-def canonicalize_col(url: Column, slow_udf) -> Column:
-    """Column-level canonicalize with a JVM fast-path REGEX but an
-    unconditional UDF evaluation: Spark extracts Python UDFs into an
-    ArrowEvalPython operator that runs for EVERY row regardless of the
-    CASE WHEN around it, so this variant still pays the Arrow crossing
-    for all rows (~12% of the 8M-row scheduling pipeline, measured).
-    Prefer :func:`canonicalize_split` on DataFrames — kept for
-    call-sites that need a pure Column expression."""
-    fast = fast_canonical_pred(url)
-    return F.when(fast, url).otherwise(slow_udf(url))
-
-
 def canonicalize_split(
     df, slow_udf, url_col: str = "url", out: str = "canon_url", n_parts: int | None = None
 ):

@@ -15,17 +15,20 @@ single-threaded loops; its politeness budget is sleep() calls. Here:
 
 Two schedules are computed:
 - ref_seq / ref_virtual_ts: per-source single-thread-equivalent clock,
-  the oracle-comparable replay (O4-O7);
+  the oracle-comparable replay (O4-O7); schedule() only;
 - host_rank / host_scheduled_at: per-(host, salt) queues — the
   schedule a distributed fetcher would honor; salting splits hot-host
   queues (all weixin articles share one host, weixin_public.py:39)
   into n_salts parallel polite queues (north_rule skew handling).
+  host_queues() computes these alone, for callers that never read the
+  replay clock (a crawl round: its fetch order is recomputed over the
+  whole fetch log afterwards).
 
 Scale note: a naive Window.partitionBy(source) puts ~all rows of a
-10^10 frontier into a handful of partitions. global_rank_and_cumsum
-below is the scalable replacement: range-repartition by the priority
-tuple, rank + prefix-sum within each partition, then add broadcast
-per-partition offsets (two jobs, no single-partition shuffle).
+10^10 frontier into a handful of partitions. schedule() instead cuts
+the packed priority at one set of sampled global bounds, ranks and
+prefix-sums within each (source, bucket), and adds broadcast
+per-bucket offsets (one bounds job, no single-partition shuffle).
 """
 
 from __future__ import annotations
@@ -118,13 +121,12 @@ def packed_dedup_order_col(sources: list[str]) -> "F.Column":
     return pack_order(fields)
 
 class CheckpointHandle:
-    """Per-call registry of RDD ids a schedule() /
-    global_rank_and_cumsum() call localCheckpointed. Since round 4 the
-    scheduler checkpoints NOTHING (round 5: the bucket id is a pure
-    function of the row against driver-collected literal bounds, so
-    the offsets and window passes agree by construction — see
-    global_rank_and_cumsum), so handles
-    free zero blocks; the API is kept so call sites stay uniform and
+    """Per-call registry of RDD ids a schedule() call
+    localCheckpointed. Since round 4 the scheduler checkpoints NOTHING
+    (round 5: the bucket id is a pure function of the row against
+    driver-collected literal bounds, so the offsets and window passes
+    agree by construction — see schedule()), so handles free zero
+    blocks; the API is kept so call sites stay uniform and
     so any future materialization slots back into the same
     deterministic-free contract (free by handle, never a global
     drain — ADVICE r3 #2)."""
@@ -140,20 +142,13 @@ class CheckpointHandle:
 # no-handle flow is only safe when a single caller at a time builds and
 # materializes schedule plans (the original round-3 contract). Any
 # caller that may overlap with another live schedule plan must pass its
-# own CheckpointHandle. Single-threaded-driver assumption: the pre/post
-# persistent-id diff that fills these registries is not safe against
-# concurrent checkpointing jobs in the same JVM.
+# own CheckpointHandle. Like every handle it stays empty today.
 _ckpt_rdd_ids: list[int] = []
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
 def free_schedule_checkpoints(spark, handle: CheckpointHandle | None = None) -> int:
-    """Unpersist checkpoint blocks registered by schedule() /
-    global_rank_and_cumsum, deterministically (no GC dependence).
+    """Unpersist checkpoint blocks registered by schedule(),
+    deterministically (no GC dependence).
 
     With ``handle``: frees exactly that call's blocks (the safe,
     per-call path). Without: drains the module-global fallback registry
@@ -188,9 +183,9 @@ def with_priority(frontier: DataFrame) -> DataFrame:
     rank = F.create_map(
         *[x for s, r in SOURCE_RANK.items() for x in (F.lit(s), F.lit(r))]
     )
-    # Unknown sources must NOT collapse to NULL: a NULL rank would merge
-    # them into one range-partition group whose offsets join misses
-    # (NULL != NULL), duplicating ref_seq. Unmapped sources get a
+    # Unknown sources must NOT collapse to NULL: a NULL rank never
+    # matches schedule()'s per-bucket offsets join (NULL != NULL), and
+    # would fail the priority pack. Unmapped sources get a
     # sentinel rank after all known ones; ties broken by the rest of
     # the priority tuple.
     return frontier.withColumn(
@@ -199,196 +194,21 @@ def with_priority(frontier: DataFrame) -> DataFrame:
     )
 
 
-def global_rank_and_cumsum(
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str,
-    partition_col: str | None = None,
-    n_range_partitions: int = 32,
-    rank_name: str = "seq",
-    cumsum_name: str = "virtual_ts",
-    handle: CheckpointHandle | None = None,
-    bounds_sample: float | None = 0.05,
-) -> DataFrame:
-    """Distributed total-order rank + exclusive prefix sum.
+def host_queues(frontier: DataFrame, n_salts: int = 8) -> DataFrame:
+    """Per-(host, salt) polite queues, in priority order.
 
-    Within each ``partition_col`` group (e.g. source), computes
-    rank_name = 1-based position in ``order_cols`` order and
-    cumsum_name = sum of ``value_col`` over all STRICTLY PRIOR rows
-    (the single-thread virtual clock: a fetch starts after the delays
-    of everything before it).
-
-    Three steps: (1) a one-job bounds pass collects ~n_range_partitions
-    approximate per-group percentile cut points of the order key to the
-    driver (O(groups * n) rows — the same cardinality
-    repartitionByRange's own sampler collects) and embeds them as
-    LITERALS; (2) ``_bucket`` = count of cut points <= key, a PURE
-    FUNCTION OF THE ROW, order-monotone in the key; (3) a per-bucket
-    window computes local rank/cumsum while a map-side-combined
-    groupBy(part, _bucket) computes per-bucket totals, whose exclusive
-    prefix sums are broadcast back as offsets — O(groups * buckets)
-    driver data, no single-partition shuffle at any scale.
-
-    Rounds 2-4 derived the bucket from repartitionByRange +
-    spark_partition_id() instead. That made the offsets pass and the
-    window pass two physically independent executions of the SAME
-    range exchange (Catalyst's relation dedup gives the two branches
-    different attribute ids, so neither planner-time exchange reuse
-    nor AQE's stage cache unifies them — verified in the executed
-    plan), and correctness of the _pid match between the passes then
-    rested on the exchange's sampler resampling identically from a
-    possibly order-nondeterministic shuffle child (ADVICE r4 #1).
-    Literal bounds make the bucket assignment identical across
-    re-executions BY CONSTRUCTION — either pass may recompute freely,
-    in any order — and drop both full-data range exchanges from the
-    plan (the window's hash exchange on (part, _bucket) is now the
-    only full-data shuffle; the totals pass partially aggregates
-    map-side before its tiny shuffle).
+    Adds source_rank (see with_priority) and:
+      host_salt                    — xxhash64(url) mod n_salts
+      host_rank, host_scheduled_at — 1-based place in its queue and the
+                                     queue's crawl_delay before it
     """
-    part = [partition_col] if partition_col else []
-    if len(order_cols) != 1:
-        raise ValueError(
-            "global_rank_and_cumsum orders by ONE column; pack compound "
-            "priorities first (pack_order) so every comparator and the "
-            "bucket bounds work on a single BIGINT"
-        )
-    key = order_cols[0]
-    qs = [i / n_range_partitions for i in range(1, n_range_partitions)]
-    # The bounds job only steers BALANCE, never correctness (any bound
-    # set yields exact ranks — ties at a cut point share a bucket and
-    # the offsets join is exact), so it reads a fixed-seed sample
-    # instead of the full input — the same idea as
-    # repartitionByRange's reservoir sampler, but one job instead of
-    # one per exchange. At 10^10 frontier rows the difference is a
-    # full extra scan vs a ~5% one. A group too small to surface in
-    # the sample simply lands in one bucket (bucket 0), which is the
-    # right plan for a small group anyway.
-    bsrc = (
-        df.sample(fraction=bounds_sample, seed=42)
-        if bounds_sample is not None and bounds_sample < 1.0
-        else df
-    )
-    brows = (
-        bsrc.groupBy(*part)
-        .agg(F.percentile_approx(key, qs, 10_000).alias("_b"))
-        .collect()
-    )
-
-    def _bucket_of(bounds: list) -> "F.Column":
-        # count of cut points <= key, evaluated as a BALANCED BINARY
-        # comparison tree (nested CASE WHEN, depth ceil(log2(n+1))) —
-        # O(log n) codegen compares per row, so the bucket count can
-        # grow with cluster size (thousands of buckets on 1000
-        # executors) without the per-row cost growing linearly.
-        # Monotone in key; ties at a cut point share a bucket; ANY
-        # bound set is CORRECT (percentile accuracy only affects
-        # balance).
-        def tree(lo: int, hi: int) -> "F.Column":
-            # rows with bounds[lo-1] <= key < bounds[hi] (virtual
-            # sentinels) get bucket in [lo, hi]; resolve by bisection
-            if lo == hi:
-                return F.lit(lo)
-            mid = (lo + hi) // 2
-            return (
-                F.when(F.col(key) >= F.lit(bounds[mid]), tree(mid + 1, hi))
-                .otherwise(tree(lo, mid))
-            )
-
-        return tree(0, len(bounds))
-
-    if part:
-        bucket = F.lit(0)
-        for r in brows:
-            bounds = sorted(set(r["_b"] or []))
-            if bounds:
-                bucket = (
-                    F.when(F.col(part[0]) == r[part[0]], _bucket_of(bounds))
-                    .otherwise(bucket)
-                )
-    else:
-        bounds = sorted(set(brows[0]["_b"] or [])) if brows else []
-        bucket = _bucket_of(bounds) if bounds else F.lit(0)
-    dfp = df.withColumn("_pid", bucket.cast("int"))
-    totals = (
-        dfp.groupBy(*part, "_pid")
-        .agg(F.count("*").alias("_cnt"), F.sum(value_col).alias("_sum"))
-    )
-    w_off = (
-        Window.partitionBy(*[F.col(c) for c in part])
-        if part
-        else Window.partitionBy(F.lit(1))
-    )
-    offsets = totals.select(
-        *part,
-        "_pid",
-        (
-            F.sum("_cnt").over(w_off.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1))
-        ).alias("_cnt_off"),
-        (
-            F.sum("_sum").over(w_off.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1))
-        ).alias("_sum_off"),
-    ).fillna(0, subset=["_cnt_off", "_sum_off"])
-
-    w_in = Window.partitionBy(*part, "_pid").orderBy(*[F.col(c) for c in order_cols])
-    ranked = (
-        dfp.withColumn("_rn", F.row_number().over(w_in))
-        .withColumn(
-            "_cs",
-            F.coalesce(
-                F.sum(value_col).over(w_in.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0.0),
-            ),
-        )
-        .join(F.broadcast(offsets), part + ["_pid"], "left")
-        .withColumn(rank_name, F.col("_rn") + F.coalesce(F.col("_cnt_off"), F.lit(0)))
-        .withColumn(
-            cumsum_name, F.col("_cs") + F.coalesce(F.col("_sum_off"), F.lit(0.0))
-        )
-        .drop("_pid", "_rn", "_cs", "_cnt_off", "_sum_off")
-    )
-    return ranked
-
-
-def schedule(
-    frontier: DataFrame,
-    n_salts: int = 8,
-    n_range_partitions: int = 32,
-    handle: CheckpointHandle | None = None,
-) -> DataFrame:
-    """Produce the round's fetch plan.
-
-    Adds:
-      ref_seq, ref_virtual_ts  — per-source sequential replay clock
-      host_salt                — xxhash64(url) mod n_salts
-      host_rank, host_scheduled_at — per-(host,salt) polite queue
-    Output is the input plus schedule columns; emit order for a
-    sequential replay is (source_rank, ref_seq).
-    """
-    f = with_priority(frontier)
-    # partition/order by the INT source_rank, not the source string:
-    # the rank is 1:1 with the source, and every shuffle-sort comparator
-    # runs millions of times — integer compares, not UTF-8 compares.
-    # Going further, the whole 6-int priority tuple is packed into ONE
-    # guarded BIGINT (order-identical and injective, see pack_order):
-    # the range partitioner and both window sorts below compare one
-    # long instead of six fields per row-pair.
-    f = f.withColumn("_prio", packed_priority_col())
-    f = global_rank_and_cumsum(
-        f,
-        ["_prio"],
-        "crawl_delay",
-        partition_col="source_rank",
-        n_range_partitions=n_range_partitions,
-        rank_name="ref_seq",
-        cumsum_name="ref_virtual_ts",
-        handle=handle,
-    )
+    f = with_priority(frontier).withColumn("_prio", packed_priority_col())
     f = f.withColumn("host_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)).cast("int"))
-    # same trick for the politeness queues: group by xxhash64(host)
-    # (8-byte sort prefix) instead of the host string; the host column
-    # itself is untouched in the output. A 64-bit collision would merge
-    # two hosts' queues — at web scale (~10^9 hosts) the chance is
-    # ~10^18/2^65 ≈ 3e-2ppm; politeness only gets (harmlessly) stricter.
+    # group by xxhash64(host) (8-byte sort prefix) instead of the host
+    # string; the host column itself is untouched in the output. A
+    # 64-bit collision would merge two hosts' queues — at web scale
+    # (~10^9 hosts) the chance is ~10^18/2^65 ≈ 3e-2ppm; politeness
+    # only gets (harmlessly) stricter.
     f = f.withColumn("_host_key", F.xxhash64("host"))
     w_host = Window.partitionBy("_host_key", "host_salt").orderBy("_prio")
     f = f.withColumn("host_rank", F.row_number().over(w_host)).withColumn(
@@ -399,3 +219,99 @@ def schedule(
         ),
     )
     return f.drop("_host_key", "_prio")
+
+
+# Fraction of the frontier the bounds job reads. The cut points steer
+# bucket balance only, never correctness, so a fixed-seed sample does —
+# the idea of repartitionByRange's reservoir sampler in one job. At
+# 10^10 frontier rows that is a ~5% scan instead of a full one.
+BOUNDS_SAMPLE = 0.05
+
+
+def schedule(
+    frontier: DataFrame,
+    n_salts: int = 8,
+    n_range_partitions: int = 32,
+    handle: CheckpointHandle | None = None,
+) -> DataFrame:
+    """Produce the fetch plan: the per-source replay clock, then
+    host_queues.
+
+    Adds:
+      ref_seq, ref_virtual_ts — 1-based place in the source's priority
+                                order and the crawl_delay of every
+                                earlier fetch of that source (the
+                                single-thread virtual clock)
+      plus every host_queues column.
+    Output is the input plus schedule columns; emit order for a
+    sequential replay is (source_rank, ref_seq).
+
+    The whole priority tuple is packed into ONE guarded BIGINT
+    ``_prio`` (order-identical and injective, see pack_order), so every
+    sort compares one long. Since source_rank is its top field, ONE
+    sorted set of cut points is order-monotone within every source:
+
+    1. one job collects ~n_range_partitions approximate percentiles of
+       ``_prio`` over a BOUNDS_SAMPLE sample and embeds them as
+       LITERALS;
+    2. ``_pid`` = count of cut points <= ``_prio``, a balanced CASE
+       tree (O(log n) compares per row) — a PURE FUNCTION OF THE ROW;
+    3. a window over (source_rank, _pid) ranks and prefix-sums each
+       bucket, while a map-side-combined groupBy(source_rank, _pid)
+       yields per-bucket totals whose exclusive prefix sums within the
+       source are broadcast back as offsets.
+
+    ANY bound set gives exact ranks: ties at a cut point share a
+    bucket, a bucket straddling a source boundary splits on the
+    (source_rank, _pid) key, and an empty sample puts every row in
+    bucket 0. Because the bucket is a row function, the offsets pass
+    and the window pass agree under any re-execution, and the plan
+    has no range exchange (the window's hash exchange is the only
+    full-data shuffle; rounds 2-4 used repartitionByRange +
+    spark_partition_id(), whose two executions could disagree —
+    ADVICE r4 #1).
+
+    ``handle`` is accepted for call-site compatibility and unused:
+    schedule() materializes nothing.
+    """
+    f = with_priority(frontier).withColumn("_prio", packed_priority_col())
+    qs = [i / n_range_partitions for i in range(1, n_range_partitions)]
+    sample = f.sample(fraction=BOUNDS_SAMPLE, seed=42) if BOUNDS_SAMPLE < 1.0 else f
+    bounds = sorted(set(sample.agg(F.percentile_approx("_prio", qs, 10_000)).first()[0] or []))
+
+    def bucket(lo: int, hi: int) -> "F.Column":
+        # rows with bounds[lo-1] <= _prio < bounds[hi] (virtual
+        # sentinels) get a bucket in [lo, hi]; resolve by bisection
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(F.col("_prio") >= F.lit(bounds[mid]), bucket(mid + 1, hi)).otherwise(
+            bucket(lo, mid)
+        )
+
+    key = ["source_rank", "_pid"]
+    f = f.withColumn("_pid", bucket(0, len(bounds)))
+    before = (Window.unboundedPreceding, -1)
+    w_src = Window.partitionBy("source_rank").orderBy("_pid").rowsBetween(*before)
+    offsets = (
+        f.groupBy(*key)
+        .agg(F.count("*").alias("_cnt"), F.sum("crawl_delay").alias("_sum"))
+        .select(
+            *key,
+            F.sum("_cnt").over(w_src).alias("_cnt_off"),
+            F.sum("_sum").over(w_src).alias("_sum_off"),
+        )
+        .fillna(0, subset=["_cnt_off", "_sum_off"])
+    )
+    w_in = Window.partitionBy(*key).orderBy("_prio")
+    f = (
+        f.withColumn("_rn", F.row_number().over(w_in))
+        .withColumn(
+            "_cs",
+            F.coalesce(F.sum("crawl_delay").over(w_in.rowsBetween(*before)), F.lit(0.0)),
+        )
+        .join(F.broadcast(offsets), key)
+        .withColumn("ref_seq", F.col("_rn") + F.col("_cnt_off"))
+        .withColumn("ref_virtual_ts", F.col("_cs") + F.col("_sum_off"))
+    )
+    return host_queues(f.drop("_pid", "_rn", "_cs", "_cnt_off", "_sum_off", "_prio"), n_salts)

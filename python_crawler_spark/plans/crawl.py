@@ -1,10 +1,11 @@
 """The crawl plan: frontier round loop (SURVEY §3.4).
 
     seeds -> [round r: enrich/canonicalize -> robots gate ->
-    batch dedup -> seen anti-join (bloom + exact) -> schedule ->
+    batch dedup -> seen anti-join (bloom + exact) -> host queues ->
     fetch + parse (synthetic web, one Arrow pass) -> outputs and new
     frontier as projections of the pages; seen += fetched; round r's
     delta committed] until frontier empty
+    -> fetch_order: schedule() over the whole fetch log (replay clock)
 
 Each round materializes four things once: the survivors, the fetched
 and parsed pages, the decoded image delta and the next frontier. The
@@ -52,6 +53,7 @@ from ..operators.scheduler import (
     STAGE_CHILD,
     STAGE_LIST,
     STAGE_ROOT,
+    host_queues,
     pack_order,
     packed_dedup_order_col,
     schedule,
@@ -169,7 +171,6 @@ class CrawlConfig:
     spec: WorldSpec = field(default_factory=WorldSpec)
     n_buckets: int = 16
     n_salts: int = 4
-    use_bloom: bool = True
     fixed_date: str = "2016-06-01"  # X10 determinism: fixed clock
     max_rounds: int = 8
     first_seed: int = 0   # F2 resume window (tianyan semantics, applied to all)
@@ -184,9 +185,8 @@ class CrawlConfig:
     dirty_web: bool = False
     # Seen-set prefilter family: 'bloom' (default), 'cuckoo' (partial-
     # key cuckoo filter — deletable, ~60x lower FPR at 3x bits/item,
-    # operators/cuckoo.py), or 'none' (exact anti-join only).
-    # use_bloom=False forces 'none' (back-compat). Filters are
-    # maintained INCREMENTALLY: each round rebuilds only the hash
+    # operators/cuckoo.py), or 'none' (exact anti-join only). Filters
+    # are maintained INCREMENTALLY: each round rebuilds only the hash
     # buckets that round touched (_update_filters).
     filter_family: str = "bloom"
 
@@ -207,10 +207,9 @@ class CrawlRun:
         self.kernels = PARSERS.get(self.cfg.html_parser)
         if self.kernels is None:
             raise ValueError(f"unknown html_parser: {self.cfg.html_parser!r}")
-        fam = "none" if not self.cfg.use_bloom else self.cfg.filter_family
-        if fam not in ("bloom", "cuckoo", "none"):
-            raise ValueError(f"unknown filter_family: {fam!r}")
-        self.filter_family = fam
+        self.filter_family = self.cfg.filter_family
+        if self.filter_family not in ("bloom", "cuckoo", "none"):
+            raise ValueError(f"unknown filter_family: {self.filter_family!r}")
         self.filters: DataFrame | None = None
         self._filter_ckpt_ids: set[int] = set()
         self.store = store
@@ -599,18 +598,16 @@ class CrawlRun:
             new = dedup_against_seen(cand, self.seen, self.filters)
         else:
             new = dedup_against_seen(cand, self.seen, None)
-        # Materialize the round's survivor set ONCE before schedule():
-        # its bounds job, its offsets job, and the fetch materialization
-        # each execute the plan they are given, so an unmaterialized
-        # enrich -> robots -> dedup chain would run ~3x per round
-        # (correct either way since round 5 — the bucket is a pure row
-        # function — but 3x the work; same pattern and rationale as
-        # bench_frontier.timed_schedule). Blocks are freed the moment
-        # `fetched` exists below.
+        # Materialize the round's survivor set as its own job, so the
+        # enrich -> robots -> dedup chain is timed apart from the fetch
+        # (its only reader now); blocks are freed the moment `fetched`
+        # exists below. The round computes only the host queues — the
+        # replay clock (ref_seq, ref_virtual_ts) is global over all
+        # rounds, so fetch_order() derives it from the whole fetch log.
         pre_new_ids = _persistent_rdd_ids(self.spark)
         new = new.localCheckpoint(eager=True)
         new_ckpt_ids = _persistent_rdd_ids(self.spark) - pre_new_ids
-        plan = schedule(new, n_salts=cfg.n_salts)
+        plan = host_queues(new, n_salts=cfg.n_salts)
         fetched, fetch_counts = _observed_checkpoint(
             self._fetch(plan).withColumn("round", F.lit(self.round)),
             fetched=F.count(F.lit(1)),

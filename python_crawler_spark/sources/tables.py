@@ -28,31 +28,22 @@ from pyspark.sql import functions as F
 _LINEAGE_BUCKETS = 64  # checksum partitioning constant, not a run config
 
 
-def _partition_lineage(df: DataFrame) -> dict | None:
-    """Per-bucket lineage record for a snapshot state table: row count
-    + order-independent XOR checksum per bucket. Hash-bucketed tables
-    (the crawl's pages) use their native (bucket, key_hash); URL-keyed
-    tables without those columns (the frontier) derive
-    bucket=pmod(xxhash64(url), 64) and checksum xxhash64(all columns),
-    so a dropped row OR a mutated column flips the XOR. O(#buckets)
-    driver data (bucket count is a constant, never row-proportional),
-    so this scales to any frontier size. North_rule: 'resumes with
-    per-partition lineage and fetch/dedup metrics'."""
-    if "bucket" in df.columns and "key_hash" in df.columns:
-        bucket, csum = F.col("bucket"), F.col("key_hash")
-    elif "url" in df.columns:
-        bucket = F.pmod(F.xxhash64("url"), F.lit(_LINEAGE_BUCKETS))
-        # MAP columns are not hashable in Spark (same map, different
-        # hashcode) — checksum over every non-MAP column
-        hashable = [
-            f.name for f in df.schema.fields if "MapType" not in f.dataType.__repr__()
-        ]
-        csum = F.xxhash64(*[F.col(c) for c in hashable])
-    else:
-        return None
+def _partition_lineage(df: DataFrame) -> dict:
+    """Per-bucket lineage record for a stored table: row count +
+    order-independent XOR checksum per bucket, where each row's hash is
+    xxhash64 over every hashable column and its bucket is that hash
+    mod 64 — so a dropped row OR a mutated column changes the record.
+    One rule for every table; O(#buckets) driver data (the bucket count
+    is a constant, never row-proportional), so this scales to any
+    table size. North_rule: 'resumes with per-partition lineage and
+    fetch/dedup metrics'."""
+    # MAP columns are not hashable in Spark (same map, different
+    # hashcode) — checksum over every non-MAP column
+    hashable = [f.name for f in df.schema.fields if "MapType" not in repr(f.dataType)]
+    h = F.xxhash64(*[F.col(c) for c in hashable])
     rows = (
-        df.groupBy(bucket.alias("bucket"))
-        .agg(F.count("*").alias("n"), F.bit_xor(csum).alias("x"))
+        df.groupBy(F.pmod(h, F.lit(_LINEAGE_BUCKETS)).alias("bucket"))
+        .agg(F.count("*").alias("n"), F.bit_xor(h).alias("x"))
         .collect()
     )
     return {str(r["bucket"]): [int(r["n"]), int(r["x"])] for r in rows}
@@ -68,10 +59,10 @@ class SnapshotStore:
 
     def write_round(self, r: int, tables: dict[str, DataFrame], meta: dict) -> None:
         """Write all tables for round r, then commit the manifest.
-        Hash-bucketed or URL-keyed tables (pages, frontier_next) get a
-        per-partition lineage record in the manifest — count + XOR
-        checksum per bucket — so a resume can verify partition
-        integrity before trusting the snapshot (:meth:`verify_round`)."""
+        Every table gets a per-partition lineage record in the manifest
+        — count + XOR checksum per bucket — so a resume can verify
+        partition integrity before trusting the snapshot
+        (:meth:`verify_round`)."""
         rdir = self._round_dir(r)
         written = {}
         lineage = {}
@@ -79,17 +70,15 @@ class SnapshotStore:
             path = str(rdir / name)
             df.write.mode("overwrite").parquet(path)
             written[name] = path
-            lin = _partition_lineage(df)
-            if lin is not None:
-                lineage[name] = lin
+            lineage[name] = _partition_lineage(df)
         manifest = {"round": r, "tables": written, "lineage": lineage, **meta}
         tmp = rdir / "manifest.json.tmp"
         tmp.write_text(json.dumps(manifest, indent=1))
         tmp.rename(rdir / "manifest.json")  # atomic commit point
 
     def verify_round(self, spark: SparkSession, r: int) -> None:
-        """Recompute every lineage-tracked table's per-bucket (count,
-        key_hash XOR) from the stored parquet and compare to the
+        """Recompute every table's per-bucket (count, row-hash XOR)
+        from the stored parquet and compare to the
         manifest — raises ValueError naming the first diverging
         (table, bucket) on corruption/truncation."""
         recorded = self.manifest(r).get("lineage", {})

@@ -17,7 +17,7 @@ SPEC = WorldSpec(n_tianyan_seeds=12)
 
 @pytest.fixture(scope="module")
 def run_and_oracle(spark):
-    cfg = CrawlConfig(spec=SPEC, n_buckets=8, use_bloom=True)
+    cfg = CrawlConfig(spec=SPEC, n_buckets=8, filter_family="bloom")
     run = CrawlRun(spark, cfg)
     results = run.run()
     oracle = Oracle(spec=SPEC, fixed_date=cfg.fixed_date).run()
@@ -207,7 +207,7 @@ def run_and_oracle_dirty(spark):
     oracle configured identically."""
     dirty_spec = WorldSpec(n_tianyan_seeds=8)
     cfg = CrawlConfig(
-        spec=dirty_spec, n_buckets=8, use_bloom=True,
+        spec=dirty_spec, n_buckets=8, filter_family="bloom",
         html_parser="tolerant", dirty_web=True,
     )
     results = CrawlRun(spark, cfg).run()
@@ -338,7 +338,7 @@ def test_incremental_filter_maintenance_carries_untouched_buckets(spark):
 def test_filter_family_none_and_validation(spark):
     import pytest
 
-    run = CrawlRun(spark, CrawlConfig(use_bloom=False))
+    run = CrawlRun(spark, CrawlConfig(filter_family="none"))
     assert run.filter_family == "none"
     with pytest.raises(ValueError, match="filter_family"):
         CrawlRun(spark, CrawlConfig(filter_family="xor"))

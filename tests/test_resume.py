@@ -125,6 +125,9 @@ def test_round_dirs_hold_only_their_delta(spark, full):
         assert set(store.manifest(r)["tables"]) == {"pages", "images", "frontier_next"}
         pages = store.read(spark, r, "pages")
         assert "html" not in pages.columns
+        # a round computes only the host queues; the replay clock is
+        # fetch_order()'s, over the whole fetch log
+        assert "host_rank" in pages.columns and "ref_seq" not in pages.columns
         assert {row["round"] for row in pages.select("round").distinct().collect()} == {r}
         n_pages += pages.count()
         n_images += store.read(spark, r, "images").count()
@@ -197,7 +200,7 @@ def test_latest_round_ignores_uncommitted(tmp_path):
 
 def test_partition_lineage_detects_corruption(spark, tmp_path, two_rounds):
     """North_rule: snapshots carry per-partition lineage (per-bucket
-    count + key_hash XOR); verify_round passes on intact state and
+    count + row-hash XOR); verify_round passes on intact state and
     names the table when a bucket's rows are lost."""
     store = _copy_store(two_rounds, tmp_path)
     assert "pages" in store.manifest(0)["lineage"]
@@ -244,3 +247,20 @@ def test_order_invariant_to_parallelism(tmp_path):
     assert a["images"] == b["images"]  # pixel digest/caption/phash/dims
     assert a["n_articles"] == b["n_articles"]
     assert a["n_images"] == b["n_images"]
+
+
+def test_partition_lineage_covers_images(spark, tmp_path, two_rounds):
+    """The images delta has neither (bucket, key_hash) nor url, and
+    still carries lineage: dropping some of its rows fails the verify
+    with the table named. Round 0 fetches only list and root pages, so
+    round 1 holds the first images."""
+    store = _copy_store(two_rounds, tmp_path)
+    assert "images" in store.manifest(1)["lineage"]
+    store.verify_round(spark, 1)  # intact -> passes
+
+    images = store.read(spark, 1, "images")
+    assert images.count() > 1
+    truncated = images.limit(1).localCheckpoint(eager=True)
+    truncated.write.mode("overwrite").parquet(str(store.root / "round=1" / "images"))
+    with pytest.raises(ValueError, match="table=images"):
+        store.verify_round(spark, 1)

@@ -8,6 +8,7 @@ range partitions for those rows.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_crawler_spark.operators.scheduler import (
@@ -155,11 +156,12 @@ def test_host_path_col_fast_vs_fallback(spark):
         assert r["hr"] is None, ("expected parse_url null", r["url"], r["hr"])
 
 
-def test_canonicalize_col_matches_scalar(spark):
-    """The JVM fast-path (codegen regex pass-through) + Arrow slow
-    path must equal the scalar canonicalizer on every URL shape —
-    including the irregular ones that must NOT take the fast path."""
-    from python_crawler_spark.functions.urls import canonicalize_col, canonicalize_url
+def test_canonicalize_split_matches_scalar(spark):
+    """The filter/union canonicalizer (the hot path — already-canonical
+    rows never cross Arrow) must equal the scalar canonicalizer on
+    every URL shape — including the irregular ones that must NOT take
+    the fast path — and lose or duplicate no row."""
+    from python_crawler_spark.functions.urls import canonicalize_split, canonicalize_url
     from python_crawler_spark.parse.udfs import canonicalize_urls_udf
 
     urls = [
@@ -176,24 +178,11 @@ def test_canonicalize_col_matches_scalar(spark):
         # `$` anchor would wrongly send this down the fast path (ADVICE r2)
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = {
-        r["url"]: r["canon"]
-        for r in df.withColumn(
-            "canon", canonicalize_col(F.col("url"), canonicalize_urls_udf)
-        ).collect()
-    }
-    for u in urls:
-        assert got[u] == canonicalize_url(u), u
-
-    # the filter/union variant (the hot path — fast rows never cross
-    # Arrow) must agree row-for-row, and lose/duplicate nothing
-    from python_crawler_spark.functions.urls import canonicalize_split
-
     split = canonicalize_split(df, canonicalize_urls_udf, out="canon")
-    got2 = {r["url"]: r["canon"] for r in split.collect()}
+    got = {r["url"]: r["canon"] for r in split.collect()}
     assert split.count() == len(urls)
     for u in urls:
-        assert got2[u] == canonicalize_url(u), u
+        assert got[u] == canonicalize_url(u), u
 
 
 def test_schedule_bucket_is_pure_row_function(spark):
@@ -219,15 +208,11 @@ def test_schedule_bucket_is_pure_row_function(spark):
     assert "partial_count" in ep or "HashAggregate" in ep
 
 
-def test_schedule_equals_single_partition_reference(spark):
-    """End-to-end rank/cumsum identity: the distributed bucketed
-    two-pass must produce EXACTLY the ref_seq/ref_virtual_ts a plain
-    single-partition window would, on a shuffle-scrambled input with
-    duplicate crawl delays. Known sources only: the two sentinel-rank
-    mystery sources of _frontier would TIE on the full priority tuple,
-    making both sides' row_number assignment arbitrary."""
-    from pyspark.sql import Window
-
+def _known_source_frontier(spark):
+    """150 rows per known source with duplicate crawl delays. Known
+    sources only: the two sentinel-rank mystery sources of _frontier
+    would TIE on the full priority tuple, making any row_number
+    assignment arbitrary."""
     rows = [
         (
             f"http://h{i}.example.com/n/{j}",
@@ -243,11 +228,26 @@ def test_schedule_equals_single_partition_reference(spark):
         for i, src in enumerate(["weixin", "chuansongmen", "tianyan"])
         for j in range(150)
     ]
-    base = spark.createDataFrame(rows, FRONTIER_DDL)
+    return spark.createDataFrame(rows, FRONTIER_DDL)
+
+
+@pytest.mark.parametrize("n_range_partitions", [2, 8])
+def test_schedule_equals_single_partition_reference(spark, n_range_partitions):
+    """End-to-end rank/cumsum identity: the distributed bucketed
+    two-pass must produce EXACTLY the ref_seq/ref_virtual_ts a plain
+    single-partition window would, on a shuffle-scrambled input with
+    duplicate crawl delays. The bounds are global over the packed
+    priority, so with 2 or 8 buckets over 3 sources some bucket
+    straddles a source boundary. host_queues alone must give the same
+    host queues as schedule()."""
+    from pyspark.sql import Window
+
+    from python_crawler_spark.operators.scheduler import host_queues
+
+    base = _known_source_frontier(spark)
     f = base.repartition(5, "url")
-    got = schedule(f, n_salts=2, n_range_partitions=8).select(
-        "url", "ref_seq", "ref_virtual_ts"
-    )
+    plan = schedule(f, n_salts=2, n_range_partitions=n_range_partitions)
+    got = plan.select("url", "ref_seq", "ref_virtual_ts")
     ref = (
         with_priority(base)
         .withColumn(
@@ -278,56 +278,34 @@ def test_schedule_equals_single_partition_reference(spark):
     )
     assert bad.count() == 0
 
-
-def test_rank_invariant_to_degenerate_bounds_sample(spark):
-    """The bounds job reads a fixed-seed SAMPLE (round 5): the cut
-    points steer bucket balance only, so ranks must be identical for
-    any bound set — including the degenerate one where a group never
-    surfaces in the sample and every one of its rows falls to bucket 0.
-    Force that path with a vanishingly small fraction and compare
-    row-for-row against the full-input bounds."""
-    from python_crawler_spark.operators.scheduler import (
-        global_rank_and_cumsum,
-        packed_priority_col,
+    queue_cols = ["url", "source_rank", "host_salt", "host_rank", "host_scheduled_at"]
+    queues = host_queues(f, n_salts=2)
+    assert "ref_seq" not in queues.columns
+    assert sorted(queues.select(queue_cols).collect()) == sorted(
+        plan.select(queue_cols).collect()
     )
 
-    rows = [
-        (
-            f"http://h{i}.example.com/n/{j}",
-            src,
-            j,
-            2,
-            0,
-            j % 7,
-            0,
-            float(j % 3),
-            f"h{i}.example.com",
-        )
-        for i, src in enumerate(["weixin", "chuansongmen", "tianyan"])
-        for j in range(150)
-    ]
-    f = (
-        with_priority(spark.createDataFrame(rows, FRONTIER_DDL))
-        .withColumn("_prio", packed_priority_col())
-        .repartition(5, "url")
-    )
+
+def test_rank_invariant_to_degenerate_bounds_sample(spark, monkeypatch):
+    """The bounds job reads a fixed-seed SAMPLE: the cut points steer
+    bucket balance only, so ranks must be identical for any bound set —
+    including the degenerate one where the sample is empty and every
+    row falls to bucket 0. Force that path with a vanishingly small
+    fraction and compare row-for-row against the full-input bounds."""
+    from python_crawler_spark.operators import scheduler
+
+    f = _known_source_frontier(spark).repartition(5, "url")
 
     def run(fraction):
+        monkeypatch.setattr(scheduler, "BOUNDS_SAMPLE", fraction)
         return {
-            r["url"]: (r["seq"], r["virtual_ts"])
-            for r in global_rank_and_cumsum(
-                f,
-                ["_prio"],
-                "crawl_delay",
-                partition_col="source_rank",
-                n_range_partitions=8,
-                bounds_sample=fraction,
-            )
-            .select("url", "seq", "virtual_ts")
+            r["url"]: (r["ref_seq"], r["ref_virtual_ts"])
+            for r in schedule(f, n_salts=2, n_range_partitions=8)
+            .select("url", "ref_seq", "ref_virtual_ts")
             .collect()
         }
 
-    full = run(None)  # exact bounds from the whole input
+    full = run(1.0)  # exact bounds from the whole input
     empty = run(1e-12)  # sample almost surely empty -> bucket 0 path
     assert full == empty
 
@@ -423,8 +401,6 @@ def test_pack_order_guard_raises_out_of_domain(spark):
     end-to-end by the bench_crawl scale-2.0 run that tripped it on
     link_idx at 1,023+ links/page; pinned here at unit cost). The
     domain edges themselves pack fine."""
-    import pytest
-
     from python_crawler_spark.operators.scheduler import (
         PRIORITY_WIDTHS,
         packed_priority_col,
