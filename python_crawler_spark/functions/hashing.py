@@ -102,11 +102,6 @@ def bucket_of(url_hash: int, n_buckets: int) -> int:
     return url_hash % n_buckets if url_hash >= 0 else (url_hash % n_buckets + n_buckets) % n_buckets
 
 
-def url_hash_col(url: Column) -> Column:
-    """Data-plane url hash: JVM xxhash64, stays in codegen."""
-    return F.xxhash64(url)
-
-
 def bucket_col(url_hash: Column, n_buckets: int) -> Column:
     """Data-plane hash-bucket: pmod keeps buckets non-negative."""
     return F.pmod(url_hash, F.lit(n_buckets)).cast("int")

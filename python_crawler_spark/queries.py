@@ -1644,8 +1644,9 @@ def q_streaming_fetch_plan(spark, sf_dir):
     ingested one per trigger (staggered mtimes fix the ingestion
     order), so FOUR micro-batches run and the oracle match proves the
     bridge's cross-batch sequence continuity (per-source offsets
-    committed per epoch, frontier_stream.run_micro_batches). Remaining
-    determinism requirements: files are contiguous priority ranges in
+    aggregated from the earlier epochs' plans,
+    frontier_stream.run_micro_batches). Remaining determinism
+    requirements: files are contiguous priority ranges in
     ingestion order (continuity's documented in-order-arrival
     contract), and (page_no, link_idx) = divmod(event_id, 100) makes
     the priority tuple total — no rank ties for task timing to break.

@@ -521,25 +521,4 @@ def _account_for_biz(biz: str) -> str:
 # ------------------------------------------------------------- politeness
 
 
-def crawl_delay_for(source: str, kind: str, url: str) -> float:
-    """Virtual-time politeness budget (BASELINE.md; SURVEY O5-O7).
-
-    tianyan's unseeded uniform(8,15)/uniform(15,35) is replaced by a
-    deterministic hash-derived value in the same range (SURVEY §7
-    hard-parts: ordering does not depend on the value, cumulative
-    virtual time does; divergence from the unseeded reference is by
-    design and documented).
-    """
-    if source == "weixin":
-        return 5.0 if kind == "list" else 1.0  # weixin_public.py:258,260
-    if source == "chuansongmen":
-        return 3.0  # chuansongmen.py:66,93
-    if source == "tianyan":
-        h = _h("delay", url)
-        if kind == "search":
-            return 8.0 + (h % 7001) / 1000.0  # U[8,15)
-        return 15.0 + (h % 20001) / 1000.0  # U[15,35)
-    return 0.0
-
-
 BACKOFF = {"chuansongmen": 10.0, "tianyan": 5.0}  # chuansongmen.py:96, tianyan:148

@@ -14,8 +14,12 @@ of discovered URLs. This module gives the engine that front door:
   through the batch dedup + schedule operators so streaming and batch
   share one code path. Each epoch writes its fetch plan to
   ``<out_dir>/epoch=<id>`` with overwrite, so a replayed epoch is
-  rewritten, not duplicated; its control state comes from one
-  per-source aggregate.
+  rewritten, not duplicated. The plans are the stream's only state:
+  epoch k reads the plans of epochs < k for its seen delta, its
+  ``ref_seq``/``ref_virtual_ts`` offsets and its ordering watermark,
+  all from one per-source aggregate. A query owns its ``out_dir``; a
+  key first scheduled under one source and arriving later under
+  another is kept by first arrival.
 - ``windowed_discovery_metrics``: watermarked per-host tumbling-window
   discovery counts (the streaming analog of the A6 metrics table).
 """
@@ -66,56 +70,6 @@ def windowed_discovery_metrics(
     )
 
 
-def stateful_stream_dedup(enriched: DataFrame) -> DataFrame:
-    """Cross-micro-batch URL-seen dedup as a CUSTOM STATEFUL OPERATOR
-    (applyInPandasWithState): per hash-bucket group, the state is the
-    set of key_hashes ever emitted; a row passes only the first time
-    its key_hash appears in the stream's lifetime.
-
-    This is the streaming-native seen set — unlike the foreachBatch
-    bridge (whose ``seen`` snapshot is fixed at query start), state
-    here evolves across micro-batches and is persisted/restored by the
-    streaming checkpoint. Partitioned by ``bucket`` so state shards
-    exactly like the batch seen table (SURVEY J1); seen sets only grow
-    (no watermark eviction — production configures the RocksDB state
-    store for spill).
-
-    Emission semantics are SET-dedup (first arrival in stream order),
-    not the batch priority-tuple first-occurrence — a stream has no
-    global priority order to win by; the downstream schedule() still
-    orders every emitted row deterministically.
-
-    The probe is vectorized (pandas drop_duplicates + isin mask — no
-    per-element Python loop; round-2 verdict #4). State is a Python
-    list of key_hashes, so per-bucket memory is O(unique keys in the
-    bucket); size n_buckets so a bucket's seen set fits an executor —
-    production swaps the state store for RocksDB, which spills.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = enriched.schema
-
-    def dedup(key, pdfs, state):
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            # first arrival within the batch wins (order-preserving),
-            # then drop anything already seen in the stream's lifetime
-            first = pdf.drop_duplicates(subset=["key_hash"], keep="first")
-            out = first[~first["key_hash"].isin(seen)]
-            if len(out):
-                seen.update(int(k) for k in out["key_hash"])
-                yield out
-        state.update((list(seen),))
-
-    return enriched.groupBy("bucket").applyInPandasWithState(
-        dedup,
-        out_schema,
-        "hashes array<long>",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
 class OutOfOrderArrivalError(RuntimeError):
     """A micro-batch contained rows whose priority precedes a PRIOR
     epoch's committed watermark — merging them would silently produce
@@ -126,30 +80,27 @@ class OutOfOrderArrivalError(RuntimeError):
     quarantine table and re-sequence it instead of appending."""
 
 
-# one row per source, committed per epoch next to the stream checkpoint
-OFFSETS_SCHEMA = "source string, cnt_off long, delay_off double, max_prio long"
+# the plan columns an epoch's control state needs: the seen key, the
+# within-source priority tuple and the delay (``epoch`` is the partition)
+PLAN_STATE_SCHEMA = (
+    "source string, key_hash long, line_no int, stage int, page_no int, "
+    "link_idx int, attempt int, crawl_delay double, epoch int"
+)
 
 
-def _load_source_offsets(spark: SparkSession, off_dir: str, epoch_id: int) -> dict:
-    """``{source: (cnt_off, delay_off, max_prio)}`` as committed by the
-    latest epoch STRICTLY BEFORE epoch_id; empty when none committed
-    (a missing offsets directory is the first epoch). Strictly-before
-    matters for replay: if epoch k crashed after writing its own
-    offsets, the retry must NOT start from them. ``max_prio`` is the
-    ordering watermark: the largest within-source packed priority
-    scheduled by any prior epoch. A committed epoch that cannot be
-    read raises — it is never mistaken for a first epoch."""
-    root = spark._jvm.org.apache.hadoop.fs.Path(off_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return {}
-    names = [st.getPath().getName() for st in fs.listStatus(root)]
-    epochs = [int(n.split("=", 1)[1]) for n in names if n.startswith("epoch=")]
-    prior = [e for e in epochs if e < epoch_id]
-    if not prior:
-        return {}
-    rows = spark.read.schema(OFFSETS_SCHEMA).parquet(f"{off_dir}/epoch={max(prior)}").collect()
-    return {r["source"]: (r["cnt_off"], r["delay_off"], r["max_prio"]) for r in rows}
+def _prior_plans(spark: SparkSession, out_dir: str, epoch_id: int) -> DataFrame:
+    """The plan rows of every epoch STRICTLY BEFORE ``epoch_id``,
+    projected to PLAN_STATE_SCHEMA; empty when no plan exists yet (a
+    missing ``out_dir`` is the first epoch). The explicit schema means
+    the read starts no schema-inference job.
+    Strictly-before matters for replay: if epoch k crashed while
+    writing its own plan, the retry must NOT read that partial plan.
+    A plan that cannot be read raises when the epoch's aggregate runs
+    — it is never mistaken for a first epoch."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
+    if not root.getFileSystem(spark._jsc.hadoopConfiguration()).exists(root):
+        return spark.createDataFrame([], PLAN_STATE_SCHEMA)
+    return spark.read.schema(PLAN_STATE_SCHEMA).parquet(out_dir).filter(F.col("epoch") < epoch_id)
 
 
 def _lit_map(d: dict):
@@ -170,52 +121,62 @@ def run_micro_batches(
     priority schedule) and writes its fetch plan to
     ``<out_dir>/epoch=<id>`` — one code path for batch and streaming.
 
-    One epoch runs the batch path once: the deduplicated survivors are
-    persisted, and every later action reads that copy. All of the
-    epoch's control state — empty-batch test, ordering guard, offsets
-    and watermark — comes from ONE per-source aggregate (min/max
-    within-source priority, row count, delay sum) collected to the
-    driver; carried offsets shift the plan as literal map columns.
-
-    ref_seq / ref_virtual_ts are GLOBAL across micro-batches (round 4,
-    VERDICT r3 "What's missing #3"): after each batch, per-source
-    (row count, delay sum) offsets are committed to
-    ``<checkpoint_dir>_source_offsets/epoch=<id>``; batch k+1 shifts
-    its locally-computed sequence/clock by the latest offsets with
-    epoch < k+1 — so a restart or a second trigger CONTINUES the
+    The plans are the stream's only state. Epoch k reads the plans of
+    epochs < k (``_prior_plans``) and takes from them everything the
+    batch engine carries between rounds: the seen delta (seen +=
+    scheduled, as the batch round's per-round deltas), the per-source
+    ``ref_seq``/``ref_virtual_ts`` offsets (row count, delay sum) and
+    the per-source ordering watermark (max within-source packed
+    priority scheduled so far). So a URL that arrives in two epochs is
+    scheduled once, and a restart or a second trigger CONTINUES the
     sequence instead of re-ranking from 1, mirroring the batch
-    engine's resume (plans/crawl.py).
+    engine's resume (plans/crawl.py). The read is O(rows emitted so
+    far), like the batch round's seen set. A query owns its
+    ``out_dir``: any plan found there is taken as this stream's.
 
-    Replay is safe: every epoch-keyed output (plan, quarantine,
-    offsets) is written with overwrite, so an epoch that ran its sink
-    but not its commit rewrites the same rows on restart instead of
-    duplicating them, and a replayed batch reads strictly-prior
-    offsets only. A committed offsets epoch that cannot be read
-    raises instead of restarting the sequence.
+    One epoch runs the batch path once. One join marks each candidate
+    against the static ``seen`` and the earlier plans' keys; the
+    marked survivors are persisted, and every later action reads that
+    copy. All of the epoch's control state — empty-batch test,
+    ordering guard, offsets and watermark — comes from ONE per-source
+    aggregate over the survivors and the earlier plans (a tagged
+    union), collected to the driver; the offsets shift the plan as
+    literal map columns.
+
+    Replay is safe: every epoch-keyed output (plan, quarantine) is
+    written with overwrite, so an epoch that ran its sink but not its
+    commit rewrites the same rows on restart instead of duplicating
+    them, and a replayed epoch reads strictly-earlier plans only, never
+    its own partial one. An earlier plan that cannot be read raises
+    instead of restarting the sequence.
 
     Continuity semantics: the global sequence equals a single-batch
     run's exactly when micro-batch boundaries respect the priority
     order (producers drop frontier files in discovery order — the
-    normal case). The contract is ENFORCED per epoch: each commit
-    carries a per-source ordering watermark (max within-source packed
-    priority scheduled so far), and a later batch whose minimum
-    priority falls below a prior watermark raises
+    normal case). The contract is ENFORCED per epoch: a batch whose
+    minimum priority falls below an earlier epoch's watermark raises
     OutOfOrderArrivalError BEFORE its plan is written — fail-loud
     beats silently emitting a sequence a batch replay would not
     produce. Ties at the watermark pass (identical priority tuples
-    are order-insensitive).
+    are order-insensitive). The guard sees a row before the earlier
+    plans' dedup drops it, so a late repeat of an earlier URL raises
+    too. A key already in the static ``seen`` is dropped before the
+    guard. A key first scheduled under one source and arriving later
+    under another is kept by first arrival (a batch run keeps the row
+    whose source sorts first); sources have disjoint hosts here, so
+    nothing handles that case.
 
     ``on_late`` picks the violation posture: ``"raise"`` (default —
-    stop the query) or ``"quarantine"`` — the LATE ROWS ONLY are
-    written to ``<out_dir>_quarantine/epoch=<id>`` (full frontier
-    schema) and the in-order remainder of the batch is scheduled
+    stop the query) or ``"quarantine"`` — the LATE ROWS ONLY (late
+    repeats of earlier URLs included) are written to
+    ``<out_dir>_quarantine/epoch=<id>`` (full frontier schema) and the in-order remainder of the batch is scheduled
     normally, so one straggler file cannot stall the stream while the
     emitted sequence stays replay-equal. An operator re-sequences the
     quarantine table (it is ordinary frontier input) once the gap is
     understood. host_rank/host_scheduled_at stay per-batch (a host's
     polite queue is re-planned every batch anyway; carrying it would
     pin dead hosts in state forever)."""
-    from ..operators.dedup import batch_first_occurrence, dedup_against_seen
+    from ..operators.dedup import batch_first_occurrence
     from ..operators.scheduler import (
         PRIORITY_COLS,
         PRIORITY_WIDTHS,
@@ -227,19 +188,17 @@ def run_micro_batches(
 
     if on_late not in ("raise", "quarantine"):
         raise ValueError(f"on_late must be 'raise' or 'quarantine', got {on_late!r}")
-    off_dir = checkpoint_dir.rstrip("/") + "_source_offsets"
     quarantine_dir = out_dir.rstrip("/") + "_quarantine"
     # within-source priority (everything below source_rank): comparable
     # across epochs for the same source
     sub_prio = pack_order([(F.col(n), b, n) for n, b in PRIORITY_WIDTHS[1:]])
+    # after the marking join: null = new, False = an earlier epoch
+    # scheduled the key, True = the static seen set holds it
+    is_new = F.col("_seen").isNull()
 
-    def source_stats(df: DataFrame) -> dict:
-        """{source: (min_prio, max_prio, rows, delay_sum)}; empty for
-        an empty batch."""
-        aggs = df.groupBy("source").agg(
-            F.min(sub_prio), F.max(sub_prio), F.count("*"), F.sum("crawl_delay")
-        )
-        return {r[0]: (r[1], r[2], r[3], r[4] or 0.0) for r in aggs.collect()}
+    def tagged(df: DataFrame, new, old: bool) -> DataFrame:
+        cols = ["source", "crawl_delay", sub_prio.alias("_p")]
+        return df.select(*cols, new.alias("_new"), F.lit(old).alias("_old"))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -249,14 +208,26 @@ def run_micro_batches(
             ["source"] + PRIORITY_COLS[1:],
             order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
         )
-        survivors = dedup_against_seen(cand, seen, None).persist()
+        prior = _prior_plans(spark, out_dir, epoch_id)
+        marks = (
+            seen.select("key_hash", F.lit(True).alias("_seen"))
+            .unionByName(prior.select("key_hash", F.lit(False).alias("_seen")))
+            .groupBy("key_hash")
+            .agg(F.max("_seen").alias("_seen"))
+        )
+        marked = cand.join(marks, "key_hash", "left")
+        survivors = marked.filter(~F.coalesce("_seen", F.lit(False))).persist()
         try:
-            new, stats = survivors, source_stats(survivors)
-            if not stats:
-                return
-            prev = _load_source_offsets(spark, off_dir, epoch_id)
+            # per (source, _old): min/max priority, new rows (every
+            # earlier plan row counts), delay sum
+            state = tagged(survivors, is_new, False).unionByName(tagged(prior, F.lit(True), True))
+            rows = state.groupBy("source", "_old").agg(
+                F.min("_p"), F.max("_p"), F.count_if("_new"), F.sum("crawl_delay")
+            ).collect()
+            cur = {s: (p_min, n) for s, old, p_min, _, n, _ in rows if not old}
+            prev = {s: (n, delay or 0.0, p_max) for s, old, _, p_max, n, delay in rows if old}
             wm = {s: v[2] for s, v in prev.items()}
-            late = {s: (st[0], wm[s]) for s, st in stats.items() if s in wm and st[0] < wm[s]}
+            late = {s: (v[0], wm[s]) for s, v in cur.items() if s in wm and v[0] < wm[s]}
             if late and on_late == "raise":
                 raise OutOfOrderArrivalError(
                     f"epoch {epoch_id}: rows precede the committed ordering "
@@ -264,29 +235,23 @@ def run_micro_batches(
                     f"{late}) — a file arrived out of priority order; "
                     "re-sequence or quarantine it instead of appending"
                 )
+            new = survivors.filter(is_new).drop("_seen")
             if late:
                 # split off ONLY the rows below their source's watermark;
-                # the committed watermark then covers scheduled rows only
+                # later watermarks then cover scheduled rows only
                 is_late = sub_prio < F.coalesce(_lit_map(wm)[F.col("source")], F.lit(-1))
-                new.filter(is_late).write.mode("overwrite").parquet(
+                survivors.filter(is_late).drop("_seen").write.mode("overwrite").parquet(
                     f"{quarantine_dir}/epoch={epoch_id}"
                 )
                 new = new.filter(~is_late)
-                stats = source_stats(new)
+            if not any(n for _, n in cur.values()):
+                return
             plan = schedule(new, n_salts=n_salts)
             if prev:
                 for col, i, zero in (("ref_seq", 0, 0), ("ref_virtual_ts", 1, 0.0)):
                     shift = _lit_map({s: v[i] for s, v in prev.items()})[F.col("source")]
                     plan = plan.withColumn(col, F.col(col) + F.coalesce(shift, F.lit(zero)))
             plan.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-            # this epoch's cumulative offsets and watermark: carried + batch
-            merged = dict(prev)
-            for s, (_, hi, cnt, delay) in stats.items():
-                c0, d0, w0 = prev.get(s, (0, 0.0, hi))
-                merged[s] = (c0 + cnt, d0 + delay, max(w0, hi))
-            spark.createDataFrame(
-                [(s, *v) for s, v in merged.items()], OFFSETS_SCHEMA
-            ).coalesce(1).write.mode("overwrite").parquet(f"{off_dir}/epoch={epoch_id}")
         finally:
             survivors.unpersist()
 

@@ -59,57 +59,6 @@ def test_streaming_schedule_foreachbatch(spark, tmp_path):
     assert spark.read.parquet(str(out)).count() == 20
 
 
-def test_stateful_stream_dedup_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState seen-set: duplicates arriving in LATER
-    micro-batches are suppressed by evolving state (foreachBatch with a
-    static seen snapshot cannot do this)."""
-    from python_crawler_spark.streaming.frontier_stream import stateful_stream_dedup
-
-    import glob
-    import shutil
-
-    drop = tmp_path / "drop3"
-    drop.mkdir()
-    t0 = dt.datetime(2024, 1, 1)
-    # two separate data files -> with maxFilesPerTrigger=1, two
-    # micro-batches; file 2 repeats file 1's URLs plus 10 new ones
-    rows2 = _rows(20, t0) + [
-        (
-            f"http://h9.example.com/new/{i}",
-            "chuansongmen", "acct", 0, 0, 2, 0, i, 0, 1, "", "", "", 3.0,
-            False, 0, 0,
-            t0,
-        )
-        for i in range(10)
-    ]
-    for name, rows in (("f1", _rows(20, t0)), ("f2", rows2)):
-        staging = tmp_path / f"stage_{name}"
-        spark.createDataFrame(rows, STREAM_SCHEMA).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        shutil.copy(part, drop / f"{name}.parquet")
-
-    stream = (
-        spark.readStream.schema(STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop))
-    )
-    deduped = stateful_stream_dedup(streaming_enrich(stream, n_buckets=8))
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_dedup")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = spark.sql("select dedup_key from stateful_dedup").collect()
-    keys = [r["dedup_key"] for r in out]
-    # 20 unique from the repeated set + 10 new = 30, each exactly once
-    assert len(keys) == 30
-    assert len(set(keys)) == 30
-
-
 def test_windowed_discovery_metrics(spark, tmp_path):
     drop = tmp_path / "drop2"
     t0 = dt.datetime(2024, 1, 1)
@@ -341,15 +290,15 @@ def test_replayed_epoch_rewrites_its_plan(spark, tmp_path):
     assert seqs == list(range(1, 31))
 
 
-def test_unreadable_offsets_fail_the_query(spark, tmp_path):
-    """A committed offsets epoch that cannot be read must stop the
-    query, not be read as a first epoch that restarts ref_seq at 1."""
+def test_unreadable_prior_plan_fails_the_query(spark, tmp_path):
+    """An earlier epoch's plan that cannot be read must stop the query,
+    not be read as a first epoch that restarts ref_seq at 1."""
     import pytest
 
     drop, out, ckpt = tmp_path / "u_drop", tmp_path / "u_out", tmp_path / "u_ckpt"
     _copy_as_files(spark, tmp_path, drop, [("f0", _seq_rows(0, 10))])
     _drain_in_order(spark, drop, out, ckpt)
-    committed = tmp_path / "u_ckpt_source_offsets" / "epoch=0"
+    committed = out / "epoch=0"
     parts = list(committed.glob("*.parquet"))
     assert parts
     for part in parts:
@@ -360,5 +309,92 @@ def test_unreadable_offsets_fail_the_query(spark, tmp_path):
     with pytest.raises(Exception, match="epoch=0"):
         q = _drain_in_order(spark, drop, out, ckpt)
         raise AssertionError(f"query should have failed, exception={q.exception()}")
-    # nothing of the second file was emitted
-    assert spark.read.parquet(str(out)).count() == 10
+    # nothing of the second file was emitted (reading all of out would
+    # hit the corrupt epoch=0 file)
+    assert not (out / "epoch=1").exists()
+
+
+def _plan_rows(spark, path):
+    """Every row of a plan directory, as sorted tuples."""
+    return sorted(tuple(r) for r in spark.read.parquet(str(path)).collect())
+
+
+def test_later_epoch_duplicates_are_not_rescheduled(spark, tmp_path):
+    """A URL scheduled by an earlier epoch is not scheduled again: the
+    epochs' concatenated plans equal one batch schedule() of both
+    files, as the batch round's seen set grows with each round."""
+    from python_crawler_spark.operators.dedup import (
+        batch_first_occurrence,
+        dedup_against_seen,
+    )
+    from python_crawler_spark.operators.scheduler import (
+        PRIORITY_COLS,
+        SOURCE_RANK,
+        packed_dedup_order_col,
+        schedule,
+    )
+
+    drop, out, ckpt = tmp_path / "d_drop", tmp_path / "d_out", tmp_path / "d_ckpt"
+    # file 2 repeats 10 URLs of file 1 at later priorities, then adds
+    # 10 new URLs; both files are in priority order
+    repeats = [
+        (f"http://h{i % 5}.example.com/n/{i}",) + row[1:]
+        for i, row in enumerate(_seq_rows(20, 30))
+    ]
+    _copy_as_files(
+        spark, tmp_path, drop, [("f0", _seq_rows(0, 20)), ("f1", repeats + _seq_rows(30, 40))]
+    )
+    _drain_in_order(spark, drop, out, ckpt)
+    emitted = spark.read.parquet(str(out))
+    assert {r["epoch"] for r in emitted.select("epoch").distinct().collect()} == {0, 1}
+
+    rows = streaming_enrich(spark.read.schema(STREAM_SCHEMA).parquet(str(drop)), n_buckets=8)
+    cand = batch_first_occurrence(
+        rows, "key_hash", ["source"] + PRIORITY_COLS[1:],
+        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
+    )
+    seen = spark.createDataFrame([], "key_hash long")
+    batch = schedule(dedup_against_seen(cand, seen, None))
+
+    def triples(plan):
+        return sorted(tuple(r) for r in plan.select("url", "ref_seq", "ref_virtual_ts").collect())
+
+    got = triples(emitted)
+    assert len(got) == 30
+    assert got == triples(batch)
+
+
+def test_replay_after_partial_plan_write(spark, tmp_path):
+    """A crash while epoch 1 writes its plan leaves a partial
+    out/epoch=1 and no commit; the replay must read only the plans
+    before it and rewrite epoch 1's plan exactly."""
+    drop, out, ckpt = tmp_path / "p_drop", tmp_path / "p_out", tmp_path / "p_ckpt"
+    _copy_as_files(spark, tmp_path, drop, [("f0", _seq_rows(0, 15)), ("f1", _seq_rows(15, 30))])
+    _drain_in_order(spark, drop, out, ckpt)
+    epoch1 = out / "epoch=1"
+    whole = _plan_rows(spark, epoch1)
+    assert len(whole) == 15
+    plan1 = spark.read.parquet(str(epoch1))
+    partial = spark.createDataFrame(plan1.limit(4).collect(), plan1.schema)
+    partial.write.mode("overwrite").parquet(str(epoch1))
+    assert len(_plan_rows(spark, epoch1)) == 4
+    (ckpt / "commits" / "1").unlink()
+    (ckpt / "commits" / ".1.crc").unlink(missing_ok=True)
+    _drain_in_order(spark, drop, out, ckpt)
+    assert _plan_rows(spark, epoch1) == whole
+
+
+def test_late_duplicate_of_earlier_epoch_trips_guard(spark, tmp_path):
+    """A later file repeating an earlier epoch's URL at a LOWER
+    priority is out of order: the guard must see it before the
+    earlier plans' dedup would drop it silently."""
+    import pytest
+
+    drop, out, ckpt = tmp_path / "l_drop", tmp_path / "l_out", tmp_path / "l_ckpt"
+    # file 1's URL of row 9 (page 0, link 9), re-sent at link 3
+    late = _seq_rows(9, 10)[0][:7] + (3,) + _seq_rows(9, 10)[0][8:]
+    _copy_as_files(spark, tmp_path, drop, [("f0", _seq_rows(0, 10)), ("f1", [late])])
+    with pytest.raises(Exception, match="precede the committed ordering watermark"):
+        q = _drain_in_order(spark, drop, out, ckpt)
+        raise AssertionError(f"query should have failed, exception={q.exception()}")
+    assert not (out / "epoch=1").exists()
