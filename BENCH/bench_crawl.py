@@ -80,8 +80,8 @@ def timed_crawl(spark, family: str, scale: float) -> dict:
             t_count = time.time()
             frontier = run.run_round(frontier)
             t_round = time.time()
-            run.metrics.append({"round": run.round, "frontier_in": n})
-            run._snapshot(frontier)
+            run.metrics.append({"round": run.round, "frontier_in": n, **run.counts})
+            run._snapshot()
             t_snap = time.time()
             rounds.append(
                 {

@@ -151,15 +151,13 @@ def absolutize(href: str, base: str) -> str:
 # ---------------------------------------------------------------- Spark side
 
 
-def canonicalize_split(
-    df, slow_udf, url_col: str = "url", out: str = "canon_url", n_parts: int | None = None
-):
-    """Canonicalize with the fast path ACTUALLY skipping Python:
-    already-canonical URLs (the overwhelmingly common case on a
-    well-formed frontier) are selected by one codegen regex and never
-    cross the Arrow boundary; only irregular rows (ports, uppercase,
-    queries to sort, fragments, nulls) flow through the vectorized
-    Python UDF branch. The two branches are unioned — downstream
+def canonicalize_split(df, slow_udf, out: str = "canon_url"):
+    """Canonicalize ``url`` into ``out`` with the fast path ACTUALLY
+    skipping Python: already-canonical URLs (the overwhelmingly common
+    case on a well-formed frontier) are selected by one codegen regex
+    and never cross the Arrow boundary; only irregular rows (ports,
+    uppercase, queries to sort, fragments, nulls) flow through the
+    vectorized Python UDF branch. The two branches are unioned — downstream
     ordering never depends on row arrival order in this engine (the
     priority tuple is the only order), so the union is safe anywhere
     canonicalization is used.
@@ -174,25 +172,21 @@ def canonicalize_split(
     Both branches SCAN the input, so callers should pass a cheap-to-
     rescan ``df`` (a materialized source or localCheckpoint — every
     engine call site does); a live expensive pipeline would execute
-    twice.
-
-    ``n_parts`` bounds the union's map-stage concurrency (see below);
-    when None it defaults to ``sparkContext.defaultParallelism``.
-    Deliberately NOT derived from ``df.rdd.getNumPartitions()``:
-    touching ``.rdd`` mid-plan finalizes the physical plan under AQE
-    and can execute upstream stages as a side effect."""
-    url = F.col(url_col)
+    twice."""
+    url = F.col("url")
     is_fast = fast_canonical_pred(url)
     fast = df.filter(is_fast).withColumn(out, url)
-    slow = df.filter(~is_fast | url.isNull()).withColumn(out, slow_udf(url_col))
+    slow = df.filter(~is_fast | url.isNull()).withColumn(out, slow_udf("url"))
     # A plain union DOUBLES the map-stage partition count (both
     # branches scan the source); on an oversubscribed local[N] that
     # doubles concurrent tasks and thrashes SMT siblings (measured 2x
     # regression at local[32]). Coalesce back to one input's worth —
     # shuffle-free; each output partition chains one fast + one slow
-    # partition.
-    if n_parts is None:
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
+    # partition. The partition count is the session's
+    # defaultParallelism, never df.rdd.getNumPartitions(): touching
+    # .rdd mid-plan finalizes the physical plan under AQE and can
+    # execute upstream stages as a side effect.
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     return fast.unionByName(slow).coalesce(max(n_parts, 1))
 
 

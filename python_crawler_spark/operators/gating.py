@@ -13,6 +13,9 @@ kinds: title_skip | name_black | pic_sig_black | link_shape | robots | trim
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,19 +97,12 @@ def apply_title_rules(items: DataFrame, rules: DataFrame, account_col: str = "na
     return joined
 
 
-def link_shape_filter(links: DataFrame, rules: DataFrame, source: str, href_col: str = "href") -> DataFrame:
-    """F14: keep only hrefs matching the source's link-shape regex."""
-    pats = [
-        r["pattern"]
-        for r in _rules_of(rules, "link_shape").filter(F.col("key") == source).collect()
-    ]
-    if not pats:
+def link_shape_filter(links: DataFrame, patterns: list[str], href_col: str = "href") -> DataFrame:
+    """F14: keep only hrefs matching any of the source's link-shape
+    regexes (its ``link_shape`` rule patterns, read once per run)."""
+    if not patterns:
         return links
-    cond = None
-    for p in pats:
-        c = F.col(href_col).rlike(p)
-        cond = c if cond is None else (cond | c)
-    return links.filter(cond)
+    return links.filter(reduce(operator.or_, [F.col(href_col).rlike(p) for p in patterns]))
 
 
 def robots_gate(frontier: DataFrame, rules: DataFrame) -> DataFrame:
@@ -261,11 +257,3 @@ def pic_sig_gate(imgs: DataFrame, rules: DataFrame, sig_col: str = "sig") -> Dat
     black = _rules_of(rules, "pic_sig_black").select(F.col("pattern").alias(sig_col))
     return imgs.join(F.broadcast(black), sig_col, "left_anti")
 
-
-def trim_rules_map(rules: DataFrame) -> DataFrame:
-    """D6 rule lookup table: (account key, marker, direction)."""
-    return _rules_of(rules, "trim").select(
-        F.col("key").alias("trim_key"),
-        F.col("pattern").alias("trim_marker"),
-        F.col("action").alias("trim_direction"),
-    )

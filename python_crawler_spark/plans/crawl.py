@@ -10,11 +10,13 @@
 Each round materializes four things once: the survivors, the fetched
 and parsed pages, the decoded image delta and the next frontier. The
 driver reads row counts from observations on those materializations
-to decide termination (no .collect() of data). Ordering is carried as the
-priority tuple and reconstructed by sort — equality with the
-sequential oracle (tests/oracle.py) is over (source_rank, priority)
-order, per-source virtual clocks, seen-set membership, and extracted
-records.
+to decide termination (no .collect() of data). A round's snapshot
+stores only what it fetched, the pages and the decoded images: the
+output tables and the next frontier are projections of the pages, so
+resume derives them. Ordering is carried as the priority tuple and
+reconstructed by sort — equality with the sequential oracle
+(tests/oracle.py) is over (source_rank, priority) order, per-source
+virtual clocks, seen-set membership, and extracted records.
 
 Reference lifecycle being re-expressed: weixin_public.py:126-266,
 chuansongmen.py:34-97, tianyan_crawler.py:110-178,
@@ -35,6 +37,7 @@ from ..functions.urls import (
     absolutize_col,
     canonicalize_split,
     host_col,
+    pagination_urls_col,
     pic_signature_col,
     query_param_col,
 )
@@ -214,11 +217,12 @@ class CrawlRun:
         self._filter_ckpt_ids: set[int] = set()
         self.store = store
         self.rules = gating.rules_df(spark).cache()
-        # D6: account -> (marker, direction), applied in the fetch pass
-        self.trims = {
-            r["trim_key"]: (r["trim_marker"], r["trim_direction"])
-            for r in gating.trim_rules_map(self.rules).collect()
-        }
+        rows = self.rules.filter(F.col("kind").isin("trim", "link_shape")).collect()
+        # D6: account -> (marker, direction), applied in the fetch pass;
+        # F14: the link shapes of chuansongmen list pages
+        self.trims = {r["key"]: (r["pattern"], r["action"]) for r in rows if r["kind"] == "trim"}
+        self.link_shapes = [r["pattern"] for r in rows
+                            if r["kind"] == "link_shape" and r["key"] == "chuansongmen"]
         self.round = 0
         self.seen: DataFrame = spark.createDataFrame(
             [], "bucket int, key_hash long, dedup_key string, url string, round int"
@@ -374,18 +378,15 @@ class CrawlRun:
         accts = fetched.filter(
             (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_ROOT)
         ).withColumn("max_page", F.col("page.max_page"))
+        # max_page <= 1 has no list pages (sequence(1, 0) is [1, 0])
         pages = accts.filter(F.col("max_page") > 1).select(
-            "source", "name", "seed_id", "line_no", "depth", "url",
-            F.explode(F.sequence(F.lit(1), F.col("max_page") - 1)).alias("pg"),
+            "source", "name", "seed_id", "line_no", "depth",
+            F.posexplode(pagination_urls_col(F.col("url"), F.col("max_page"))).alias(
+                "pos", "url"
+            ),
         )
         return self._child(
-            pages,
-            url=F.concat(
-                F.col("url"), F.lit("?start="), ((F.col("pg") - 1) * 12).cast("string")
-            ),
-            stage=STAGE_LIST,
-            page_no=F.col("pg"),
-            link_idx=-1,
+            pages, url=F.col("url"), stage=STAGE_LIST, page_no=F.col("pos") + 1, link_idx=-1
         )
 
     def _expand_csm_list(self, fetched: DataFrame) -> DataFrame:
@@ -397,7 +398,7 @@ class CrawlRun:
             "source", "name", "seed_id", "line_no", "depth", "page_no",
             F.posexplode("page.links").alias("pos", "href"),
         )
-        links = gating.link_shape_filter(links, self.rules, "chuansongmen")  # F14
+        links = gating.link_shape_filter(links, self.link_shapes)  # F14
         return self._child(
             links,
             url=absolutize_col(F.col("href"), F.lit(CSM_BASE)),
@@ -436,6 +437,19 @@ class CrawlRun:
             link_idx=0,
         )
         return children, retries
+
+    def _expand(self, pages: DataFrame) -> DataFrame:
+        """The next frontier as a projection of one round's fetched
+        pages, so a round and a resume (over the last committed round's
+        stored pages) derive the same rows."""
+        children, retries = self._expand_tianyan_search(pages)
+        return (
+            self._expand_weixin_list(pages)
+            .unionByName(self._expand_csm_account(pages))
+            .unionByName(self._expand_csm_list(pages))
+            .unionByName(children)
+            .unionByName(retries)
+        )
 
     # ----------------------------------------------------------- extraction
 
@@ -578,9 +592,11 @@ class CrawlRun:
 
         Materializes four things once: the survivors ``new``, the
         fetched and parsed pages, the decoded image delta and the next
-        frontier. Every other table is a projection of the pages; the
-        round's counters are observed on those same materializations
-        (``self.counts``), so they cost no job of their own."""
+        frontier (``_expand`` of the pages). Every other table is a
+        projection of the pages; the round's counters are observed on
+        those same materializations (``self.counts``), so they cost no
+        job of their own. ``self.delta`` is what the round fetched: its
+        pages and decoded images."""
         cfg = self.cfg
         cand = self._enrich(frontier)
         cand = gating.robots_gate(cand, self.rules)  # J8
@@ -625,16 +641,9 @@ class CrawlRun:
         self._update_filters(fetch_counts["dirty_buckets"])
         self.delta = {"pages": fetched, "images": images}
 
-        # expansion -> next frontier
-        children, retries = self._expand_tianyan_search(fetched)
-        nxt = (
-            self._expand_weixin_list(fetched)
-            .unionByName(self._expand_csm_account(fetched))
-            .unionByName(self._expand_csm_list(fetched))
-            .unionByName(children)
-            .unionByName(retries)
+        nxt, next_counts = _observed_checkpoint(
+            self._expand(fetched), frontier_out=F.count(F.lit(1))
         )
-        nxt, next_counts = _observed_checkpoint(nxt, frontier_out=F.count(F.lit(1)))
         self.counts = {**fetch_counts, **image_counts, **next_counts}
         return nxt
 
@@ -694,18 +703,16 @@ class CrawlRun:
             self.metrics.append({"round": self.round, "frontier_in": n, **self.counts})
             n = self.counts["frontier_out"]
             if self.store is not None:
-                self._snapshot(frontier)
+                self._snapshot()
             self.round += 1
         return self.results()
 
-    def _snapshot(self, next_frontier: DataFrame) -> None:
-        """K6/O10-O11: commit this round's delta for resume — its
-        fetched pages, its decoded images and the next frontier."""
-        self.store.write_round(
-            self.round,
-            {**self.delta, "frontier_next": next_frontier},
-            {"metrics": self.metrics[-1]},
-        )
+    def _snapshot(self) -> None:
+        """K6/O10-O11: commit what this round fetched — its pages and
+        its decoded images — with its metrics. The next frontier is not
+        stored: resume derives it from the pages, and checks its size
+        against the recorded ``frontier_out``."""
+        self.store.write_round(self.round, self.delta, {"metrics": self.metrics[-1]})
 
     @classmethod
     def resume(
@@ -717,9 +724,12 @@ class CrawlRun:
         """Resume from the latest committed snapshot (O11): identical
         final state to an uninterrupted run (tested). The pages and
         images of every committed round are verified and read, the
-        tables are re-derived from the pages, and the frontier comes
-        from the last round. A fresh run when nothing is committed; a
-        committed table that cannot be read raises."""
+        tables are re-derived from the pages, and the start frontier is
+        ``_expand`` of the last round's pages. A fresh run when nothing
+        is committed; a committed table that cannot be read raises, and
+        so does a derived frontier whose size differs from the last
+        round's recorded ``frontier_out`` (the expansion rules drifted
+        since the commit)."""
         run = cls(spark, config, store)
         last = store.latest_round()
         if last is None:
@@ -729,20 +739,25 @@ class CrawlRun:
             store.verify_round(spark, r)  # per-partition lineage gate
         run.round = last + 1
 
-        def stored(name):
-            frames = [store.read(spark, r, name) for r in rounds]
-            return reduce(DataFrame.unionByName, frames)
-
-        tables, _ = run._page_tables(stored("pages"))  # images are stored decoded
-        run._add_tables({**tables, "images": stored("images")})
+        pages = [store.read(spark, r, "pages") for r in rounds]
+        images = [store.read(spark, r, "images") for r in rounds]  # stored decoded
+        tables, _ = run._page_tables(reduce(DataFrame.unionByName, pages))
+        run._add_tables({**tables, "images": reduce(DataFrame.unionByName, images)})
         # rebuild the prefilter from the restored seen set (every
         # bucket present is 'dirty' on resume — full rebuild once,
         # then incremental again per round)
         dirty = run.seen.select("bucket").distinct().collect()
         run._update_filters(sorted(r["bucket"] for r in dirty))
-        run._start_frontier = _observed_checkpoint(
-            store.read(spark, last, "frontier_next"), frontier_out=F.count(F.lit(1))
+        frontier, counts = _observed_checkpoint(
+            run._expand(pages[-1]), frontier_out=F.count(F.lit(1))
         )
+        want = store.manifest(last)["metrics"]["frontier_out"]
+        if counts["frontier_out"] != want:
+            raise ValueError(
+                f"snapshot round={last}: derived frontier has "
+                f"{counts['frontier_out']} rows, manifest records frontier_out={want}"
+            )
+        run._start_frontier = frontier, counts
         return run
 
     # -------------------------------------------------------------- results

@@ -7,11 +7,11 @@ a round's snapshot is visible only once its manifest exists, giving
 crash-consistent resume (the reference's analog is the id_log.txt
 checkpoint, tianyan_crawler.py:173-176,226-230).
 
-Layout (each round commits only what it added, the Iceberg append
-model; a resume reads pages/images of every round <= the latest):
-  <root>/round=<r>/pages/*.parquet          fetched + parsed rows, no html
-  <root>/round=<r>/images/*.parquet         the round's decoded images
-  <root>/round=<r>/frontier_next/*.parquet  the next round's frontier
+Layout (each round commits only what it fetched, the Iceberg append
+model; a resume reads pages/images of every round <= the latest and
+derives everything else from the pages):
+  <root>/round=<r>/pages/*.parquet    fetched + parsed rows, no html
+  <root>/round=<r>/images/*.parquet   the round's decoded images
   <root>/round=<r>/manifest.json      (commit record, written last)
 """
 

@@ -6,6 +6,7 @@ scale; bench_scaling.py reports throughput)."""
 
 from __future__ import annotations
 
+import json
 import shutil
 from collections import Counter
 from pathlib import Path
@@ -80,8 +81,10 @@ def test_resume_equals_uninterrupted(spark, tmp_path, full):
         if frontier.count() == 0:
             break
         frontier = interrupted.run_round(frontier)
-        interrupted.metrics.append({"round": interrupted.round, "frontier_in": -1})
-        interrupted._snapshot(frontier)
+        interrupted.metrics.append(
+            {"round": interrupted.round, "frontier_in": -1, **interrupted.counts}
+        )
+        interrupted._snapshot()
         interrupted.round += 1
 
     resumed = CrawlRun.resume(spark, store, CFG)
@@ -98,8 +101,8 @@ def test_resume_after_crash_before_manifest(spark, tmp_path, full):
         def write_round(self, r, tables, meta):
             if r == 1:  # the last table's write fails mid-round
                 boom = F.raise_error(F.lit("crash before manifest"))
-                nxt = tables["frontier_next"].withColumn("url", boom)
-                tables = {**tables, "frontier_next": nxt}
+                images = tables["images"].withColumn("src_url", boom)
+                tables = {**tables, "images": images}
             super().write_round(r, tables, meta)
 
     store = CrashingStore(tmp_path / "snap")
@@ -122,7 +125,7 @@ def test_round_dirs_hold_only_their_delta(spark, full):
     assert last == len(run.metrics) - 1
     n_pages = n_images = 0
     for r in range(last + 1):
-        assert set(store.manifest(r)["tables"]) == {"pages", "images", "frontier_next"}
+        assert set(store.manifest(r)["tables"]) == {"pages", "images"}
         pages = store.read(spark, r, "pages")
         assert "html" not in pages.columns
         # a round computes only the host queues; the replay clock is
@@ -192,6 +195,20 @@ def test_resume_raises_on_missing_earlier_round(spark, tmp_path, two_rounds):
         CrawlRun.resume(spark, store, CFG)
 
 
+def test_resume_raises_when_derived_frontier_disagrees(spark, tmp_path, two_rounds):
+    """Resume derives the start frontier from the last round's pages;
+    if its size differs from the frontier_out the round committed (the
+    expansion rules drifted since the commit), resume raises naming the
+    round."""
+    store = _copy_store(two_rounds, tmp_path)
+    path = store.root / "round=1" / "manifest.json"
+    manifest = json.loads(path.read_text())
+    manifest["metrics"]["frontier_out"] += 1
+    path.write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match=r"round=1\b"):
+        CrawlRun.resume(spark, store, CFG)
+
+
 def test_latest_round_ignores_uncommitted(tmp_path):
     store = SnapshotStore(tmp_path / "s")
     (store.root / "round=3").mkdir(parents=True)
@@ -204,7 +221,6 @@ def test_partition_lineage_detects_corruption(spark, tmp_path, two_rounds):
     names the table when a bucket's rows are lost."""
     store = _copy_store(two_rounds, tmp_path)
     assert "pages" in store.manifest(0)["lineage"]
-    assert "frontier_next" in store.manifest(0)["lineage"]
     store.verify_round(spark, 0)  # intact -> passes
 
     # drop one bucket's rows from the stored pages table (simulated
@@ -225,7 +241,6 @@ def test_order_invariant_to_parallelism(tmp_path):
     counts — the sandbox evidence for the two-cluster-size rule (the
     throughput half lives in BENCH/bench_scaling.py). Sequential
     subprocesses so the JVMs never compete for host cores."""
-    import json
     import subprocess
     import sys
 
