@@ -3,8 +3,8 @@
 BENCH_r* times the synthetic-frontier scheduler pipeline; this bench
 times the PRODUCT — the full multi-round crawl engine (enrich -> robots
 -> dedup -> schedule -> mapInPandas fetch -> parse/extract -> image
-pipeline -> snapshot -> incremental filter maintenance) against a
-worldgen world ~100x the e2e fixture (240 fetches at DEFAULT_SPEC),
+pipeline -> snapshot) against a worldgen world ~100x the e2e
+fixture (240 fetches at DEFAULT_SPEC),
 for BOTH parser families, with a per-round wall breakdown and a
 half-scale point so any super-linear per-round overhead shows.
 

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from .functions.hashing import bucket_col
 from .functions.urls import canonicalize_split, host_col
 from .operators import gating
+from .operators.components import _rdd_ids as _persistent_rdd_ids
+from .operators.components import _unpersist as _unpersist_rdds
 from .operators.dedup import batch_first_occurrence, build_bloom_filters, dedup_against_seen
 from .operators.scheduler import (
     PRIORITY_COLS,
@@ -40,22 +42,6 @@ from .parse.udfs import canonicalize_urls_udf
 from .plans.crawl import crawl_delay_col
 
 N_BUCKETS = 64
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of all RDDs currently holding persisted/checkpointed blocks
-    (JVM-side; includes localCheckpoint blocks that the catalog
-    CacheManager does not track)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
-def _unpersist_rdds(spark: SparkSession, ids: set[int]) -> None:
-    """Free the blocks of the given persisted RDD ids (non-blocking)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in jmap.keySet().toArray():
-        if int(rid) in ids:
-            jmap.get(rid).unpersist(False)
 
 
 def synthetic_frontier(spark: SparkSession, n: int, dup_frac: float = 0.1) -> DataFrame:

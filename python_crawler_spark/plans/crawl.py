@@ -186,11 +186,9 @@ class CrawlConfig:
     # the tolerant family is verified against.
     html_parser: str = "dialect"
     dirty_web: bool = False
-    # Seen-set prefilter family: 'bloom' (default), 'cuckoo' (partial-
-    # key cuckoo filter — deletable, ~60x lower FPR at 3x bits/item,
-    # operators/cuckoo.py), or 'none' (exact anti-join only). Filters
-    # are maintained INCREMENTALLY: each round rebuilds only the hash
-    # buckets that round touched (_update_filters).
+    # Seen-set prefilter: 'bloom' (default) or 'none' (exact anti-join
+    # only). The per-bucket Bloom filters are no state of the run: each
+    # round after the first builds them from the seen set it probes.
     filter_family: str = "bloom"
 
 
@@ -211,10 +209,8 @@ class CrawlRun:
         if self.kernels is None:
             raise ValueError(f"unknown html_parser: {self.cfg.html_parser!r}")
         self.filter_family = self.cfg.filter_family
-        if self.filter_family not in ("bloom", "cuckoo", "none"):
+        if self.filter_family not in ("bloom", "none"):
             raise ValueError(f"unknown filter_family: {self.filter_family!r}")
-        self.filters: DataFrame | None = None
-        self._filter_ckpt_ids: set[int] = set()
         self.store = store
         self.rules = gating.rules_df(spark).cache()
         rows = self.rules.filter(F.col("kind").isin("trim", "link_shape")).collect()
@@ -592,11 +588,15 @@ class CrawlRun:
 
         Materializes four things once: the survivors ``new``, the
         fetched and parsed pages, the decoded image delta and the next
-        frontier (``_expand`` of the pages). Every other table is a
-        projection of the pages; the round's counters are observed on
-        those same materializations (``self.counts``), so they cost no
-        job of their own. ``self.delta`` is what the round fetched: its
-        pages and decoded images."""
+        frontier (``_expand`` of the pages). With the Bloom family, a
+        round after the first also materializes its prefilter, built
+        from the seen set it probes; the filter and the survivors are
+        freed once the pages exist, so a round keeps only its pages,
+        images and next frontier. Every other table is a projection of
+        the pages; the round's counters are observed on those same
+        materializations (``self.counts``), so they cost no job of
+        their own. ``self.delta`` is what the round fetched: its pages
+        and decoded images."""
         cfg = self.cfg
         cand = self._enrich(frontier)
         cand = gating.robots_gate(cand, self.rules)  # J8
@@ -606,39 +606,40 @@ class CrawlRun:
             ["source"] + PRIORITY_COLS[1:],
             order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
         )
-        if self.filter_family == "cuckoo" and self.filters is not None:  # J1
-            from ..operators.cuckoo import dedup_against_seen_cuckoo
-
-            new = dedup_against_seen_cuckoo(cand, self.seen, self.filters)
-        elif self.filter_family == "bloom" and self.filters is not None:
-            new = dedup_against_seen(cand, self.seen, self.filters)
+        pre_ids = _persistent_rdd_ids(self.spark)
+        if self.filter_family == "bloom" and self.round > 0:  # J1
+            # round 0's seen set is empty: nothing for a filter to cut
+            filters, filter_counts = _observed_checkpoint(
+                build_bloom_filters(self.seen), nbytes=F.sum("m_bits") / 8
+            )
+            new = dedup_against_seen(
+                cand, self.seen, filters, filters_total_bytes=filter_counts["nbytes"]
+            )
         else:
             new = dedup_against_seen(cand, self.seen, None)
         # Materialize the round's survivor set as its own job, so the
         # enrich -> robots -> dedup chain is timed apart from the fetch
-        # (its only reader now); blocks are freed the moment `fetched`
-        # exists below. The round computes only the host queues — the
-        # replay clock (ref_seq, ref_virtual_ts) is global over all
-        # rounds, so fetch_order() derives it from the whole fetch log.
-        pre_new_ids = _persistent_rdd_ids(self.spark)
+        # (its only reader now). The round computes only the host
+        # queues — the replay clock (ref_seq, ref_virtual_ts) is global
+        # over all rounds, so fetch_order() derives it from the whole
+        # fetch log.
         new = new.localCheckpoint(eager=True)
-        new_ckpt_ids = _persistent_rdd_ids(self.spark) - pre_new_ids
+        ckpt_ids = _persistent_rdd_ids(self.spark) - pre_ids
         plan = host_queues(new, n_salts=cfg.n_salts)
         fetched, fetch_counts = _observed_checkpoint(
             self._fetch(plan).withColumn("round", F.lit(self.round)),
             fetched=F.count(F.lit(1)),
-            dirty_buckets=F.array_sort(F.collect_set("bucket")),
         )
-        # `new` is not referenced past `fetched`; free its blocks now
-        # so per-round checkpoint memory stays O(one round).
-        _unpersist_rdds(self.spark, new_ckpt_ids)
+        # neither the filters nor `new` is referenced past `fetched`;
+        # free their blocks now so per-round checkpoint memory stays
+        # O(one round).
+        _unpersist_rdds(self.spark, ckpt_ids)
 
         tables, image_candidates = self._page_tables(fetched)
         images, image_counts = _observed_checkpoint(
             self._image_pipeline(image_candidates), images=F.count(F.lit(1))
         )
         self._add_tables({**tables, "images": images})
-        self._update_filters(fetch_counts["dirty_buckets"])
         self.delta = {"pages": fetched, "images": images}
 
         nxt, next_counts = _observed_checkpoint(
@@ -652,43 +653,6 @@ class CrawlRun:
         for name, df in tables.items():
             acc = getattr(self, name)
             setattr(self, name, df if acc is None else acc.unionByName(df))
-
-    # ------------------------------------------------------------- filters
-
-    def _build_filters(self, seen: DataFrame) -> DataFrame:
-        if self.filter_family == "cuckoo":
-            from ..operators.cuckoo import build_cuckoo_filters
-
-            return build_cuckoo_filters(seen)
-        return build_bloom_filters(seen)
-
-    def _update_filters(self, dirty: list[int]) -> None:
-        """Incremental per-round prefilter maintenance: rebuild ONLY
-        the ``dirty`` hash buckets, the ones this round's fetches
-        touched; filter rows for untouched buckets are CARRIED
-        byte-identically from the previous round (tested). At 10^10-URL
-        scale a round touches a small fraction of buckets — a full
-        rebuild per round would rescan the entire seen table (O(seen)
-        per round, O(rounds x seen) total); this is
-        O(seen-in-dirty-buckets). ``dirty`` is bounded by n_buckets."""
-        if self.filter_family == "none" or not dirty:
-            return
-        rebuilt = self._build_filters(
-            self.seen.filter(F.col("bucket").isin(dirty))
-        )
-        if self.filters is None:
-            merged = rebuilt
-        else:
-            merged = self.filters.filter(~F.col("bucket").isin(dirty)).unionByName(
-                rebuilt
-            )
-        # checkpoint the merged table (truncates the carry chain) and
-        # free the previous round's filter blocks deterministically
-        pre = _persistent_rdd_ids(self.spark)
-        self.filters = merged.localCheckpoint(eager=True)
-        new_ids = _persistent_rdd_ids(self.spark) - pre
-        _unpersist_rdds(self.spark, self._filter_ckpt_ids)
-        self._filter_ckpt_ids = new_ids
 
     def run(self) -> dict[str, DataFrame]:
         """The round loop, from the resumed frontier when ``resume``
@@ -725,11 +689,13 @@ class CrawlRun:
         final state to an uninterrupted run (tested). The pages and
         images of every committed round are verified and read, the
         tables are re-derived from the pages, and the start frontier is
-        ``_expand`` of the last round's pages. A fresh run when nothing
-        is committed; a committed table that cannot be read raises, and
-        so does a derived frontier whose size differs from the last
-        round's recorded ``frontier_out`` (the expansion rules drifted
-        since the commit)."""
+        ``_expand`` of the last round's pages. The next round builds its
+        prefilter from the restored seen set, as every round after the
+        first does. A fresh run when nothing is committed; a committed
+        table that cannot be read raises, and so does a derived frontier
+        whose size differs from the last round's recorded
+        ``frontier_out`` (the expansion rules drifted since the
+        commit)."""
         run = cls(spark, config, store)
         last = store.latest_round()
         if last is None:
@@ -743,11 +709,6 @@ class CrawlRun:
         images = [store.read(spark, r, "images") for r in rounds]  # stored decoded
         tables, _ = run._page_tables(reduce(DataFrame.unionByName, pages))
         run._add_tables({**tables, "images": reduce(DataFrame.unionByName, images)})
-        # rebuild the prefilter from the restored seen set (every
-        # bucket present is 'dirty' on resume — full rebuild once,
-        # then incremental again per round)
-        dirty = run.seen.select("bucket").distinct().collect()
-        run._update_filters(sorted(r["bucket"] for r in dirty))
         frontier, counts = _observed_checkpoint(
             run._expand(pages[-1]), frontier_out=F.count(F.lit(1))
         )

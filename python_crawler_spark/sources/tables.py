@@ -77,12 +77,18 @@ class SnapshotStore:
         tmp.rename(rdir / "manifest.json")  # atomic commit point
 
     def verify_round(self, spark: SparkSession, r: int) -> None:
-        """Recompute every table's per-bucket (count, row-hash XOR)
-        from the stored parquet and compare to the
-        manifest — raises ValueError naming the first diverging
-        (table, bucket) on corruption/truncation."""
-        recorded = self.manifest(r).get("lineage", {})
-        for name, want in recorded.items():
+        """Recompute every committed table's per-bucket (count, row-hash
+        XOR) from the stored parquet and compare to the manifest —
+        raises ValueError naming the round and the first diverging
+        (table, bucket) on corruption/truncation, or the table whose
+        lineage record is missing."""
+        manifest = self.manifest(r)
+        for name in manifest["tables"]:
+            want = manifest.get("lineage", {}).get(name)
+            if want is None:
+                raise ValueError(
+                    f"snapshot round={r} table={name}: manifest has no lineage record"
+                )
             got = _partition_lineage(self.read(spark, r, name))
             if got != want:
                 bad = sorted(

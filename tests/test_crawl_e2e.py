@@ -278,21 +278,17 @@ def test_dirty_images_match_clean_world(run_and_oracle_dirty):
     assert got, "dirty world produced no images"
 
 
-# -------------------------------------------------- cuckoo filter family
+# ------------------------------------------------------ filter families
 
 
-def test_cuckoo_filter_family_same_results(spark, run_and_oracle):
-    """CrawlConfig.filter_family='cuckoo' (round 4: the cuckoo seen-set
-    prefilter wired into the engine) must produce the IDENTICAL fetch
-    order and seen set — prefilters only route candidates, the exact
-    anti-join is the last word."""
+def test_exact_filter_family_same_results(spark, run_and_oracle):
+    """CrawlConfig.filter_family='none' (the exact anti-join alone)
+    must produce the IDENTICAL fetch order and seen set — the Bloom
+    prefilter only routes candidates, the exact anti-join is the last
+    word."""
     _, oracle = run_and_oracle
-    cfg = CrawlConfig(spec=SPEC, n_buckets=8, filter_family="cuckoo")
-    run = CrawlRun(spark, cfg)
-    results = run.run()
-    assert run.filter_family == "cuckoo"
-    assert run.filters is not None  # maintained, not rebuilt-per-probe
-    assert "stash_fp" in run.filters.columns  # cuckoo rows, not bloom
+    cfg = CrawlConfig(spec=SPEC, n_buckets=8, filter_family="none")
+    results = CrawlRun(spark, cfg).run()
     got = [
         (r["source"], r["url"], r["attempt"])
         for r in results["fetch_order"].select("source", "url", "attempt").collect()
@@ -302,43 +298,22 @@ def test_cuckoo_filter_family_same_results(spark, run_and_oracle):
     assert seen == oracle.seen
 
 
-def test_incremental_filter_maintenance_carries_untouched_buckets(spark):
-    """_update_filters must rebuild ONLY the buckets a round touched:
-    untouched buckets' filter rows stay byte-identical across rounds
-    (the SCALE.md incremental claim, previously untested), and the
-    merged table equals a from-scratch full rebuild."""
-    from python_crawler_spark.operators.cuckoo import build_cuckoo_filters
-    from python_crawler_spark.operators.dedup import build_bloom_filters
-
-    schema = "bucket int, key_hash long, dedup_key string, url string, round int"
-    for family, full_build in (
-        ("bloom", build_bloom_filters),
-        ("cuckoo", build_cuckoo_filters),
-    ):
-        run = CrawlRun(spark, CrawlConfig(filter_family=family, n_buckets=8))
-        s1 = spark.createDataFrame(
-            [(0, 11, "a", "u1", 0), (0, 12, "d", "u4", 0), (1, 22, "b", "u2", 0)],
-            schema,
-        )
-        run.seen = s1.localCheckpoint(eager=True)
-        run._update_filters([0, 1])  # the buckets s1 touched
-        f1 = {r["bucket"]: r for r in run.filters.collect()}
-        assert set(f1) == {0, 1}
-        # round 2 touches bucket 1 only
-        s2 = spark.createDataFrame([(1, 33, "c", "u3", 1)], schema)
-        run.seen = run.seen.unionByName(s2).localCheckpoint(eager=True)
-        run._update_filters([1])
-        f2 = {r["bucket"]: r for r in run.filters.collect()}
-        assert f2[0] == f1[0], f"{family}: untouched bucket 0 was rebuilt"
-        assert f2[1] != f1[1], f"{family}: dirty bucket 1 not rebuilt"
-        full = {r["bucket"]: r for r in full_build(run.seen).collect()}
-        assert f2 == full, f"{family}: incremental != full rebuild"
-
-
-def test_filter_family_none_and_validation(spark):
-    import pytest
-
-    run = CrawlRun(spark, CrawlConfig(filter_family="none"))
-    assert run.filter_family == "none"
+@pytest.mark.parametrize("family", ["xor", "cuckoo"])
+def test_filter_family_validation(spark, family):
     with pytest.raises(ValueError, match="filter_family"):
-        CrawlRun(spark, CrawlConfig(filter_family="xor"))
+        CrawlRun(spark, CrawlConfig(filter_family=family))
+
+
+def test_round_keeps_only_its_outputs(spark):
+    """A round keeps exactly three checkpoints — its pages, its images
+    and the next frontier: the Bloom filters it built from the seen set
+    and its survivors are freed within the round."""
+    from python_crawler_spark.operators.components import _rdd_ids
+
+    run = CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, filter_family="bloom"))
+    frontier = run.initial_frontier()
+    for _ in range(2):
+        before = _rdd_ids(spark)
+        frontier = run.run_round(frontier)
+        assert len(_rdd_ids(spark) - before) == 3, f"round {run.round}"
+        run.round += 1
