@@ -55,9 +55,9 @@ def spec_at(scale: float) -> WorldSpec:
 
 
 def timed_crawl(spark, family: str, scale: float) -> dict:
-    """One full CrawlRun with per-round wall telemetry. Mirrors
-    CrawlRun.run()'s loop exactly (count -> run_round -> snapshot),
-    adding timers around each phase."""
+    """One full CrawlRun.run() with per-round wall telemetry: its
+    run_round, _snapshot and fetch_order calls are wrapped with
+    timers."""
     snap_dir = tempfile.mkdtemp(prefix=f"bench_crawl_{family}_")
     cfg = CrawlConfig(
         spec=spec_at(scale),
@@ -68,36 +68,31 @@ def timed_crawl(spark, family: str, scale: float) -> dict:
         n_salts=8,
     )
     run = CrawlRun(spark, cfg, store=SnapshotStore(snap_dir))
-    rounds = []
+    round_s, snapshot_s, order_s = [], [], []
+
+    def timed(fn, out):
+        def wrapper(*args):
+            t0 = time.time()
+            res = fn(*args)
+            out.append(time.time() - t0)
+            return res
+        return wrapper
+
+    run.run_round = timed(run.run_round, round_s)
+    run._snapshot = timed(run._snapshot, snapshot_s)
+    run.fetch_order = timed(run.fetch_order, order_s)
     t_total0 = time.time()
     try:
-        frontier = run.initial_frontier()
-        while run.round < cfg.max_rounds:
-            t0 = time.time()
-            n = frontier.count()
-            if n == 0:
-                break
-            t_count = time.time()
-            frontier = run.run_round(frontier)
-            t_round = time.time()
-            run.metrics.append({"round": run.round, "frontier_in": n, **run.counts})
-            run._snapshot()
-            t_snap = time.time()
-            rounds.append(
-                {
-                    "round": run.round,
-                    "frontier_in": n,
-                    "count_s": round(t_count - t0, 2),
-                    "round_s": round(t_round - t_count, 2),
-                    "snapshot_s": round(t_snap - t_round, 2),
-                }
-            )
-            run.round += 1
+        res = run.run()
+        rounds = [
+            {"round": m["round"], "frontier_in": m["frontier_in"],
+             "round_s": round(r, 2), "snapshot_s": round(s, 2)}
+            for m, r, s in zip(run.metrics, round_s, snapshot_s)
+        ]
         # the replay artifact: global fetch order (the product's output)
         t0 = time.time()
-        order = run.fetch_order()
-        pages = order.count()
-        t_order = round(time.time() - t0, 2)
+        pages = res["fetch_order"].count()
+        t_order = round(time.time() - t0 + order_s[0], 2)
         wall = round(time.time() - t_total0, 2)
         arts = run.articles.count() if run.articles is not None else 0
         imgs = run.images.count() if run.images is not None else 0

@@ -58,11 +58,11 @@ def canonicalize_url(url: str) -> str:
 
 # already-canonical shape: lowercase scheme+host, no port, non-empty
 # path, no query/fragment/whitespace — the overwhelmingly common case
-# on a well-formed frontier, testable with one C-speed regex pass.
-# End anchor is (?![\s\S]) — absolute end-of-input in BOTH Java regex
-# (rlike) and Python re — because `$` matches BEFORE a trailing
-# newline in both engines, which would let 'http://a.com/x\n' skip the
-# scalar canonicalizer that strips the whitespace (ADVICE r2).
+# on a well-formed frontier; the spec fast_canonical_pred implements.
+# End anchor is (?![\s\S]) — absolute end-of-input in Java regex
+# (rlike) — because `$` matches BEFORE a trailing newline, which
+# would let 'http://a.com/x\n' skip the scalar canonicalizer that
+# strips the whitespace (ADVICE r2).
 _FAST_CANONICAL_RE = r"^https?://[a-z0-9.\-]+/[^?#\s]*(?![\s\S])"
 
 # Java-regex \s (no MULTILINE/UNICODE flags) is exactly these six
@@ -108,20 +108,12 @@ def fast_canonical_pred(url: Column) -> Column:
 
 
 def canonicalize_urls(urls: pd.Series) -> pd.Series:
-    """Vectorized canonicalizer for the Arrow UDF path.
-
-    Fast path: URLs already in canonical shape pass through untouched
-    (vectorized regex, no per-row Python). Only irregular URLs (ports,
-    uppercase, queries to sort, fragments) take the scalar path —
-    idempotence guarantees fast-path outputs equal slow-path outputs.
-    """
-    fast = urls.str.match(_FAST_CANONICAL_RE, na=False)
-    if fast.all():
-        return urls
-    out = urls.copy()
-    slow = ~fast & urls.notna()
-    out[slow] = urls[slow].map(canonicalize_url)
-    return out
+    """Vectorized canonicalizer for the Arrow UDF path. Its caller,
+    :func:`canonicalize_split`, sends it only the rows that
+    :func:`fast_canonical_pred` rejects (the irregular URLs: ports,
+    uppercase, queries to sort, fragments), so every row takes the
+    scalar path."""
+    return urls.map(canonicalize_url, na_action="ignore")
 
 
 def host_of(url: str) -> str:
@@ -259,14 +251,21 @@ def path_col(url: Column) -> Column:
 
 
 def pic_signature_col(url: Column) -> Column:
-    """Column variant of :func:`pic_signature` (SURVEY X2)."""
-    parts = F.split(F.parse_url(url, F.lit("PATH")), "/")
+    """Column variant of :func:`pic_signature` (SURVEY X2), over
+    :func:`path_col`, so a malformed URL never raises under ANSI mode:
+    a space in the path still yields its third segment, as the scalar
+    does, and a URL with no parsable path yields null."""
+    parts = F.split(path_col(url), "/")
     return F.when(F.size(parts) >= 4, F.element_at(parts, 3))
 
 
 def query_param_col(url: Column, param: str, default: str) -> Column:
-    """``coalesce(parse_url(url,'QUERY',param), default)`` (SURVEY X3)."""
-    return F.coalesce(F.parse_url(url, F.lit("QUERY"), F.lit(param)), F.lit(default))
+    """``coalesce(try_parse_url(url,'QUERY',param), default)`` (SURVEY
+    X3): a malformed URL, which parse_url would raise on under ANSI
+    mode, yields ``default``, as a URL without the parameter does."""
+    return F.coalesce(
+        F.try_parse_url(url, F.lit("QUERY"), F.lit(param)), F.lit(default)
+    )
 
 
 def absolutize_col(href: Column, base: Column) -> Column:

@@ -18,6 +18,13 @@ reconstructed by sort — equality with the sequential oracle
 (tests/oracle.py) is over (source_rank, priority) order, per-source
 virtual clocks, seen-set membership, and extracted records.
 
+Every frontier row, a seed's or an expansion rule's, is built by
+frontier_rows: the seeds and each rule state only what they decide
+(URL, seed lineage, stage, position and depth, plus the attempt and
+the weixin title, summary and cover when they set them), and
+frontier_rows derives the politeness delay, a retry's backoff and the
+fetch identity.
+
 Reference lifecycle being re-expressed: weixin_public.py:126-266,
 chuansongmen.py:34-97, tianyan_crawler.py:110-178,
 tianyan_extractor.py:15-30 — as one declarative dataflow.
@@ -89,6 +96,8 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
+SEED_COLS = ["source", "name", "seed_id", "line_no"]  # a child keeps its seed's
+
 SEEN_COLS = ["bucket", "key_hash", "dedup_key", "url", "round"]
 
 LOG_COLS = [
@@ -154,6 +163,33 @@ def with_fetch_identity(df: DataFrame) -> DataFrame:
         .withColumn("ua_id", rotating("ua", len(worldgen.UA_POOL)))
         .withColumn("proxy_id", rotating("proxy", len(worldgen.PROXY_POOL)))
     )
+
+
+# what a rule may leave out; every other decided column it must select
+RULE_DEFAULTS = {"attempt": 0, "title": "", "summary": "", "cover": ""}
+DECIDED = FRONTIER_SCHEMA.names[: FRONTIER_SCHEMA.names.index("cover") + 1]
+
+
+def frontier_rows(*rules: DataFrame) -> DataFrame:
+    """The one frontier-row constructor. Each rule frame carries only
+    what its rule decides: the DECIDED columns, where a column of
+    RULE_DEFAULTS the rule does not select takes that default and a
+    null it selects stays null (hence the rules come in apart: a union
+    with missing columns would null the absent ones). The rules are
+    unioned once, and the rest is derived here: the politeness delay
+    (O5-O7), plus BACKOFF[source] for a retry (O8: it comes right
+    after its failed attempt), then the fetch identity (S5/S7). The
+    rows come out in FRONTIER_SCHEMA order and types."""
+    rows = reduce(DataFrame.unionByName, [
+        r.select(*[c if c in r.columns else F.lit(RULE_DEFAULTS[c]).alias(c) for c in DECIDED])
+        for r in rules
+    ])
+    delay = crawl_delay_col(F.col("source"), F.col("stage"), F.col("url"))
+    for source, backoff in worldgen.BACKOFF.items():
+        retry = (F.col("attempt") > 0) & (F.col("source") == source)
+        delay = F.when(retry, delay + backoff).otherwise(delay)
+    rows = with_fetch_identity(rows.withColumn("crawl_delay", delay))
+    return rows.select(*[F.col(f.name).cast(f.dataType) for f in FRONTIER_SCHEMA.fields])
 
 
 def enrich_frontier(frontier: DataFrame, n_buckets: int, key=None) -> DataFrame:
@@ -248,25 +284,13 @@ class CrawlRun:
         if self.cfg.seed_limit is not None:
             seeds = seeds.filter(F.col("line_no") < F.lit(self.cfg.seed_limit))
         seeds = gating.filter_blacklisted_names(seeds, self.rules)  # F3
-        root = seeds.select(
-            "url",
-            "source",
-            "name",
-            "seed_id",
-            "line_no",
+        return frontier_rows(seeds.select(
+            "url", *SEED_COLS,
             F.lit(STAGE_ROOT).alias("stage"),
             F.lit(0).alias("page_no"),
             F.lit(-1).alias("link_idx"),
-            F.lit(0).alias("attempt"),
             F.lit(0).alias("depth"),
-            F.lit("").alias("title"),
-            F.lit("").alias("summary"),
-            F.lit("").alias("cover"),
-            crawl_delay_col(F.col("source"), F.lit(STAGE_ROOT), F.col("url")).alias(
-                "crawl_delay"
-            ),
-        )
-        return with_fetch_identity(root)
+        ))
 
     def _enrich(self, frontier: DataFrame) -> DataFrame:
         """enrich_frontier keyed by title for weixin articles — the
@@ -315,74 +339,45 @@ class CrawlRun:
 
     # ----------------------------------------------------------- expansion
 
-    def _child(self, df: DataFrame, url, stage, page_no, link_idx, title=None,
-               summary=None, cover=None, attempt=None) -> DataFrame:
-        src = F.col("source")
-        stage_c = F.lit(stage) if isinstance(stage, int) else stage
-        out = df.select(
-            url.alias("url"),
-            "source",
-            "name",
-            "seed_id",
-            "line_no",
-            stage_c.cast("int").alias("stage"),
-            (F.lit(page_no) if isinstance(page_no, int) else page_no).cast("int").alias("page_no"),
-            (F.lit(link_idx) if isinstance(link_idx, int) else link_idx).cast("int").alias("link_idx"),
-            (F.lit(0) if attempt is None else attempt).cast("int").alias("attempt"),
-            (F.col("depth") + 1).alias("depth"),
-            (F.lit("") if title is None else title).alias("title"),
-            (F.lit("") if summary is None else summary).alias("summary"),
-            (F.lit("") if cover is None else cover).alias("cover"),
-        )
-        return with_fetch_identity(
-            out.withColumn(
-                "crawl_delay", crawl_delay_col(src, F.col("stage"), F.col("url"))
-            )
-        )
-
     def _expand_weixin_list(self, fetched: DataFrame) -> DataFrame:
         """D1 + F4/F5/F6: list page -> article candidates in DOM order."""
         lists = fetched.filter(
             (F.col("source") == "weixin") & (F.col("stage") == STAGE_ROOT)
         )
         items = lists.select(
-            "source", "name", "seed_id", "line_no", "depth",
-            F.posexplode("page.items").alias("pos", "item"),
+            *SEED_COLS, (F.col("depth") + 1).alias("depth"),
+            F.posexplode("page.items").alias("link_idx", "item"),
         )
-        items = items.filter(F.col("item.cover") != "")  # F4
-        items = items.select(
-            "source", "name", "seed_id", "line_no", "depth", "pos",
-            F.col("item.href").alias("href"),
-            F.col("item.title").alias("title"),
-            F.col("item.summary").alias("summary"),
-            F.col("item.cover").alias("cover"),
+        items = items.filter(F.col("item.cover") != "").select(  # F4
+            "*", *[F.col("item." + c).alias(c) for c in ("href", "title", "summary", "cover")]
         )
         items = gating.apply_title_rules(items, self.rules, account_col="name")  # F5+F6
-        return self._child(
-            items,
-            url=absolutize_col(F.col("href"), F.lit(WEIXIN_BASE)),  # X4
-            stage=STAGE_CHILD,
-            page_no=0,
-            link_idx=F.col("pos"),
-            title=F.col("title"),
-            summary=F.col("summary"),
-            cover=F.col("cover"),
+        return items.select(
+            absolutize_col(F.col("href"), F.lit(WEIXIN_BASE)).alias("url"),  # X4
+            *SEED_COLS,
+            F.lit(STAGE_CHILD).alias("stage"),
+            F.lit(0).alias("page_no"),
+            "link_idx", "depth", "title", "summary", "cover",
         )
 
     def _expand_csm_account(self, fetched: DataFrame) -> DataFrame:
         """D9 + X5: account root -> list pages 1..max_page-1."""
         accts = fetched.filter(
             (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_ROOT)
-        ).withColumn("max_page", F.col("page.max_page"))
+        )
         # max_page <= 1 has no list pages (sequence(1, 0) is [1, 0])
-        pages = accts.filter(F.col("max_page") > 1).select(
-            "source", "name", "seed_id", "line_no", "depth",
-            F.posexplode(pagination_urls_col(F.col("url"), F.col("max_page"))).alias(
+        pages = accts.filter(F.col("page.max_page") > 1).select(
+            *SEED_COLS, (F.col("depth") + 1).alias("depth"),
+            F.posexplode(pagination_urls_col(F.col("url"), F.col("page.max_page"))).alias(
                 "pos", "url"
             ),
         )
-        return self._child(
-            pages, url=F.col("url"), stage=STAGE_LIST, page_no=F.col("pos") + 1, link_idx=-1
+        return pages.select(
+            "url", *SEED_COLS,
+            F.lit(STAGE_LIST).alias("stage"),
+            (F.col("pos") + 1).alias("page_no"),
+            F.lit(-1).alias("link_idx"),
+            "depth",
         )
 
     def _expand_csm_list(self, fetched: DataFrame) -> DataFrame:
@@ -391,60 +386,49 @@ class CrawlRun:
             (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_LIST)
         )
         links = lists.select(
-            "source", "name", "seed_id", "line_no", "depth", "page_no",
-            F.posexplode("page.links").alias("pos", "href"),
+            *SEED_COLS, "page_no", (F.col("depth") + 1).alias("depth"),
+            F.posexplode("page.links").alias("link_idx", "href"),
         )
         links = gating.link_shape_filter(links, self.link_shapes)  # F14
-        return self._child(
-            links,
-            url=absolutize_col(F.col("href"), F.lit(CSM_BASE)),
-            stage=STAGE_CHILD,
-            page_no=F.col("page_no"),
-            link_idx=F.col("pos"),
+        return links.select(
+            absolutize_col(F.col("href"), F.lit(CSM_BASE)).alias("url"),
+            *SEED_COLS,
+            F.lit(STAGE_CHILD).alias("stage"),
+            "page_no", "link_idx", "depth",
         )
 
-    def _expand_tianyan_search(self, fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """F12 anti-bot -> retry rows (O8); else first query_name link
+    def _expand_tianyan_search(self, fetched: DataFrame) -> DataFrame:
+        """F12: an anti-bot page -> its retry (O8), the same row one
+        attempt on, at the same depth; else the first query_name link
         -> detail child (F13 drops empty results)."""
         searches = fetched.filter(
             (F.col("source") == "tianyan") & (F.col("stage") == STAGE_ROOT)
         )
-        blocked = searches.filter(F.col("page.anti_bot") & (F.col("attempt") == 0))
-        retries = self._child(
-            blocked,
-            url=F.col("url"),
-            stage=STAGE_ROOT,
-            page_no=0,
-            link_idx=-1,
-            attempt=F.col("attempt") + 1,
-        ).withColumn(
-            "crawl_delay",
-            F.col("crawl_delay") + F.lit(worldgen.BACKOFF["tianyan"]),
-        ).withColumn("depth", F.col("depth") - 1)
-        ok = searches.filter(~F.col("page.anti_bot"))
-        details = ok.withColumn("href", F.col("page.query_link")).filter(
-            F.col("href") != ""
-        )  # F13
-        children = self._child(
-            details,
-            url=absolutize_col(F.col("href"), F.lit(TYC_BASE)),
-            stage=STAGE_CHILD,
-            page_no=0,
-            link_idx=0,
+        retry = F.col("page.anti_bot") & (F.col("attempt") == 0)
+        detail = ~F.col("page.anti_bot") & (F.col("page.query_link") != "")  # F13
+        return searches.filter(retry | detail).select(
+            F.when(retry, F.col("url"))
+            .otherwise(absolutize_col(F.col("page.query_link"), F.lit(TYC_BASE)))
+            .alias("url"),
+            *SEED_COLS,
+            F.when(retry, STAGE_ROOT).otherwise(STAGE_CHILD).alias("stage"),
+            F.lit(0).alias("page_no"),
+            F.when(retry, -1).otherwise(0).alias("link_idx"),
+            F.when(retry, F.col("attempt") + 1).otherwise(0).alias("attempt"),
+            (F.col("depth") + F.when(retry, 0).otherwise(1)).alias("depth"),
         )
-        return children, retries
 
     def _expand(self, pages: DataFrame) -> DataFrame:
         """The next frontier as a projection of one round's fetched
         pages, so a round and a resume (over the last committed round's
-        stored pages) derive the same rows."""
-        children, retries = self._expand_tianyan_search(pages)
-        return (
-            self._expand_weixin_list(pages)
-            .unionByName(self._expand_csm_account(pages))
-            .unionByName(self._expand_csm_list(pages))
-            .unionByName(children)
-            .unionByName(retries)
+        stored pages) derive the same rows: each rule states only what
+        it decides, and frontier_rows unions the four once and derives
+        the delay and the fetch identity."""
+        return frontier_rows(
+            self._expand_weixin_list(pages),
+            self._expand_csm_account(pages),
+            self._expand_csm_list(pages),
+            self._expand_tianyan_search(pages),
         )
 
     # ----------------------------------------------------------- extraction

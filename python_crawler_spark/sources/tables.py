@@ -31,16 +31,19 @@ _LINEAGE_BUCKETS = 64  # checksum partitioning constant, not a run config
 def _partition_lineage(df: DataFrame) -> dict:
     """Per-bucket lineage record for a stored table: row count +
     order-independent XOR checksum per bucket, where each row's hash is
-    xxhash64 over every hashable column and its bucket is that hash
-    mod 64 — so a dropped row OR a mutated column changes the record.
+    xxhash64 over every column (nested ones included) and its bucket is
+    that hash mod 64 — so a dropped row OR a mutated column changes the
+    record.
     One rule for every table; O(#buckets) driver data (the bucket count
     is a constant, never row-proportional), so this scales to any
     table size. North_rule: 'resumes with per-partition lineage and
     fetch/dedup metrics'."""
-    # MAP columns are not hashable in Spark (same map, different
-    # hashcode) — checksum over every non-MAP column
-    hashable = [f.name for f in df.schema.fields if "MapType" not in repr(f.dataType)]
-    h = F.xxhash64(*[F.col(c) for c in hashable])
+    # a column holding a MAP is not hashable in Spark (same map,
+    # different hashcode): it is hashed through its JSON text
+    h = F.xxhash64(*[
+        F.to_json(f.name) if "MapType" in repr(f.dataType) else F.col(f.name)
+        for f in df.schema.fields
+    ])
     rows = (
         df.groupBy(F.pmod(h, F.lit(_LINEAGE_BUCKETS)).alias("bucket"))
         .agg(F.count("*").alias("n"), F.bit_xor(h).alias("x"))

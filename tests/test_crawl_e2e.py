@@ -317,3 +317,36 @@ def test_round_keeps_only_its_outputs(spark):
         frontier = run.run_round(frontier)
         assert len(_rdd_ids(spark) - before) == 3, f"round {run.round}"
         run.round += 1
+
+
+def test_frontier_rows_derives_what_rules_leave_out(spark):
+    """frontier_rows fills only the columns a rule leaves out (a null
+    title the rule selects stays null: weixin titles key the seen set),
+    adds the source's backoff to a retry's delay, and emits
+    FRONTIER_SCHEMA's columns and types."""
+    from pyspark.sql import functions as F
+
+    from python_crawler_spark.plans.crawl import FRONTIER_SCHEMA, frontier_rows
+    from python_crawler_spark.sources.worldgen import BACKOFF
+
+    decided = ("url string, source string, name string, seed_id int, line_no int, "
+               "stage int, page_no int, link_idx int, depth int")
+    search = spark.createDataFrame(
+        [("http://t/search?key=a", "tianyan", "a", 3, 3, 0, 0, -1, 0)], decided
+    )
+    article = spark.createDataFrame(
+        [("http://w/s/1", "weixin", "w", 1, 1, 2, 0, 4, 1, None)], decided + ", title string"
+    )
+    rows = frontier_rows(
+        article, search, search.withColumn("attempt", F.lit(1))
+    ).collect()
+    out = frontier_rows(article)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in FRONTIER_SCHEMA
+    ]
+    art, first, retry = sorted(rows, key=lambda r: (r["source"] != "weixin", r["attempt"]))
+    assert art["title"] is None and (art["summary"], art["cover"], art["attempt"]) == ("", "", 0)
+    assert (first["title"], first["attempt"], retry["attempt"]) == ("", 0, 1)
+    assert retry["crawl_delay"] == first["crawl_delay"] + BACKOFF["tianyan"]
+    assert retry["depth"] == first["depth"]
+    assert (retry["ua_id"], retry["proxy_id"]) != (first["ua_id"], first["proxy_id"])

@@ -77,6 +77,31 @@ def test_pic_signature_edges():
     assert pic_signature("http://h/mmbiz/SIG/640?wx_fmt=png") == "SIG"
 
 
+def test_image_url_columns_on_malformed_urls(spark):
+    """pic_signature_col equals the scalar pic_signature, and neither
+    it nor query_param_col raises, on a URL that java.net.URI rejects
+    (a space in the path) under ANSI mode, where parse_url throws."""
+    from pyspark.sql import functions as F
+
+    from python_crawler_spark.functions.urls import pic_signature_col, query_param_col
+
+    urls = ["http://mmbiz.qpic.cn/mm biz/a b/0", "http://h/a/b", "http://h/mmbiz/SIG/640",
+            "http://h/mmbiz/SIG/640?wx_fmt=png", "http://mmbiz.qpic.cn/mm biz/a b/0?wx_fmt=gif"]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = spark.createDataFrame([(u,) for u in urls], "u string").select(
+            "u",
+            pic_signature_col(F.col("u")).alias("sig"),
+            query_param_col(F.col("u"), "wx_fmt", "jpg").alias("fmt"),
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert [r["sig"] for r in rows] == [pic_signature(u) for u in urls]
+    assert rows[0]["sig"] == "a b"
+    assert [r["fmt"] for r in rows[1:4]] == ["jpg", "jpg", "png"]
+
+
 def test_absolutize():
     assert absolutize("/n/123", "http://chuansong.me") == "http://chuansong.me/n/123"
     assert absolutize("http://x/y", "http://b") == "http://x/y"

@@ -72,22 +72,10 @@ def _copy_store(root, tmp_path):
     return SnapshotStore(tmp_path / "snap")
 
 
-def test_resume_equals_uninterrupted(spark, tmp_path, full):
-    # interrupted run: stop after 2 rounds, snapshots committed
-    store = SnapshotStore(tmp_path / "snap")
-    interrupted = CrawlRun(spark, CFG, store=store)
-    frontier = interrupted.initial_frontier()
-    for _ in range(2):
-        if frontier.count() == 0:
-            break
-        frontier = interrupted.run_round(frontier)
-        interrupted.metrics.append(
-            {"round": interrupted.round, "frontier_in": -1, **interrupted.counts}
-        )
-        interrupted._snapshot()
-        interrupted.round += 1
-
-    resumed = CrawlRun.resume(spark, store, CFG)
+def test_resume_equals_uninterrupted(spark, tmp_path, full, two_rounds):
+    """A run interrupted after two committed rounds resumes to the
+    uninterrupted run's state."""
+    resumed = CrawlRun.resume(spark, _copy_store(two_rounds, tmp_path), CFG)
     assert resumed.round == 2
     assert _state(resumed.run()) == full[2]
 
@@ -242,6 +230,23 @@ def test_partition_lineage_detects_corruption(spark, tmp_path, two_rounds):
     truncated.write.mode("overwrite").parquet(str(store.root / "round=0" / "pages"))
     with pytest.raises(ValueError, match="table=pages"):
         store.verify_round(spark, 0)
+
+
+def test_partition_lineage_covers_parsed_pages(spark, tmp_path, two_rounds):
+    """The parsed ``page`` struct holds a map (the company details), and
+    every table and the next frontier are derived from it on resume, so
+    rewriting a nested field of the stored pages, with no row added or
+    lost, fails the resume naming the round and the table."""
+    store = _copy_store(two_rounds, tmp_path)
+    pages = store.read(spark, 1, "pages")
+    content = F.col("page.article.content")
+    assert pages.filter(content.isNotNull()).count() > 0
+    tampered = pages.withColumn(
+        "page", F.col("page").withField("article.content", F.concat(content, F.lit("!")))
+    ).localCheckpoint(eager=True)
+    tampered.write.mode("overwrite").parquet(str(store.root / "round=1" / "pages"))
+    with pytest.raises(ValueError, match="round=1 table=pages"):
+        CrawlRun.resume(spark, store, CFG)
 
 
 def test_order_invariant_to_parallelism(tmp_path):
