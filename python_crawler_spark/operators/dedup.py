@@ -198,7 +198,6 @@ def dedup_against_seen(
     seen: DataFrame,
     filters: DataFrame | None,
     key: str = "key_hash",
-    broadcast_max_bytes: int = BLOOM_BROADCAST_MAX_BYTES,
     seen_unique: bool = False,
     filters_total_bytes: int | None = None,
     prefilter_broadcast=None,
@@ -224,7 +223,7 @@ def dedup_against_seen(
         total = filters_total_bytes
         if total is None:
             total = filters.agg(F.sum(F.expr(size_expr))).first()[0] or 0
-        if total <= broadcast_max_bytes:
+        if total <= BLOOM_BROADCAST_MAX_BYTES:
             flagged = pb(cand, filters, key=key)
         else:
             flagged = pc(cand, filters, key=key)

@@ -1,14 +1,17 @@
-"""Gating rules: broadcast-joined filter tables (SURVEY F3-F6, F14-F15,
-J2-J4, J8 robots).
+"""Gating rules as column predicates (SURVEY F3-F6, F14-F15, J2-J4,
+J8 robots, D6 trims).
 
 The reference hard-codes its gates as if/elif chains and in-memory
-sets; here every gate is a row in one ``rules`` table broadcast to the
-executors, so gating is data-driven and new rules deploy without code
-changes:
+sets; here every gate is a row in one ``rules`` table, so gating is
+data-driven and new rules deploy without code changes:
 
   rules(kind, key, pattern, action)
 
 kinds: title_skip | name_black | pic_sig_black | link_shape | robots | trim
+
+This module is the only reader of rule fields. The table is a local
+relation, so reading a kind's rows starts no Spark job, and each crawl
+gate is one column filter over them (no join).
 """
 
 from __future__ import annotations
@@ -16,7 +19,8 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.urls import path_col
@@ -61,64 +65,63 @@ def gen_rules() -> list[dict]:
 
 
 def rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(gen_rules(), RULES_SCHEMA)
+    """The rules as a local relation (pandas through the session's
+    Arrow path): a filtered collect of it runs no Spark job."""
+    return spark.createDataFrame(pd.DataFrame(gen_rules()), RULES_SCHEMA)
 
 
-def _rules_of(rules: DataFrame, kind: str) -> DataFrame:
-    return rules.filter(F.col("kind") == kind)
+def _rules_of(rules: DataFrame, kind: str) -> list[Row]:
+    return rules.filter(F.col("kind") == kind).collect()
+
+
+def _drop_matching(df: DataFrame, preds: list[Column]) -> DataFrame:
+    """Left-anti semantics: drop a row where some predicate is true;
+    a null one keeps it."""
+    return df.filter(~F.coalesce(reduce(operator.or_, preds, F.lit(False)), F.lit(False)))
 
 
 def filter_blacklisted_names(seeds: DataFrame, rules: DataFrame) -> DataFrame:
     """F3/J3: drop seeds whose exact name is blacklisted."""
-    black = _rules_of(rules, "name_black").select(F.col("pattern").alias("name"))
-    return seeds.join(F.broadcast(black), "name", "left_anti")
+    names = [r["pattern"] for r in _rules_of(rules, "name_black")]
+    return _drop_matching(seeds, [F.col("name").isin(names)])
 
 
-def apply_title_rules(items: DataFrame, rules: DataFrame, account_col: str = "name") -> DataFrame:
+def apply_title_rules(items: DataFrame, rules: DataFrame) -> DataFrame:
     """F5 + F6: strip one leading 原创 (replace-first via ^ anchor),
-    then drop titles matching any global or account-scoped skip rule.
-
-    Implemented as a broadcast theta-join (title rlike pattern) +
-    anti-semantics via left join on matched rule — stays JVM-side."""
+    then drop titles matching any skip rule: a rule with a null key
+    applies to every account (``name``), any other only to its own."""
     items = items.withColumn(
         "title", F.trim(F.regexp_replace("title", "^原创", ""))
     )
-    skips = F.broadcast(
-        _rules_of(rules, "title_skip").select(
-            F.col("key").alias("_rule_key"), F.col("pattern").alias("_rule_pat")
-        )
-    )
-    joined = items.join(
-        skips,
-        (F.col("_rule_key").isNull() | (F.col("_rule_key") == F.col(account_col)))
-        & F.rlike(F.col("title"), F.col("_rule_pat")),
-        "left_anti",
-    )
-    return joined
+    preds = []
+    for r in _rules_of(rules, "title_skip"):
+        hit = F.col("title").rlike(r["pattern"])
+        preds.append(hit if r["key"] is None else (F.col("name") == r["key"]) & hit)
+    return _drop_matching(items, preds)
 
 
-def link_shape_filter(links: DataFrame, patterns: list[str], href_col: str = "href") -> DataFrame:
-    """F14: keep only hrefs matching any of the source's link-shape
-    regexes (its ``link_shape`` rule patterns, read once per run)."""
+def trim_rules(rules: DataFrame) -> dict[str, tuple[str, str]]:
+    """D6: account -> (marker, direction), applied in the fetch pass."""
+    return {r["key"]: (r["pattern"], r["action"]) for r in _rules_of(rules, "trim")}
+
+
+def link_shape_filter(links: DataFrame, rules: DataFrame, source: str) -> DataFrame:
+    """F14: keep only hrefs matching any of ``source``'s link-shape
+    regexes; a source without one keeps every link."""
+    patterns = [r["pattern"] for r in _rules_of(rules, "link_shape") if r["key"] == source]
     if not patterns:
         return links
-    return links.filter(reduce(operator.or_, [F.col(href_col).rlike(p) for p in patterns]))
+    return links.filter(reduce(operator.or_, [F.col("href").rlike(p) for p in patterns]))
 
 
 def robots_gate(frontier: DataFrame, rules: DataFrame) -> DataFrame:
-    """J8 (new): drop frontier rows whose (host, path) matches a deny
-    rule — broadcast left-anti theta-join."""
-    deny = F.broadcast(
-        _rules_of(rules, "robots")
-        .filter(F.col("action") == "deny")
-        .select(F.col("key").alias("_r_host"), F.col("pattern").alias("_r_pat"))
-    )
+    """J8 (new): drop frontier rows whose host equals a deny rule's key
+    and whose path matches its regex."""
     path = path_col(F.col("url"))
-    return frontier.join(
-        deny,
-        (F.col("host") == F.col("_r_host")) & F.rlike(path, F.col("_r_pat")),
-        "left_anti",
-    )
+    return _drop_matching(frontier, [
+        (F.col("host") == r["key"]) & path.rlike(r["pattern"])
+        for r in _rules_of(rules, "robots") if r["action"] == "deny"
+    ])
 
 
 def robots_prefix_gate(
@@ -145,7 +148,7 @@ def robots_prefix_gate(
     (filter + array_max over the struct array) — the frontier side is
     never shuffled, windowed, or grouped."""
     per_host = F.broadcast(
-        _rules_of(rules, kind)
+        rules.filter(F.col("kind") == kind)
         .groupBy(F.col("key").alias("_r_host"))
         .agg(
             F.collect_list(
@@ -228,7 +231,7 @@ def robots_wildcard_gate(
     core = F.replace(core, F.lit("*"), F.lit("%"))
     like_pat = F.when(anchored, core).otherwise(F.concat(core, F.lit("%")))
     per_host = F.broadcast(
-        _rules_of(rules, kind)
+        rules.filter(F.col("kind") == kind)
         .select(
             F.col("key").alias("_r_host"),
             F.struct(
@@ -252,8 +255,7 @@ def robots_wildcard_gate(
     return joined.filter(allowed).drop("_r_host", "_rr")
 
 
-def pic_sig_gate(imgs: DataFrame, rules: DataFrame, sig_col: str = "sig") -> DataFrame:
-    """F15/J2: drop images whose URL signature is blacklisted."""
-    black = _rules_of(rules, "pic_sig_black").select(F.col("pattern").alias(sig_col))
-    return imgs.join(F.broadcast(black), sig_col, "left_anti")
-
+def pic_sig_gate(imgs: DataFrame, rules: DataFrame) -> DataFrame:
+    """F15/J2: drop images whose URL signature (``sig``) is blacklisted."""
+    sigs = [r["pattern"] for r in _rules_of(rules, "pic_sig_black")]
+    return _drop_matching(imgs, [F.col("sig").isin(sigs)])

@@ -248,13 +248,8 @@ class CrawlRun:
         if self.filter_family not in ("bloom", "none"):
             raise ValueError(f"unknown filter_family: {self.filter_family!r}")
         self.store = store
-        self.rules = gating.rules_df(spark).cache()
-        rows = self.rules.filter(F.col("kind").isin("trim", "link_shape")).collect()
-        # D6: account -> (marker, direction), applied in the fetch pass;
-        # F14: the link shapes of chuansongmen list pages
-        self.trims = {r["key"]: (r["pattern"], r["action"]) for r in rows if r["kind"] == "trim"}
-        self.link_shapes = [r["pattern"] for r in rows
-                            if r["kind"] == "link_shape" and r["key"] == "chuansongmen"]
+        self.rules = gating.rules_df(spark)  # local: read without a job
+        self.trims = gating.trim_rules(self.rules)  # D6, applied in the fetch pass
         self.round = 0
         self.seen: DataFrame = spark.createDataFrame(
             [], "bucket int, key_hash long, dedup_key string, url string, round int"
@@ -351,7 +346,7 @@ class CrawlRun:
         items = items.filter(F.col("item.cover") != "").select(  # F4
             "*", *[F.col("item." + c).alias(c) for c in ("href", "title", "summary", "cover")]
         )
-        items = gating.apply_title_rules(items, self.rules, account_col="name")  # F5+F6
+        items = gating.apply_title_rules(items, self.rules)  # F5+F6
         return items.select(
             absolutize_col(F.col("href"), F.lit(WEIXIN_BASE)).alias("url"),  # X4
             *SEED_COLS,
@@ -389,7 +384,7 @@ class CrawlRun:
             *SEED_COLS, "page_no", (F.col("depth") + 1).alias("depth"),
             F.posexplode("page.links").alias("link_idx", "href"),
         )
-        links = gating.link_shape_filter(links, self.link_shapes)  # F14
+        links = gating.link_shape_filter(links, self.rules, "chuansongmen")  # F14
         return links.select(
             absolutize_col(F.col("href"), F.lit(CSM_BASE)).alias("url"),
             *SEED_COLS,
@@ -529,7 +524,7 @@ class CrawlRun:
         synth fetch + decode -> F16 small -> X7/X8 rehost id ->
         images corpus rows (input_hint schema + lineage columns)."""
         imgs = imgs.withColumn("sig", pic_signature_col(F.col("src")))  # X2
-        imgs = gating.pic_sig_gate(imgs, self.rules, "sig")  # F15
+        imgs = gating.pic_sig_gate(imgs, self.rules)  # F15
         fmt = F.when(F.col("data_type") != "", F.col("data_type")).otherwise(
             query_param_col(F.col("src"), "wx_fmt", "jpg")  # X3
         )
@@ -657,10 +652,11 @@ class CrawlRun:
 
     def _snapshot(self) -> None:
         """K6/O10-O11: commit what this round fetched — its pages and
-        its decoded images — with its metrics. The next frontier is not
-        stored: resume derives it from the pages, and checks its size
-        against the recorded ``frontier_out``."""
-        self.store.write_round(self.round, self.delta, {"metrics": self.metrics[-1]})
+        its decoded images — with its metrics and ``n_buckets``. The next
+        frontier is not stored: resume derives it from the pages, and
+        checks its size against the recorded ``frontier_out``."""
+        meta = {"n_buckets": self.cfg.n_buckets, "metrics": self.metrics[-1]}
+        self.store.write_round(self.round, self.delta, meta)
 
     @classmethod
     def resume(
@@ -679,13 +675,18 @@ class CrawlRun:
         table that cannot be read raises, and so does a derived frontier
         whose size differs from the last round's recorded
         ``frontier_out`` (the expansion rules drifted since the
-        commit)."""
+        commit), and so does another ``n_buckets`` (the seen rows keep
+        their stored buckets, so the Bloom probe would misread them)."""
         run = cls(spark, config, store)
         last = store.latest_round()
         if last is None:
             return run
         rounds = range(last + 1)
         for r in rounds:
+            stored = store.manifest(r).get("n_buckets")
+            if stored != run.cfg.n_buckets:
+                raise ValueError(f"snapshot round={r}: committed with n_buckets={stored}, "
+                                 f"resumed with n_buckets={run.cfg.n_buckets}")
             store.verify_round(spark, r)  # per-partition lineage gate
         run.round = last + 1
 

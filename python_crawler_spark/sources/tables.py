@@ -31,19 +31,16 @@ _LINEAGE_BUCKETS = 64  # checksum partitioning constant, not a run config
 def _partition_lineage(df: DataFrame) -> dict:
     """Per-bucket lineage record for a stored table: row count +
     order-independent XOR checksum per bucket, where each row's hash is
-    xxhash64 over every column (nested ones included) and its bucket is
-    that hash mod 64 — so a dropped row OR a mutated column changes the
-    record.
+    xxhash64 of its JSON text (every column, nested ones included) and
+    its bucket is that hash mod 64 — so a dropped row OR a mutated
+    column changes the record. The JSON names each non-null field, so
+    a value moved into a null neighbour changes it too (xxhash64 over
+    the columns skips nulls).
     One rule for every table; O(#buckets) driver data (the bucket count
     is a constant, never row-proportional), so this scales to any
     table size. North_rule: 'resumes with per-partition lineage and
     fetch/dedup metrics'."""
-    # a column holding a MAP is not hashable in Spark (same map,
-    # different hashcode): it is hashed through its JSON text
-    h = F.xxhash64(*[
-        F.to_json(f.name) if "MapType" in repr(f.dataType) else F.col(f.name)
-        for f in df.schema.fields
-    ])
+    h = F.xxhash64(F.to_json(F.struct(*df.columns)))
     rows = (
         df.groupBy(F.pmod(h, F.lit(_LINEAGE_BUCKETS)).alias("bucket"))
         .agg(F.count("*").alias("n"), F.bit_xor(h).alias("x"))

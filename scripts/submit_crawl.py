@@ -28,7 +28,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True, help="output/checkpoint directory")
     ap.add_argument("--tianyan-seeds", type=int, default=8)
-    ap.add_argument("--buckets", type=int, default=16)
+    ap.add_argument(
+        "--buckets", type=int, default=16,
+        help="seen-set hash buckets; resuming an --out written with other buckets raises",
+    )
     ap.add_argument("--salts", type=int, default=4)
     ap.add_argument("--max-rounds", type=int, default=8)
     args = ap.parse_args()

@@ -1,10 +1,109 @@
-"""Robots longest-prefix gate (J8, RFC 9309 semantics)."""
+"""The crawl's rule gates (F3, F5/F6, F14, F15, J8) and the robots
+longest-prefix and wildcard gates (J8, RFC 9309 semantics)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from python_crawler_spark.operators import gating
 from python_crawler_spark.operators.gating import RULES_SCHEMA, robots_prefix_gate
+
+# one rule of each crawl kind, each with a neighbour that must not fire
+RULES = [
+    ("name_black", None, "blocked", "skip"),
+    ("pic_sig_black", None, "badsig", "skip"),
+    ("title_skip", None, "^daily", "skip"),        # every account
+    ("title_skip", "acct_a", "promo", "skip"),     # acct_a only
+    ("link_shape", "chuansongmen", r"^/n/\d+", "keep"),
+    ("link_shape", "other", "^/x", "keep"),
+    ("robots", "h.com", r"^/n/\d*13$", "deny"),
+    ("robots", "i.com", "^/", "allow"),            # not a deny rule
+    ("trim", "acct_a", "marker", "strip_after"),
+]
+
+
+def _rules(spark):
+    return spark.createDataFrame(RULES, RULES_SCHEMA)
+
+
+def _col(df, name):
+    return {r[name] for r in df.collect()}
+
+
+def test_name_gate_drops_blacklisted_keeps_null(spark):
+    seeds = spark.createDataFrame([("blocked",), ("ok",), (None,)], "name string")
+    got = gating.filter_blacklisted_names(seeds, _rules(spark))
+    assert _col(got, "name") == {None, "ok"}
+
+
+def test_pic_sig_gate_drops_blacklisted_keeps_null(spark):
+    imgs = spark.createDataFrame([("badsig",), ("fine",), (None,)], "sig string")
+    got = gating.pic_sig_gate(imgs, _rules(spark))
+    assert _col(got, "sig") == {None, "fine"}
+
+
+def test_title_rules_scope_and_nulls(spark):
+    """A rule with a null key applies to every account, a keyed rule
+    only to its own; a null title or account keeps the row unless a
+    global rule matches; one leading 原创 is stripped first."""
+    items = spark.createDataFrame(
+        [
+            (1, "acct_a", "promo day"),     # scoped rule, own account
+            (2, "acct_b", "promo day"),     # scoped rule, other account
+            (3, "acct_b", "daily news"),    # global rule
+            (4, None, "promo day"),         # null account: scoped rule off
+            (5, None, "daily news"),        # null account: global rule on
+            (6, "acct_a", None),            # null title
+            (7, "acct_b", "原创daily"),     # stripped, then global rule
+            (8, "acct_b", "原创 kept"),
+        ],
+        "id int, name string, title string",
+    )
+    got = {r["id"]: r["title"] for r in gating.apply_title_rules(items, _rules(spark)).collect()}
+    assert got == {2: "promo day", 4: "promo day", 6: None, 8: "kept"}
+
+
+def test_robots_gate_denies_host_and_path(spark):
+    """Only a deny rule fires, only on its own host, only where the
+    path matches; a null host keeps the row."""
+    urls = [
+        ("http://h.com/n/113", "h.com"),
+        ("http://h.com/n/114", "h.com"),
+        ("http://i.com/n/113", "i.com"),
+        ("http://g.com/n/113", None),
+    ]
+    frontier = spark.createDataFrame(urls, "url string, host string")
+    got = gating.robots_gate(frontier, _rules(spark))
+    assert _col(got, "url") == {
+        "http://g.com/n/113", "http://h.com/n/114", "http://i.com/n/113",
+    }
+
+
+def test_link_shapes_and_trims_read_their_source(spark):
+    links = spark.createDataFrame([("/n/12",), ("/x/1",), ("/n/",)], "href string")
+    rules = _rules(spark)
+    assert _col(gating.link_shape_filter(links, rules, "chuansongmen"), "href") == {"/n/12"}
+    assert _col(gating.link_shape_filter(links, rules, "other"), "href") == {"/x/1"}
+    assert _col(gating.link_shape_filter(links, rules, "weixin"), "href") == {"/n/", "/n/12", "/x/1"}
+    assert gating.trim_rules(rules) == {"acct_a": ("marker", "strip_after")}
+
+
+def test_crawl_run_reads_its_rules_without_a_job(spark):
+    """The rules table is a local relation: building a CrawlRun, which
+    reads the trims and holds the rules for its gates, starts no Spark
+    job."""
+    from python_crawler_spark.plans.crawl import CrawlConfig, CrawlRun
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+        return set(tracker.getJobIdsForGroup())
+
+    before = job_ids()
+    CrawlRun(spark, CrawlConfig())
+    assert job_ids() == before
 
 
 def _gate(spark, urls, rules):

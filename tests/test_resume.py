@@ -249,6 +249,34 @@ def test_partition_lineage_covers_parsed_pages(spark, tmp_path, two_rounds):
         CrawlRun.resume(spark, store, CFG)
 
 
+def test_partition_lineage_sees_a_value_moved_into_a_null_neighbour(spark, tmp_path):
+    """xxhash64 over a row's columns skips null ones, nested fields too,
+    so a value moved into an adjacent null field of the same type kept
+    the row hash; the row's JSON names the field, so the verify
+    raises."""
+    schema = "title string, summary string, p struct<text:string, anti_bot:boolean, link:string>"
+    kept = ("u", "v", (None, True, "q"))
+    store = SnapshotStore(tmp_path / "snap")
+    store.write_round(0, {"pages": spark.createDataFrame([("t", None, ("x", None, None)), kept], schema)}, {})
+    store.verify_round(spark, 0)  # intact -> passes
+    for moved in [(None, "t", ("x", None, None)), ("t", None, (None, None, "x"))]:
+        tampered = spark.createDataFrame([moved, kept], schema)
+        tampered.write.mode("overwrite").parquet(str(store.root / "round=0" / "pages"))
+        with pytest.raises(ValueError, match="round=0 table=pages"):
+            store.verify_round(spark, 0)
+
+
+def test_resume_raises_on_other_n_buckets(spark, tmp_path, two_rounds):
+    """The stored seen rows keep the bucket they were written with, and
+    the Bloom probe reads the candidate's bucket: resuming under another
+    n_buckets raises naming both values instead of re-fetching seen
+    URLs."""
+    store = _copy_store(two_rounds, tmp_path)
+    assert store.manifest(1)["n_buckets"] == CFG.n_buckets == 8
+    with pytest.raises(ValueError, match=r"round=0\b.*n_buckets=8.*n_buckets=16"):
+        CrawlRun.resume(spark, store, CrawlConfig(spec=SPEC, n_buckets=16))
+
+
 def test_order_invariant_to_parallelism(tmp_path):
     """Same input, genuinely different parallelism (fresh subprocess
     JVMs at local[2] = N and local[8] = 4N, the north_rule's literal
