@@ -28,12 +28,19 @@ Scale note: a naive Window.partitionBy(source) puts ~all rows of a
 10^10 frontier into a handful of partitions. schedule() instead cuts
 the packed priority at one set of sampled global bounds, ranks and
 prefix-sums within each (source, bucket), and adds broadcast
-per-bucket offsets (one bounds job, no single-partition shuffle).
+per-bucket offsets (one bounds job, no single-partition shuffle; no
+job for a plan its caller knows is small, see range_count).
+
+Every order expression (the pack, the source ranks, the bucket CASE
+tree, the windows) is SQL text parsed in one F.expr/selectExpr call:
+each Column operator is a py4j round trip, and a stream epoch of a
+few thousand rows spent more time building these trees op by op than
+running them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PRIORITY_COLS = ["source_rank", "line_no", "stage", "page_no", "link_idx", "attempt"]
@@ -63,29 +70,44 @@ PRIORITY_WIDTHS = [
 
 
 def pack_order(fields) -> "F.Column":
-    """Pack ``[(column, bits, name), ...]`` (most-significant first)
-    into one guarded BIGINT with the same lexicographic order as the
-    tuple. Injective over in-range inputs, so ties in the packed value
-    are exactly ties in the tuple. Each field is biased by +1 so the
-    engine's ``-1`` sentinel (the seed/list row itself, ordered before
-    link 0) packs as 0; the valid domain is [-1, 2^bits - 2].
-    Out-of-range raises per row — fail loudly beats a silent
-    mis-sort."""
-    acc = F.lit(0).cast("long")
-    for col, bits, name in fields:
-        c = col.cast("long") + F.lit(1)
-        guarded = F.when(
-            c.isNull() | (c < 0) | (c >= (1 << bits)),
-            F.raise_error(F.lit(f"pack_order: {name} out of [-1, 2^{bits}-2]")),
-        ).otherwise(c)
-        acc = F.shiftleft(acc, bits) + guarded
-    return acc
+    """Pack ``[(sql_expr, bits, name), ...]`` (most-significant first,
+    e.g. ``("line_no", 30, "line_no")``) into one guarded BIGINT with
+    the same lexicographic order as the tuple. Injective over in-range
+    inputs, so ties in the packed value are exactly ties in the tuple.
+    Each field is biased by +1 so the engine's ``-1`` sentinel (the
+    seed/list row itself, ordered before link 0) packs as 0; the valid
+    domain is [-1, 2^bits - 2]. Out-of-range raises per row — fail
+    loudly beats a silent mis-sort. The pack is SQL text parsed in one
+    ``F.expr`` call (module docstring), so a field is SQL text too; a
+    Column raises TypeError."""
+    acc = "CAST(0 AS BIGINT)"
+    for expr, bits, name in fields:
+        if not isinstance(expr, str):
+            raise TypeError(f"pack_order: field {name} must be SQL text, got {type(expr).__name__}")
+        c = f"(CAST(({expr}) AS BIGINT) + 1)"
+        acc = (
+            f"shiftleft({acc}, {bits}) + CASE WHEN {c} IS NULL OR {c} < 0 OR {c} >= {1 << bits} "
+            f"THEN raise_error('pack_order: {name} out of [-1, 2^{bits}-2]') ELSE {c} END"
+        )
+    return F.expr(acc)
 
 
 def packed_priority_col() -> "F.Column":
     """The full priority tuple (PRIORITY_COLS, source_rank first) as
     one packed BIGINT — order-identical to sorting by the tuple."""
-    return pack_order([(F.col(n), b, n) for n, b in PRIORITY_WIDTHS])
+    return pack_order([(n, b, n) for n, b in PRIORITY_WIDTHS])
+
+
+def _case_source(ranks: dict, otherwise) -> str:
+    """SQL CASE mapping ``source`` through ``ranks``, else ``otherwise``."""
+    quoted = {s.replace("\\", "\\\\").replace("'", "\\'"): r for s, r in ranks.items()}
+    whens = " ".join(f"WHEN '{s}' THEN {r}" for s, r in quoted.items())
+    return f"CASE source {whens} ELSE {otherwise} END"
+
+
+def _lex_source_rank_sql(sources: list[str]) -> str:
+    unknown = "raise_error(concat('lex_source_rank: unknown source ', source))"
+    return _case_source({s: i for i, s in enumerate(sorted(sources))}, unknown)
 
 
 def lex_source_rank(sources: list[str]) -> "F.Column":
@@ -101,14 +123,7 @@ def lex_source_rank(sources: list[str]) -> "F.Column":
     sources compare equal — a nondeterministic winner. A new source
     must be added to SOURCE_RANK (one line) before its rows may reach
     dedup; failing loudly here beats silently unstable dedup output."""
-    rank = None
-    for i, s in enumerate(sorted(sources)):
-        rank = (rank.when if rank is not None else F.when)(
-            F.col("source") == s, F.lit(i)
-        )
-    return rank.otherwise(
-        F.raise_error(F.concat(F.lit("lex_source_rank: unknown source "), F.col("source")))
-    )
+    return F.expr(_lex_source_rank_sql(sources))
 
 
 def packed_dedup_order_col(sources: list[str]) -> "F.Column":
@@ -116,57 +131,20 @@ def packed_dedup_order_col(sources: list[str]) -> "F.Column":
     (source string, line_no, stage, page_no, link_idx, attempt) —
     the ``["source"] + PRIORITY_COLS[1:]`` ordering every
     first-occurrence call site uses."""
-    fields = [(lex_source_rank(sources), PRIORITY_WIDTHS[0][1], "source")]
-    fields += [(F.col(n), b, n) for n, b in PRIORITY_WIDTHS[1:]]
-    return pack_order(fields)
+    fields = [(_lex_source_rank_sql(sources), PRIORITY_WIDTHS[0][1], "source")]
+    return pack_order(fields + [(n, b, n) for n, b in PRIORITY_WIDTHS[1:]])
+
 
 class CheckpointHandle:
-    """Per-call registry of RDD ids a schedule() call
-    localCheckpointed. Since round 4 the scheduler checkpoints NOTHING
-    (round 5: the bucket id is a pure function of the row against
-    driver-collected literal bounds, so the offsets and window passes
-    agree by construction — see schedule()), so handles free zero
-    blocks; the API is kept so call sites stay uniform and
-    so any future materialization slots back into the same
-    deterministic-free contract (free by handle, never a global
-    drain — ADVICE r3 #2)."""
-
-    __slots__ = ("rdd_ids",)
-
-    def __init__(self) -> None:
-        self.rdd_ids: list[int] = []
-
-
-# Fallback registry for calls made WITHOUT a handle. A handle-less
-# free_schedule_checkpoints(spark) drains this entire list, so the
-# no-handle flow is only safe when a single caller at a time builds and
-# materializes schedule plans (the original round-3 contract). Any
-# caller that may overlap with another live schedule plan must pass its
-# own CheckpointHandle. Like every handle it stays empty today.
-_ckpt_rdd_ids: list[int] = []
+    """Kept for call sites: schedule() has materialized nothing since
+    round 4 (its bucket is a row function), so a handle holds no block."""
 
 
 def free_schedule_checkpoints(spark, handle: CheckpointHandle | None = None) -> int:
-    """Unpersist checkpoint blocks registered by schedule(),
-    deterministically (no GC dependence).
+    """Free the blocks schedule() registered: none (see
+    CheckpointHandle), so this returns 0."""
+    return 0
 
-    With ``handle``: frees exactly that call's blocks (the safe,
-    per-call path). Without: drains the module-global fallback registry
-    — every no-handle call's blocks, whoever made them. Call AFTER the
-    returned plan has been materialized (written / collected /
-    checkpointed downstream); the blocks are only needed to compute
-    that plan once. Returns how many RDDs were freed. Idempotent:
-    already-collected ids are skipped."""
-    registry = handle.rdd_ids if handle is not None else _ckpt_rdd_ids
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    freed = 0
-    wanted = set(registry)
-    for rid in jmap.keySet().toArray():
-        if int(rid) in wanted:
-            jmap.get(rid).unpersist(False)
-            freed += 1
-    registry.clear()
-    return freed
 
 SOURCE_RANK = {"weixin": 0, "chuansongmen": 1, "tianyan": 2}
 
@@ -180,18 +158,12 @@ def with_priority(frontier: DataFrame) -> DataFrame:
     """Attach source_rank; the rest of the tuple is carried from
     frontier expansion (each child inherits line_no and gets its DOM
     position as link_idx — SURVEY O1-O4)."""
-    rank = F.create_map(
-        *[x for s, r in SOURCE_RANK.items() for x in (F.lit(s), F.lit(r))]
-    )
     # Unknown sources must NOT collapse to NULL: a NULL rank never
     # matches schedule()'s per-bucket offsets join (NULL != NULL), and
     # would fail the priority pack. Unmapped sources get a
     # sentinel rank after all known ones; ties broken by the rest of
     # the priority tuple.
-    return frontier.withColumn(
-        "source_rank",
-        F.coalesce(rank[F.col("source")], F.lit(len(SOURCE_RANK))).cast("int"),
-    )
+    return frontier.withColumn("source_rank", F.expr(_case_source(SOURCE_RANK, len(SOURCE_RANK))))
 
 
 def host_queues(frontier: DataFrame, n_salts: int = 8) -> DataFrame:
@@ -202,23 +174,33 @@ def host_queues(frontier: DataFrame, n_salts: int = 8) -> DataFrame:
       host_rank, host_scheduled_at — 1-based place in its queue and the
                                      queue's crawl_delay before it
     """
-    f = with_priority(frontier).withColumn("_prio", packed_priority_col())
-    f = f.withColumn("host_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)).cast("int"))
+    return _host_queues(with_priority(frontier).withColumn("_prio", packed_priority_col()), n_salts)
+
+
+BEFORE = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"  # the rows before this one
+
+
+def _clock(partition: str, rank: str, delay: str) -> dict:
+    """Per ``partition`` in ``_prio`` order: each row's 1-based place
+    (``rank``) and the crawl_delay of the rows before it (``delay``)."""
+    w = f"PARTITION BY {partition} ORDER BY _prio"
+    return {
+        rank: F.expr(f"row_number() OVER ({w})"),
+        delay: F.expr(f"coalesce(sum(crawl_delay) OVER ({w} {BEFORE}), 0D)"),
+    }
+
+
+def _host_queues(f: DataFrame, n_salts: int) -> DataFrame:
+    """host_queues over rows that already carry source_rank and the
+    packed ``_prio``, which it drops."""
     # group by xxhash64(host) (8-byte sort prefix) instead of the host
     # string; the host column itself is untouched in the output. A
     # 64-bit collision would merge two hosts' queues — at web scale
     # (~10^9 hosts) the chance is ~10^18/2^65 ≈ 3e-2ppm; politeness
     # only gets (harmlessly) stricter.
-    f = f.withColumn("_host_key", F.xxhash64("host"))
-    w_host = Window.partitionBy("_host_key", "host_salt").orderBy("_prio")
-    f = f.withColumn("host_rank", F.row_number().over(w_host)).withColumn(
-        "host_scheduled_at",
-        F.coalesce(
-            F.sum("crawl_delay").over(w_host.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0.0),
-        ),
-    )
-    return f.drop("_host_key", "_prio")
+    f = f.withColumn("host_salt", F.expr(f"CAST(pmod(xxhash64(url), {n_salts}) AS INT)"))
+    queues = _clock("xxhash64(host), host_salt", "host_rank", "host_scheduled_at")
+    return f.withColumns(queues).drop("_prio")
 
 
 # Fraction of the frontier the bounds job reads. The cut points steer
@@ -226,6 +208,16 @@ def host_queues(frontier: DataFrame, n_salts: int = 8) -> DataFrame:
 # the idea of repartitionByRange's reservoir sampler in one job. At
 # 10^10 frontier rows that is a ~5% scan instead of a full one.
 BOUNDS_SAMPLE = 0.05
+
+# Rows per range for a caller that knows its plan's size: one range
+# per ROWS_PER_RANGE rows, capped at schedule()'s default 32, so a
+# plan under ROWS_PER_RANGE rows runs no bounds job.
+ROWS_PER_RANGE = 100_000
+
+
+def range_count(n_rows: int) -> int:
+    """The ``n_range_partitions`` for a plan of ``n_rows`` rows."""
+    return min(32, -(-n_rows // ROWS_PER_RANGE))
 
 
 def schedule(
@@ -253,23 +245,27 @@ def schedule(
 
     1. one job collects ~n_range_partitions approximate percentiles of
        ``_prio`` over a BOUNDS_SAMPLE sample and embeds them as
-       LITERALS;
+       LITERALS; with ``n_range_partitions <= 1`` there are no cut
+       points and no job (``range_count`` picks that for a plan under
+       ROWS_PER_RANGE rows);
     2. ``_pid`` = count of cut points <= ``_prio``, a balanced CASE
        tree (O(log n) compares per row) — a PURE FUNCTION OF THE ROW;
     3. a window over (source_rank, _pid) ranks and prefix-sums each
        bucket, while a map-side-combined groupBy(source_rank, _pid)
        yields per-bucket totals whose exclusive prefix sums within the
-       source are broadcast back as offsets.
+       source are broadcast back as offsets (with no cut points the
+       offsets are 0 and there is no offsets pass).
 
     ANY bound set gives exact ranks: ties at a cut point share a
     bucket, a bucket straddling a source boundary splits on the
-    (source_rank, _pid) key, and an empty sample puts every row in
-    bucket 0. Because the bucket is a row function, the offsets pass
-    and the window pass agree under any re-execution, and the plan
-    has no range exchange (the window's hash exchange is the only
-    full-data shuffle; rounds 2-4 used repartitionByRange +
-    spark_partition_id(), whose two executions could disagree —
-    ADVICE r4 #1).
+    (source_rank, _pid) key, and an empty sample or no cut points
+    puts every row in bucket 0. Because the bucket is a row function,
+    the offsets pass and the window pass agree under any
+    re-execution, and the plan has no range exchange (the window's
+    hash exchange is the only full-data shuffle; rounds 2-4 used
+    repartitionByRange + spark_partition_id(), whose two executions
+    could disagree — ADVICE r4 #1). The host queues reuse this
+    ``source_rank`` and ``_prio``.
 
     ``handle`` is accepted for call-site compatibility and unused:
     schedule() materializes nothing.
@@ -277,41 +273,30 @@ def schedule(
     f = with_priority(frontier).withColumn("_prio", packed_priority_col())
     qs = [i / n_range_partitions for i in range(1, n_range_partitions)]
     sample = f.sample(fraction=BOUNDS_SAMPLE, seed=42) if BOUNDS_SAMPLE < 1.0 else f
-    bounds = sorted(set(sample.agg(F.percentile_approx("_prio", qs, 10_000)).first()[0] or []))
+    bounds = sample.agg(F.percentile_approx("_prio", qs, 10_000)).first()[0] if qs else []
+    bounds = sorted(set(bounds or []))
 
-    def bucket(lo: int, hi: int) -> "F.Column":
+    def bucket(lo: int, hi: int) -> str:
         # rows with bounds[lo-1] <= _prio < bounds[hi] (virtual
         # sentinels) get a bucket in [lo, hi]; resolve by bisection
         if lo == hi:
-            return F.lit(lo)
+            return str(lo)
         mid = (lo + hi) // 2
-        return F.when(F.col("_prio") >= F.lit(bounds[mid]), bucket(mid + 1, hi)).otherwise(
-            bucket(lo, mid)
-        )
+        above, below = bucket(mid + 1, hi), bucket(lo, mid)
+        return f"CASE WHEN _prio >= {bounds[mid]} THEN {above} ELSE {below} END"
 
     key = ["source_rank", "_pid"]
-    f = f.withColumn("_pid", bucket(0, len(bounds)))
-    before = (Window.unboundedPreceding, -1)
-    w_src = Window.partitionBy("source_rank").orderBy("_pid").rowsBetween(*before)
-    offsets = (
-        f.groupBy(*key)
-        .agg(F.count("*").alias("_cnt"), F.sum("crawl_delay").alias("_sum"))
-        .select(
-            *key,
-            F.sum("_cnt").over(w_src).alias("_cnt_off"),
-            F.sum("_sum").over(w_src).alias("_sum_off"),
+    f = f.withColumn("_pid", F.expr(bucket(0, len(bounds))))
+    f = f.withColumns(_clock("source_rank, _pid", "_rn", "_cs"))
+    if bounds:
+        w = f"OVER (PARTITION BY source_rank ORDER BY _pid {BEFORE})"
+        offsets = f.groupBy(*key).agg(F.count("*").alias("_n"), F.sum("crawl_delay").alias("_d"))
+        offsets = offsets.selectExpr(
+            *key, f"coalesce(sum(_n) {w}, 0) AS _n_off", f"coalesce(sum(_d) {w}, 0) AS _d_off"
         )
-        .fillna(0, subset=["_cnt_off", "_sum_off"])
-    )
-    w_in = Window.partitionBy(*key).orderBy("_prio")
-    f = (
-        f.withColumn("_rn", F.row_number().over(w_in))
-        .withColumn(
-            "_cs",
-            F.coalesce(F.sum("crawl_delay").over(w_in.rowsBetween(*before)), F.lit(0.0)),
-        )
-        .join(F.broadcast(offsets), key)
-        .withColumn("ref_seq", F.col("_rn") + F.col("_cnt_off"))
-        .withColumn("ref_virtual_ts", F.col("_cs") + F.col("_sum_off"))
-    )
-    return host_queues(f.drop("_pid", "_rn", "_cs", "_cnt_off", "_sum_off", "_prio"), n_salts)
+        f = f.join(F.broadcast(offsets), key)
+    else:  # one bucket per source: nothing precedes it (the join's column order)
+        zero = [F.lit(0).cast("long").alias("_n_off"), F.lit(0.0).alias("_d_off")]
+        f = f.select(*key, *[c for c in f.columns if c not in key], *zero)
+    f = f.withColumns({"ref_seq": F.expr("_rn + _n_off"), "ref_virtual_ts": F.expr("_cs + _d_off")})
+    return _host_queues(f.drop("_pid", "_rn", "_cs", "_n_off", "_d_off"), n_salts)

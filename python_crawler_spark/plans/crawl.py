@@ -59,6 +59,7 @@ from ..operators.components import _unpersist as _unpersist_rdds
 from ..operators.multimodal import fetch_and_decode_images, with_rehost_id
 from ..operators.scheduler import (
     PRIORITY_COLS,
+    PRIORITY_WIDTHS,
     SOURCE_RANK,
     STAGE_CHILD,
     STAGE_LIST,
@@ -66,6 +67,7 @@ from ..operators.scheduler import (
     host_queues,
     pack_order,
     packed_dedup_order_col,
+    range_count,
     schedule,
 )
 from ..parse.udfs import PAGE_TYPE, PARSERS, canonicalize_urls_udf, parse_page
@@ -261,6 +263,7 @@ class CrawlRun:
         self.images: DataFrame | None = None
         self.metrics: list[dict] = []
         self.counts: dict = {}  # the last round's observed counters
+        self.n_fetched = 0  # fetch log rows: every round's observed `fetched`
         self.delta: dict[str, DataFrame] = {}  # the last round's snapshot tables
         self._start_frontier: tuple[DataFrame, dict] | None = None  # set by resume()
 
@@ -536,9 +539,7 @@ class CrawlRun:
             "_k",
             ["line_no", "page_no", "link_idx"],
             order_col=pack_order(
-                [(F.col("line_no"), 30, "line_no"),
-                 (F.col("page_no"), 12, "page_no"),
-                 (F.col("link_idx"), 10, "link_idx")]
+                [(n, b, n) for n, b in PRIORITY_WIDTHS if n in ("line_no", "page_no", "link_idx")]
             ),
         ).drop("_k")
         imgs = fetch_and_decode_images(imgs, "src")
@@ -625,6 +626,7 @@ class CrawlRun:
             self._expand(fetched), frontier_out=F.count(F.lit(1))
         )
         self.counts = {**fetch_counts, **image_counts, **next_counts}
+        self.n_fetched += fetch_counts["fetched"]
         return nxt
 
     def _add_tables(self, tables: dict[str, DataFrame]) -> None:
@@ -689,6 +691,7 @@ class CrawlRun:
                                  f"resumed with n_buckets={run.cfg.n_buckets}")
             store.verify_round(spark, r)  # per-partition lineage gate
         run.round = last + 1
+        run.n_fetched = sum(store.manifest(r)["metrics"]["fetched"] for r in rounds)
 
         pages = [store.read(spark, r, "pages") for r in rounds]
         images = [store.read(spark, r, "images") for r in rounds]  # stored decoded
@@ -711,10 +714,11 @@ class CrawlRun:
     def fetch_order(self) -> DataFrame:
         """The replay artifact: every fetch with its global per-source
         sequence + virtual clock, reconstructed by SORT over the
-        priority tuple (O4) — never by task timing."""
-        return schedule(self.fetch_log, n_salts=self.cfg.n_salts).orderBy(
-            "source_rank", "ref_seq"
-        )
+        priority tuple (O4) — never by task timing. Its range count comes
+        from the rounds' observed sizes: a small crawl's starts no job."""
+        return schedule(
+            self.fetch_log, n_salts=self.cfg.n_salts, n_range_partitions=range_count(self.n_fetched)
+        ).orderBy("source_rank", "ref_seq")
 
     def results(self) -> dict[str, DataFrame]:
         return {

@@ -3088,7 +3088,6 @@ def q_exif_gps_scrub(spark, sf_dir):
     executor count. sf_dir unused (fixed deterministic corpus)."""
     from pyspark.sql import types as T
 
-    from python_crawler_spark.functions import exif as EXIF
     from python_crawler_spark.operators.multimodal import (
         scrub_exif_gps,
         synth_geotagged_blob,
@@ -3124,7 +3123,7 @@ def q_exif_gps_scrub(spark, sf_dir):
         for pdf in batches:
             gps_after, makes, orients = [], [], []
             for blob in pdf["scrubbed_bytes"]:
-                meta = EXIF.parse_exif(EXIF.extract_exif_jpeg(bytes(blob)))
+                meta = _jpeg_exif(bytes(blob))
                 gps_after.append("GPS" in meta or "GPSIFDPointer" in meta)
                 makes.append(meta.get("Make"))
                 orients.append(meta.get("Orientation"))
@@ -3139,6 +3138,14 @@ def q_exif_gps_scrub(spark, sf_dir):
             )
 
     return scrubbed.mapInPandas(verify, verify_schema)
+
+
+def _jpeg_exif(jpeg: bytes) -> dict:
+    """A JPEG's parsed EXIF; empty without an APP1 Exif segment."""
+    from python_crawler_spark.functions import exif as EXIF
+
+    payload = EXIF.extract_exif_jpeg(jpeg)
+    return {} if payload is None else EXIF.parse_exif(payload)
 
 
 def _sql_exif_gps_scrub_golden() -> str:

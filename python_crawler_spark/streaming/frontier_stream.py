@@ -141,7 +141,9 @@ def run_micro_batches(
     ordering guard, offsets and watermark — comes from ONE per-source
     aggregate over the survivors and the earlier plans (a tagged
     union), collected to the driver; the offsets shift the plan as
-    literal map columns.
+    literal map columns. The aggregate's new-row count also sets
+    schedule()'s range count (``range_count``), so an epoch under
+    ROWS_PER_RANGE rows runs no bounds job.
 
     Replay is safe: every epoch-keyed output (plan, quarantine) is
     written with overwrite, so an epoch that ran its sink but not its
@@ -183,6 +185,7 @@ def run_micro_batches(
         SOURCE_RANK,
         pack_order,
         packed_dedup_order_col,
+        range_count,
         schedule,
     )
 
@@ -191,7 +194,7 @@ def run_micro_batches(
     quarantine_dir = out_dir.rstrip("/") + "_quarantine"
     # within-source priority (everything below source_rank): comparable
     # across epochs for the same source
-    sub_prio = pack_order([(F.col(n), b, n) for n, b in PRIORITY_WIDTHS[1:]])
+    sub_prio = pack_order([(n, b, n) for n, b in PRIORITY_WIDTHS[1:]])
     # after the marking join: null = new, False = an earlier epoch
     # scheduled the key, True = the static seen set holds it
     is_new = F.col("_seen").isNull()
@@ -244,9 +247,10 @@ def run_micro_batches(
                     f"{quarantine_dir}/epoch={epoch_id}"
                 )
                 new = new.filter(~is_late)
-            if not any(n for _, n in cur.values()):
+            n_new = sum(n for _, n in cur.values())
+            if not n_new:
                 return
-            plan = schedule(new, n_salts=n_salts)
+            plan = schedule(new, n_salts=n_salts, n_range_partitions=range_count(n_new))
             if prev:
                 for col, i, zero in (("ref_seq", 0, 0), ("ref_virtual_ts", 1, 0.0)):
                     shift = _lit_map({s: v[i] for s, v in prev.items()})[F.col("source")]

@@ -10,3 +10,16 @@ def spark():
     s = get_spark(app_name="pcs-tests", parallelism=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def job_ids(spark):
+    """A function returning the ids of every Spark job started so far;
+    it drains the listener bus first, since job events land async."""
+    sc = spark.sparkContext
+
+    def ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    return ids

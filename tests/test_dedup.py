@@ -122,7 +122,9 @@ def test_pack_order_guards_raise(spark):
 
     df = spark.createDataFrame([(4096,)], "page_no int")  # 2^12: one past
     with pytest.raises(Exception, match="page_no out of"):
-        df.select(pack_order([(F.col("page_no"), 12, "page_no")])).collect()
+        df.select(pack_order([("page_no", 12, "page_no")])).collect()
+    with pytest.raises(TypeError, match="page_no must be SQL text"):
+        pack_order([(F.col("page_no"), 12, "page_no")])
     df2 = spark.createDataFrame([("mystery",)], "source string")
     with pytest.raises(Exception, match="unknown source"):
         df2.select(lex_source_rank(["weixin"])).collect()

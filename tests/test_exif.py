@@ -204,6 +204,18 @@ def test_strip_gps_and_remove_segment():
     assert (J.decode_jpeg(scrubbed)[3] == J.decode_jpeg(jb)[3]).all()
 
 
+def test_exif_gps_scrub_verify_reads_no_exif_as_empty():
+    """The exif_gps_scrub gate's verify stage re-parses each scrubbed
+    JPEG; one without an APP1 Exif segment is empty metadata, not a
+    TypeError from parse_exif(None)."""
+    from python_crawler_spark.queries import _jpeg_exif
+
+    jb = J.encode_jpeg(np.zeros((8, 8, 3), np.uint8))
+    assert E.extract_exif_jpeg(jb) is None
+    assert _jpeg_exif(jb) == {}
+    assert _jpeg_exif(E.insert_exif_jpeg(jb, E.build_exif(GPS_FIELDS)))["Make"] == "SynthCam"
+
+
 def test_scrub_exif_gps_operator(spark):
     """Operator semantics on the gate corpus: had_gps follows the
     generator's parity rule, scrubbed bytes carry no GPS, everything

@@ -80,6 +80,26 @@ def test_resume_equals_uninterrupted(spark, tmp_path, full, two_rounds):
     assert _state(resumed.run()) == full[2]
 
 
+def test_results_start_no_job(full, job_ids):
+    """A finished crawl builds its results, fetch order included,
+    without a Spark job: the fetch order's range count comes from the
+    rounds' observed ``fetched`` counts, and a fetch log this small
+    needs one range, so no bounds job."""
+    run, _, _ = full
+    before = job_ids()
+    run.results()
+    assert job_ids() == before
+    assert run.n_fetched == sum(m["fetched"] for m in run.metrics) == run.fetch_log.count()
+
+
+def test_resume_sums_fetched_from_manifests(spark, tmp_path, full, two_rounds):
+    """A resumed run counts the committed rounds' fetches from their
+    manifests; its metrics still hold only the rounds it runs."""
+    resumed = CrawlRun.resume(spark, _copy_store(two_rounds, tmp_path), CFG)
+    assert resumed.metrics == []
+    assert resumed.n_fetched == sum(m["fetched"] for m in full[0].metrics[:2])
+
+
 def test_resume_after_crash_before_manifest(spark, tmp_path, full):
     """Round 1 writes some of its tables, then dies before its manifest:
     resume starts again from round 0's commit and equals an
