@@ -33,8 +33,6 @@ from .operators.dedup import batch_first_occurrence, build_bloom_filters, dedup_
 from .operators.scheduler import (
     PRIORITY_COLS,
     SOURCE_RANK,
-    CheckpointHandle,
-    free_schedule_checkpoints,
     packed_dedup_order_col,
     schedule,
 )
@@ -148,10 +146,7 @@ def timed_schedule(
     # bucket is a pure row function — but 3x the work).
     pre_ckpt_ids = _persistent_rdd_ids(spark)
     new = new.localCheckpoint(eager=True)
-    ckpt = CheckpointHandle()
-    plan = schedule(
-        new, n_salts=n_salts, n_range_partitions=n_range_partitions, handle=ckpt
-    )
+    plan = schedule(new, n_salts=n_salts, n_range_partitions=n_range_partitions)
     # Force EVERY schedule column with a noop sink. (A count() action
     # lets Catalyst prune the window operators entirely — the plan for
     # count(plan) contains no Window nodes — so counting would time a
@@ -167,7 +162,6 @@ def timed_schedule(
     # measured. Unpersist exactly the RDDs this rep checkpointed
     # (never the long-lived seen/filters state).
     _unpersist_rdds(spark, _persistent_rdd_ids(spark) - pre_ckpt_ids)
-    free_schedule_checkpoints(spark, ckpt)  # this rep's scheduler blocks only
     return dt, scheduled
 
 

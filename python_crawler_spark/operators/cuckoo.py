@@ -2,10 +2,9 @@
 "Bloom/cuckoo-filter URL-seen set maintained per hash-bucketed
 partition via vectorized pandas/Arrow UDFs").
 
-Same two-phase contract as :mod:`operators.dedup`'s Bloom path —
-build per-bucket filters from the seen table, probe candidates, exact
-anti-join only the probable-positives — but with the cuckoo filter's
-distinct tradeoffs:
+A second filter family (``CUCKOO``) for :mod:`operators.dedup`'s one
+build, probe and two-phase dedup: only the kernels below differ from
+the Bloom family, with the cuckoo filter's distinct tradeoffs:
 
 * **deletion support**: a fingerprint can be removed exactly (needed
   when seen entries are retracted, e.g. a robots rule change
@@ -13,7 +12,9 @@ distinct tradeoffs:
   cleared without rebuilding.
 * **lower FPR at the chosen geometry**: 16-bit fingerprints x 8
   candidate slots ~= 1.2e-4 false-positive rate vs the Bloom path's
-  ~0.8%, so the exact anti-join sees ~60x fewer false candidates.
+  ~0.8%, ~60x fewer false flags. (The flag is a condition on one
+  left-anti join that still shuffles every candidate and seen key, so
+  today a lower FPR changes no join input.)
 * **space**: sized at load factor <= 0.5 (2n slots of 2 bytes = 32
   bits/item) vs Bloom's 10 bits/item — the price of vectorized
   eviction-free construction (below) and deletability.
@@ -46,11 +47,14 @@ Reference analog: the same seen mechanisms dedup.py replaces
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from python_crawler_spark.operators.dedup import _splitmix64
+from python_crawler_spark.operators.dedup import (
+    FilterFamily,
+    _splitmix64,
+    build_filters,
+    dedup_against_seen,
+)
 
 SLOTS_PER_BUCKET = 4
 FP_BITS = 16
@@ -225,17 +229,15 @@ def _delete_one(filt: dict, h: np.ndarray) -> dict:
     }
 
 
-def _to_row(bucket: int, filt: dict) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "bucket": [bucket],
-            "slots": [filt["slots"].tobytes()],
-            "stash_fp": [filt["stash_fp"].astype(np.uint16).tobytes()],
-            "stash_idx": [filt["stash_idx"].astype(np.int64).tobytes()],
-            "n_items": [int(filt["n_items"])],
-            "m_buckets": [int(filt["m_buckets"])],
-        }
-    )
+def _to_row(filt: dict) -> dict:
+    """A filter dict -> its CUCKOO_SCHEMA fields (``bucket`` aside)."""
+    return {
+        "slots": filt["slots"].tobytes(),
+        "stash_fp": filt["stash_fp"].astype(np.uint16).tobytes(),
+        "stash_idx": filt["stash_idx"].astype(np.int64).tobytes(),
+        "n_items": int(filt["n_items"]),
+        "m_buckets": int(filt["m_buckets"]),
+    }
 
 
 def _from_row(r) -> dict:
@@ -248,86 +250,22 @@ def _from_row(r) -> dict:
     }
 
 
-def build_cuckoo_filters(
-    seen: DataFrame, key: str = "key_hash", bucket: str = "bucket"
-) -> DataFrame:
-    """Per-bucket cuckoo filters as CUCKOO_SCHEMA rows — one Arrow
-    batch per hash bucket, numpy build, mirror of
-    :func:`dedup.build_bloom_filters`."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = _build_one(pdf[key].to_numpy(dtype=np.int64))
-        return _to_row(int(pdf[bucket].iloc[0]), filt)
-
-    return seen.select(bucket, key).groupBy(bucket).applyInPandas(build, CUCKOO_SCHEMA)
+CUCKOO = FilterFamily(
+    schema=CUCKOO_SCHEMA,
+    build=lambda h: _to_row(_build_one(h)),
+    load=_from_row,
+    probe=_probe_one,
+    size_sql="octet_length(slots) + 10 * octet_length(stash_fp)",
+)
 
 
-def cuckoo_prefilter_broadcast(
-    cand: DataFrame, filters: DataFrame, key: str = "key_hash", bucket: str = "bucket"
-) -> DataFrame:
-    """Broadcast probe (filters fit in executor memory): ship the
-    filter table once per executor, flag candidates with a scalar
-    pandas UDF — zero extra shuffle."""
-    spark = cand.sparkSession
-    table = {int(r["bucket"]): _from_row(r) for r in filters.collect()}
-    bc = spark.sparkContext.broadcast(table)
-
-    @F.pandas_udf("boolean")
-    def might(bkt: pd.Series, kh: pd.Series) -> pd.Series:
-        filts = bc.value
-        out = np.zeros(len(kh), dtype=bool)
-        b_arr = bkt.to_numpy(dtype=np.int64)
-        h_arr = kh.to_numpy(dtype=np.int64)
-        for b in np.unique(b_arr):
-            filt = filts.get(int(b))
-            if filt is None:
-                continue
-            msk = b_arr == b
-            out[msk] = _probe_one(filt, h_arr[msk])
-        return pd.Series(out)
-
-    return cand.withColumn("might_seen", might(F.col(bucket), F.col(key)))
-
-
-def cuckoo_prefilter(
-    cand: DataFrame, filters: DataFrame, key: str = "key_hash", bucket: str = "bucket"
-) -> DataFrame:
-    """Cogrouped probe (the 10^10-seen path): candidates and the one
-    filter row meet per bucket, filter bytes cross the wire once per
-    bucket, not once per candidate row."""
-    out_schema = cand.withColumn("might_seen", F.lit(False)).schema
-
-    def probe(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if filt_pdf.empty:
-            return cand_pdf.assign(might_seen=False)
-        filt = _from_row(filt_pdf.iloc[0])
-        h = cand_pdf[key].to_numpy(dtype=np.int64)
-        return cand_pdf.assign(might_seen=_probe_one(filt, h))
-
-    return (
-        cand.groupBy(bucket).cogroup(filters.groupBy(bucket)).applyInPandas(probe, out_schema)
-    )
+def build_cuckoo_filters(seen: DataFrame) -> DataFrame:
+    """Per-bucket cuckoo filters as CUCKOO_SCHEMA rows."""
+    return build_filters(seen, CUCKOO)
 
 
 def dedup_against_seen_cuckoo(
-    cand: DataFrame,
-    seen: DataFrame,
-    filters: DataFrame,
-    key: str = "key_hash",
-    **kw,
+    cand: DataFrame, seen: DataFrame, filters: DataFrame, **kw
 ) -> DataFrame:
-    """Two-phase historical dedup with the cuckoo prefilter — same
-    compound-condition single anti-join as the Bloom path
-    (:func:`dedup.dedup_against_seen`), different filter family."""
-    from python_crawler_spark.operators.dedup import dedup_against_seen
-
-    return dedup_against_seen(
-        cand,
-        seen,
-        filters,
-        key=key,
-        prefilter_broadcast=cuckoo_prefilter_broadcast,
-        prefilter=cuckoo_prefilter,
-        size_expr="octet_length(slots) + 10 * octet_length(stash_fp)",
-        **kw,
-    )
+    """:func:`dedup.dedup_against_seen` with cuckoo ``filters``."""
+    return dedup_against_seen(cand, seen, filters, family=CUCKOO, **kw)

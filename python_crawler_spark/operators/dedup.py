@@ -9,12 +9,14 @@ signature set (weixin_public.py:55) — with:
    priority tuple (read-your-own-writes J6, two-phase step 1);
 2. anti_join_seen: exact left-anti join against the historical seen
    table (step 2);
-3. per-bucket Bloom filters, built and probed with Arrow UDFs over
-   hash-bucketed groups — a one-sided-error prefilter so that at
-   10^10-URL scale the exact anti-join only sees probable-positive
-   candidates. Filters are a binary column per bucket; probe uses
-   cogrouped applyInPandas so filter bytes are never replicated per
-   candidate row.
+3. per-bucket seen-set filters, built and probed with Arrow UDFs over
+   hash-bucketed groups. A filter family (``FilterFamily``: Bloom
+   here, cuckoo in :mod:`operators.cuckoo`) is only its numpy
+   kernels; one build, one broadcast probe and one cogroup probe
+   serve every family. The probe flags candidates that MIGHT be seen
+   (one-sided error), and the flag is an extra condition on the one
+   exact left-anti join: that join still shuffles every candidate and
+   every seen key, so the filter does not shrink it today.
 
 Hash scheme: key_hash = xxhash64(dedup_key) computed JVM-side; the k
 Bloom positions derive from (h1, h2=splitmix64(h1)) double hashing,
@@ -23,9 +25,12 @@ numpy-vectorized — no per-row Python.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Any, Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -56,22 +61,17 @@ def batch_first_occurrence(
     stage at 8M rows (every row is compared O(log n) times in the
     sort). The struct path stays as the semantic reference — packed
     callers are pinned equal to it by test."""
-    others = [c for c in cand.columns if c != key]
-    ordering = (
-        order_col
-        if order_col is not None
-        else F.struct(*[F.col(c) for c in order_cols])
-    )
-    winner = F.min_by(
-        F.struct(*[F.col(c) for c in others]),
-        ordering,
-    ).alias("_row")
+    def struct(cols):  # one SQL parse: a Column op per field is a py4j round trip each
+        return F.expr("struct(" + ", ".join("`" + c.replace("`", "``") + "`" for c in cols) + ")")
+
+    ordering = order_col if order_col is not None else struct(order_cols)
+    winner = F.min_by(struct([c for c in cand.columns if c != key]), ordering).alias("_row")
     return cand.groupBy(key).agg(winner).select(key, "_row.*")
 
 
-def anti_join_seen(cand: DataFrame, seen: DataFrame, key: str = "key_hash") -> DataFrame:
+def anti_join_seen(cand: DataFrame, seen: DataFrame) -> DataFrame:
     """Exact historical dedup (J1): candidates not in seen."""
-    return cand.join(seen.select(key).distinct(), key, "left_anti")
+    return cand.join(seen.select("key_hash").distinct(), "key_hash", "left_anti")
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -91,150 +91,143 @@ def _positions(h: np.ndarray, m_bits: int) -> np.ndarray:
     return ((h1[:, None] + ks[None, :] * h2[:, None]) & MASK64) % np.uint64(m_bits)
 
 
-def _bits_for(n_items: int) -> int:
-    m = max(1024, n_items * BLOOM_BITS_PER_ITEM)
-    return 1 << int(m - 1).bit_length()  # next pow2
+def _bloom_build(h: np.ndarray) -> dict:
+    """One bucket's Bloom filter; bit-setting is pure numpy. The seen
+    set only grows between rebuilds, so no deletion is needed (SURVEY §7)."""
+    m = max(1024, len(h) * BLOOM_BITS_PER_ITEM)
+    m_bits = 1 << int(m - 1).bit_length()  # next pow2
+    pos = _positions(h, m_bits).ravel()
+    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+    np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
+    return {"filter": bits.tobytes(), "n_items": len(h), "m_bits": m_bits}
 
 
-def build_bloom_filters(seen: DataFrame, key: str = "key_hash", bucket: str = "bucket") -> DataFrame:
-    """Per-bucket Bloom filters as (bucket, filter, n_items, m_bits).
+def _bloom_probe(state: tuple, h: np.ndarray) -> np.ndarray:
+    bits, m_bits = state
+    pos = _positions(h, m_bits)
+    return ((bits[pos // 8] & (np.uint8(1) << (pos % 8).astype(np.uint8))) != 0).all(axis=1)
 
-    One Arrow batch per bucket group; bit-setting is pure numpy.
-    Rebuilt per snapshot round — the seen set only grows, so no
-    deletion support is needed (SURVEY §7)."""
+
+@dataclass(frozen=True)
+class FilterFamily:
+    """A seen-set filter family is its kernels; the Spark plumbing
+    below is shared (*Learned Cuckoo Filter*, SIGMOD 2023: families
+    differ in the kernel, the join they feed is the same).
+
+    ``schema``: the per-bucket row schema (``bucket`` first);
+    ``build``: a bucket's int64 key hashes -> that row's other fields;
+    ``load``: a row (Spark Row or pandas Series) -> the probe state;
+    ``probe``: (state, hashes) -> might-contain mask, no false negatives;
+    ``size_sql``: a row's size in bytes, as SQL."""
+
+    schema: str
+    build: Callable[[np.ndarray], dict]
+    load: Callable[[Any], Any]
+    probe: Callable[[Any, np.ndarray], np.ndarray]
+    size_sql: str
+
+
+BLOOM = FilterFamily(
+    schema=FILTER_SCHEMA,
+    build=_bloom_build,
+    load=lambda r: (np.frombuffer(r["filter"], dtype=np.uint8), int(r["m_bits"])),
+    probe=_bloom_probe,
+    size_sql="m_bits / 8",
+)
+
+
+def build_filters(seen: DataFrame, family: FilterFamily) -> DataFrame:
+    """One ``family.schema`` row per ``bucket`` of ``seen``, built from
+    the bucket's ``key_hash`` values in one Arrow batch."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = pdf[key].to_numpy(dtype=np.int64)
-        m_bits = _bits_for(len(h))
-        pos = _positions(h, m_bits).ravel()
-        bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf[bucket].iloc[0])],
-                "filter": [bits.tobytes()],
-                "n_items": [len(h)],
-                "m_bits": [m_bits],
-            }
-        )
+        row = family.build(pdf["key_hash"].to_numpy(dtype=np.int64))
+        row = {"bucket": int(pdf["bucket"].iloc[0]), **row}
+        return pd.DataFrame({k: [v] for k, v in row.items()})
 
-    return seen.select(bucket, key).groupBy(bucket).applyInPandas(build, FILTER_SCHEMA)
+    return seen.select("bucket", "key_hash").groupBy("bucket").applyInPandas(build, family.schema)
 
 
-def bloom_prefilter(
-    cand: DataFrame, filters: DataFrame, key: str = "key_hash", bucket: str = "bucket"
-) -> DataFrame:
-    """Flag candidates that MIGHT be in seen (cogrouped per bucket:
-    each task sees its bucket's candidate rows plus the one filter row,
-    so filter bytes cross the wire once per bucket, not once per row).
+def build_bloom_filters(seen: DataFrame) -> DataFrame:
+    """Per-bucket Bloom filters as FILTER_SCHEMA rows."""
+    return build_filters(seen, BLOOM)
 
-    One-sided error: might_seen=False rows are DEFINITELY new;
-    might_seen=True rows need the exact anti-join to confirm."""
+
+def probe_broadcast(cand: DataFrame, filters: DataFrame, family: FilterFamily = BLOOM) -> DataFrame:
+    """Add ``might_seen``: collect the filters, ship them once per
+    executor and probe with a scalar pandas UDF — no shuffle. For
+    filters that fit in executor memory (the common case until the
+    seen set reaches billions)."""
+    table = {int(r["bucket"]): family.load(r) for r in filters.collect()}
+    bc = cand.sparkSession.sparkContext.broadcast(table)
+
+    @F.pandas_udf("boolean")
+    def might(bkt: pd.Series, kh: pd.Series) -> pd.Series:
+        out = np.zeros(len(kh), dtype=bool)
+        b_arr, h_arr = bkt.to_numpy(dtype=np.int64), kh.to_numpy(dtype=np.int64)
+        for b in np.unique(b_arr):
+            if (state := bc.value.get(int(b))) is not None:
+                m = b_arr == b
+                out[m] = family.probe(state, h_arr[m])
+        return pd.Series(out)
+
+    return cand.withColumn("might_seen", might(F.col("bucket"), F.col("key_hash")))
+
+
+bloom_prefilter_broadcast = probe_broadcast  # the name perfbench's dedup trace imports
+
+
+def probe_cogroup(cand: DataFrame, filters: DataFrame, family: FilterFamily = BLOOM) -> DataFrame:
+    """Add ``might_seen`` with candidates and filters cogrouped by
+    ``bucket``: each task holds one bucket's rows and its one filter
+    row, so filter bytes cross the wire once per bucket, not once per
+    candidate (the 10^10-seen path)."""
     out_schema = cand.withColumn("might_seen", F.lit(False)).schema
 
     def probe(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
         if filt_pdf.empty:
             return cand_pdf.assign(might_seen=False)
-        blob = filt_pdf["filter"].iloc[0]
-        m_bits = int(filt_pdf["m_bits"].iloc[0])
-        bits = np.frombuffer(blob, dtype=np.uint8)
-        h = cand_pdf[key].to_numpy(dtype=np.int64)
-        pos = _positions(h, m_bits)
-        hit = (bits[pos // 8] & (np.uint8(1) << (pos % 8).astype(np.uint8))) != 0
-        return cand_pdf.assign(might_seen=hit.all(axis=1))
+        h = cand_pdf["key_hash"].to_numpy(dtype=np.int64)
+        return cand_pdf.assign(might_seen=family.probe(family.load(filt_pdf.iloc[0]), h))
 
-    return (
-        cand.groupBy(bucket)
-        .cogroup(filters.groupBy(bucket))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-def bloom_prefilter_broadcast(
-    cand: DataFrame,
-    filters: DataFrame,
-    key: str = "key_hash",
-    bucket: str = "bucket",
-) -> DataFrame:
-    """Broadcast variant of :func:`bloom_prefilter`: when all bucket
-    filters together fit in executor memory (the common case until the
-    seen set reaches billions), ship them once per executor and probe
-    with a scalar pandas UDF — zero additional shuffle, no cogroup.
-
-    The pipeline stays identical; only the physical strategy changes —
-    the same adaptive choice Spark makes between broadcast-hash and
-    shuffle joins."""
-    spark = cand.sparkSession
-    rows = filters.collect()
-    blobs = {int(r["bucket"]): (np.frombuffer(r["filter"], dtype=np.uint8), int(r["m_bits"])) for r in rows}
-    bc = spark.sparkContext.broadcast(blobs)
-
-    @F.pandas_udf("boolean")
-    def might(bkt: pd.Series, kh: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(kh), dtype=bool)
-        b_arr = bkt.to_numpy(dtype=np.int64)
-        h_arr = kh.to_numpy(dtype=np.int64)
-        for b in np.unique(b_arr):
-            ent = table.get(int(b))
-            if ent is None:
-                continue
-            bits, m_bits = ent
-            m = b_arr == b
-            pos = _positions(h_arr[m], m_bits)
-            hit = (bits[pos // 8] & (np.uint8(1) << (pos % 8).astype(np.uint8))) != 0
-            out[m] = hit.all(axis=1)
-        return pd.Series(out)
-
-    return cand.withColumn("might_seen", might(F.col(bucket), F.col(key)))
+    grouped = cand.groupBy("bucket").cogroup(filters.groupBy("bucket"))
+    return grouped.applyInPandas(probe, out_schema)
 
 
 # total serialized filter size below which the broadcast probe is used
-BLOOM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
 def dedup_against_seen(
     cand: DataFrame,
     seen: DataFrame,
     filters: DataFrame | None,
-    key: str = "key_hash",
     seen_unique: bool = False,
     filters_total_bytes: int | None = None,
-    prefilter_broadcast=None,
-    prefilter=None,
-    size_expr: str = "m_bits / 8",
+    family: FilterFamily = BLOOM,
 ) -> DataFrame:
-    """Full two-phase historical dedup: probabilistic prefilter (when
-    filters provided) then exact anti-join on ONLY the probable-positive
-    rows. Correct under prefilter false positives because the exact
-    join is the last word; no false negatives by filter construction.
+    """Historical dedup: ``cand`` rows whose ``key_hash`` is not in
+    ``seen``. Without ``filters`` this is :func:`anti_join_seen`.
 
-    The prefilter defaults to the per-bucket Bloom pair; pass the
-    cuckoo pair (:mod:`operators.cuckoo`, via
-    ``dedup_against_seen_cuckoo``) for deletable filters with ~60x
-    lower FPR at 3x the bits/item.
-
-    Physical strategy is adaptive: filters small enough to broadcast
-    -> per-executor probe (no shuffle); otherwise cogrouped probe
-    co-partitioned by bucket (the 10^10-seen path)."""
-    if filters is not None:
-        pb = prefilter_broadcast or bloom_prefilter_broadcast
-        pc = prefilter or bloom_prefilter
-        total = filters_total_bytes
-        if total is None:
-            total = filters.agg(F.sum(F.expr(size_expr))).first()[0] or 0
-        if total <= BLOOM_BROADCAST_MAX_BYTES:
-            flagged = pb(cand, filters, key=key)
-        else:
-            flagged = pc(cand, filters, key=key)
-        # single anti-join with a compound condition: rows with
-        # might_seen=false can never match, so they pass through
-        # WITHOUT a second evaluation of the upstream pipeline (a
-        # filter/union split would compute enrich+probe twice), and
-        # the join's build side stays the seen keys.
-        seen_keys = seen.select(F.col(key).alias("_seen_key"))
-        if not seen_unique:
-            seen_keys = seen_keys.distinct()
-        cond = (F.col(key) == F.col("_seen_key")) & F.col("might_seen")
-        return flagged.join(seen_keys, cond, "left_anti").drop("might_seen")
-    return anti_join_seen(cand, seen, key)
+    With ``filters`` (``family`` rows built from ``seen``) each
+    candidate is first flagged ``might_seen`` — broadcast probe when
+    the filters total at most BROADCAST_MAX_BYTES
+    (``filters_total_bytes``, else one size job), cogroup probe
+    otherwise — and the flag is an extra condition on ONE left-anti
+    join against the seen keys: a row with might_seen=false can never
+    match. Correct under false positives (the exact key equality is
+    the last word), and filters have no false negatives. The join
+    still shuffles every candidate and every seen key, so the probe
+    adds work and removes none; it does keep the upstream pipeline to
+    one evaluation (a filter/union split would compute it twice)."""
+    if filters is None:
+        return anti_join_seen(cand, seen)
+    total = filters_total_bytes
+    if total is None:
+        total = filters.agg(F.sum(F.expr(family.size_sql))).first()[0] or 0
+    probe = probe_broadcast if total <= BROADCAST_MAX_BYTES else probe_cogroup
+    seen_keys = seen.select(F.col("key_hash").alias("_seen_key"))
+    if not seen_unique:
+        seen_keys = seen_keys.distinct()
+    cond = (F.col("key_hash") == F.col("_seen_key")) & F.col("might_seen")
+    return probe(cand, filters, family).join(seen_keys, cond, "left_anti").drop("might_seen")

@@ -69,17 +69,16 @@ PRIORITY_WIDTHS = [
 ]
 
 
-def pack_order(fields) -> "F.Column":
+def pack_order_sql(fields) -> str:
     """Pack ``[(sql_expr, bits, name), ...]`` (most-significant first,
-    e.g. ``("line_no", 30, "line_no")``) into one guarded BIGINT with
-    the same lexicographic order as the tuple. Injective over in-range
-    inputs, so ties in the packed value are exactly ties in the tuple.
-    Each field is biased by +1 so the engine's ``-1`` sentinel (the
-    seed/list row itself, ordered before link 0) packs as 0; the valid
-    domain is [-1, 2^bits - 2]. Out-of-range raises per row — fail
-    loudly beats a silent mis-sort. The pack is SQL text parsed in one
-    ``F.expr`` call (module docstring), so a field is SQL text too; a
-    Column raises TypeError."""
+    e.g. ``("line_no", 30, "line_no")``) into the SQL text of one
+    guarded BIGINT with the same lexicographic order as the tuple.
+    Injective over in-range inputs, so ties in the packed value are
+    exactly ties in the tuple. Each field is biased by +1 so the
+    engine's ``-1`` sentinel (the seed/list row itself, ordered before
+    link 0) packs as 0; the valid domain is [-1, 2^bits - 2].
+    Out-of-range raises per row — fail loudly beats a silent mis-sort.
+    A field is SQL text (module docstring); a Column raises TypeError."""
     acc = "CAST(0 AS BIGINT)"
     for expr, bits, name in fields:
         if not isinstance(expr, str):
@@ -89,7 +88,12 @@ def pack_order(fields) -> "F.Column":
             f"shiftleft({acc}, {bits}) + CASE WHEN {c} IS NULL OR {c} < 0 OR {c} >= {1 << bits} "
             f"THEN raise_error('pack_order: {name} out of [-1, 2^{bits}-2]') ELSE {c} END"
         )
-    return F.expr(acc)
+    return acc
+
+
+def pack_order(fields) -> "F.Column":
+    """:func:`pack_order_sql` as a Column, parsed in one ``F.expr`` call."""
+    return F.expr(pack_order_sql(fields))
 
 
 def packed_priority_col() -> "F.Column":
@@ -99,9 +103,12 @@ def packed_priority_col() -> "F.Column":
 
 
 def _case_source(ranks: dict, otherwise) -> str:
-    """SQL CASE mapping ``source`` through ``ranks``, else ``otherwise``."""
+    """SQL CASE mapping ``source`` through ``ranks``, else ``otherwise``.
+    A float value is written as its exact DOUBLE literal (``repr`` + D)."""
     quoted = {s.replace("\\", "\\\\").replace("'", "\\'"): r for s, r in ranks.items()}
-    whens = " ".join(f"WHEN '{s}' THEN {r}" for s, r in quoted.items())
+    whens = " ".join(
+        f"WHEN '{s}' THEN {f'{r!r}D' if isinstance(r, float) else r}" for s, r in quoted.items()
+    )
     return f"CASE source {whens} ELSE {otherwise} END"
 
 

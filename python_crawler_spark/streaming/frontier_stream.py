@@ -103,11 +103,6 @@ def _prior_plans(spark: SparkSession, out_dir: str, epoch_id: int) -> DataFrame:
     return spark.read.schema(PLAN_STATE_SCHEMA).parquet(out_dir).filter(F.col("epoch") < epoch_id)
 
 
-def _lit_map(d: dict):
-    """A literal map column from a small driver-side dict."""
-    return F.create_map(*[x for k, v in d.items() for x in (F.lit(k), F.lit(v))])
-
-
 def run_micro_batches(
     enriched: DataFrame,
     seen: DataFrame,
@@ -141,9 +136,10 @@ def run_micro_batches(
     ordering guard, offsets and watermark — comes from ONE per-source
     aggregate over the survivors and the earlier plans (a tagged
     union), collected to the driver; the offsets shift the plan as
-    literal map columns. The aggregate's new-row count also sets
-    schedule()'s range count (``range_count``), so an epoch under
-    ROWS_PER_RANGE rows runs no bounds job.
+    literal SQL CASE expressions over ``source``. The aggregate's
+    new-row count also sets schedule()'s range count
+    (``range_count``), so an epoch under ROWS_PER_RANGE rows runs no
+    bounds job.
 
     Replay is safe: every epoch-keyed output (plan, quarantine) is
     written with overwrite, so an epoch that ran its sink but not its
@@ -183,7 +179,8 @@ def run_micro_batches(
         PRIORITY_COLS,
         PRIORITY_WIDTHS,
         SOURCE_RANK,
-        pack_order,
+        _case_source,
+        pack_order_sql,
         packed_dedup_order_col,
         range_count,
         schedule,
@@ -194,14 +191,15 @@ def run_micro_batches(
     quarantine_dir = out_dir.rstrip("/") + "_quarantine"
     # within-source priority (everything below source_rank): comparable
     # across epochs for the same source
-    sub_prio = pack_order([(n, b, n) for n, b in PRIORITY_WIDTHS[1:]])
+    sub_prio = pack_order_sql([(n, b, n) for n, b in PRIORITY_WIDTHS[1:]])
     # after the marking join: null = new, False = an earlier epoch
     # scheduled the key, True = the static seen set holds it
-    is_new = F.col("_seen").isNull()
+    is_new = "_seen IS NULL"
 
-    def tagged(df: DataFrame, new, old: bool) -> DataFrame:
-        cols = ["source", "crawl_delay", sub_prio.alias("_p")]
-        return df.select(*cols, new.alias("_new"), F.lit(old).alias("_old"))
+    def tagged(df: DataFrame, new: str, old: str) -> DataFrame:
+        return df.selectExpr(
+            "source", "crawl_delay", f"{sub_prio} AS _p", f"{new} AS _new", f"{old} AS _old"
+        )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -223,7 +221,7 @@ def run_micro_batches(
         try:
             # per (source, _old): min/max priority, new rows (every
             # earlier plan row counts), delay sum
-            state = tagged(survivors, is_new, False).unionByName(tagged(prior, F.lit(True), True))
+            state = tagged(survivors, is_new, "false").unionByName(tagged(prior, "true", "true"))
             rows = state.groupBy("source", "_old").agg(
                 F.min("_p"), F.max("_p"), F.count_if("_new"), F.sum("crawl_delay")
             ).collect()
@@ -242,7 +240,7 @@ def run_micro_batches(
             if late:
                 # split off ONLY the rows below their source's watermark;
                 # later watermarks then cover scheduled rows only
-                is_late = sub_prio < F.coalesce(_lit_map(wm)[F.col("source")], F.lit(-1))
+                is_late = F.expr(f"{sub_prio} < {_case_source(wm, -1)}")
                 survivors.filter(is_late).drop("_seen").write.mode("overwrite").parquet(
                     f"{quarantine_dir}/epoch={epoch_id}"
                 )
@@ -252,9 +250,10 @@ def run_micro_batches(
                 return
             plan = schedule(new, n_salts=n_salts, n_range_partitions=range_count(n_new))
             if prev:
-                for col, i, zero in (("ref_seq", 0, 0), ("ref_virtual_ts", 1, 0.0)):
-                    shift = _lit_map({s: v[i] for s, v in prev.items()})[F.col("source")]
-                    plan = plan.withColumn(col, F.col(col) + F.coalesce(shift, F.lit(zero)))
+                plan = plan.withColumns({
+                    col: F.expr(f"{col} + {_case_source({s: v[i] for s, v in prev.items()}, zero)}")
+                    for col, i, zero in (("ref_seq", 0, "0"), ("ref_virtual_ts", 1, "0D"))
+                })
             plan.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
         finally:
             survivors.unpersist()

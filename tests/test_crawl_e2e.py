@@ -298,6 +298,27 @@ def test_exact_filter_family_same_results(spark, run_and_oracle):
     assert seen == oracle.seen
 
 
+def test_seed_window_matches_oracle(spark):
+    """F2/A3: ``first_seed``/``seed_limit`` keep the seeds with
+    first_seed <= line_no < seed_limit of every source (tianyan line 4
+    is also blacklisted, F3); fetch order and seen set equal the
+    oracle's over the same window."""
+    spec = WorldSpec(n_tianyan_seeds=6, weixin_articles_per_account=3)
+    cfg = CrawlConfig(spec=spec, n_buckets=4, first_seed=3, seed_limit=6)
+    results = CrawlRun(spark, cfg).run()
+    oracle = Oracle(spec=spec, fixed_date=cfg.fixed_date, first_seed=3, seed_limit=6).run()
+    got = [
+        (r["source"], r["url"], r["attempt"], r["line_no"])
+        for r in results["fetch_order"].select("source", "url", "attempt", "line_no").collect()
+    ]
+    assert got == [(e["source"], e["url"], e["attempt"], e["line_no"]) for e in oracle.events]
+    assert {(s, n) for s, *_, n in got} == {
+        (s, n) for s in ("weixin", "chuansongmen", "tianyan") for n in (3, 4, 5)
+    } - {("tianyan", 4)}
+    seen = {r["dedup_key"] for r in results["seen"].select("dedup_key").collect()}
+    assert seen == oracle.seen
+
+
 @pytest.mark.parametrize("family", ["xor", "cuckoo"])
 def test_filter_family_validation(spark, family):
     with pytest.raises(ValueError, match="filter_family"):

@@ -1,9 +1,9 @@
 """Cuckoo-filter seen-set prefilter (operators/cuckoo.py).
 
 Numpy-core properties (no Spark needed): zero false negatives, low
-FPR, exact deletion, stash correctness. Spark-side: two-phase dedup
-with the cuckoo prefilter is row-identical to the exact anti-join
-(both probe paths), matching the Bloom contract in test_dedup.
+FPR, exact deletion, stash correctness. The Spark side (two-phase
+dedup with the cuckoo family equals the exact anti-join through both
+probes) is tests/test_dedup.py::test_two_phase_equals_exact.
 """
 
 from __future__ import annotations
@@ -69,46 +69,6 @@ def test_stash_used_and_probed():
     h = (base & ~np.int64(0xFFFF)) | np.int64(3)  # same low 16 bits
     filt = _build_one(h)
     assert _probe_one(filt, np.unique(h)).all()
-
-
-def test_spark_two_phase_equals_exact(spark):
-    import pyspark.sql.functions as F
-
-    from python_crawler_spark.operators.cuckoo import (
-        build_cuckoo_filters,
-        cuckoo_prefilter,
-        cuckoo_prefilter_broadcast,
-    )
-    from python_crawler_spark.operators.dedup import anti_join_seen
-
-    n_buckets = 8
-    base = spark.range(20_000).select(
-        "id", F.concat(F.lit("https://example.com/p/"), F.col("id")).alias("url")
-    )
-    seen = base.filter(F.col("id") % 3 == 0)
-    cand = base.filter(F.col("id") % 2 == 0)
-    withk = lambda df: df.select(  # noqa: E731
-        "url",
-        F.xxhash64("url").alias("key_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-    seen_k, cand_k = withk(seen), withk(cand)
-    exact = sorted(r["url"] for r in anti_join_seen(cand_k, seen_k).collect())
-    filters = build_cuckoo_filters(seen_k).localCheckpoint(eager=True)
-
-    for probe in (cuckoo_prefilter_broadcast, cuckoo_prefilter):
-        flagged = probe(cand_k, filters)
-        seen_keys = seen_k.select(F.col("key_hash").alias("_sk")).distinct()
-        got = (
-            flagged.join(
-                seen_keys,
-                (F.col("key_hash") == F.col("_sk")) & F.col("might_seen"),
-                "left_anti",
-            )
-            .drop("might_seen")
-            .collect()
-        )
-        assert sorted(r["url"] for r in got) == exact
 
 
 def _delete_one_reference(filt, h):

@@ -1,18 +1,24 @@
 """Seen-set operator tests (SURVEY §5, build-plan step 3): Bloom has
-no false negatives, two-phase dedup equals exact anti-join, batch
-dedup is first-occurrence-wins by priority order."""
+no false negatives, two-phase dedup equals exact anti-join for every
+filter family and probe, batch dedup is first-occurrence-wins by
+priority order."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_crawler_spark.functions.hashing import bucket_col
+from python_crawler_spark.operators.cuckoo import CUCKOO
 from python_crawler_spark.operators.dedup import (
+    BLOOM,
+    BROADCAST_MAX_BYTES,
     anti_join_seen,
     batch_first_occurrence,
-    bloom_prefilter,
     build_bloom_filters,
+    build_filters,
     dedup_against_seen,
+    probe_cogroup,
 )
 
 N_BUCKETS = 8
@@ -30,7 +36,7 @@ def test_bloom_no_false_negatives(spark):
     seen = _keyed(spark, range(0, 500))
     cand = _keyed(spark, range(0, 1000))
     filters = build_bloom_filters(seen)
-    flagged = bloom_prefilter(cand, filters)
+    flagged = probe_cogroup(cand, filters, BLOOM)
     # every truly-seen candidate must be flagged might_seen
     missed = (
         flagged.filter(~F.col("might_seen"))
@@ -40,15 +46,26 @@ def test_bloom_no_false_negatives(spark):
     assert missed == 0
 
 
-def test_two_phase_equals_exact(spark):
-    seen = _keyed(spark, range(0, 300))
+@pytest.mark.parametrize("probe", ["broadcast", "cogroup"])
+@pytest.mark.parametrize("family", [BLOOM, CUCKOO], ids=["bloom", "cuckoo"])
+def test_two_phase_equals_exact(spark, family, probe):
+    """Every family through either probe (picked by the filters' stated
+    size) keeps exactly the anti-join's rows. Bucket 0 holds no seen
+    key, so it has no filter row: its candidates are all new."""
+    seen = _keyed(spark, range(0, 300)).filter(F.col("bucket") != 0)
     cand = _keyed(spark, range(250, 600))
-    filters = build_bloom_filters(seen)
+    filters = build_filters(seen, family).localCheckpoint(eager=True)
+    assert 0 not in {r["bucket"] for r in filters.select("bucket").collect()}
+    size = 0 if probe == "broadcast" else BROADCAST_MAX_BYTES + 1
     two_phase = sorted(
-        r["id"] for r in dedup_against_seen(cand, seen, filters).collect()
+        r["id"]
+        for r in dedup_against_seen(
+            cand, seen, filters, filters_total_bytes=size, family=family
+        ).collect()
     )
     exact = sorted(r["id"] for r in anti_join_seen(cand, seen).collect())
-    assert two_phase == exact == list(range(300, 600))
+    assert two_phase == exact
+    assert exact[-300:] == list(range(300, 600)) and len(exact) > 300
 
 
 def test_batch_first_occurrence_priority_order(spark):

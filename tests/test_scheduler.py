@@ -530,11 +530,22 @@ def round_trips(monkeypatch):
 
 
 def test_order_expressions_take_few_round_trips(spark, round_trips):
-    """The packed priority is one SQL expression, and a one-range
-    schedule() reuses it for its host queues: building either takes a
-    bounded number of py4j round trips (776 and 2,541 when the
-    expressions were built one Column op at a time)."""
-    from python_crawler_spark.operators.scheduler import packed_priority_col
+    """The packed priority is one SQL expression, a one-range
+    schedule() reuses it for its host queues, and first-occurrence
+    dedup builds its winner struct in one parse: building each takes a
+    bounded number of py4j round trips (776, 2,541 and about 400 on
+    the enriched stream frame when the expressions were built one
+    Column op at a time)."""
+    from python_crawler_spark.operators.dedup import batch_first_occurrence
+    from python_crawler_spark.operators.scheduler import (
+        PRIORITY_COLS,
+        packed_dedup_order_col,
+        packed_priority_col,
+    )
+    from python_crawler_spark.streaming.frontier_stream import (
+        STREAM_SCHEMA,
+        streaming_enrich,
+    )
 
     small = _known_source_frontier(spark)
     start = round_trips()
@@ -543,3 +554,12 @@ def test_order_expressions_take_few_round_trips(spark, round_trips):
     start = round_trips()
     schedule(small, n_salts=2, n_range_partitions=1)
     assert round_trips() - start <= 600
+    enriched = streaming_enrich(spark.createDataFrame([], STREAM_SCHEMA), 8)
+    start = round_trips()
+    batch_first_occurrence(
+        enriched,
+        "key_hash",
+        ["source"] + PRIORITY_COLS[1:],
+        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
+    )
+    assert round_trips() - start <= 60
