@@ -1,7 +1,9 @@
 """URL kernels: canonicalization, signature, absolute-join, pagination.
 
-Spark-column variants (JVM, codegen) are the data plane; the pandas
-variants back the Arrow-vectorized UDF path and the pure-Python oracle.
+Spark variants (JVM, codegen) are the data plane: Column functions
+for the names other modules build frames with, SQL text for the
+engine-only helpers; the pandas variants back the Arrow-vectorized UDF
+path and the pure-Python oracle.
 Both implement the SAME spec so ordering/seen-set equality holds.
 
 Reference semantics reimplemented (not copied):
@@ -27,6 +29,8 @@ from urllib.parse import parse_qsl, urlencode, urlsplit, urlunsplit
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sqltext import sql_lit
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
@@ -222,7 +226,12 @@ def host_col(url: Column) -> Column:
     return F.when(ok, raw).otherwise(F.lower(F.try_parse_url(url, F.lit("HOST"))))
 
 
-def path_col(url: Column) -> Column:
+# The engine-only helpers below return SQL text over SQL text
+# arguments (usually column names, each inserted as written), so a
+# caller parses a whole projection or filter at once.
+
+
+def path_sql(url: str) -> str:
     """Path of a URL (no query/fragment) — JVM-side, same fast-path/
     parse_url-fallback design as :func:`host_col`: the guarded common
     case is three substring passes instead of a java.net.URI parse.
@@ -232,51 +241,50 @@ def path_col(url: Column) -> Column:
     or '#' stripped. Guarded by the host_col guard plus a non-empty
     path; anything else (no path, exotic authority, non-http scheme)
     falls back to try_parse_url PATH — including its
-    null-for-missing-or-invalid convention, which callers coalesce."""
-    host_raw = F.substring_index(F.substring_index(url, "/", 3), "://", -1)
-    pwf = F.substr(url, F.length(F.substring_index(url, "/", 3)) + 1)
-    path = F.substring_index(F.substring_index(pwf, "?", 1), "#", 1)
-    # Same INTENDED divergence as host_col (see its docstring): when
-    # the guard passes but the path is malformed per java.net.URI
-    # (space, bad %-escape), the fast path returns the literal
-    # substring where try_parse_url would null — malformed paths must
-    # still hit the robots gate.
+    null-for-missing-or-invalid convention, which callers coalesce.
+
+    Same INTENDED divergence as host_col (see its docstring): when the
+    guard passes but the path is malformed per java.net.URI (space,
+    bad %-escape), the fast path returns the literal substring where
+    try_parse_url would null — malformed paths must still hit the
+    robots gate."""
+    prefix = f"substring_index({url}, '/', 3)"
+    host_raw = f"substring_index({prefix}, '://', -1)"
+    path = f"substring_index(substring_index(substr({url}, length({prefix}) + 1), '?', 1), '#', 1)"
     ok = (
-        (url.startswith("http://") | url.startswith("https://"))
-        & (F.length(host_raw) > 0)
-        & (F.translate(host_raw, _HOST_CHARS, "") == "")
-        & (F.length(path) > 0)
+        f"(startswith({url}, 'http://') OR startswith({url}, 'https://'))"
+        f" AND length({host_raw}) > 0"
+        f" AND translate({host_raw}, {sql_lit(_HOST_CHARS)}, '') = ''"
+        f" AND length({path}) > 0"
     )
-    return F.when(ok, path).otherwise(F.try_parse_url(url, F.lit("PATH")))
+    return f"CASE WHEN {ok} THEN {path} ELSE try_parse_url({url}, 'PATH') END"
 
 
-def pic_signature_col(url: Column) -> Column:
-    """Column variant of :func:`pic_signature` (SURVEY X2), over
-    :func:`path_col`, so a malformed URL never raises under ANSI mode:
+def pic_signature_sql(url: str) -> str:
+    """SQL variant of :func:`pic_signature` (SURVEY X2), over
+    :func:`path_sql`, so a malformed URL never raises under ANSI mode:
     a space in the path still yields its third segment, as the scalar
     does, and a URL with no parsable path yields null."""
-    parts = F.split(path_col(url), "/")
-    return F.when(F.size(parts) >= 4, F.element_at(parts, 3))
+    parts = f"split({path_sql(url)}, '/')"
+    return f"CASE WHEN size({parts}) >= 4 THEN element_at({parts}, 3) END"
 
 
-def query_param_col(url: Column, param: str, default: str) -> Column:
+def query_param_sql(url: str, param: str, default: str) -> str:
     """``coalesce(try_parse_url(url,'QUERY',param), default)`` (SURVEY
     X3): a malformed URL, which parse_url would raise on under ANSI
     mode, yields ``default``, as a URL without the parameter does."""
-    return F.coalesce(
-        F.try_parse_url(url, F.lit("QUERY"), F.lit(param)), F.lit(default)
-    )
+    return f"coalesce(try_parse_url({url}, 'QUERY', {sql_lit(param)}), {sql_lit(default)})"
 
 
-def absolutize_col(href: Column, base: Column) -> Column:
-    """Column variant of :func:`absolutize` (SURVEY X4)."""
-    return F.when(href.startswith("http"), href).otherwise(F.concat(base, href))
+def absolutize_sql(href: str, base: str) -> str:
+    """SQL variant of :func:`absolutize` (SURVEY X4) with a literal ``base``."""
+    return f"CASE WHEN startswith({href}, 'http') THEN {href} ELSE concat({sql_lit(base)}, {href}) END"
 
 
-def pagination_urls_col(link: Column, max_page: Column) -> Column:
+def pagination_urls_sql(link: str, max_page: str) -> str:
     """Array of page URLs ``link?start=12*(i-1)`` for i in [1, max_page)
     (SURVEY X5 — range EXCLUDES max_page, chuansongmen.py:65)."""
-    pages = F.sequence(F.lit(1), max_page - 1)
-    return F.transform(
-        pages, lambda i: F.concat(link, F.lit("?start="), ((i - 1) * 12).cast("string"))
+    return (
+        f"transform(sequence(1, {max_page} - 1), "
+        f"_i -> concat({link}, '?start=', CAST((_i - 1) * 12 AS STRING)))"
     )

@@ -38,6 +38,8 @@ Driver-side count() per round is loop termination only.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,15 +54,16 @@ class ConvergenceError(RuntimeError):
 
 
 def _rdd_ids(spark) -> set[int]:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
+    """Ids of the persisted RDDs, read as the id set's text: one py4j
+    round trip, where iterating the Java set takes one per id."""
+    keys = spark.sparkContext._jsc.getPersistentRDDs().keySet().toString()
+    return {int(i) for i in re.findall(r"\d+", keys)}
 
 
 def _unpersist(spark, ids: set[int]) -> None:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in jmap.keySet().toArray():
-        if int(rid) in ids:
-            jmap.get(rid).unpersist(False)
+    for rid in ids & _rdd_ids(spark):
+        jmap.get(rid).unpersist(False)
 
 
 def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:

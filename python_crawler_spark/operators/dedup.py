@@ -18,6 +18,12 @@ signature set (weixin_public.py:55) — with:
    exact left-anti join: that join still shuffles every candidate and
    every seen key, so the filter does not shrink it today.
 
+A crawl round does not come here while its seen keys fit a broadcast
+(``spark.sql.autoBroadcastJoinThreshold``, 16 B a key): it anti-joins
+the broadcast keys directly, with no shuffle, no filter and no Arrow
+probe (``plans.crawl.CrawlRun._survivors``). Only a larger seen set
+takes ``dedup_against_seen``, with or without the Bloom filters.
+
 Hash scheme: key_hash = xxhash64(dedup_key) computed JVM-side; the k
 Bloom positions derive from (h1, h2=splitmix64(h1)) double hashing,
 numpy-vectorized — no per-row Python.
@@ -32,6 +38,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.sqltext import sql_ident
 
 MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 BLOOM_K = 7
@@ -62,7 +70,7 @@ def batch_first_occurrence(
     sort). The struct path stays as the semantic reference — packed
     callers are pinned equal to it by test."""
     def struct(cols):  # one SQL parse: a Column op per field is a py4j round trip each
-        return F.expr("struct(" + ", ".join("`" + c.replace("`", "``") + "`" for c in cols) + ")")
+        return F.expr("struct(" + ", ".join(map(sql_ident, cols)) + ")")
 
     ordering = order_col if order_col is not None else struct(order_cols)
     winner = F.min_by(struct([c for c in cand.columns if c != key]), ordering).alias("_row")
@@ -219,7 +227,10 @@ def dedup_against_seen(
     the last word), and filters have no false negatives. The join
     still shuffles every candidate and every seen key, so the probe
     adds work and removes none; it does keep the upstream pipeline to
-    one evaluation (a filter/union split would compute it twice)."""
+    one evaluation (a filter/union split would compute it twice). A
+    seen set that fits a broadcast needs neither: the crawl probes it
+    with one broadcast anti-join and calls this only above the
+    threshold."""
     if filters is None:
         return anti_join_seen(cand, seen)
     total = filters_total_bytes

@@ -10,20 +10,20 @@ data-driven and new rules deploy without code changes:
 kinds: title_skip | name_black | pic_sig_black | link_shape | robots | trim
 
 This module is the only reader of rule fields. The table is a local
-relation, so reading a kind's rows starts no Spark job, and each crawl
-gate is one column filter over them (no join).
+relation, so reading its rows starts no Spark job; a caller that gates
+many frames reads them once (``rules_by_kind``) and passes the rows.
+Each crawl gate is one filter over them, parsed from SQL text (no
+join).
 """
 
 from __future__ import annotations
 
-import operator
-from functools import reduce
-
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.urls import path_col
+from ..functions.sqltext import sql_lit
+from ..functions.urls import path_sql
 from ..sources import worldgen
 
 RULES_SCHEMA = "kind string, key string, pattern string, action string"
@@ -66,62 +66,74 @@ def gen_rules() -> list[dict]:
 
 def rules_df(spark: SparkSession) -> DataFrame:
     """The rules as a local relation (pandas through the session's
-    Arrow path): a filtered collect of it runs no Spark job."""
+    Arrow path): a collect of it runs no Spark job."""
     return spark.createDataFrame(pd.DataFrame(gen_rules()), RULES_SCHEMA)
 
 
-def _rules_of(rules: DataFrame, kind: str) -> list[Row]:
-    return rules.filter(F.col("kind") == kind).collect()
+Rules = dict[str, list[Row]]  # rule rows by kind
 
 
-def _drop_matching(df: DataFrame, preds: list[Column]) -> DataFrame:
-    """Left-anti semantics: drop a row where some predicate is true;
-    a null one keeps it."""
-    return df.filter(~F.coalesce(reduce(operator.or_, preds, F.lit(False)), F.lit(False)))
+def rules_by_kind(rules: DataFrame | Rules) -> Rules:
+    """Every rule row by kind, from one collect of the rules table; a
+    caller that gates many frames reads them once and passes this."""
+    if isinstance(rules, dict):
+        return rules
+    by_kind: Rules = {}
+    for r in rules.collect():
+        by_kind.setdefault(r["kind"], []).append(r)
+    return by_kind
 
 
-def filter_blacklisted_names(seeds: DataFrame, rules: DataFrame) -> DataFrame:
+def _keep_sql(preds: list[str]) -> str:
+    """Left-anti semantics: keep a row where no predicate is true; a
+    null one keeps it."""
+    return "NOT coalesce(" + " OR ".join(["false", *[f"({p})" for p in preds]]) + ", false)"
+
+
+def _in_sql(col: str, values: list[str]) -> list[str]:
+    return [f"{col} IN ({', '.join(map(sql_lit, values))})"] if values else []
+
+
+def filter_blacklisted_names(seeds: DataFrame, rules: DataFrame | Rules) -> DataFrame:
     """F3/J3: drop seeds whose exact name is blacklisted."""
-    names = [r["pattern"] for r in _rules_of(rules, "name_black")]
-    return _drop_matching(seeds, [F.col("name").isin(names)])
+    names = [r["pattern"] for r in rules_by_kind(rules).get("name_black", [])]
+    return seeds.filter(_keep_sql(_in_sql("name", names)))
 
 
-def apply_title_rules(items: DataFrame, rules: DataFrame) -> DataFrame:
+def apply_title_rules(items: DataFrame, rules: DataFrame | Rules) -> DataFrame:
     """F5 + F6: strip one leading 原创 (replace-first via ^ anchor),
     then drop titles matching any skip rule: a rule with a null key
     applies to every account (``name``), any other only to its own."""
-    items = items.withColumn(
-        "title", F.trim(F.regexp_replace("title", "^原创", ""))
-    )
+    items = items.withColumn("title", F.expr("trim(regexp_replace(title, '^原创', ''))"))
     preds = []
-    for r in _rules_of(rules, "title_skip"):
-        hit = F.col("title").rlike(r["pattern"])
-        preds.append(hit if r["key"] is None else (F.col("name") == r["key"]) & hit)
-    return _drop_matching(items, preds)
+    for r in rules_by_kind(rules).get("title_skip", []):
+        hit = f"title RLIKE {sql_lit(r['pattern'])}"
+        preds.append(hit if r["key"] is None else f"name = {sql_lit(r['key'])} AND {hit}")
+    return items.filter(_keep_sql(preds))
 
 
-def trim_rules(rules: DataFrame) -> dict[str, tuple[str, str]]:
+def trim_rules(rules: DataFrame | Rules) -> dict[str, tuple[str, str]]:
     """D6: account -> (marker, direction), applied in the fetch pass."""
-    return {r["key"]: (r["pattern"], r["action"]) for r in _rules_of(rules, "trim")}
+    return {r["key"]: (r["pattern"], r["action"]) for r in rules_by_kind(rules).get("trim", [])}
 
 
-def link_shape_filter(links: DataFrame, rules: DataFrame, source: str) -> DataFrame:
+def link_shape_filter(links: DataFrame, rules: DataFrame | Rules, source: str) -> DataFrame:
     """F14: keep only hrefs matching any of ``source``'s link-shape
     regexes; a source without one keeps every link."""
-    patterns = [r["pattern"] for r in _rules_of(rules, "link_shape") if r["key"] == source]
+    patterns = [r["pattern"] for r in rules_by_kind(rules).get("link_shape", []) if r["key"] == source]
     if not patterns:
         return links
-    return links.filter(reduce(operator.or_, [F.col("href").rlike(p) for p in patterns]))
+    return links.filter(" OR ".join(f"href RLIKE {sql_lit(p)}" for p in patterns))
 
 
-def robots_gate(frontier: DataFrame, rules: DataFrame) -> DataFrame:
+def robots_gate(frontier: DataFrame, rules: DataFrame | Rules) -> DataFrame:
     """J8 (new): drop frontier rows whose host equals a deny rule's key
     and whose path matches its regex."""
-    path = path_col(F.col("url"))
-    return _drop_matching(frontier, [
-        (F.col("host") == r["key"]) & path.rlike(r["pattern"])
-        for r in _rules_of(rules, "robots") if r["action"] == "deny"
-    ])
+    path = path_sql("url")
+    return frontier.filter(_keep_sql([
+        f"host = {sql_lit(r['key'])} AND {path} RLIKE {sql_lit(r['pattern'])}"
+        for r in rules_by_kind(rules).get("robots", []) if r["action"] == "deny"
+    ]))
 
 
 def robots_prefix_gate(
@@ -156,7 +168,7 @@ def robots_prefix_gate(
             ).alias("_rr")
         )
     )
-    path = F.coalesce(path_col(F.col("url")), F.lit("/"))
+    path = F.expr(f"coalesce({path_sql('url')}, '/')")
     joined = frontier.join(per_host, F.col("host") == F.col("_r_host"), "left")
     matched = F.filter("_rr", lambda r: F.startswith(path, r["p"]))
     best = F.array_max(
@@ -243,7 +255,7 @@ def robots_wildcard_gate(
         .groupBy("_r_host")
         .agg(F.collect_list("_r").alias("_rr"))
     )
-    path = F.coalesce(path_col(F.col("url")), F.lit("/"))
+    path = F.expr(f"coalesce({path_sql('url')}, '/')")
     joined = frontier.join(per_host, F.col("host") == F.col("_r_host"), "left")
     matched = F.filter("_rr", lambda r: F.like(path, r["lp"], F.lit(_LIKE_ESC)))
     best = F.array_max(
@@ -255,7 +267,7 @@ def robots_wildcard_gate(
     return joined.filter(allowed).drop("_r_host", "_rr")
 
 
-def pic_sig_gate(imgs: DataFrame, rules: DataFrame) -> DataFrame:
+def pic_sig_gate(imgs: DataFrame, rules: DataFrame | Rules) -> DataFrame:
     """F15/J2: drop images whose URL signature (``sig``) is blacklisted."""
-    sigs = [r["pattern"] for r in _rules_of(rules, "pic_sig_black")]
-    return _drop_matching(imgs, [F.col("sig").isin(sigs)])
+    sigs = [r["pattern"] for r in rules_by_kind(rules).get("pic_sig_black", [])]
+    return imgs.filter(_keep_sql(_in_sql("sig", sigs)))

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from ..functions import exif as EXIF
 from ..functions import images as IMG
 from ..functions.hashing import xxhash64
+from ..functions.sqltext import sql_ident, sql_lit
 
 TFS_BASE = "http://tfs.example.invalid/"
 
@@ -431,13 +432,12 @@ def with_rehost_id(imgs: DataFrame, src_col: str = "src") -> DataFrame:
     reference's abs(hash(url)) filename + TFS retry-until-legal loop
     with abs(xxhash64(url)) and a computed name; '_L' suffix unless
     small (weixin_public.py:339-343)."""
-    iid = F.abs(F.xxhash64(F.col(src_col))).cast("string")
-    name = F.concat(
-        iid, F.when(F.col("small"), F.lit(".")).otherwise(F.lit("_L.")), F.col("fmt")
-    )
-    return imgs.withColumn("image_id", iid).withColumn(
-        "rehost_url", F.concat(F.lit(TFS_BASE), name)
-    )
+    iid = f"CAST(abs(xxhash64({sql_ident(src_col)})) AS STRING)"
+    name = f"concat({iid}, CASE WHEN small THEN '.' ELSE '_L.' END, fmt)"
+    return imgs.withColumns({
+        "image_id": F.expr(iid),
+        "rehost_url": F.expr(f"concat({sql_lit(TFS_BASE)}, {name})"),
+    })
 
 
 def extract_image_features(

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_lit
+
 PRIORITY_COLS = ["source_rank", "line_no", "stage", "page_no", "link_idx", "attempt"]
 
 # Bit widths for packing the priority tuple into ONE non-negative
@@ -104,10 +106,11 @@ def packed_priority_col() -> "F.Column":
 
 def _case_source(ranks: dict, otherwise) -> str:
     """SQL CASE mapping ``source`` through ``ranks``, else ``otherwise``.
-    A float value is written as its exact DOUBLE literal (``repr`` + D)."""
-    quoted = {s.replace("\\", "\\\\").replace("'", "\\'"): r for s, r in ranks.items()}
+    A float value is written as its exact DOUBLE literal, any other
+    value as SQL text."""
     whens = " ".join(
-        f"WHEN '{s}' THEN {f'{r!r}D' if isinstance(r, float) else r}" for s, r in quoted.items()
+        f"WHEN {sql_lit(s)} THEN {sql_lit(r) if isinstance(r, float) else r}"
+        for s, r in ranks.items()
     )
     return f"CASE source {whens} ELSE {otherwise} END"
 

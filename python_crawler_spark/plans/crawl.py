@@ -1,7 +1,8 @@
 """The crawl plan: frontier round loop (SURVEY §3.4).
 
     seeds -> [round r: enrich/canonicalize -> robots gate ->
-    batch dedup -> seen anti-join (bloom + exact) -> host queues ->
+    batch dedup -> seen anti-join (broadcast while the seen keys fit
+    the broadcast threshold, else bloom + exact) -> host queues ->
     fetch + parse (synthetic web, one Arrow pass) -> outputs and new
     frontier as projections of the pages; seen += fetched; round r's
     delta committed] until frontier empty
@@ -17,6 +18,10 @@ resume derives them. Ordering is carried as the priority tuple and
 reconstructed by sort — equality with the sequential oracle
 (tests/oracle.py) is over (source_rank, priority) order, per-source
 virtual clocks, seen-set membership, and extracted records.
+
+Every projection and filter a round builds is SQL text, one parse
+each (a Column operator costs a py4j round trip): a round of a few
+hundred pages is dominated by fixed per-call cost.
 
 Every frontier row, a seed's or an expansion rule's, is built by
 frontier_rows: the seeds and each rule state only what they decide
@@ -40,13 +45,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import bucket_col
+from ..functions.sqltext import sql_ident, sql_lit
 from ..functions.urls import (
-    absolutize_col,
+    absolutize_sql,
     canonicalize_split,
     host_col,
-    pagination_urls_col,
-    pic_signature_col,
-    query_param_col,
+    pagination_urls_sql,
+    pic_signature_sql,
+    query_param_sql,
 )
 from ..operators import gating
 from ..operators.dedup import (
@@ -64,6 +70,7 @@ from ..operators.scheduler import (
     STAGE_CHILD,
     STAGE_LIST,
     STAGE_ROOT,
+    _case_source,
     host_queues,
     pack_order,
     packed_dedup_order_col,
@@ -101,6 +108,7 @@ FRONTIER_SCHEMA = T.StructType(
 SEED_COLS = ["source", "name", "seed_id", "line_no"]  # a child keeps its seed's
 
 SEEN_COLS = ["bucket", "key_hash", "dedup_key", "url", "round"]
+SEEN_ROW_BYTES = 16  # Spark's size estimate of a row of one long column (the seen keys)
 
 LOG_COLS = [
     "url", "canon_url", "dedup_key", "key_hash", "bucket", "host",
@@ -113,6 +121,8 @@ LOG_COLS = [
 NO_TRIM = ("", "strip_after")  # D6 default for an account without a rule
 
 MASK63 = 0x7FFFFFFFFFFFFFFF
+
+COMPANY_ID_RE = r"/company/(\d+)"  # D10: a detail page's company id
 
 
 def _delay_hash(url_col):
@@ -138,6 +148,26 @@ def crawl_delay_col(source, stage, url):
     )
 
 
+def _rotating_sql(tag: str, n: int) -> str:
+    """(stable url base + attempt) mod n, in hash parity with
+    worldgen.fetch_identity."""
+    base = f"xxhash64(concat({sql_lit(tag + chr(0x1F))}, url)) & {sql_lit(MASK63)}"
+    # pmod the 63-bit base BEFORE adding attempt: base + attempt could
+    # wrap past 2^63-1 (negative result, or an ANSI-mode throw),
+    # diverging from the oracle's unbounded-int arithmetic. (b % n +
+    # a) % n == (b + a) % n for non-negative b, a, so parity with
+    # worldgen.fetch_identity is exact (ADVICE r2).
+    return f"CAST(pmod(pmod({base}, {n}) + attempt, {n}) AS INT)"
+
+
+# S5/S7 fetch identity over (url, source, stage, attempt)
+FETCH_IDENTITY_SQL = {
+    "render": f"(source = 'weixin' AND stage = {STAGE_ROOT}) OR source = 'tianyan'",
+    "ua_id": _rotating_sql("ua", len(worldgen.UA_POOL)),
+    "proxy_id": _rotating_sql("proxy", len(worldgen.PROXY_POOL)),
+}
+
+
 def with_fetch_identity(df: DataFrame) -> DataFrame:
     """S5/S7: attach (render, ua_id, proxy_id) fetch-identity columns,
     JVM-side, in hash parity with worldgen.fetch_identity /
@@ -145,31 +175,21 @@ def with_fetch_identity(df: DataFrame) -> DataFrame:
     (stable-url-base + attempt) mod pool — the reference's
     install_new_driver rotation (tianyan_crawler.py:145-152) as a
     deterministic column."""
-    render = (
-        (F.col("source") == "weixin") & (F.col("stage") == STAGE_ROOT)
-    ) | (F.col("source") == "tianyan")
-
-    def rotating(tag: str, n: int):
-        base = F.xxhash64(F.concat(F.lit(tag + "\x1f"), F.col("url"))).bitwiseAND(
-            F.lit(MASK63)
-        )
-        # pmod the 63-bit base BEFORE adding attempt: base + attempt
-        # could wrap past 2^63-1 (negative result, or an ANSI-mode
-        # throw), diverging from the oracle's unbounded-int arithmetic.
-        # (b % n + a) % n == (b + a) % n for non-negative b, a, so
-        # parity with worldgen.fetch_identity is exact (ADVICE r2).
-        return F.pmod(F.pmod(base, F.lit(n)) + F.col("attempt"), F.lit(n)).cast("int")
-
-    return (
-        df.withColumn("render", render)
-        .withColumn("ua_id", rotating("ua", len(worldgen.UA_POOL)))
-        .withColumn("proxy_id", rotating("proxy", len(worldgen.PROXY_POOL)))
-    )
+    return df.withColumns({c: F.expr(e) for c, e in FETCH_IDENTITY_SQL.items()})
 
 
 # what a rule may leave out; every other decided column it must select
 RULE_DEFAULTS = {"attempt": 0, "title": "", "summary": "", "cover": ""}
 DECIDED = FRONTIER_SCHEMA.names[: FRONTIER_SCHEMA.names.index("cover") + 1]
+
+# the derived columns over the unioned rules: a retry's delay comes
+# right after its failed attempt, plus its source's backoff (O8)
+_BACKOFF = {s: f"crawl_delay + {sql_lit(float(b))}" for s, b in worldgen.BACKOFF.items()}
+DERIVED_SQL = {
+    "crawl_delay": f"CASE WHEN attempt > 0 THEN {_case_source(_BACKOFF, 'crawl_delay')} "
+                   "ELSE crawl_delay END",
+    **FETCH_IDENTITY_SQL,
+}
 
 
 def frontier_rows(*rules: DataFrame) -> DataFrame:
@@ -179,30 +199,31 @@ def frontier_rows(*rules: DataFrame) -> DataFrame:
     null it selects stays null (hence the rules come in apart: a union
     with missing columns would null the absent ones). The rules are
     unioned once, and the rest is derived here: the politeness delay
-    (O5-O7), plus BACKOFF[source] for a retry (O8: it comes right
-    after its failed attempt), then the fetch identity (S5/S7). The
-    rows come out in FRONTIER_SCHEMA order and types."""
+    (O5-O7, crawl_delay_col), plus BACKOFF[source] for a retry (O8),
+    and the fetch identity (S5/S7), typed in one projection. The rows
+    come out in FRONTIER_SCHEMA order and types."""
     rows = reduce(DataFrame.unionByName, [
-        r.select(*[c if c in r.columns else F.lit(RULE_DEFAULTS[c]).alias(c) for c in DECIDED])
+        r.selectExpr(*[
+            sql_ident(c) if c in r.columns else f"{sql_lit(RULE_DEFAULTS[c])} AS {c}"
+            for c in DECIDED
+        ])
         for r in rules
     ])
     delay = crawl_delay_col(F.col("source"), F.col("stage"), F.col("url"))
-    for source, backoff in worldgen.BACKOFF.items():
-        retry = (F.col("attempt") > 0) & (F.col("source") == source)
-        delay = F.when(retry, delay + backoff).otherwise(delay)
-    rows = with_fetch_identity(rows.withColumn("crawl_delay", delay))
-    return rows.select(*[F.col(f.name).cast(f.dataType) for f in FRONTIER_SCHEMA.fields])
+    return rows.withColumn("crawl_delay", delay).selectExpr(*[
+        f"CAST({DERIVED_SQL.get(f.name, sql_ident(f.name))} AS {f.dataType.simpleString()}) AS {f.name}"
+        for f in FRONTIER_SCHEMA.fields
+    ])
 
 
-def enrich_frontier(frontier: DataFrame, n_buckets: int, key=None) -> DataFrame:
+def enrich_frontier(frontier: DataFrame, n_buckets: int, key: str = "canon_url") -> DataFrame:
     """The one enrich step of batch rounds and streamed epochs: adds
     canon_url (regular URLs stay JVM-side, see canonicalize_split),
-    dedup_key (``key``, a column over the row and canon_url; canon_url
-    when None), key_hash = xxhash64(dedup_key), its hash bucket, and
-    host."""
+    dedup_key (``key``, SQL text over the row and canon_url),
+    key_hash = xxhash64(dedup_key), its hash bucket, and host."""
     f = canonicalize_split(frontier, canonicalize_urls_udf)
-    f = f.withColumn("dedup_key", F.col("canon_url") if key is None else key)
-    f = f.withColumn("key_hash", F.xxhash64("dedup_key"))
+    f = f.withColumn("dedup_key", F.expr(key))
+    f = f.withColumn("key_hash", F.expr("xxhash64(dedup_key)"))
     f = f.withColumn("bucket", bucket_col(F.col("key_hash"), n_buckets))
     return f.withColumn("host", host_col(F.col("url")))
 
@@ -224,9 +245,11 @@ class CrawlConfig:
     # the tolerant family is verified against.
     html_parser: str = "dialect"
     dirty_web: bool = False
-    # Seen-set prefilter: 'bloom' (default) or 'none' (exact anti-join
-    # only). The per-bucket Bloom filters are no state of the run: each
-    # round after the first builds them from the seen set it probes.
+    # Seen-set probe once the seen set outgrows
+    # spark.sql.autoBroadcastJoinThreshold (16 B a row): 'bloom'
+    # (default) builds per-bucket Bloom filters from the seen set in
+    # that round, 'none' runs the exact anti-join alone. A seen set
+    # that fits the threshold is one broadcast anti-join either way.
     filter_family: str = "bloom"
 
 
@@ -250,7 +273,8 @@ class CrawlRun:
         if self.filter_family not in ("bloom", "none"):
             raise ValueError(f"unknown filter_family: {self.filter_family!r}")
         self.store = store
-        self.rules = gating.rules_df(spark)  # local: read without a job
+        # every rule kind, read once per run from a local relation (no job)
+        self.rules = gating.rules_by_kind(gating.rules_df(spark))
         self.trims = gating.trim_rules(self.rules)  # D6, applied in the fetch pass
         self.round = 0
         self.seen: DataFrame = spark.createDataFrame(
@@ -276,32 +300,20 @@ class CrawlRun:
             worldgen.gen_seeds(self.cfg.spec),
             "seed_id int, source string, line_no int, name string, url string",
         )
-        seeds = seeds.filter(F.length(F.trim("name")) > 0)  # F1
-        lo = self.cfg.first_seed
-        seeds = seeds.filter(F.col("line_no") >= F.lit(lo))  # F2 resume
+        keep = ["length(trim(name)) > 0", f"line_no >= {sql_lit(self.cfg.first_seed)}"]  # F1, F2
         if self.cfg.seed_limit is not None:
-            seeds = seeds.filter(F.col("line_no") < F.lit(self.cfg.seed_limit))
-        seeds = gating.filter_blacklisted_names(seeds, self.rules)  # F3
-        return frontier_rows(seeds.select(
-            "url", *SEED_COLS,
-            F.lit(STAGE_ROOT).alias("stage"),
-            F.lit(0).alias("page_no"),
-            F.lit(-1).alias("link_idx"),
-            F.lit(0).alias("depth"),
+            keep.append(f"line_no < {sql_lit(self.cfg.seed_limit)}")
+        seeds = gating.filter_blacklisted_names(seeds.filter(" AND ".join(keep)), self.rules)  # F3
+        return frontier_rows(seeds.selectExpr(
+            "url", *SEED_COLS, f"{STAGE_ROOT} AS stage", "0 AS page_no", "-1 AS link_idx", "0 AS depth"
         ))
 
     def _enrich(self, frontier: DataFrame) -> DataFrame:
         """enrich_frontier keyed by title for weixin articles — the
         reference dedups weixin by title, J1/F7; url otherwise; the
         attempt suffix lets O8 retries bypass the seen set."""
-        base_key = F.when(
-            (F.col("source") == "weixin") & (F.col("stage") == STAGE_CHILD),
-            F.col("title"),
-        ).otherwise(F.col("canon_url"))
-        key = F.when(
-            F.col("attempt") > 0,
-            F.concat(base_key, F.lit("#a"), F.col("attempt").cast("string")),
-        ).otherwise(base_key)
+        base = f"CASE WHEN source = 'weixin' AND stage = {STAGE_CHILD} THEN title ELSE canon_url END"
+        key = f"CASE WHEN attempt > 0 THEN concat({base}, '#a', CAST(attempt AS STRING)) ELSE {base} END"
         return enrich_frontier(frontier, self.cfg.n_buckets, key)
 
     # --------------------------------------------------------------- fetch
@@ -339,81 +351,63 @@ class CrawlRun:
 
     def _expand_weixin_list(self, fetched: DataFrame) -> DataFrame:
         """D1 + F4/F5/F6: list page -> article candidates in DOM order."""
-        lists = fetched.filter(
-            (F.col("source") == "weixin") & (F.col("stage") == STAGE_ROOT)
+        items = fetched.filter(f"source = 'weixin' AND stage = {STAGE_ROOT}").selectExpr(
+            *SEED_COLS, "depth + 1 AS depth", "posexplode(page.items) AS (link_idx, item)"
         )
-        items = lists.select(
-            *SEED_COLS, (F.col("depth") + 1).alias("depth"),
-            F.posexplode("page.items").alias("link_idx", "item"),
-        )
-        items = items.filter(F.col("item.cover") != "").select(  # F4
-            "*", *[F.col("item." + c).alias(c) for c in ("href", "title", "summary", "cover")]
+        items = items.filter("item.cover != ''").selectExpr(  # F4
+            "*", *[f"item.{c} AS {c}" for c in ("href", "title", "summary", "cover")]
         )
         items = gating.apply_title_rules(items, self.rules)  # F5+F6
-        return items.select(
-            absolutize_col(F.col("href"), F.lit(WEIXIN_BASE)).alias("url"),  # X4
-            *SEED_COLS,
-            F.lit(STAGE_CHILD).alias("stage"),
-            F.lit(0).alias("page_no"),
+        return items.selectExpr(
+            f"{absolutize_sql('href', WEIXIN_BASE)} AS url",  # X4
+            *SEED_COLS, f"{STAGE_CHILD} AS stage", "0 AS page_no",
             "link_idx", "depth", "title", "summary", "cover",
         )
 
     def _expand_csm_account(self, fetched: DataFrame) -> DataFrame:
         """D9 + X5: account root -> list pages 1..max_page-1."""
-        accts = fetched.filter(
-            (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_ROOT)
-        )
         # max_page <= 1 has no list pages (sequence(1, 0) is [1, 0])
-        pages = accts.filter(F.col("page.max_page") > 1).select(
-            *SEED_COLS, (F.col("depth") + 1).alias("depth"),
-            F.posexplode(pagination_urls_col(F.col("url"), F.col("page.max_page"))).alias(
-                "pos", "url"
-            ),
+        accts = fetched.filter(
+            f"source = 'chuansongmen' AND stage = {STAGE_ROOT} AND page.max_page > 1"
         )
-        return pages.select(
-            "url", *SEED_COLS,
-            F.lit(STAGE_LIST).alias("stage"),
-            (F.col("pos") + 1).alias("page_no"),
-            F.lit(-1).alias("link_idx"),
-            "depth",
+        pages = accts.selectExpr(
+            *SEED_COLS, "depth + 1 AS depth",
+            f"posexplode({pagination_urls_sql('url', 'page.max_page')}) AS (pos, url)",
+        )
+        return pages.selectExpr(
+            "url", *SEED_COLS, f"{STAGE_LIST} AS stage", "pos + 1 AS page_no",
+            "-1 AS link_idx", "depth",
         )
 
     def _expand_csm_list(self, fetched: DataFrame) -> DataFrame:
         """D8 + F14 + X4: list page -> article URLs in DOM order."""
-        lists = fetched.filter(
-            (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_LIST)
-        )
-        links = lists.select(
-            *SEED_COLS, "page_no", (F.col("depth") + 1).alias("depth"),
-            F.posexplode("page.links").alias("link_idx", "href"),
+        links = fetched.filter(f"source = 'chuansongmen' AND stage = {STAGE_LIST}").selectExpr(
+            *SEED_COLS, "page_no", "depth + 1 AS depth", "posexplode(page.links) AS (link_idx, href)"
         )
         links = gating.link_shape_filter(links, self.rules, "chuansongmen")  # F14
-        return links.select(
-            absolutize_col(F.col("href"), F.lit(CSM_BASE)).alias("url"),
-            *SEED_COLS,
-            F.lit(STAGE_CHILD).alias("stage"),
-            "page_no", "link_idx", "depth",
+        return links.selectExpr(
+            f"{absolutize_sql('href', CSM_BASE)} AS url",
+            *SEED_COLS, f"{STAGE_CHILD} AS stage", "page_no", "link_idx", "depth",
         )
 
     def _expand_tianyan_search(self, fetched: DataFrame) -> DataFrame:
         """F12: an anti-bot page -> its retry (O8), the same row one
         attempt on, at the same depth; else the first query_name link
         -> detail child (F13 drops empty results)."""
+        retry = "(page.anti_bot AND attempt = 0)"
+        detail = "((NOT page.anti_bot) AND page.query_link != '')"  # F13
         searches = fetched.filter(
-            (F.col("source") == "tianyan") & (F.col("stage") == STAGE_ROOT)
+            f"source = 'tianyan' AND stage = {STAGE_ROOT} AND ({retry} OR {detail})"
         )
-        retry = F.col("page.anti_bot") & (F.col("attempt") == 0)
-        detail = ~F.col("page.anti_bot") & (F.col("page.query_link") != "")  # F13
-        return searches.filter(retry | detail).select(
-            F.when(retry, F.col("url"))
-            .otherwise(absolutize_col(F.col("page.query_link"), F.lit(TYC_BASE)))
-            .alias("url"),
+        return searches.selectExpr(
+            f"CASE WHEN {retry} THEN url "
+            f"ELSE {absolutize_sql('page.query_link', TYC_BASE)} END AS url",
             *SEED_COLS,
-            F.when(retry, STAGE_ROOT).otherwise(STAGE_CHILD).alias("stage"),
-            F.lit(0).alias("page_no"),
-            F.when(retry, -1).otherwise(0).alias("link_idx"),
-            F.when(retry, F.col("attempt") + 1).otherwise(0).alias("attempt"),
-            (F.col("depth") + F.when(retry, 0).otherwise(1)).alias("depth"),
+            f"CASE WHEN {retry} THEN {STAGE_ROOT} ELSE {STAGE_CHILD} END AS stage",
+            "0 AS page_no",
+            f"CASE WHEN {retry} THEN -1 ELSE 0 END AS link_idx",
+            f"CASE WHEN {retry} THEN attempt + 1 ELSE 0 END AS attempt",
+            f"depth + CASE WHEN {retry} THEN 0 ELSE 1 END AS depth",
         )
 
     def _expand(self, pages: DataFrame) -> DataFrame:
@@ -438,8 +432,8 @@ class CrawlRun:
         a resume (over the stored pages) derive the same rows."""
         articles, image_candidates = self._extract_weixin_articles(pages)
         return {
-            "fetch_log": pages.select(*LOG_COLS),
-            "seen": pages.select(*SEEN_COLS),
+            "fetch_log": pages.selectExpr(*map(sql_ident, LOG_COLS)),
+            "seen": pages.selectExpr(*map(sql_ident, SEEN_COLS)),
             "articles": articles,
             "articles_text": self._extract_csm_articles(pages),
             "companies": self._extract_companies(pages),
@@ -449,75 +443,53 @@ class CrawlRun:
         """D2-D7 + F8-F11 + K1 analog: article pages -> 13-column
         articles table (tb_news_resource shape,
         weixin_public.py:245-248) + image rows for the pipeline."""
-        arts = fetched.filter(
-            (F.col("source") == "weixin") & (F.col("stage") == STAGE_CHILD)
-        )
-        kept = (
-            arts.withColumn("p", F.col("page.article"))
-            .filter(F.col("p").isNotNull())  # F8: no js_content body
-            .filter(~F.col("p.has_video"))  # F9
-            .filter(F.col("p.publish_time").isNotNull())  # F10
-            .filter(
-                ~(
-                    F.col("p.body_text").contains("课程详情")
-                    & F.col("p.body_text").contains("报名需知")
-                )
-            )  # F11
+        arts = fetched.filter(f"source = 'weixin' AND stage = {STAGE_CHILD}")
+        kept = arts.selectExpr("*", "page.article AS p").filter(
+            "p IS NOT NULL"  # F8: no js_content body
+            " AND NOT p.has_video"  # F9
+            " AND p.publish_time IS NOT NULL"  # F10
+            " AND NOT (contains(p.body_text, '课程详情') AND contains(p.body_text, '报名需知'))"  # F11
         )
         # D7 images were parsed pre-trim in the fetch pass (reference
         # processes imgs first, weixin_public.py:350-373, then trims,
-        # then tiny)
-        imgs = kept.select(
-            "url",
-            "line_no", "page_no", "link_idx",
-            F.col("title").alias("caption"),
-            F.explode("p.images").alias("img"),
-        ).select(
-            F.col("url").alias("article_url"),
-            "line_no", "page_no", "link_idx",
-            "caption",
-            F.col("img.src").alias("src"),
-            F.col("img.data_type").alias("data_type"),
+        # then tiny); inline yields each image's src and data_type
+        imgs = kept.selectExpr(
+            "url AS article_url", "line_no", "page_no", "link_idx", "title AS caption",
+            "inline(p.images)",
         )
-        articles = kept.select(
-            F.col("url").alias("src_url"),
+        articles = kept.selectExpr(
+            "url AS src_url",
             "title",
-            F.col("p.author_name").alias("author_name"),
-            F.col("name").alias("resource_from"),
-            F.col("p.content").alias("content"),
-            F.col("p.msg_link").alias("content_src"),
-            F.lit(0).alias("content_read"),
-            F.lit(0).alias("audit_status"),
-            F.col("p.publish_time").alias("publish_time"),
-            F.lit(self.cfg.fixed_date).alias("create_time"),  # X10 fixed clock
+            "p.author_name AS author_name",
+            "name AS resource_from",
+            "p.content AS content",
+            "p.msg_link AS content_src",
+            "0 AS content_read",
+            "0 AS audit_status",
+            "p.publish_time AS publish_time",
+            f"{sql_lit(self.cfg.fixed_date)} AS create_time",  # X10 fixed clock
             "summary",
-            F.lit("").alias("src_header"),
-            F.col("cover").alias("cover_small"),
+            "'' AS src_header",
+            "cover AS cover_small",
             "seed_id", "line_no", "page_no", "link_idx",
         )
         return articles, imgs
 
     def _extract_csm_articles(self, fetched: DataFrame) -> DataFrame:
         """D2+D4+K4 analog: body text per article."""
-        arts = fetched.filter(
-            (F.col("source") == "chuansongmen") & (F.col("stage") == STAGE_CHILD)
-        )
-        return arts.select(
-            F.col("url").alias("src_url"),
-            F.col("name").alias("account"),
-            "seed_id", "line_no", "page_no", "link_idx",
-            F.col("page.text").alias("text"),
+        arts = fetched.filter(f"source = 'chuansongmen' AND stage = {STAGE_CHILD}")
+        return arts.selectExpr(
+            "url AS src_url", "name AS account", "seed_id", "line_no", "page_no", "link_idx",
+            "page.text AS text",
         )
 
     def _extract_companies(self, fetched: DataFrame) -> DataFrame:
         """D10-D15 + K2 analog: detail pages -> nested company rows."""
-        details = fetched.filter(
-            (F.col("source") == "tianyan") & (F.col("stage") == STAGE_CHILD)
-        )
-        return details.select(
-            F.regexp_extract("url", r"/company/(\d+)", 1).alias("company_id"),
-            F.lit("tianyancha").alias("sourceFrom"),
-            F.lit(self.cfg.fixed_date).alias("last_update"),
+        details = fetched.filter(f"source = 'tianyan' AND stage = {STAGE_CHILD}")
+        return details.selectExpr(
+            f"regexp_extract(url, {sql_lit(COMPANY_ID_RE)}, 1) AS company_id",
+            "'tianyancha' AS sourceFrom",
+            f"{sql_lit(self.cfg.fixed_date)} AS last_update",
             "seed_id", "line_no",
             "page.company.*",
         )
@@ -526,16 +498,18 @@ class CrawlRun:
         """F15 sig gate -> X3 fmt -> URL dedupe (download cache) ->
         synth fetch + decode -> F16 small -> X7/X8 rehost id ->
         images corpus rows (input_hint schema + lineage columns)."""
-        imgs = imgs.withColumn("sig", pic_signature_col(F.col("src")))  # X2
-        imgs = gating.pic_sig_gate(imgs, self.rules)  # F15
-        fmt = F.when(F.col("data_type") != "", F.col("data_type")).otherwise(
-            query_param_col(F.col("src"), "wx_fmt", "jpg")  # X3
+        imgs = imgs.selectExpr(
+            "*",
+            f"{pic_signature_sql('src')} AS sig",  # X2
+            "CASE WHEN data_type != '' THEN data_type "
+            f"ELSE {query_param_sql('src', 'wx_fmt', 'jpg')} END AS fmt",  # X3
+            "src AS _k",
         )
-        imgs = imgs.withColumn("fmt", fmt)
+        imgs = gating.pic_sig_gate(imgs, self.rules)  # F15
         imgs = batch_first_occurrence(  # download cache: dedupe by URL,
             # first occurrence in article-priority order (matches the
             # sequential reference encounter order)
-            imgs.withColumn("_k", F.col("src")),
+            imgs,
             "_k",
             ["line_no", "page_no", "link_idx"],
             order_col=pack_order(
@@ -544,40 +518,23 @@ class CrawlRun:
         ).drop("_k")
         imgs = fetch_and_decode_images(imgs, "src")
         imgs = with_rehost_id(imgs, "src")
-        return imgs.select(
-            "image_id",
-            "bytes",
-            F.col("w").cast("int").alias("w"),
-            F.col("h").cast("int").alias("h"),
-            "fmt",
-            "caption",
-            "phash",
-            "small",
-            "sig",
-            F.col("src").alias("src_url"),
-            "article_url",
-            "rehost_url",
-            "dec_fmt",
-            F.length("bytes").alias("n_bytes"),
+        return imgs.selectExpr(
+            "image_id", "bytes", "CAST(w AS INT) AS w", "CAST(h AS INT) AS h", "fmt",
+            "caption", "phash", "small", "sig", "src AS src_url", "article_url",
+            "rehost_url", "dec_fmt", "length(bytes) AS n_bytes",
         )
 
     # -------------------------------------------------------------- rounds
 
-    def run_round(self, frontier: DataFrame) -> DataFrame:
-        """One scheduling round; returns next round's frontier.
-
-        Materializes four things once: the survivors ``new``, the
-        fetched and parsed pages, the decoded image delta and the next
-        frontier (``_expand`` of the pages). With the Bloom family, a
-        round after the first also materializes its prefilter, built
-        from the seen set it probes; the filter and the survivors are
-        freed once the pages exist, so a round keeps only its pages,
-        images and next frontier. Every other table is a projection of
-        the pages; the round's counters are observed on those same
-        materializations (``self.counts``), so they cost no job of
-        their own. ``self.delta`` is what the round fetched: its pages
-        and decoded images."""
-        cfg = self.cfg
+    def _survivors(self, frontier: DataFrame) -> DataFrame:
+        """The frontier rows this round fetches: enrich -> robots gate
+        (J8) -> first occurrence in the batch (J6) -> not in the seen
+        set (J1). The seen set is the rounds' ``fetched`` rows, so its
+        size is known without a job: while ``n_fetched`` long keys fit
+        the session's autoBroadcastJoinThreshold, the probe is one
+        anti-join against the broadcast keys (no shuffle of either
+        side, no filter). A larger seen set takes ``filter_family``'s
+        probe, the Bloom one built from this seen set in this round."""
         cand = self._enrich(frontier)
         cand = gating.robots_gate(cand, self.rules)  # J8
         cand = batch_first_occurrence(  # J6 step 1: first-occurrence-wins
@@ -586,24 +543,41 @@ class CrawlRun:
             ["source"] + PRIORITY_COLS[1:],
             order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
         )
+        if self.n_fetched * SEEN_ROW_BYTES <= _broadcast_threshold(self.spark):
+            return cand.join(F.broadcast(self.seen.select("key_hash")), "key_hash", "left_anti")
+        if self.filter_family == "none":
+            return dedup_against_seen(cand, self.seen, None)
+        filters, filter_counts = _observed_checkpoint(
+            build_bloom_filters(self.seen), nbytes=F.sum("m_bits") / 8
+        )
+        return dedup_against_seen(
+            cand, self.seen, filters, filters_total_bytes=filter_counts["nbytes"]
+        )
+
+    def run_round(self, frontier: DataFrame) -> DataFrame:
+        """One scheduling round; returns next round's frontier.
+
+        Materializes four things once: the survivors ``new``, the
+        fetched and parsed pages, the decoded image delta and the next
+        frontier (``_expand`` of the pages). A round whose seen set
+        outgrows the broadcast threshold with the Bloom family also
+        materializes its prefilter, built from the seen set it probes
+        (``_survivors``); the filter and the survivors are freed once
+        the pages exist, so a round keeps only its pages, images and
+        next frontier. Every other table is a projection of the pages;
+        the round's counters are observed on those same
+        materializations (``self.counts``), so they cost no job of
+        their own. ``self.delta`` is what the round fetched: its pages
+        and decoded images."""
+        cfg = self.cfg
         pre_ids = _persistent_rdd_ids(self.spark)
-        if self.filter_family == "bloom" and self.round > 0:  # J1
-            # round 0's seen set is empty: nothing for a filter to cut
-            filters, filter_counts = _observed_checkpoint(
-                build_bloom_filters(self.seen), nbytes=F.sum("m_bits") / 8
-            )
-            new = dedup_against_seen(
-                cand, self.seen, filters, filters_total_bytes=filter_counts["nbytes"]
-            )
-        else:
-            new = dedup_against_seen(cand, self.seen, None)
         # Materialize the round's survivor set as its own job, so the
         # enrich -> robots -> dedup chain is timed apart from the fetch
         # (its only reader now). The round computes only the host
         # queues — the replay clock (ref_seq, ref_virtual_ts) is global
         # over all rounds, so fetch_order() derives it from the whole
         # fetch log.
-        new = new.localCheckpoint(eager=True)
+        new = self._survivors(frontier).localCheckpoint(eager=True)
         ckpt_ids = _persistent_rdd_ids(self.spark) - pre_ids
         plan = host_queues(new, n_salts=cfg.n_salts)
         fetched, fetch_counts = _observed_checkpoint(
@@ -671,9 +645,12 @@ class CrawlRun:
         final state to an uninterrupted run (tested). The pages and
         images of every committed round are verified and read, the
         tables are re-derived from the pages, and the start frontier is
-        ``_expand`` of the last round's pages. The next round builds its
-        prefilter from the restored seen set, as every round after the
-        first does. A fresh run when nothing is committed; a committed
+        ``_expand`` of the last round's pages, and ``n_fetched`` is summed
+        from the manifests, so the next round probes the restored seen
+        set as an uninterrupted round would: one broadcast anti-join
+        while it fits the threshold, else the next round builds its
+        prefilter from the restored seen set. A fresh run when nothing
+        is committed; a committed
         table that cannot be read raises, and so does a derived frontier
         whose size differs from the last round's recorded
         ``frontier_out`` (the expansion rules drifted since the
@@ -730,6 +707,12 @@ class CrawlRun:
             "companies": self.companies,
             "images": self.images,
         }
+
+
+def _broadcast_threshold(spark: SparkSession) -> int:
+    """The session's spark.sql.autoBroadcastJoinThreshold in bytes, as
+    its SQLConf reads it (-1: never broadcast)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
 def _observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:

@@ -24,6 +24,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
+
 
 _LINEAGE_BUCKETS = 64  # checksum partitioning constant, not a run config
 
@@ -40,10 +42,12 @@ def _partition_lineage(df: DataFrame) -> dict:
     is a constant, never row-proportional), so this scales to any
     table size. North_rule: 'resumes with per-partition lineage and
     fetch/dedup metrics'."""
-    h = F.xxhash64(F.to_json(F.struct(*df.columns)))
+    row = ", ".join(map(sql_ident, df.columns))
     rows = (
-        df.groupBy(F.pmod(h, F.lit(_LINEAGE_BUCKETS)).alias("bucket"))
-        .agg(F.count("*").alias("n"), F.bit_xor(h).alias("x"))
+        df.selectExpr(f"xxhash64(to_json(struct({row}))) AS h")
+        .selectExpr(f"pmod(h, {_LINEAGE_BUCKETS}) AS bucket", "h")
+        .groupBy("bucket")
+        .agg(F.expr("count(*) AS n"), F.expr("bit_xor(h) AS x"))
         .collect()
     )
     return {str(r["bucket"]): [int(r["n"]), int(r["x"])] for r in rows}

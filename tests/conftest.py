@@ -23,3 +23,19 @@ def job_ids(spark):
         return set(sc.statusTracker().getJobIdsForGroup())
 
     return ids
+
+
+@pytest.fixture
+def round_trips(monkeypatch):
+    """Counts py4j round trips: call it to read the count so far."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    return lambda: sent[0]

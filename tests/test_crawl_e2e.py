@@ -5,6 +5,8 @@ extracted article/company/image records."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from python_crawler_spark.plans.crawl import CrawlConfig, CrawlRun
@@ -13,6 +15,23 @@ from python_crawler_spark.sources.worldgen import WorldSpec
 from .oracle import Oracle
 
 SPEC = WorldSpec(n_tianyan_seeds=12)
+
+
+@contextmanager
+def broadcast_threshold(spark, value: str | None):
+    """spark.sql.autoBroadcastJoinThreshold set to ``value`` (None:
+    left as it is), then restored. At -1 the crawl's seen probe takes
+    its filter_family path in every round; at the default the test
+    worlds' seen sets fit a broadcast."""
+    if value is None:
+        yield
+        return
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 @pytest.fixture(scope="module")
@@ -282,20 +301,24 @@ def test_dirty_images_match_clean_world(run_and_oracle_dirty):
 
 
 def test_exact_filter_family_same_results(spark, run_and_oracle):
-    """CrawlConfig.filter_family='none' (the exact anti-join alone)
-    must produce the IDENTICAL fetch order and seen set — the Bloom
-    prefilter only routes candidates, the exact anti-join is the last
-    word."""
+    """With broadcasting off (autoBroadcastJoinThreshold=-1) the seen
+    probe takes the filter_family path in every round: 'bloom' (per
+    round Bloom filters, then the exact anti-join) and 'none' (the
+    exact anti-join alone) must both give the oracle's fetch order and
+    seen set — the Bloom prefilter only routes candidates, the exact
+    anti-join is the last word."""
     _, oracle = run_and_oracle
-    cfg = CrawlConfig(spec=SPEC, n_buckets=8, filter_family="none")
-    results = CrawlRun(spark, cfg).run()
-    got = [
-        (r["source"], r["url"], r["attempt"])
-        for r in results["fetch_order"].select("source", "url", "attempt").collect()
-    ]
-    assert got == [(e["source"], e["url"], e["attempt"]) for e in oracle.events]
-    seen = {r["dedup_key"] for r in results["seen"].select("dedup_key").collect()}
-    assert seen == oracle.seen
+    for family in ("bloom", "none"):
+        cfg = CrawlConfig(spec=SPEC, n_buckets=8, filter_family=family)
+        with broadcast_threshold(spark, "-1"):
+            results = CrawlRun(spark, cfg).run()
+            got = [
+                (r["source"], r["url"], r["attempt"])
+                for r in results["fetch_order"].select("source", "url", "attempt").collect()
+            ]
+            seen = {r["dedup_key"] for r in results["seen"].select("dedup_key").collect()}
+        assert got == [(e["source"], e["url"], e["attempt"]) for e in oracle.events], family
+        assert seen == oracle.seen, family
 
 
 def test_seed_window_matches_oracle(spark):
@@ -327,17 +350,63 @@ def test_filter_family_validation(spark, family):
 
 def test_round_keeps_only_its_outputs(spark):
     """A round keeps exactly three checkpoints — its pages, its images
-    and the next frontier: the Bloom filters it built from the seen set
-    and its survivors are freed within the round."""
+    and the next frontier — on both seen-probe paths. At the default
+    threshold a round probes the seen set with one broadcast anti-join
+    and frees its survivors within the round; at -1 a round builds
+    Bloom filters from the seen set and frees them with its
+    survivors."""
     from python_crawler_spark.operators.components import _rdd_ids
 
+    for threshold in (None, "-1"):
+        run = CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, filter_family="bloom"))
+        frontier = run.initial_frontier()
+        with broadcast_threshold(spark, threshold):
+            for _ in range(2):
+                before = _rdd_ids(spark)
+                frontier = run.run_round(frontier)
+                assert len(_rdd_ids(spark) - before) == 3, (threshold, f"round {run.round}")
+                run.round += 1
+
+
+def test_seen_probe_is_one_broadcast_anti_join(spark, monkeypatch):
+    """At the default threshold a round after the first fits its seen
+    keys (16 B each) in a broadcast: it builds no Bloom filter, and the
+    survivors it checkpoints are planned as a broadcast left-anti
+    join against the seen keys."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from python_crawler_spark.plans import crawl
+
     run = CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8, filter_family="bloom"))
-    frontier = run.initial_frontier()
-    for _ in range(2):
-        before = _rdd_ids(spark)
-        frontier = run.run_round(frontier)
-        assert len(_rdd_ids(spark) - before) == 3, f"round {run.round}"
-        run.round += 1
+    frontier = run.run_round(run.initial_frontier())
+    run.round += 1
+    built, plans = [], []
+    build = crawl.build_bloom_filters
+    monkeypatch.setattr(crawl, "build_bloom_filters", lambda seen: built.append(1) or build(seen))
+    checkpoint = DataFrame.localCheckpoint
+
+    def planned(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", planned)
+    run.run_round(frontier)
+    assert built == []
+    anti = [p for p in plans if "LeftAnti" in p]
+    assert anti and all("BroadcastHashJoin" in p for p in anti), anti
+
+
+def test_round_takes_few_round_trips(spark, round_trips):
+    """A round builds its projections and filters as SQL text, one
+    parse each: the second round of the SPEC world takes a bounded
+    number of py4j round trips (about 8,000 when they were built one
+    Column operator at a time)."""
+    run = CrawlRun(spark, CrawlConfig(spec=SPEC, n_buckets=8))
+    frontier = run.run_round(run.initial_frontier())
+    run.round += 1
+    start = round_trips()
+    run.run_round(frontier)
+    assert round_trips() - start <= 2500
 
 
 def test_frontier_rows_derives_what_rules_leave_out(spark):

@@ -78,22 +78,20 @@ def test_pic_signature_edges():
 
 
 def test_image_url_columns_on_malformed_urls(spark):
-    """pic_signature_col equals the scalar pic_signature, and neither
-    it nor query_param_col raises, on a URL that java.net.URI rejects
+    """pic_signature_sql equals the scalar pic_signature, and neither
+    it nor query_param_sql raises, on a URL that java.net.URI rejects
     (a space in the path) under ANSI mode, where parse_url throws."""
-    from pyspark.sql import functions as F
-
-    from python_crawler_spark.functions.urls import pic_signature_col, query_param_col
+    from python_crawler_spark.functions.urls import pic_signature_sql, query_param_sql
 
     urls = ["http://mmbiz.qpic.cn/mm biz/a b/0", "http://h/a/b", "http://h/mmbiz/SIG/640",
             "http://h/mmbiz/SIG/640?wx_fmt=png", "http://mmbiz.qpic.cn/mm biz/a b/0?wx_fmt=gif"]
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        rows = spark.createDataFrame([(u,) for u in urls], "u string").select(
+        rows = spark.createDataFrame([(u,) for u in urls], "u string").selectExpr(
             "u",
-            pic_signature_col(F.col("u")).alias("sig"),
-            query_param_col(F.col("u"), "wx_fmt", "jpg").alias("fmt"),
+            f"{pic_signature_sql('u')} AS sig",
+            f"{query_param_sql('u', 'wx_fmt', 'jpg')} AS fmt",
         ).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -108,12 +106,10 @@ def test_absolutize():
 
 
 def test_pagination_excludes_max_page(spark):
-    from pyspark.sql import functions as F
-
-    from python_crawler_spark.functions.urls import pagination_urls_col
+    from python_crawler_spark.functions.urls import pagination_urls_sql
 
     df = spark.createDataFrame([("http://a", 4)], "link string, mp int")
-    out = df.select(pagination_urls_col(F.col("link"), F.col("mp")).alias("u")).first()
+    out = df.selectExpr(f"{pagination_urls_sql('link', 'mp')} AS u").first()
     # chuansongmen.py:65 range(1, max_page): pages 1..3 -> starts 0,12,24
     assert out["u"] == ["http://a?start=0", "http://a?start=12", "http://a?start=24"]
 

@@ -90,7 +90,7 @@ def test_fast_canonical_pred_equals_rlike(spark):
 
 
 def test_host_path_col_match_parse_url(spark):
-    """host_col / path_col take a guarded substring fast path (no
+    """host_col / path_sql take a guarded substring fast path (no
     java.net.URI per row); on WELL-FORMED URL shapes — including the
     ones the guard must REJECT into the parse_url fallback (uppercase,
     ports, userinfo, non-http schemes) — the result must equal the
@@ -100,7 +100,7 @@ def test_host_path_col_match_parse_url(spark):
     test_host_path_col_fast_vs_fallback."""
     from pyspark.sql import functions as F
 
-    from python_crawler_spark.functions.urls import host_col, path_col
+    from python_crawler_spark.functions.urls import host_col, path_sql
 
     urls = [
         "http://a.com/x", "https://a.com/", "http://a.com/a/b/c.html",
@@ -118,7 +118,7 @@ def test_host_path_col_match_parse_url(spark):
         "url",
         host_col(F.col("url")).alias("h"),
         F.lower(F.try_parse_url(F.col("url"), F.lit("HOST"))).alias("hr"),
-        path_col(F.col("url")).alias("p"),
+        F.expr(path_sql("url")).alias("p"),
         F.try_parse_url(F.col("url"), F.lit("PATH")).alias("pr"),
     ).collect()
     for r in rows:
@@ -135,7 +135,7 @@ def test_host_path_col_fast_vs_fallback(spark):
     the ENGINE's, not parse_url's."""
     from pyspark.sql import functions as F
 
-    from python_crawler_spark.functions.urls import host_col, path_col
+    from python_crawler_spark.functions.urls import host_col, path_sql
 
     cases = {
         # url: (engine host, engine path) — try_parse_url nulls these
@@ -148,7 +148,7 @@ def test_host_path_col_fast_vs_fallback(spark):
     rows = df.select(
         "url",
         host_col(F.col("url")).alias("h"),
-        path_col(F.col("url")).alias("p"),
+        F.expr(path_sql("url")).alias("p"),
         F.try_parse_url(F.col("url"), F.lit("HOST")).alias("hr"),
     ).collect()
     for r in rows:
@@ -511,22 +511,6 @@ def test_one_range_schedule_runs_no_job(spark, job_ids):
     # a fetch log carries its round's host queues: they are replaced
     assert schedule(plan, n_salts=2, n_range_partitions=1).schema == plan.schema
     assert sorted(plan.select(cols).collect()) == sorted(want.select(cols).collect())
-
-
-@pytest.fixture
-def round_trips(monkeypatch):
-    """Counts py4j round trips: call it to read the count so far."""
-    from py4j.clientserver import ClientServerConnection
-
-    sent = [0]
-    send = ClientServerConnection.send_command
-
-    def counted(self, command):
-        sent[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    return lambda: sent[0]
 
 
 def test_order_expressions_take_few_round_trips(spark, round_trips):
