@@ -25,19 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.hashing import bucket_col
-from .functions.urls import canonicalize_split, host_col
 from .operators import gating
 from .operators.components import _rdd_ids as _persistent_rdd_ids
 from .operators.components import _unpersist as _unpersist_rdds
-from .operators.dedup import batch_first_occurrence, build_bloom_filters, dedup_against_seen
-from .operators.scheduler import (
-    PRIORITY_COLS,
-    SOURCE_RANK,
-    packed_dedup_order_col,
-    schedule,
-)
-from .parse.udfs import canonicalize_urls_udf
-from .plans.crawl import crawl_delay_col
+from .operators.dedup import build_bloom_filters, dedup_against_seen, frontier_first_occurrence
+from .operators.scheduler import schedule
+from .plans.crawl import crawl_delay_col, enrich_frontier
 
 N_BUCKETS = 64
 
@@ -115,26 +108,18 @@ def timed_schedule(
     """One timed pass of the scheduling pipeline over prepared state.
     Returns (seconds, scheduled_urls).
 
-    Shuffled rows are pruned to what the schedule needs (the string
+    The pass enriches with the crawl's ``enrich_frontier`` (URL key),
+    then prunes shuffled rows to what the schedule needs (the string
     key columns are dropped once key_hash exists — at 10^10 rows the
     difference is terabytes of shuffle)."""
     frontier, seen, filters, rules, filters_bytes = state
     if n_range_partitions is None:
         n_range_partitions = spark.sparkContext.defaultParallelism * 2
     t0 = time.time()
-    f = canonicalize_split(frontier, canonicalize_urls_udf)
-    f = f.withColumn("key_hash", F.xxhash64("canon_url")).drop("canon_url")
-    f = f.withColumn("bucket", bucket_col(F.col("key_hash"), N_BUCKETS))
-    f = f.withColumn(
-        "host", host_col(F.col("url"))
-    ).drop("title", "summary", "cover", "name")
-    f = gating.robots_gate(f, rules)
-    f = batch_first_occurrence(
-        f,
-        "key_hash",
-        ["source"] + PRIORITY_COLS[1:],
-        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
+    f = enrich_frontier(frontier, N_BUCKETS).drop(
+        "canon_url", "dedup_key", "title", "summary", "cover", "name"
     )
+    f = frontier_first_occurrence(gating.robots_gate(f, rules))
     new = dedup_against_seen(
         f, seen, filters, seen_unique=True, filters_total_bytes=filters_bytes
     )

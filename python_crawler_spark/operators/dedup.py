@@ -7,6 +7,7 @@ signature set (weixin_public.py:55) — with:
 
 1. batch_first_occurrence: within-batch first-occurrence-wins by the
    priority tuple (read-your-own-writes J6, two-phase step 1);
+   frontier_first_occurrence is its one frontier call;
 2. anti_join_seen: exact left-anti join against the historical seen
    table (step 2);
 3. per-bucket seen-set filters, built and probed with Arrow UDFs over
@@ -40,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import sql_ident
+from .scheduler import PRIORITY_COLS, SOURCE_RANK, packed_dedup_order_col
 
 MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 BLOOM_K = 7
@@ -75,6 +77,17 @@ def batch_first_occurrence(
     ordering = order_col if order_col is not None else struct(order_cols)
     winner = F.min_by(struct([c for c in cand.columns if c != key]), ordering).alias("_row")
     return cand.groupBy(key).agg(winner).select(key, "_row.*")
+
+
+def frontier_first_occurrence(cand: DataFrame) -> DataFrame:
+    """J6 step 1 for frontier rows, the one call of the crawl round, the
+    stream epoch and the bench pass: the first occurrence of each
+    ``key_hash`` by the dedup order tuple (source name, then the
+    within-source priority), packed into one BIGINT."""
+    return batch_first_occurrence(
+        cand, "key_hash", ["source"] + PRIORITY_COLS[1:],
+        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
+    )
 
 
 def anti_join_seen(cand: DataFrame, seen: DataFrame) -> DataFrame:

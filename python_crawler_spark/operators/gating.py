@@ -14,6 +14,13 @@ relation, so reading its rows starts no Spark job; a caller that gates
 many frames reads them once (``rules_by_kind``) and passes the rows.
 Each crawl gate is one filter over them, parsed from SQL text (no
 join).
+
+The two RFC 9309 gates (``robots_prefix`` and ``robots_wildcard``
+kinds, for rules tables of any size) share one longest-match builder,
+``_longest_match_gate``: a broadcast per-host rule array and one
+``array_max`` decision. They differ only in the pattern
+(``robots_like_sql`` translates wildcards to LIKE) and the match
+predicate.
 """
 
 from __future__ import annotations
@@ -136,14 +143,45 @@ def robots_gate(frontier: DataFrame, rules: DataFrame | Rules) -> DataFrame:
     ]))
 
 
+def _longest_match_gate(
+    frontier: DataFrame, rules: DataFrame, kind: str, pattern_sql: str, match_sql: str
+) -> DataFrame:
+    """The one RFC 9309 longest-match decision (J8): per host, the
+    longest matching rule by OCTET length of the pattern as written
+    (§2.2.2: UTF-8 bytes, not characters) wins, allow wins a length
+    tie, and no matching rule allows.
+
+    ``kind``'s rules collapse to one array row per host (collect_list
+    over the tiny rules table), broadcast-joined on host; each rule is
+    ``struct(l, allow, p)`` with ``p = pattern_sql`` over the rule's
+    ``pattern`` (a null action denies), so the decision is the
+    ``allow`` of ``array_max`` over the rules whose ``match_sql`` (over
+    ``_path`` and ``r.p``) holds: a codegen expression, the frontier
+    side never shuffled, windowed or grouped."""
+    per_host = F.broadcast(
+        rules.filter(f"kind = {sql_lit(kind)}")
+        .selectExpr(
+            "key AS _r_host",
+            "struct(octet_length(pattern) AS l, "
+            "CAST(coalesce(action = 'allow', false) AS INT) AS allow, "
+            f"{pattern_sql} AS p) AS _r",
+        )
+        .groupBy("_r_host")
+        .agg(F.expr("collect_list(_r) AS _rr"))
+    )
+    return (
+        frontier.withColumn("_path", F.expr(f"coalesce({path_sql('url')}, '/')"))
+        .join(per_host, F.col("host") == F.col("_r_host"), "left")
+        .filter(f"coalesce(array_max(filter(_rr, r -> {match_sql})).allow, 1) = 1")
+        .drop("_path", "_r_host", "_rr")
+    )
+
+
 def robots_prefix_gate(
     frontier: DataFrame, rules: DataFrame, kind: str = "robots_prefix"
 ) -> DataFrame:
-    """J8, RFC 9309 longest-match semantics — LITERAL PREFIXES ONLY:
-    per host, allow/deny PATH prefix rules; the longest matching prefix
-    wins (most-specific = OCTET length, RFC 9309 §2.2.2 — UTF-8 bytes,
-    not characters); on a length tie allow wins; no matching rule ->
-    allow.
+    """J8, RFC 9309 longest match over LITERAL PATH PREFIXES
+    (:func:`_longest_match_gate`).
 
     Restrictions rule authors must know (ADVICE r2): patterns are
     matched as literal path prefixes — the RFC's `*` wildcard and `$`
@@ -152,36 +190,8 @@ def robots_prefix_gate(
     it is compared verbatim); and matching is against the URL PATH
     only, so rules that target the query string do not apply. Rules
     using `*`/`$` belong in :func:`robots_wildcard_gate`; query-string
-    or free-form rules in the regex-based :func:`robots_gate`.
-
-    Scale shape: rules collapse to ONE array row per host
-    (collect_list over the tiny rules table), broadcast-joined on
-    host; the longest-match decision is a pure codegen expression
-    (filter + array_max over the struct array) — the frontier side is
-    never shuffled, windowed, or grouped."""
-    per_host = F.broadcast(
-        rules.filter(F.col("kind") == kind)
-        .groupBy(F.col("key").alias("_r_host"))
-        .agg(
-            F.collect_list(
-                F.struct(F.col("pattern").alias("p"), F.col("action").alias("a"))
-            ).alias("_rr")
-        )
-    )
-    path = F.expr(f"coalesce({path_sql('url')}, '/')")
-    joined = frontier.join(per_host, F.col("host") == F.col("_r_host"), "left")
-    matched = F.filter("_rr", lambda r: F.startswith(path, r["p"]))
-    best = F.array_max(
-        F.transform(
-            matched,
-            lambda r: F.struct(
-                F.octet_length(r["p"]).alias("l"),
-                (r["a"] == F.lit("allow")).cast("int").alias("allow"),
-            ),
-        )
-    )
-    allowed = best.isNull() | (best["allow"] == 1)
-    return joined.filter(allowed).drop("_r_host", "_rr")
+    or free-form rules in the regex-based :func:`robots_gate`."""
+    return _longest_match_gate(frontier, rules, kind, "pattern", "startswith(_path, r.p)")
 
 
 # LIKE escape char for robots_wildcard_gate: never occurs in a URL path
@@ -191,8 +201,8 @@ _LIKE_ESC = "\x01"
 
 def robots_wildcard_pattern_to_like(pattern: str) -> tuple[str, bool]:
     """Scalar reference translation of an RFC 9309 rule pattern to a
-    SQL LIKE pattern (shared by the oracle SQL generator and the
-    Spark-side translation's parity test). Returns (like_pattern,
+    SQL LIKE pattern (the oracle SQL generator uses it; the parity test
+    pins :func:`robots_like_sql` to it). Returns (like_pattern,
     anchored). Rules: LIKE metachars %/_ and the escape char are
     escaped; `*` becomes `%`; one TRAILING `$` anchors at end-of-path
     (dropped, no trailing `%`); a `$` anywhere else is literal
@@ -208,63 +218,40 @@ def robots_wildcard_pattern_to_like(pattern: str) -> tuple[str, bool]:
     return (core if anchored else core + "%"), anchored
 
 
+def robots_like_sql(pattern: str) -> str:
+    """The engine's translation of the rule pattern column ``pattern``
+    to a SQL LIKE pattern, as SQL text: the same rules as
+    :func:`robots_wildcard_pattern_to_like`."""
+    def core(p: str) -> str:
+        for old, new in ((_LIKE_ESC, _LIKE_ESC * 2), ("%", _LIKE_ESC + "%"),
+                         ("_", _LIKE_ESC + "_"), ("*", "%")):
+            p = f"replace({p}, {sql_lit(old)}, {sql_lit(new)})"
+        return p
+
+    return (
+        f"CASE WHEN endswith({pattern}, '$') "
+        f"THEN {core(f'substr({pattern}, 1, length({pattern}) - 1)')} "
+        f"ELSE concat({core(pattern)}, '%') END"
+    )
+
+
 def robots_wildcard_gate(
     frontier: DataFrame, rules: DataFrame, kind: str = "robots_wildcard"
 ) -> DataFrame:
     """J8, full RFC 9309 §2.2.3 special characters — the gate
     robots_prefix_gate's docstring points wildcard rules at: `*`
     matches any run of characters, a trailing `$` anchors the rule at
-    end-of-path, everything else is literal. Longest-PATTERN match
-    wins (§2.2.2 most-specific = OCTET length of the rule — UTF-8
-    bytes, not characters, so non-ASCII patterns rank by encoded size —
-    wildcards counted as written), allow wins length ties, no matching
-    rule -> allow.
+    end-of-path, everything else is literal; longest match as in
+    :func:`_longest_match_gate`, wildcards counted as written.
 
-    Scale shape: identical to robots_prefix_gate — rules translate to
-    SQL LIKE patterns ONCE on the tiny rules side (regexp-free string
-    replaces), collapse to one broadcast array row per host, and the
-    per-row decision is filter + array_max codegen over that array;
-    the frontier is never shuffled. LIKE with a per-rule pattern
-    column compiles per (row x matching-host rule), but only hosts
-    that publish wildcard rules pay it."""
-    esc2 = _LIKE_ESC + _LIKE_ESC
-    p = F.col("pattern")
-    anchored = p.endswith("$")
-    core = F.when(anchored, p.substr(F.lit(1), F.length(p) - 1)).otherwise(p)
-    core = F.replace(
-        F.replace(
-            F.replace(core, F.lit(_LIKE_ESC), F.lit(esc2)),
-            F.lit("%"),
-            F.lit(_LIKE_ESC + "%"),
-        ),
-        F.lit("_"),
-        F.lit(_LIKE_ESC + "_"),
+    Each rule translates to a SQL LIKE pattern once, on the tiny rules
+    side (:func:`robots_like_sql`). LIKE with a per-rule pattern
+    compiles per (row x matching-host rule), but only hosts that
+    publish wildcard rules pay it."""
+    return _longest_match_gate(
+        frontier, rules, kind, robots_like_sql("pattern"),
+        f"_path LIKE r.p ESCAPE {sql_lit(_LIKE_ESC)}",
     )
-    core = F.replace(core, F.lit("*"), F.lit("%"))
-    like_pat = F.when(anchored, core).otherwise(F.concat(core, F.lit("%")))
-    per_host = F.broadcast(
-        rules.filter(F.col("kind") == kind)
-        .select(
-            F.col("key").alias("_r_host"),
-            F.struct(
-                like_pat.alias("lp"),
-                F.octet_length(p).alias("l"),
-                (F.col("action") == F.lit("allow")).cast("int").alias("allow"),
-            ).alias("_r"),
-        )
-        .groupBy("_r_host")
-        .agg(F.collect_list("_r").alias("_rr"))
-    )
-    path = F.expr(f"coalesce({path_sql('url')}, '/')")
-    joined = frontier.join(per_host, F.col("host") == F.col("_r_host"), "left")
-    matched = F.filter("_rr", lambda r: F.like(path, r["lp"], F.lit(_LIKE_ESC)))
-    best = F.array_max(
-        F.transform(
-            matched, lambda r: F.struct(r["l"].alias("l"), r["allow"].alias("allow"))
-        )
-    )
-    allowed = best.isNull() | (best["allow"] == 1)
-    return joined.filter(allowed).drop("_r_host", "_rr")
 
 
 def pic_sig_gate(imgs: DataFrame, rules: DataFrame | Rules) -> DataFrame:

@@ -59,21 +59,19 @@ from ..operators.dedup import (
     batch_first_occurrence,
     build_bloom_filters,
     dedup_against_seen,
+    frontier_first_occurrence,
 )
 from ..operators.components import _rdd_ids as _persistent_rdd_ids
 from ..operators.components import _unpersist as _unpersist_rdds
 from ..operators.multimodal import fetch_and_decode_images, with_rehost_id
 from ..operators.scheduler import (
-    PRIORITY_COLS,
     PRIORITY_WIDTHS,
-    SOURCE_RANK,
     STAGE_CHILD,
     STAGE_LIST,
     STAGE_ROOT,
     _case_source,
     host_queues,
     pack_order,
-    packed_dedup_order_col,
     range_count,
     schedule,
 )
@@ -537,12 +535,7 @@ class CrawlRun:
         probe, the Bloom one built from this seen set in this round."""
         cand = self._enrich(frontier)
         cand = gating.robots_gate(cand, self.rules)  # J8
-        cand = batch_first_occurrence(  # J6 step 1: first-occurrence-wins
-            cand,
-            "key_hash",
-            ["source"] + PRIORITY_COLS[1:],
-            order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
-        )
+        cand = frontier_first_occurrence(cand)  # J6 step 1
         if self.n_fetched * SEEN_ROW_BYTES <= _broadcast_threshold(self.spark):
             return cand.join(F.broadcast(self.seen.select("key_hash")), "key_hash", "left_anti")
         if self.filter_family == "none":
@@ -612,7 +605,18 @@ class CrawlRun:
     def run(self) -> dict[str, DataFrame]:
         """The round loop, from the resumed frontier when ``resume``
         restored one, else from the seeds. Each round's size comes from
-        the observation on the checkpoint that materializes it."""
+        the observation on the checkpoint that materializes it. A run
+        that would commit a round at or below the store's latest
+        committed round raises before any job: a fresh run over a used
+        store would overwrite its rounds and leave the later ones in
+        place (``resume`` continues a store instead)."""
+        last = self.store.latest_round() if self.store is not None else None
+        if last is not None and self.round <= last:
+            raise ValueError(
+                f"snapshot store {self.store.root} holds committed rounds up to "
+                f"round={last}; a run starting at round={self.round} would overwrite "
+                "them (resume the store, or use an empty one)"
+            )
         frontier, counts = self._start_frontier or _observed_checkpoint(
             self.initial_frontier(), frontier_out=F.count(F.lit(1))
         )
@@ -644,9 +648,10 @@ class CrawlRun:
         """Resume from the latest committed snapshot (O11): identical
         final state to an uninterrupted run (tested). The pages and
         images of every committed round are verified and read, the
-        tables are re-derived from the pages, and the start frontier is
-        ``_expand`` of the last round's pages, and ``n_fetched`` is summed
-        from the manifests, so the next round probes the restored seen
+        tables are re-derived from the pages, the start frontier is
+        ``_expand`` of the last round's pages, ``metrics`` holds each
+        committed round's manifest entry and ``n_fetched`` is summed
+        from them, so the next round probes the restored seen
         set as an uninterrupted round would: one broadcast anti-join
         while it fits the threshold, else the next round builds its
         prefilter from the restored seen set. A fresh run when nothing
@@ -668,7 +673,8 @@ class CrawlRun:
                                  f"resumed with n_buckets={run.cfg.n_buckets}")
             store.verify_round(spark, r)  # per-partition lineage gate
         run.round = last + 1
-        run.n_fetched = sum(store.manifest(r)["metrics"]["fetched"] for r in rounds)
+        run.metrics = [store.manifest(r)["metrics"] for r in rounds]
+        run.n_fetched = sum(m["fetched"] for m in run.metrics)
 
         pages = [store.read(spark, r, "pages") for r in rounds]
         images = [store.read(spark, r, "images") for r in rounds]  # stored decoded

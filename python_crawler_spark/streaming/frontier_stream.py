@@ -174,14 +174,11 @@ def run_micro_batches(
     understood. host_rank/host_scheduled_at stay per-batch (a host's
     polite queue is re-planned every batch anyway; carrying it would
     pin dead hosts in state forever)."""
-    from ..operators.dedup import batch_first_occurrence
+    from ..operators.dedup import frontier_first_occurrence
     from ..operators.scheduler import (
-        PRIORITY_COLS,
         PRIORITY_WIDTHS,
-        SOURCE_RANK,
         _case_source,
         pack_order_sql,
-        packed_dedup_order_col,
         range_count,
         schedule,
     )
@@ -203,12 +200,7 @@ def run_micro_batches(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        cand = batch_first_occurrence(
-            batch_df,
-            "key_hash",
-            ["source"] + PRIORITY_COLS[1:],
-            order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
-        )
+        cand = frontier_first_occurrence(batch_df)
         prior = _prior_plans(spark, out_dir, epoch_id)
         marks = (
             seen.select("key_hash", F.lit(True).alias("_seen"))

@@ -248,11 +248,12 @@ def test_wildcard_most_specific_is_octets_not_chars(spark):
 
 
 def test_wildcard_translation_parity(spark):
-    """The Spark-side rule translation (replace chain) must equal the
-    scalar reference robots_wildcard_pattern_to_like on every pattern
-    shape — the oracle SQL is generated with the scalar version."""
+    """The engine's SQL-text rule translation (robots_like_sql, the one
+    robots_wildcard_gate runs) must equal the scalar reference
+    robots_wildcard_pattern_to_like on every pattern shape — the oracle
+    SQL is generated with the scalar version."""
     from python_crawler_spark.operators.gating import (
-        _LIKE_ESC,
+        robots_like_sql,
         robots_wildcard_pattern_to_like,
     )
 
@@ -263,19 +264,7 @@ def test_wildcard_translation_parity(spark):
     rdf = spark.createDataFrame(
         [("robots_wildcard", "h.com", p, "deny") for p in pats], RULES_SCHEMA
     )
-    p = F.col("pattern")
-    anchored = p.endswith("$")
-    core = F.when(anchored, p.substr(F.lit(1), F.length(p) - 1)).otherwise(p)
-    esc2 = _LIKE_ESC + _LIKE_ESC
-    core = F.replace(
-        F.replace(
-            F.replace(core, F.lit(_LIKE_ESC), F.lit(esc2)),
-            F.lit("%"), F.lit(_LIKE_ESC + "%"),
-        ),
-        F.lit("_"), F.lit(_LIKE_ESC + "_"),
-    )
-    core = F.replace(core, F.lit("*"), F.lit("%"))
-    like_pat = F.when(anchored, core).otherwise(F.concat(core, F.lit("%")))
-    got = {r["pattern"]: r["lp"] for r in rdf.select("pattern", like_pat.alias("lp")).collect()}
+    lp = rdf.selectExpr("pattern", f"{robots_like_sql('pattern')} AS lp")
+    got = {r["pattern"]: r["lp"] for r in lp.collect()}
     for pat in pats:
         assert got[pat] == robots_wildcard_pattern_to_like(pat)[0], pat

@@ -93,11 +93,24 @@ def test_results_start_no_job(full, job_ids):
 
 
 def test_resume_sums_fetched_from_manifests(spark, tmp_path, full, two_rounds):
-    """A resumed run counts the committed rounds' fetches from their
-    manifests; its metrics still hold only the rounds it runs."""
+    """A resumed run restores the committed rounds' metrics from their
+    manifests and counts their fetches from them."""
     resumed = CrawlRun.resume(spark, _copy_store(two_rounds, tmp_path), CFG)
-    assert resumed.metrics == []
+    assert resumed.metrics == full[0].metrics[:2]
     assert resumed.n_fetched == sum(m["fetched"] for m in full[0].metrics[:2])
+
+
+def test_fresh_run_refuses_a_used_store(spark, tmp_path, two_rounds):
+    """A fresh run over a store with committed rounds raises, naming
+    the latest one, and leaves every manifest as it was: it would
+    otherwise rewrite round 0 and keep round 1 beside it."""
+    store = _copy_store(two_rounds, tmp_path)
+    manifests = {p: p.read_text() for p in store.root.glob("round=*/manifest.json")}
+    assert len(manifests) == 2
+    cfg = CrawlConfig(spec=SPEC, n_buckets=8, seed_limit=2, max_rounds=1)
+    with pytest.raises(ValueError, match=r"round=1\b"):
+        CrawlRun(spark, cfg, store=store).run()
+    assert {p: p.read_text() for p in store.root.glob("round=*/manifest.json")} == manifests
 
 
 def test_resume_after_crash_before_manifest(spark, tmp_path, full):

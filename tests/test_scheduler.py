@@ -520,12 +520,8 @@ def test_order_expressions_take_few_round_trips(spark, round_trips):
     bounded number of py4j round trips (776, 2,541 and about 400 on
     the enriched stream frame when the expressions were built one
     Column op at a time)."""
-    from python_crawler_spark.operators.dedup import batch_first_occurrence
-    from python_crawler_spark.operators.scheduler import (
-        PRIORITY_COLS,
-        packed_dedup_order_col,
-        packed_priority_col,
-    )
+    from python_crawler_spark.operators.dedup import frontier_first_occurrence
+    from python_crawler_spark.operators.scheduler import packed_priority_col
     from python_crawler_spark.streaming.frontier_stream import (
         STREAM_SCHEMA,
         streaming_enrich,
@@ -540,10 +536,5 @@ def test_order_expressions_take_few_round_trips(spark, round_trips):
     assert round_trips() - start <= 600
     enriched = streaming_enrich(spark.createDataFrame([], STREAM_SCHEMA), 8)
     start = round_trips()
-    batch_first_occurrence(
-        enriched,
-        "key_hash",
-        ["source"] + PRIORITY_COLS[1:],
-        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
-    )
+    frontier_first_occurrence(enriched)
     assert round_trips() - start <= 60

@@ -324,15 +324,10 @@ def test_later_epoch_duplicates_are_not_rescheduled(spark, tmp_path):
     epochs' concatenated plans equal one batch schedule() of both
     files, as the batch round's seen set grows with each round."""
     from python_crawler_spark.operators.dedup import (
-        batch_first_occurrence,
         dedup_against_seen,
+        frontier_first_occurrence,
     )
-    from python_crawler_spark.operators.scheduler import (
-        PRIORITY_COLS,
-        SOURCE_RANK,
-        packed_dedup_order_col,
-        schedule,
-    )
+    from python_crawler_spark.operators.scheduler import schedule
 
     drop, out, ckpt = tmp_path / "d_drop", tmp_path / "d_out", tmp_path / "d_ckpt"
     # file 2 repeats 10 URLs of file 1 at later priorities, then adds
@@ -349,10 +344,7 @@ def test_later_epoch_duplicates_are_not_rescheduled(spark, tmp_path):
     assert {r["epoch"] for r in emitted.select("epoch").distinct().collect()} == {0, 1}
 
     rows = streaming_enrich(spark.read.schema(STREAM_SCHEMA).parquet(str(drop)), n_buckets=8)
-    cand = batch_first_occurrence(
-        rows, "key_hash", ["source"] + PRIORITY_COLS[1:],
-        order_col=packed_dedup_order_col(sorted(SOURCE_RANK)),
-    )
+    cand = frontier_first_occurrence(rows)
     seen = spark.createDataFrame([], "key_hash long")
     batch = schedule(dedup_against_seen(cand, seen, None))
 
