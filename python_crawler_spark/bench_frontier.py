@@ -82,7 +82,7 @@ def pre_seen(spark: SparkSession, n: int, frac: float = 0.05) -> DataFrame:
     ).withColumn("bucket", bucket_col(F.col("key_hash"), N_BUCKETS))
 
 
-def prepare_state(spark: SparkSession, n: int, use_bloom: bool = True):
+def prepare_state(spark: SparkSession, n: int):
     """Materialize the benchmark's input + state once: the frontier
     candidates, the historical seen set, its Bloom filters, the rules
     table. State is maintained incrementally across rounds in
@@ -91,11 +91,8 @@ def prepare_state(spark: SparkSession, n: int, use_bloom: bool = True):
     frontier = synthetic_frontier(spark, n).localCheckpoint(eager=True)
     seen = pre_seen(spark, n).localCheckpoint(eager=True)
     rules = gating.rules_df(spark)
-    filters = None
-    filters_bytes = 0
-    if use_bloom:
-        filters = build_bloom_filters(seen).localCheckpoint(eager=True)
-        filters_bytes = int(filters.agg(F.sum(F.expr("m_bits / 8"))).first()[0] or 0)
+    filters = build_bloom_filters(seen).localCheckpoint(eager=True)
+    filters_bytes = int(filters.agg(F.sum(F.expr("m_bits / 8"))).first()[0] or 0)
     return frontier, seen, filters, rules, filters_bytes
 
 
@@ -153,12 +150,11 @@ def timed_schedule(
 def run_schedule_pipeline(
     spark: SparkSession,
     n: int,
-    use_bloom: bool = True,
     n_salts: int = 32,
     n_range_partitions: int | None = None,
 ) -> tuple[float, int, int]:
     """Convenience: prepare state and run one timed pass.
     Returns (seconds, input_urls, scheduled_urls)."""
-    state = prepare_state(spark, n, use_bloom)
+    state = prepare_state(spark, n)
     dt, scheduled = timed_schedule(spark, state, n_salts, n_range_partitions)
     return dt, n, scheduled

@@ -1,22 +1,22 @@
-"""Image kernels: PNG codec, deterministic lossy codec, phash64, PSNR,
+"""Image kernels: PNG codec, image decode dispatch, phash64, PSNR,
 size classes.
 
-The lossless path is REAL PNG (round 4 — formerly a stub): a pure
-numpy + stdlib-zlib implementation of the public PNG specification
-(RFC 2083 / W3C PNG): chunked container with CRC32, zlib-compressed
-scanlines, all five line filters (None/Sub/Up/Average/Paeth) on
-decode, 8-bit gray/RGB/RGBA color types. The pipeline's ``fmt='png'``
-images are genuine PNG bytes any external tool can open. The lossy
-path is REAL baseline JPEG too (round 4, functions/jpeg.py — pure
-numpy T.81: DCT + Annex-K quant/Huffman on encode; full baseline
-decode incl. subsampling and restart intervals):
+The wire formats are exactly the reference's, JPEG/PNG/GIF
+(weixin_public.py:315-321), and each has one real decoder behind
+:func:`decode_image`:
 
-- ``fmt='png'``  -> real PNG: exact roundtrip (encoder emits filter 0;
-  decoder handles all filters, so foreign PNGs decode too).
-- ``fmt='jpeg'`` -> real JFIF JPEG at quality 100 (all-ones quant
-  tables): loss is DCT/chroma float rounding only, PSNR >> the 40 dB
-  invariant from BASELINE.json::input_hint. Legacy PCS1 lossy blobs
-  (pre-round-4 snapshots) still decode via the PCS1 branch.
+- ``fmt='png'`` -> real PNG: a pure numpy + stdlib-zlib
+  implementation of the public PNG specification (RFC 2083 / W3C
+  PNG): chunked container with CRC32, zlib-compressed scanlines, all
+  five line filters (None/Sub/Up/Average/Paeth) and Adam7 on decode,
+  8-bit gray/RGB/RGBA color types. The encoder emits filter 0, so the
+  roundtrip is exact; foreign PNGs decode too.
+- ``fmt='jpeg'`` -> real JFIF JPEG (functions/jpeg.py, pure numpy
+  T.81), encoded at quality 100 (all-ones quant tables): loss is
+  DCT/chroma float rounding only, PSNR >> the 40 dB invariant from
+  BASELINE.json::input_hint. Baseline, multi-scan and progressive
+  files share one scan decoder.
+- ``fmt='gif'`` -> functions/gif.py (LZW + palettes + interlace).
 
 All kernels are numpy-vectorized and wrapped by Arrow pandas UDFs in
 operators/multimodal.py — no per-row Python in the data plane.
@@ -35,10 +35,6 @@ import numpy as np
 
 from . import jpeg as JPEG
 
-MAGIC = b"PCS1"
-MODE_LOSSLESS = 0
-MODE_LOSSY = 1
-LOSSY_Q = 6  # quantization step; MSE ~ Q^2/12 = 3 -> PSNR ~ 43 dB
 JPEG_QUALITY = 100  # all-ones quant tables: loss = rounding only
 SMALL_IMAGE_MAX_BYTES = 2800  # weixin_public.py:324 boundary, inclusive
 
@@ -66,33 +62,6 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
     if fmt != "jpeg":
         raise ValueError(f"unknown fmt {fmt!r}")
     return JPEG.encode_jpeg(pixels, quality=JPEG_QUALITY)
-
-
-def encode_pcs1_lossy(pixels: np.ndarray) -> bytes:
-    """Legacy deterministic lossy container (uniform quantization +
-    zlib). Kept for decode compatibility with pre-round-4 snapshots;
-    the pipeline now encodes real JPEG."""
-    h, w = pixels.shape[:2]
-    payload = (pixels // LOSSY_Q).astype(np.uint8).tobytes()
-    header = MAGIC + bytes([MODE_LOSSY]) + w.to_bytes(2, "big") + h.to_bytes(2, "big")
-    return header + zlib.compress(payload, 6)
-
-
-def decode_image(data: bytes) -> tuple[int, int, str, np.ndarray]:
-    """Decode image bytes -> (w, h, fmt, (h,w,3) uint8 pixels).
-    Dispatches on signature: PCS1 (the legacy lossy container) here,
-    everything else to decode_standard (real PNG/JPEG/GIF)."""
-    if data[:4] != MAGIC:
-        return decode_standard(data)
-    mode = data[4]
-    w = int.from_bytes(data[5:7], "big")
-    h = int.from_bytes(data[7:9], "big")
-    raw = np.frombuffer(zlib.decompress(data[9:]), dtype=np.uint8).reshape(h, w, 3)
-    if mode == MODE_LOSSLESS:
-        return w, h, "png", raw.copy()
-    # dequantize to bin centers, clip to valid range
-    px = np.minimum(raw.astype(np.int32) * LOSSY_Q + LOSSY_Q // 2, 255).astype(np.uint8)
-    return w, h, "jpeg", px
 
 
 # ------------------------------------------------------------- real PNG
@@ -275,14 +244,12 @@ def decode_png(data: bytes) -> tuple[int, int, str, np.ndarray]:
     return w, h, "png", px
 
 
-def decode_standard(data: bytes) -> tuple[int, int, str, np.ndarray]:
-    """Standard formats by signature — all real as of round 4 (the
-    reference's wire formats are exactly JPEG/PNG/GIF,
-    weixin_public.py:315-321): PNG via :func:`decode_png` (numpy +
-    zlib), JPEG via functions/jpeg.decode_jpeg (numpy-only T.81:
-    Huffman + dequant + batched IDCT, subsampling, restart intervals,
-    grayscale, and — round 5 — progressive/SOF2 and sequential
-    multi-scan via functions/jpeg_progressive.py), GIF via
+def decode_image(data: bytes) -> tuple[int, int, str, np.ndarray]:
+    """Decode image bytes -> (w, h, fmt, (h,w,3) uint8 pixels),
+    dispatching on the signature: PNG via :func:`decode_png` (numpy +
+    zlib), JPEG via functions/jpeg.decode_jpeg (numpy-only T.81: one
+    scan decoder for baseline, multi-scan and progressive files,
+    subsampling, restart intervals, grayscale), GIF via
     functions/gif.decode_gif (LZW + palettes + interlace; first frame
     here, full animation via functions/gif.decode_gif_frames)."""
     if data[:8] == _PNG_SIG:

@@ -1,8 +1,10 @@
-"""Baseline JPEG codec — pure numpy + stdlib, public ITU T.81 spec.
+"""JPEG codec — pure numpy + stdlib, public ITU T.81 spec.
 
 Closes the last image-codec seam (rounds 1-3 documented JPEG as the
 one format needing turbojpeg/PIL). This is a from-scratch
-implementation of baseline sequential DCT JPEG (JFIF container):
+implementation of the baseline sequential DCT encoder and of the one
+JPEG decoder (JFIF container); the progressive and multi-scan
+encoders live in functions/jpeg_progressive.py:
 
 - **encode_jpeg**: RGB -> YCbCr (JFIF/BT.601) -> optional 4:2:0 chroma
   downsample -> 8x8 forward DCT (one einsum over all blocks) ->
@@ -10,13 +12,16 @@ implementation of baseline sequential DCT JPEG (JFIF container):
   zigzag -> DC-differential + AC run-length -> Annex-K Huffman tables
   -> byte-stuffed entropy stream. Emits SOI/APP0/DQT/SOF0/DHT/SOS/EOI.
 - **decode_jpeg**: marker parse (DQT 8/16-bit, multi-table DHT, DRI
-  restart intervals, SOF0/SOF1), canonical-Huffman 16-bit-peek lookup
-  decode, dequantize + inverse zigzag, batched IDCT, per-component
-  h/v upsampling (any 1-2 sampling factors, so foreign 4:2:0 / 4:2:2
-  files decode, not just this encoder's output), YCbCr -> RGB.
-  Progressive (SOF2) and sequential multi-scan files route through
-  functions/jpeg_progressive.py (round 5); arithmetic coding,
-  lossless, and hierarchical modes raise with a clear message.
+  restart intervals, 0xFF fill bytes, SOF0/SOF1/SOF2), then ONE scan
+  decoder for every layout — the Annex G progressive decoder
+  (spectral selection, successive approximation, EOBRUN), of which a
+  sequential scan is the Ss=0, Se=63, Ah=Al=0 case — with
+  canonical-Huffman 16-bit-peek lookup, then dequantize + inverse
+  zigzag, batched IDCT, per-component h/v upsampling (any 1-2
+  sampling factors, so foreign 4:2:0 / 4:2:2 files decode, not just
+  this encoder's output), YCbCr -> RGB. Arithmetic coding, lossless,
+  hierarchical modes and frames of other than 1 or 3 components raise
+  NotImplementedError with a clear message.
 
 Everything here derives from the public JPEG standard (ITU-T T.81 /
 ISO 10918-1: Annex K tables, Annex C canonical Huffman, Annex F
@@ -398,7 +403,7 @@ def encode_jpeg_gray(pixels: np.ndarray, quality: int = 100) -> bytes:
 
 class _HuffLookup:
     """16-bit-peek canonical Huffman lookup (T.81 Annex C codes):
-    table[peek16] = (symbol, code_length)."""
+    table[next 16 bits] = (symbol, code_length)."""
 
     def __init__(self, bits: list[int], vals: list[int]) -> None:
         self.sym = np.zeros(1 << 16, dtype=np.int16)
@@ -433,22 +438,26 @@ class _BitReader:
                 self.acc <<= 8  # zero-pad past the end (T.81 tolerates)
             self.nbits += 8
 
-    def peek16(self) -> int:
+    def symbol(self, lk: _HuffLookup) -> int:
+        """One Huffman-coded symbol."""
         if self.nbits < 16:
             self._fill()
-        return (self.acc >> (self.nbits - 16)) & 0xFFFF
-
-    def skip(self, n: int) -> None:
-        self.nbits -= n
+        peek = (self.acc >> (self.nbits - 16)) & 0xFFFF
+        ln = int(lk.len[peek])
+        if ln == 0:
+            raise ValueError("invalid JPEG: bad Huffman code")
+        self.nbits -= ln
         self.acc &= (1 << self.nbits) - 1
+        return int(lk.sym[peek])
 
     def take(self, n: int) -> int:
         if n == 0:
             return 0
         if self.nbits < n:
             self._fill()
-        v = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.skip(n)
+        self.nbits -= n
+        v = self.acc >> self.nbits
+        self.acc &= (1 << self.nbits) - 1
         return v
 
 
@@ -460,14 +469,18 @@ def _extend(v: int, s: int) -> int:
 def decode_jpeg(data: bytes) -> tuple[int, int, str, np.ndarray]:
     """JPEG bytes -> (w, h, 'jpeg', (h, w, 3) uint8 RGB).
 
-    Handles SOF0/SOF1 baseline (single interleaved scan fast path and
-    multi-scan non-interleaved files) AND SOF2 progressive (spectral
-    selection + successive approximation, EOBRUN, per-scan DHT
-    redefinition — see functions/jpeg_progressive.py), 8- and 16-bit
-    DQT, multiple tables per DHT segment, DRI/RSTn restart intervals,
-    sampling factors 1-2 in each axis per component, grayscale
-    (1-component) files. Raises NotImplementedError for arithmetic
-    coding, lossless, and hierarchical modes."""
+    Every layout decodes the same way: the marker walk collects each
+    scan with the DHT tables and restart interval in force at its SOS,
+    and at EOI :func:`decode_scans` runs them through the T.81 Annex G
+    scan decoder (a sequential scan is its Ss=0, Se=63, Ah=Al=0 case,
+    whatever its SOS header says, as in libjpeg) before
+    :func:`_reconstruct`. Handles SOF0/SOF1 sequential files (one
+    interleaved scan or one scan per component) and SOF2
+    progressive ones, 8- and 16-bit DQT, several tables per DHT
+    segment, DRI/RSTn restart intervals, 0xFF fill bytes before any
+    marker (T.81 B.1.1.2), sampling factors 1-2 per axis, and 1- or
+    3-component frames. Raises NotImplementedError for other component
+    counts and for arithmetic coding, lossless and hierarchical modes."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: missing SOI")
     pos = 2
@@ -475,16 +488,19 @@ def decode_jpeg(data: bytes) -> tuple[int, int, str, np.ndarray]:
     huff: dict[tuple[int, int], _HuffLookup] = {}
     restart_interval = 0
     frame = None
-    multi_scans: list[dict] = []
+    scans: list[dict] = []
     while pos < len(data):
         if data[pos] != 0xFF:
             pos += 1
             continue
         marker = data[pos + 1]
+        if marker == 0xFF:  # fill byte: the marker starts at the next 0xFF
+            pos += 1
+            continue
         pos += 2
-        if marker == 0xD9 and multi_scans:  # EOI after accumulated scans
+        if marker == 0xD9:  # EOI
             break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD9:
+        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
             continue  # standalone
         ln = int.from_bytes(data[pos : pos + 2], "big")
         body = data[pos + 2 : pos + ln]
@@ -514,18 +530,23 @@ def decode_jpeg(data: bytes) -> tuple[int, int, str, np.ndarray]:
                 i += 17 + n
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[0:2], "big")
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 baseline, SOF2 progressive
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 sequential, SOF2 progressive
             prec = body[0]
             if prec != 8:
                 raise NotImplementedError(f"JPEG sample precision {prec} (8 only)")
-            fh = int.from_bytes(body[1:3], "big")
-            fw = int.from_bytes(body[3:5], "big")
             nf = body[5]
+            if nf not in (1, 3):
+                raise NotImplementedError(f"{nf}-component JPEG (1 or 3 only)")
             comps = []
             for c in range(nf):
                 cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
                 comps.append({"id": cid, "h": samp >> 4, "v": samp & 0xF, "tq": tq})
-            frame = {"h": fh, "w": fw, "comps": comps, "progressive": marker == 0xC2}
+            frame = {
+                "h": int.from_bytes(body[1:3], "big"),
+                "w": int.from_bytes(body[3:5], "big"),
+                "comps": comps,
+                "progressive": marker == 0xC2,
+            }
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 f"JPEG SOF marker 0xFF{marker:02X} (arithmetic/lossless/"
@@ -539,30 +560,21 @@ def decode_jpeg(data: bytes) -> tuple[int, int, str, np.ndarray]:
             for c in range(ns):
                 cs, tables = body[1 + 2 * c], body[2 + 2 * c]
                 scan.append({"id": cs, "dc": tables >> 4, "ac": tables & 0xF})
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            # entropy segment runs to the next non-RST marker
+            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+            if not frame["progressive"]:
+                # a sequential scan is always Ss=0, Se=63, Ah=Al=0; like
+                # libjpeg, ignore the header, which some baseline
+                # encoders fill with zeroes
+                ss, se, ahal = 0, 63, 0
+            # the entropy data runs to the next marker that is neither
+            # RSTn nor a fill byte
             end = pos
             while end < len(data) - 1:
-                if data[end] == 0xFF and data[end + 1] not in (0x00,) and not (
-                    0xD0 <= data[end + 1] <= 0xD7
-                ):
+                nxt = data[end + 1]
+                if data[end] == 0xFF and nxt not in (0x00, 0xFF) and not 0xD0 <= nxt <= 0xD7:
                     break
                 end += 1
-            entropy = data[pos:end]
-            pos = end
-            if (
-                not frame.get("progressive")
-                and not multi_scans
-                and len(scan) == len(frame["comps"])
-            ):
-                # baseline single interleaved scan: original fast path
-                return _decode_scan(frame, scan, qtabs, huff, restart_interval, entropy)
-            # progressive, or sequential one-scan-per-component: the
-            # scan only PARTIALLY populates the coefficient planes —
-            # accumulate every scan (with the DHT tables and restart
-            # interval in effect at ITS header), decode after EOI
-            multi_scans.append(
+            scans.append(
                 {
                     "comps": scan,
                     "ss": ss,
@@ -571,15 +583,13 @@ def decode_jpeg(data: bytes) -> tuple[int, int, str, np.ndarray]:
                     "al": ahal & 0xF,
                     "huff": dict(huff),
                     "restart_interval": restart_interval,
-                    "entropy": entropy,
+                    "entropy": data[pos:end],
                 }
             )
-    if multi_scans:
-        from .jpeg_progressive import decode_scans
-
-        planes = decode_scans(frame, multi_scans)
-        return _reconstruct(frame, planes, qtabs)
-    raise ValueError("JPEG truncated: no SOS scan found")
+            pos = end
+    if not scans:
+        raise ValueError("JPEG truncated: no SOS scan found")
+    return _reconstruct(frame, decode_scans(frame, scans), qtabs)
 
 
 def _split_restarts(entropy: bytes) -> list[bytes]:
@@ -599,29 +609,212 @@ def _split_restarts(entropy: bytes) -> list[bytes]:
     return segments
 
 
-def _reconstruct(frame, planes: dict, qtabs: dict) -> tuple[int, int, str, np.ndarray]:
-    """Shared decode tail: per-component (n_blocks, 64) int32 zigzag
-    coefficient planes -> dequantize + inverse zigzag + batched IDCT +
-    chroma upsample + color transform."""
+def _geometry(frame) -> dict:
+    """Shared block-grid geometry: the coefficient planes are stored
+    MCU-grid padded (stride n_mcu_x * h blocks per row), but
+    NON-interleaved scans cover only ceil(comp_dim / 8) blocks
+    (T.81 A.2.2) — the padded tail blocks exist only for interleaved
+    traversal."""
     fh, fw, comps = frame["h"], frame["w"], frame["comps"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     n_mcu_x = -(-fw // (8 * hmax))
     n_mcu_y = -(-fh // (8 * vmax))
-    out_planes = []
+    geo = {}
     for c in comps:
-        q = qtabs[c["tq"]]
-        zz = planes[c["id"]]
-        coeffs = zz[:, UNZIGZAG].reshape(-1, 8, 8).astype(np.float64) * q
-        spat = np.einsum("ji,njk,kl->nil", DCT_M, coeffs, DCT_M) + 128.0
-        bw_c = n_mcu_x * c["h"]
-        bh_c = n_mcu_y * c["v"]
-        plane = (
-            spat.reshape(bh_c, bw_c, 8, 8).transpose(0, 2, 1, 3).reshape(bh_c * 8, bw_c * 8)
+        cw = -(-fw * c["h"] // hmax)  # ceil(fw * h / hmax)
+        ch_ = -(-fh * c["v"] // vmax)
+        geo[c["id"]] = {
+            "stride": n_mcu_x * c["h"],          # plane row stride (blocks)
+            "rows": n_mcu_y * c["v"],            # plane rows (blocks)
+            "bw": -(-cw // 8),                   # real block cols (scan area)
+            "bh": -(-ch_ // 8),                  # real block rows
+            "h": c["h"],
+            "v": c["v"],
+        }
+    return {"n_mcu_x": n_mcu_x, "n_mcu_y": n_mcu_y, "hmax": hmax, "vmax": vmax, "comps": geo}
+
+
+def _scan_units(frame, scan_comps: list[dict], geo) -> list[list[tuple[int, int]]]:
+    """The scan's decode/encode unit sequence: each unit is a list of
+    (component id, plane block index). Interleaved scans (>1
+    component) take one MCU per unit; single-component scans take one
+    block per unit in raster order over the REAL block grid."""
+    if len(scan_comps) == 1:
+        cid = scan_comps[0]["id"]
+        g = geo["comps"][cid]
+        return [
+            [(cid, r * g["stride"] + c)]
+            for r in range(g["bh"])
+            for c in range(g["bw"])
+        ]
+    if len(scan_comps) != len(frame["comps"]):
+        raise NotImplementedError(
+            "JPEG scan interleaving a strict subset of the frame's "
+            "components (spec-legal but unseen in practice)"
         )
+    units = []
+    for my in range(geo["n_mcu_y"]):
+        for mx in range(geo["n_mcu_x"]):
+            unit = []
+            for sc in scan_comps:
+                g = geo["comps"][sc["id"]]
+                for by in range(g["v"]):
+                    for bx in range(g["h"]):
+                        unit.append(
+                            (sc["id"], (my * g["v"] + by) * g["stride"] + mx * g["h"] + bx)
+                        )
+            units.append(unit)
+    return units
+
+
+def decode_scans(frame, scans: list[dict]) -> dict[int, np.ndarray]:
+    """Accumulate every scan of a JPEG into per-component (n_blocks,
+    64) int32 zigzag coefficient planes."""
+    geo = _geometry(frame)
+    planes = {
+        cid: np.zeros((g["rows"] * g["stride"], 64), dtype=np.int32)
+        for cid, g in geo["comps"].items()
+    }
+    for sc in scans:
+        _decode_one_scan(frame, sc, geo, planes)
+    return planes
+
+
+def _decode_one_scan(frame, sc, geo, planes) -> None:
+    ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
+    units = _scan_units(frame, sc["comps"], geo)
+    huff = sc["huff"]
+    # per component (DC table, AC table); a scan may name a table it
+    # never uses and that was never defined
+    tables = {c["id"]: (huff.get((0, c["dc"])), huff.get((1, c["ac"]))) for c in sc["comps"]}
+    ri = sc["restart_interval"]
+    segments = _split_restarts(sc["entropy"]) if ri else [sc["entropy"]]
+    if ss > 0 and len(sc["comps"]) != 1:
+        raise ValueError("progressive AC scan must cover exactly one component")
+
+    seg_idx = 0
+    br = _BitReader(segments[0].replace(b"\xff\x00", b"\xff"))
+    preds = {c["id"]: 0 for c in sc["comps"]}
+    eobrun = 0
+    p1, m1 = 1 << al, -1 << al
+
+    def correct(zz: np.ndarray, k: int) -> None:
+        # refinement correction bit (T.81 G.1.2.3 decode mirror): a 1
+        # bit moves the partial value one quantum AWAY from zero; the
+        # quantum-already-present guard tolerates pathological streams
+        if br.take(1) and (int(zz[k]) & p1) == 0:
+            zz[k] += p1 if zz[k] > 0 else m1
+
+    for u_idx, unit in enumerate(units):
+        if ri and u_idx and u_idx % ri == 0:
+            seg_idx += 1
+            br = _BitReader(segments[seg_idx].replace(b"\xff\x00", b"\xff"))
+            preds = {c["id"]: 0 for c in sc["comps"]}
+            eobrun = 0
+        for cid, bi in unit:
+            zz = planes[cid][bi]
+            if ss == 0:
+                if ah == 0:  # DC first: Huffman diff at reduced precision
+                    s = br.symbol(tables[cid][0])
+                    diff = _extend(br.take(s), s) if s else 0
+                    preds[cid] += diff
+                    zz[0] = preds[cid] << al
+                else:  # DC refinement: one raw bit (two's complement append)
+                    zz[0] = int(zz[0]) | (br.take(1) << al)
+                if se == 0:
+                    continue
+            # AC band (progressive AC scan, or the 1..63 tail of a
+            # sequential scan's block, where ss==0, se==63)
+            act = tables[cid][1]
+            lo = max(ss, 1)
+            if ah == 0:
+                if eobrun:
+                    eobrun -= 1
+                    continue
+                k = lo
+                while k <= se:
+                    sym = br.symbol(act)
+                    r, s = sym >> 4, sym & 0xF
+                    if s == 0:
+                        if r == 15:  # ZRL
+                            k += 16
+                            continue
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += br.take(r)
+                        break
+                    k += r
+                    if k > se:
+                        raise ValueError("invalid JPEG: AC run past band end")
+                    zz[k] = _extend(br.take(s), s) << al
+                    k += 1
+            else:
+                # AC refinement (T.81 G.2 / figure G.7 semantics)
+                if eobrun:
+                    for k in range(lo, se + 1):
+                        if zz[k]:
+                            correct(zz, k)
+                    eobrun -= 1
+                    continue
+                k = lo
+                while k <= se:
+                    sym = br.symbol(act)
+                    r, s = sym >> 4, sym & 0xF
+                    val = 0
+                    if s == 0:
+                        if r != 15:  # EOBn: run of end-of-band blocks
+                            eobrun = (1 << r) + (br.take(r) if r else 0)
+                            break
+                        # r == 15: ZRL skips 16 zero-HISTORY positions
+                    else:
+                        if s != 1:
+                            raise ValueError(
+                                "invalid JPEG: refinement magnitude > 1"
+                            )
+                        val = p1 if br.take(1) else m1
+                    # advance over already-nonzero coefficients (one
+                    # correction bit each) and r still-zero ones
+                    while k <= se:
+                        if zz[k]:
+                            correct(zz, k)
+                        else:
+                            if r == 0:
+                                break
+                            r -= 1
+                        k += 1
+                    if val:
+                        if k > se:
+                            raise ValueError(
+                                "invalid JPEG: refinement coefficient past band"
+                            )
+                        zz[k] = val
+                    k += 1
+                else:
+                    continue
+                # EOBn hit mid-block: correction bits for the rest of
+                # THIS block's band, then the run covers later blocks
+                for kk in range(k, se + 1):
+                    if zz[kk]:
+                        correct(zz, kk)
+                eobrun -= 1
+
+
+def _reconstruct(frame, planes: dict, qtabs: dict) -> tuple[int, int, str, np.ndarray]:
+    """Decode tail: per-component (n_blocks, 64) int32 zigzag
+    coefficient planes on the :func:`_geometry` grid -> dequantize +
+    inverse zigzag + batched IDCT + chroma upsample + color transform."""
+    fh, fw = frame["h"], frame["w"]
+    geo = _geometry(frame)
+    out_planes = []
+    for c in frame["comps"]:
+        g = geo["comps"][c["id"]]
+        coeffs = planes[c["id"]][:, UNZIGZAG].reshape(-1, 8, 8).astype(np.float64) * qtabs[c["tq"]]
+        spat = np.einsum("ji,njk,kl->nil", DCT_M, coeffs, DCT_M) + 128.0
+        rows, stride = g["rows"], g["stride"]
+        plane = spat.reshape(rows, stride, 8, 8).transpose(0, 2, 1, 3).reshape(rows * 8, stride * 8)
         # upsample to full MCU-grid resolution, then crop to frame
-        ry = vmax // c["v"]
-        rx = hmax // c["h"]
+        ry, rx = geo["vmax"] // c["v"], geo["hmax"] // c["h"]
         if ry > 1:
             plane = np.repeat(plane, ry, axis=0)
         if rx > 1:
@@ -630,93 +823,4 @@ def _reconstruct(frame, planes: dict, qtabs: dict) -> tuple[int, int, str, np.nd
     if len(out_planes) == 1:
         g = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
         return fw, fh, "jpeg", np.repeat(g[:, :, None], 3, axis=2)
-    px = ycbcr_to_rgb(np.stack(out_planes, axis=-1))
-    return fw, fh, "jpeg", px
-
-
-def _decode_scan(frame, scan, qtabs, huff, restart_interval, entropy: bytes):
-    if frame is None:
-        raise ValueError("JPEG SOS before SOF")
-    fh, fw, comps = frame["h"], frame["w"], frame["comps"]
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(f"{len(comps)}-component JPEG (1 or 3 only)")
-    if len(scan) != len(comps):
-        raise NotImplementedError(
-            "non-interleaved multi-scan baseline JPEG (one scan per "
-            "component) — single interleaved scan only"
-        )
-    by_id = {c["id"]: c for c in comps}
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    n_mcu_x = -(-fw // mcu_w)
-    n_mcu_y = -(-fh // mcu_h)
-
-    # per-component coefficient planes in block units
-    planes = {}
-    for c in comps:
-        bw_c = n_mcu_x * c["h"]
-        bh_c = n_mcu_y * c["v"]
-        planes[c["id"]] = np.zeros((bh_c * bw_c, 64), dtype=np.int32)
-
-    # restart-interval segments: entropy bytes are split on RSTn
-    # markers; DC predictors reset at each boundary.
-    segments = _split_restarts(entropy) if restart_interval else [entropy]
-
-    seg_idx = 0
-    br = _BitReader(segments[0].replace(b"\xff\x00", b"\xff"))
-    preds = {c["id"]: 0 for c in comps}
-    mcu_count = 0
-    for my in range(n_mcu_y):
-        for mx in range(n_mcu_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                seg_idx += 1
-                br = _BitReader(segments[seg_idx].replace(b"\xff\x00", b"\xff"))
-                preds = {c["id"]: 0 for c in comps}
-            for sc in scan:
-                comp = by_id[sc["id"]]
-                dct = huff[(0, sc["dc"])]
-                act = huff[(1, sc["ac"])]
-                bw_c = n_mcu_x * comp["h"]
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        zz = _decode_block(br, dct, act)
-                        diff = zz[0]
-                        preds[sc["id"]] += diff
-                        zz[0] = preds[sc["id"]]
-                        bi = (my * comp["v"] + by) * bw_c + (mx * comp["h"] + bx)
-                        planes[sc["id"]][bi] = zz
-            mcu_count += 1
-
-    return _reconstruct(frame, planes, qtabs)
-
-
-def _decode_block(br: _BitReader, dct: _HuffLookup, act: _HuffLookup) -> np.ndarray:
-    zz = np.zeros(64, dtype=np.int32)
-    peek = br.peek16()
-    s = int(dct.sym[peek])
-    ln = int(dct.len[peek])
-    if ln == 0:
-        raise ValueError("invalid JPEG: bad DC Huffman code")
-    br.skip(ln)
-    zz[0] = _extend(br.take(s), s) if s else 0
-    k = 1
-    while k < 64:
-        peek = br.peek16()
-        sym = int(act.sym[peek])
-        ln = int(act.len[peek])
-        if ln == 0:
-            raise ValueError("invalid JPEG: bad AC Huffman code")
-        br.skip(ln)
-        if sym == 0x00:  # EOB
-            break
-        if sym == 0xF0:  # ZRL
-            k += 16
-            continue
-        run, size = sym >> 4, sym & 0xF
-        k += run
-        if k >= 64:
-            raise ValueError("invalid JPEG: AC run past block end")
-        zz[k] = _extend(br.take(size), size)
-        k += 1
-    return zz
+    return fw, fh, "jpeg", ycbcr_to_rgb(np.stack(out_planes, axis=-1))

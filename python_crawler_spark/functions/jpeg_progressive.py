@@ -1,11 +1,13 @@
-"""Progressive JPEG (SOF2) — pure numpy + stdlib, public ITU T.81 spec.
+"""Progressive (SOF2) and multi-scan JPEG encoders — pure numpy +
+stdlib, public ITU T.81 spec.
 
-Closes the progressive seam functions/jpeg.py carried through round 4
-(it used to raise NotImplementedError on SOF2). Progressive JPEGs are
-the dominant large-image layout on the real web — exactly what a
-crawler's image pipeline meets — so the decoder here is first-class,
-and the encoder exists to produce spec-exercising test vectors (this
-container has no PIL/libjpeg to make them for us).
+Progressive JPEGs are the dominant large-image layout on the real web
+— exactly what a crawler's image pipeline meets. functions/jpeg.py
+owns the one decoder for every layout; the encoders here produce
+spec-exercising test vectors for it (this container has no
+PIL/libjpeg to make them for us), walking the same block grid and
+scan units (``jpeg._geometry`` / ``jpeg._scan_units``) the decoder
+walks.
 
 Everything derives from ITU-T T.81 / ISO 10918-1 Annex G (progressive
 DCT mode):
@@ -26,9 +28,10 @@ DCT mode):
   lengths > 16) — the standard AC tables have no EOBn>0 symbols, so
   progressive scans need custom tables, exactly as real encoders ship.
 
-Decoded output is bit-identical to the baseline path for the same
-quantized coefficients (the scans are a lossless re-ordering of the
-same data), which is what tests/test_jpeg.py asserts.
+A progressive file decodes bit-identical to the baseline encoding of
+the same quantized coefficients (the scans are a lossless re-ordering
+of the same data), which is what tests/test_jpeg_progressive.py
+asserts.
 
 Reference analog: the reference re-hosts real JPEG bytes from
 mp.weixin.qq.com (/root/reference/crawler/weixin_public.py:315-321);
@@ -49,226 +52,20 @@ from .jpeg import (
     DC_LUM_BITS,
     DC_LUM_VALS,
     ZIGZAG,
-    _BitReader,
     _BitWriter,
     _blocks_of,
     _canonical_codes,
-    _extend,
-    _HuffLookup,
+    _geometry,
     _mag_category,
     _pad_to,
     _quantize_zigzag,
+    _scan_units,
     _seg,
-    _split_restarts,
     quality_tables,
     rgb_to_ycbcr,
 )
 
 _MAX_EOBRUN = 0x7FFF  # largest encodable EOB run (EOB14 + 14 bits)
-
-
-# ---------------------------------------------------------------- geometry
-
-def _geometry(frame) -> dict:
-    """Shared block-grid geometry: the coefficient planes are stored
-    MCU-grid padded (stride n_mcu_x * h blocks per row), but
-    NON-interleaved scans cover only ceil(comp_dim / 8) blocks
-    (T.81 A.2.2) — the padded tail blocks exist only for interleaved
-    traversal."""
-    fh, fw, comps = frame["h"], frame["w"], frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    n_mcu_x = -(-fw // (8 * hmax))
-    n_mcu_y = -(-fh // (8 * vmax))
-    geo = {}
-    for c in comps:
-        cw = -(-fw * c["h"] // hmax)  # ceil(fw * h / hmax)
-        ch_ = -(-fh * c["v"] // vmax)
-        geo[c["id"]] = {
-            "stride": n_mcu_x * c["h"],          # plane row stride (blocks)
-            "rows": n_mcu_y * c["v"],            # plane rows (blocks)
-            "bw": -(-cw // 8),                   # real block cols (scan area)
-            "bh": -(-ch_ // 8),                  # real block rows
-            "h": c["h"],
-            "v": c["v"],
-        }
-    return {"n_mcu_x": n_mcu_x, "n_mcu_y": n_mcu_y, "comps": geo}
-
-
-def _scan_units(frame, scan_comps: list[dict], geo) -> list[list[tuple[int, int]]]:
-    """The scan's decode/encode unit sequence: each unit is a list of
-    (component id, plane block index). Interleaved scans (>1
-    component) take one MCU per unit; single-component scans take one
-    block per unit in raster order over the REAL block grid."""
-    if len(scan_comps) == 1:
-        cid = scan_comps[0]["id"]
-        g = geo["comps"][cid]
-        return [
-            [(cid, r * g["stride"] + c)]
-            for r in range(g["bh"])
-            for c in range(g["bw"])
-        ]
-    if len(scan_comps) != len(frame["comps"]):
-        raise NotImplementedError(
-            "progressive scan interleaving a strict subset of the frame's "
-            "components (spec-legal but unseen in practice)"
-        )
-    units = []
-    for my in range(geo["n_mcu_y"]):
-        for mx in range(geo["n_mcu_x"]):
-            unit = []
-            for sc in scan_comps:
-                g = geo["comps"][sc["id"]]
-                for by in range(g["v"]):
-                    for bx in range(g["h"]):
-                        unit.append(
-                            (sc["id"], (my * g["v"] + by) * g["stride"] + mx * g["h"] + bx)
-                        )
-            units.append(unit)
-    return units
-
-
-# ---------------------------------------------------------------- decoder
-
-def decode_scans(frame, scans: list[dict]) -> dict[int, np.ndarray]:
-    """Accumulate every scan of a progressive (or sequential
-    non-interleaved) JPEG into per-component (n_blocks, 64) int32
-    zigzag coefficient planes. Called by jpeg.decode_jpeg, which then
-    reconstructs pixels via its shared dequant/IDCT tail."""
-    geo = _geometry(frame)
-    planes = {
-        cid: np.zeros((g["rows"] * g["stride"], 64), dtype=np.int32)
-        for cid, g in geo["comps"].items()
-    }
-    for sc in scans:
-        _decode_one_scan(frame, sc, geo, planes)
-    return planes
-
-
-def _decode_one_scan(frame, sc, geo, planes) -> None:
-    ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
-    units = _scan_units(frame, sc["comps"], geo)
-    tables = {c["id"]: (c["dc"], c["ac"]) for c in sc["comps"]}
-    huff = sc["huff"]
-    ri = sc["restart_interval"]
-    segments = _split_restarts(sc["entropy"]) if ri else [sc["entropy"]]
-    if ss > 0 and len(sc["comps"]) != 1:
-        raise ValueError("progressive AC scan must cover exactly one component")
-
-    seg_idx = 0
-    br = _BitReader(segments[0].replace(b"\xff\x00", b"\xff"))
-    preds = {c["id"]: 0 for c in sc["comps"]}
-    eobrun = 0
-    p1, m1 = 1 << al, -1 << al
-
-    def read_sym(lk: _HuffLookup) -> int:
-        peek = br.peek16()
-        ln = int(lk.len[peek])
-        if ln == 0:
-            raise ValueError("invalid JPEG: bad progressive Huffman code")
-        br.skip(ln)
-        return int(lk.sym[peek])
-
-    def correct(zz: np.ndarray, k: int) -> None:
-        # refinement correction bit (T.81 G.1.2.3 decode mirror): a 1
-        # bit moves the partial value one quantum AWAY from zero; the
-        # quantum-already-present guard tolerates pathological streams
-        if br.take(1) and (int(zz[k]) & p1) == 0:
-            zz[k] += p1 if zz[k] > 0 else m1
-
-    for u_idx, unit in enumerate(units):
-        if ri and u_idx and u_idx % ri == 0:
-            seg_idx += 1
-            br = _BitReader(segments[seg_idx].replace(b"\xff\x00", b"\xff"))
-            preds = {c["id"]: 0 for c in sc["comps"]}
-            eobrun = 0
-        for cid, bi in unit:
-            zz = planes[cid][bi]
-            if ss == 0:
-                if ah == 0:  # DC first: Huffman diff at reduced precision
-                    lk = huff[(0, tables[cid][0])]
-                    s = read_sym(lk)
-                    diff = _extend(br.take(s), s) if s else 0
-                    preds[cid] += diff
-                    zz[0] = preds[cid] << al
-                else:  # DC refinement: one raw bit (two's complement append)
-                    zz[0] = int(zz[0]) | (br.take(1) << al)
-                if se == 0:
-                    continue
-            # AC band (progressive AC scan, or the 1..se tail of a
-            # sequential non-interleaved scan where ss==0, se==63)
-            act = huff[(1, tables[cid][1])]
-            lo = max(ss, 1)
-            if ah == 0:
-                if eobrun:
-                    eobrun -= 1
-                    continue
-                k = lo
-                while k <= se:
-                    sym = read_sym(act)
-                    r, s = sym >> 4, sym & 0xF
-                    if s == 0:
-                        if r == 15:  # ZRL
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += br.take(r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("invalid JPEG: AC run past band end")
-                    zz[k] = _extend(br.take(s), s) << al
-                    k += 1
-            else:
-                # AC refinement (T.81 G.2 / figure G.7 semantics)
-                if eobrun:
-                    for k in range(lo, se + 1):
-                        if zz[k]:
-                            correct(zz, k)
-                    eobrun -= 1
-                    continue
-                k = lo
-                while k <= se:
-                    sym = read_sym(act)
-                    r, s = sym >> 4, sym & 0xF
-                    val = 0
-                    if s == 0:
-                        if r != 15:  # EOBn: run of end-of-band blocks
-                            eobrun = (1 << r) + (br.take(r) if r else 0)
-                            break
-                        # r == 15: ZRL skips 16 zero-HISTORY positions
-                    else:
-                        if s != 1:
-                            raise ValueError(
-                                "invalid JPEG: refinement magnitude > 1"
-                            )
-                        val = p1 if br.take(1) else m1
-                    # advance over already-nonzero coefficients (one
-                    # correction bit each) and r still-zero ones
-                    while k <= se:
-                        if zz[k]:
-                            correct(zz, k)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val:
-                        if k > se:
-                            raise ValueError(
-                                "invalid JPEG: refinement coefficient past band"
-                            )
-                        zz[k] = val
-                    k += 1
-                else:
-                    continue
-                # EOBn hit mid-block: correction bits for the rest of
-                # THIS block's band, then the run covers later blocks
-                for kk in range(k, se + 1):
-                    if zz[kk]:
-                        correct(zz, kk)
-                eobrun -= 1
 
 
 # ---------------------------------------------------------------- encoder
@@ -563,7 +360,7 @@ def encode_jpeg_progressive(
         {"id": 2, "h": 1, "v": 1, "tq": 1},
         {"id": 3, "h": 1, "v": 1, "tq": 1},
     ]
-    frame = {"h": h, "w": w, "comps": comps, "progressive": True}
+    frame = {"h": h, "w": w, "comps": comps}
     return _assemble(
         frame,
         zz_by_id,
@@ -584,12 +381,7 @@ def encode_jpeg_gray_progressive(
     qlum, _ = quality_tables(quality)
     plane = _pad_to(pixels.astype(np.float64) - 128.0, 8, 8)
     zz_by_id = {1: _quantize_zigzag(_blocks_of(plane), qlum)}
-    frame = {
-        "h": h,
-        "w": w,
-        "comps": [{"id": 1, "h": 1, "v": 1, "tq": 0}],
-        "progressive": True,
-    }
+    frame = {"h": h, "w": w, "comps": [{"id": 1, "h": 1, "v": 1, "tq": 0}]}
     return _assemble(
         frame, zz_by_id, {0: qlum}, _GRAY_SCRIPT, restart_interval, sof_marker=0xC2
     )

@@ -50,7 +50,7 @@ MAGIC_A = b"PCSA"
 
 
 def encode_video(frames: list[np.ndarray], fps: int = 25) -> bytes:
-    """Container of PCS1-png frames (lossless; frame-exact tests)."""
+    """PCSV container of real PNG frames (lossless; frame-exact tests)."""
     blobs = [IMG.encode_image(f, "png") for f in frames]
     head = MAGIC_V + len(blobs).to_bytes(4, "big") + fps.to_bytes(2, "big")
     return head + b"".join(len(b).to_bytes(4, "big") + b for b in blobs)

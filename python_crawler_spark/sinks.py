@@ -6,7 +6,8 @@ The reference writes articles to MySQL with hand-built INSERT strings
 (tianyan_extractor.py:28-30). In Spark both become a declarative
 ``df.write`` whose format is CONFIG, not code — the same seam pattern
 as sources.tables.SnapshotStore (parquet now, Iceberg in prod) and
-functions.images.decode_standard (PCS1 codec now, PNG/JPEG in prod).
+functions.images.decode_image (one decoder per wire format, chosen by
+signature).
 
   SinkTarget("parquet", path=...)                      # sandbox/tests
   SinkTarget("jdbc", url=..., table=..., options=...)  # MySQL analog

@@ -216,15 +216,146 @@ def test_truncated_raises():
 
 def test_images_dispatch_real_jpeg():
     """encode_image(fmt='jpeg') now emits real JFIF bytes; the decode
-    dispatch routes them through decode_jpeg; legacy PCS1 lossy blobs
-    (pre-round-4 snapshots) still decode."""
+    dispatch routes them through decode_jpeg."""
     px = _noise(24, 18, 23)
     blob = IMG.encode_image(px, "jpeg")
     assert blob[:3] == b"\xff\xd8\xff"
     w, h, fmt, dec = IMG.decode_image(blob)
     assert (w, h, fmt) == (18, 24, "jpeg")
     assert IMG.psnr(px, dec) >= 40.0
-    legacy = IMG.encode_pcs1_lossy(px)
-    w2, h2, fmt2, dec2 = IMG.decode_image(legacy)
-    assert (w2, h2, fmt2) == (18, 24, "jpeg")
-    assert IMG.psnr(px, dec2) >= 40.0
+
+
+# ------------------------------------------------- one scan decoder
+
+
+def _golden_corpus() -> list[bytes]:
+    """Fixed baseline (SOF0) corpus: 4:4:4 and 4:2:0, restart intervals
+    0 and 2, qualities 100/75/30, odd sizes, grayscale, and the
+    synthetic web's EXIF-carrying baseline JPEGs."""
+    from python_crawler_spark.operators.multimodal import (
+        synth_image_blob,
+        synth_image_pixels,
+    )
+
+    blobs = []
+    for sub in ("444", "420"):
+        for ri in (0, 2):
+            for q in (100, 75, 30):
+                for h, w in ((1, 1), (13, 27), (16, 16), (31, 9)):
+                    blobs.append(J.encode_jpeg(_noise(h, w, h * w), q, sub, ri))
+                blobs.append(J.encode_jpeg(_smooth(24, 40), q, sub, ri))
+    rng = np.random.RandomState(19)
+    for q in (100, 75, 30):
+        for h, w in ((1, 1), (17, 26), (16, 8)):
+            g = rng.randint(0, 256, (h, w)).astype(np.uint8)
+            blobs.append(J.encode_jpeg_gray(g, q))
+    for i in range(240):
+        url = f"http://img.example.invalid/exif/{i}.bin"
+        if synth_image_pixels(url)[1] == "jpeg":
+            blobs.append(synth_image_blob(url))
+    return blobs
+
+
+# sha256 over decode_image's (w, h, fmt, pixels) for _golden_corpus,
+# recorded while baseline scans still had their own entropy decoder
+_GOLDEN_N = 104
+_GOLDEN_SHA256 = "7200ea8fbd5c19ce9e4c6d28e4aadfa4032ff33372b646d821002490d46bcab7"
+
+
+def test_baseline_decode_golden_digest():
+    """Baseline files decode through the same Annex G scan decoder as
+    progressive and multi-scan ones; their pixels must stay bit-equal
+    to the recorded digest of the former baseline-only decoder."""
+    import hashlib
+
+    blobs = _golden_corpus()
+    assert all(b"\xff\xc0" in b for b in blobs)
+    d = hashlib.sha256()
+    for blob in blobs:
+        w, h, fmt, px = IMG.decode_image(blob)
+        d.update(f"{w}x{h}:{fmt}:{px.shape}:{px.dtype};".encode())
+        d.update(px.tobytes())
+    assert (len(blobs), d.hexdigest()) == (_GOLDEN_N, _GOLDEN_SHA256)
+
+
+def test_fill_bytes_before_markers():
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes —
+    before a table segment, before RSTn inside a scan, and between the
+    last scan and EOI. Each filled file decodes equal to the unfilled
+    one, baseline and progressive."""
+    import re
+
+    from python_crawler_spark.functions import jpeg_progressive as P
+
+    px = _noise(24, 40, 29)
+    fill = b"\xff" * 3
+    for blob in (
+        J.encode_jpeg(px, 90, "420", restart_interval=2),
+        P.encode_jpeg_progressive(px, 90, restart_interval=2),
+    ):
+        want = J.decode_jpeg(blob)
+        i = blob.index(b"\xff\xdb")
+        before_table = blob[:i] + fill + blob[i:]
+        before_eoi = blob[:-2] + fill + blob[-2:]
+        before_rst = re.sub(rb"\xff([\xd0-\xd7])", fill + rb"\1", blob)
+        assert before_rst != blob
+        for filled in (before_table, before_eoi, before_rst):
+            w, h, fmt, dec = J.decode_jpeg(filled)
+            assert (w, h, fmt) == want[:3]
+            assert np.array_equal(dec, want[3])
+
+
+def test_four_component_frames_raise_in_every_layout():
+    """A 4-component (CMYK-style) frame is out of scope in every scan
+    layout: the frame header is refused before any scan decodes, so
+    no layout can decode it silently to wrong colours."""
+    from python_crawler_spark.functions import jpeg_progressive as P
+
+    px = _noise(16, 16, 31)
+    qlum, qchrom = J.quality_tables(90)
+    ycc = J.rgb_to_ycbcr(px) - 128.0
+    zz = {
+        cid: J._quantize_zigzag(J._blocks_of(ycc[..., (cid - 1) % 3]), qlum if cid == 1 else qchrom)
+        for cid in (1, 2, 3, 4)
+    }
+    comps = [{"id": cid, "h": 1, "v": 1, "tq": 0 if cid == 1 else 1} for cid in (1, 2, 3, 4)]
+    frame = {"h": 16, "w": 16, "comps": comps}
+    layouts = [
+        # baseline, one interleaved scan
+        ([((1, 2, 3, 4), 0, 63, 0, 0)], 0xC0),
+        # baseline, one scan per component
+        ([((cid,), 0, 63, 0, 0) for cid in (1, 2, 3, 4)], 0xC0),
+        # progressive: interleaved DC scan, then one AC scan per component
+        ([((1, 2, 3, 4), 0, 0, 0, 0)] + [((cid,), 1, 63, 0, 0) for cid in (1, 2, 3, 4)], 0xC2),
+    ]
+    for script, sof in layouts:
+        blob = P._assemble(frame, zz, {0: qlum, 1: qchrom}, script, 0, sof_marker=sof)
+        with pytest.raises(NotImplementedError, match="4-component"):
+            IMG.decode_image(blob)
+
+
+def test_sequential_scan_ignores_spectral_header_bytes():
+    """A sequential (SOF0/SOF1) scan is always Ss=0, Se=63, Ah=Al=0.
+    Some baseline encoders write zeroes (or other junk) in those SOS
+    bytes; like libjpeg, the decoder ignores them, so the patched file
+    decodes equal to the untouched one."""
+
+    def patch_sos(blob: bytes, se: int, ahal: int) -> bytes:
+        out = bytearray(blob)
+        i = out.index(b"\xff\xda")
+        ns = out[i + 4]
+        out[i + 6 + 2 * ns] = se
+        out[i + 7 + 2 * ns] = ahal
+        return bytes(out)
+
+    for blob in (
+        J.encode_jpeg(_noise(24, 40, 37), 90, "420", restart_interval=2),
+        J.encode_jpeg_gray(_noise(13, 27, 41)[..., 0], 75),
+    ):
+        want = IMG.decode_image(blob)
+        for se, ahal in ((0, 0x00), (63, 0x01), (0, 0x12)):
+            patched = patch_sos(blob, se, ahal)
+            assert patched != blob
+            w, h, fmt, dec = IMG.decode_image(patched)
+            assert (w, h, fmt) == want[:3]
+            assert np.array_equal(dec, want[3])

@@ -191,6 +191,6 @@ def test_images_decode_auto_handles_progressive():
     bytes (same FFD8 magic) without any caller change."""
     px = _smooth(20, 20)
     blob = P.encode_jpeg_progressive(px, 100)
-    w, h, fmt, dec = IMG.decode_standard(blob)
+    w, h, fmt, dec = IMG.decode_image(blob)
     assert (w, h, fmt) == (20, 20, "jpeg")
     assert IMG.psnr(px, dec) >= 40.0

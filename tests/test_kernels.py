@@ -153,7 +153,7 @@ def test_phash_stable_under_lossy():
     assert IMG.phash64(px) == IMG.phash64(dec)
 
 
-def test_decode_standard_dispatch():
+def test_decode_image_dispatch():
     """Round 4: BOTH standard formats decode for real through the
     dispatch path (PNG suite in tests/test_media.py, JPEG suite in
     tests/test_jpeg.py). A truncated JPEG is a ValueError, not a

@@ -1,6 +1,7 @@
 """Multimodal resize / frame-sample / audio-feature operators: real
-math + real Spark plumbing over the deterministic PCS1/PCSV/PCSA
-containers (standard codecs are stubbed production seams)."""
+math + real Spark plumbing over the deterministic PCSV/PCSA test
+containers and the real PNG/JPEG/GIF, WAV/FLAC and AVI/MP4/Matroska
+codecs."""
 
 from __future__ import annotations
 
@@ -397,7 +398,7 @@ def test_png_adam7_interlace_roundtrip():
         assert (dw, dh, fmt) == (w, h, "png")
         assert np.array_equal(dec, px), (h, w)
         # and the pipeline's sniffing dispatcher takes the same bytes
-        assert np.array_equal(IMG.decode_standard(blob)[3], px)
+        assert np.array_equal(IMG.decode_image(blob)[3], px)
 
 
 def test_jpeg_decodes_and_unknown_signature():
@@ -407,11 +408,11 @@ def test_jpeg_decodes_and_unknown_signature():
     import pytest
 
     with pytest.raises(ValueError, match="no SOS"):
-        IMG.decode_standard(b"\xff\xd8\xff\xe0JFIF....")
+        IMG.decode_image(b"\xff\xd8\xff\xe0JFIF....")
     with pytest.raises(ValueError, match="truncated"):
-        IMG.decode_standard(b"GIF89a....")  # GIF decodes now; cut short
+        IMG.decode_image(b"GIF89a....")  # GIF decodes now; cut short
     with pytest.raises(ValueError, match="unrecognized"):
-        IMG.decode_standard(b"BM......")  # BMP really is unrecognized
+        IMG.decode_image(b"BM......")  # BMP really is unrecognized
 
 
 # ------------------------------------------------- IMA ADPCM (WAV 0x11)
